@@ -1,8 +1,10 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 /** GraphX analytics layer — the "graph database" analytics the reference
   * delegates to Neo4j (path-based discovery over the similarity graph,
@@ -157,7 +159,7 @@ object GraphOps {
 
   def bfsPaths(edgeTable: DataFrame, anchorId: Long, maxHops: Int): DataFrame = {
     val edges = truncated(edgeTable.select(col("src"), col("dst")))
-    // deliberately NOT under [[withLoopParallelism]]: unlike the walk
+    // deliberately NOT under [[fixpoint]]'s derived width: unlike the walk
     // folds (numeric min/sum per row), the per-hop relax here builds and
     // compares PATH ARRAYS — per-row work grows with hop depth and is not
     // byte-proportional, so narrowing the width serializes real compute
@@ -242,20 +244,29 @@ object GraphOps {
     * and the bounded result is still exact for every node whose true
     * shortest path uses ≤ k edges (Bellman-Ford's invariant) — the
     * "within k hops" contract retrieval/feature uses actually want.
-    * Distances use exact long arithmetic; weights must be non-negative
-    * (the min-fold's correctness condition). Undirected: each edge
-    * relaxes both endpoints. Lineage truncated per round ([[truncated]],
-    * the [[bfsPaths]] discipline). Unlike [[kHopChain]]'s GraphX hop
+    * Distances use exact long arithmetic; weights must be integral and
+    * non-negative (the min-fold's correctness condition). Undirected: each
+    * edge relaxes both endpoints. On the wide path ([[fixpoint]]) each round
+    * is one join + one aggregate, lineage truncated per round
+    * ([[truncated]], the [[bfsPaths]] discipline); at width 1 the rounds
+    * run in one task. Unlike [[kHopChain]]'s GraphX hop
     * counting this exercises genuine weight-based route CHOICE (the
     * fixture's express edges lose to multi-hop locals and win over long
     * stretches). */
   def shortestPathsBounded(edges: DataFrame, anchorId: Long,
-      maxHops: Int): DataFrame = {
-    val und = truncated(edges.select(col("src"), col("dst"), col("w"))
-      .unionByName(
-        edges.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
-    // scale-adaptive loop parallelism — see [[withLoopParallelism]]
-    withLoopParallelism(edges.sparkSession, und.count()) {
+      maxHops: Int): DataFrame =
+    shortestPathsBoundedAt(edges, anchorId, maxHops, None)
+
+  /** [[shortestPathsBounded]] at a given loop width (None = derived; the
+    * parity spec's seam). */
+  private[graft] def shortestPathsBoundedAt(edges: DataFrame, anchorId: Long,
+      maxHops: Int, width: Option[Int]): DataFrame = {
+    val und = undirectedWeighted(edges)
+    fixpoint(edges.sparkSession, und.count(), width) {
+      // frontier relaxing reaches the bounded fold's answer: see
+      // [[TaskLoops.sssp]]
+      ssspInOneTask(und, anchorId, maxHops)._1
+    } {
     var dist = edges.sparkSession.range(1)
       .select(lit(anchorId).as("node"), lit(0L).as("dist"))
     for (_ <- 1 to maxHops)
@@ -268,6 +279,26 @@ object GraphOps {
     }
   }
 
+  /** Both orientations of a weighted edge frame, lineage-cut. */
+  private def undirectedWeighted(edges: DataFrame): DataFrame =
+    truncated(edges.select(col("src"), col("dst"), col("w"))
+      .unionByName(
+        edges.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
+
+  /** The SSSP rounds from `anchorId` in one task: (node-ordered dist rows,
+    * rounds). */
+  private def ssspInOneTask(und: DataFrame, anchorId: Long,
+      maxRounds: Int): (DataFrame, Int) = {
+    require(Seq(LongType, IntegerType).contains(und.schema("w").dataType),
+      "weighted shortest paths need integral weights (exact long sums)")
+    val (out, rounds) = inOneTask(
+        und.select(col("src"), col("dst"), col("w").cast("long")),
+        longColumns("node", "dist")) { rows =>
+      TaskLoops.sssp(rows, anchorId, maxRounds)
+    }
+    (out.orderBy(col("node")), rounds)
+  }
+
   /** Convergence-detected weighted SSSP — the fixpoint form of
     * [[shortestPathsBounded]]: identical relax-and-fold rounds, but each
     * round relaxes only the FRONTIER (nodes whose distance improved last
@@ -276,9 +307,11 @@ object GraphOps {
     * action on the per-round delta frame is the priced convergence check
     * (the standard Pregel halt); unbounded-diameter graphs get exact
     * answers where the bounded form is only exact to k hops. Weights
-    * must be non-negative (the min-fold invariant); `maxRounds` is a
-    * runaway backstop (|V|-1 rounds suffice for any non-negative graph),
-    * not a semantic bound. Lineage truncated per round. */
+    * must be integral and non-negative (the min-fold invariant);
+    * `maxRounds` is a runaway backstop (|V|-1 rounds suffice for any
+    * non-negative graph), not a semantic bound. Lineage truncated per
+    * round on the wide path; at width 1 the rounds run in one task
+    * ([[fixpoint]]). */
   def shortestPathsConverged(edges: DataFrame, anchorId: Long,
       maxRounds: Int = 64): DataFrame =
     shortestPathsConvergedWithRounds(edges, anchorId, maxRounds)._1
@@ -287,14 +320,14 @@ object GraphOps {
     * run (spec hook: rounds = weighted shortest-path-tree depth + 1 — the
     * final empty round is the convergence proof). */
   private[graft] def shortestPathsConvergedWithRounds(edges: DataFrame,
-      anchorId: Long, maxRounds: Int): (DataFrame, Int) = {
+      anchorId: Long, maxRounds: Int,
+      width: Option[Int] = None): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
-    val und = truncated(edges.select(col("src"), col("dst"), col("w"))
-      .unionByName(
-        edges.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
-    // scale-adaptive loop parallelism — see [[withLoopParallelism]]
-    withLoopParallelism(spark, und.count()) {
+    val und = undirectedWeighted(edges)
+    fixpoint(spark, und.count(), width) {
+      ssspInOneTask(und, anchorId, maxRounds)
+    } {
     var dist = truncated(spark.range(1)
       .select(lit(anchorId).as("node"), lit(0L).as("dist")))
     var frontier = dist
@@ -547,11 +580,12 @@ object GraphOps {
     * either changes or is EXACTLY the fixpoint, and once fixed it stays
     * fixed (the round map is deterministic), so the DuckDB oracle can
     * unroll the [[PprConvMaxRounds]] bound and land on the identical
-    * frame regardless of where the engine halted. One priced change-set
-    * `isEmpty` per round (a full-outer mismatch probe on the sparse
-    * rank frame — node-sized, never corpus-sized); same k-shuffle-pairs
-    * relax-and-fold and capped standing adjacency as
-    * [[personalizedPageRankIndexed]]. */
+    * frame regardless of where the engine halted. On the wide path
+    * ([[fixpoint]]) one priced change-set `isEmpty` per round (a
+    * full-outer mismatch probe on the sparse rank frame — node-sized,
+    * never corpus-sized) and the same k-shuffle-pairs relax-and-fold as
+    * [[personalizedPageRankIndexed]]; at width 1 the whole walk runs in
+    * one task. Either way over the capped standing adjacency. */
   def personalizedPageRankConverged(spark: SparkSession, table: String,
       anchorId: Long): DataFrame =
     pprConvergedWithRounds(spark.table(table), anchorId)._1
@@ -573,9 +607,10 @@ object GraphOps {
       .orderBy(col("qid"), desc("rank_scaled"), col("node"))
 
   private[graft] def pprConvergedWithRounds(und: DataFrame, anchorId: Long,
-      maxRounds: Int = PprConvMaxRounds): (DataFrame, Int) = {
+      maxRounds: Int = PprConvMaxRounds,
+      width: Option[Int] = None): (DataFrame, Int) = {
     val (walk, rounds) =
-      pprConvergedBatchWithRounds(und, Seq(anchorId), maxRounds)
+      pprConvergedBatchWithRounds(und, Seq(anchorId), maxRounds, width)
     (walk.select(col("node"), col("r").as("rank_scaled"))
       .orderBy(desc("rank_scaled"), col("node")), rounds)
   }
@@ -591,27 +626,59 @@ object GraphOps {
     * the cuts land. */
   val PprCpEvery = 4
 
-  /** Run `body` with the session's shuffle parallelism derived from the
-    * loop's actual per-round shuffle volume instead of the session-wide
-    * constant (guide §2: make partitioning scale-adaptive — derive from
-    * input size). The k-round fixpoint loops shuffle node-sized rank
-    * frames ~k × 30-50 times through per-round exchanges whose task count
-    * was sized for corpus-scale scans: at bench scale that is 30+ jobs of
-    * 32 near-empty tasks each, and the r21 event logs put most of the
-    * walk rows' wall in exactly that per-stage scheduling (jobs of
-    * 16–100 ms separated by 12–180 ms of driver latency). Deriving the
-    * partition count from the measured edge-frame size gives the SAME
-    * large-scale behavior (edges/2M partitions ≈ AQE's advisory sizing)
-    * while collapsing the bench-scale loop to single-task rounds —
-    * measured −30% on the converged-walk rows (DebugLoop A/B, variant g).
-    * Implementation shared with the non-loop operators in
-    * [[graft.plans.ScopedWidth]] (restored in a finally — no leak). */
-  private def withLoopParallelism[T](spark: SparkSession, workRows: Long)(
-      body: => T): T = graft.plans.ScopedWidth.scoped(spark, workRows)(body)
+  /** The fixpoint loops' plan choice, made from the loop's measured
+    * per-round shuffle volume (guide §2: derive partitioning from input
+    * size). The k-round loops shuffle node-sized frames ~k × 30-50 times
+    * through per-round exchanges sized for corpus-scale scans; the r21
+    * event logs put most of the walk rows' wall in that per-stage
+    * scheduling (jobs of 16–100 ms separated by 12–180 ms of driver
+    * latency). So the derived width ([[graft.plans.ScopedWidth.width]],
+    * edges/2M partitions ≈ AQE's advisory sizing) picks the plan, as
+    * Pregelix picks each superstep's plan by data size:
+    *   - width 1 — the loop fits one partition: `oneTask` runs every round
+    *     in memory inside ONE Spark task ([[inOneTask]], [[TaskLoops]]),
+    *     about 2 jobs per call against ~5 per round, and touches no conf;
+    *   - width > 1 — `wide`, the per-round dataflow, runs with the shuffle
+    *     width scoped to the derived value (restored in a finally).
+    * `width` overrides the derivation for the parity spec; it is a test
+    * seam, not a setting. */
+  private def fixpoint[T](spark: SparkSession, workRows: Long,
+      width: Option[Int])(oneTask: => T)(wide: => T): T = {
+    val w = width.getOrElse(graft.plans.ScopedWidth.width(spark, workRows))
+    if (w == 1) oneTask else graft.plans.ScopedWidth.at(spark, w)(wide)
+  }
+
+  private def longColumns(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  /** Runs `loop` over every row of `input` inside ONE Spark task and
+    * lineage-cuts the rows it emits ([[truncated]], so
+    * `spark.graft.pathCheckpoint=reliable` still holds): the emitted
+    * frame and the loop's round count. */
+  private def inOneTask(input: DataFrame, schema: StructType)(
+      loop: Iterator[Row] => (Iterator[Row], Int)): (DataFrame, Int) = {
+    import scala.jdk.CollectionConverters._
+    val spark = input.sparkSession
+    val sc = spark.sparkContext
+    val rounds = sc.collectionAccumulator[Int]("fixpoint rounds")
+    val rows = input.rdd
+    // an empty input may plan to zero partitions; the loop still runs once
+    val one =
+      if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[Row], 1)
+      else rows.coalesce(1)
+    val out = truncated(spark.createDataFrame(one.mapPartitions { it =>
+      val (emitted, n) = loop(it)
+      rounds.add(n)
+      emitted
+    }, schema))
+    // a recomputed task (a reliable checkpoint writes in a second job)
+    // adds the same count again
+    (out, rounds.value.asScala.max)
+  }
 
   private[graft] def pprConvergedBatchWithRounds(und: DataFrame,
-      anchors: Seq[Long],
-      maxRounds: Int = PprConvMaxRounds): (DataFrame, Int) = {
+      anchors: Seq[Long], maxRounds: Int = PprConvMaxRounds,
+      width: Option[Int] = None): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
     val spark = und.sparkSession
     import spark.implicits._
@@ -621,7 +688,14 @@ object GraphOps {
     // pricing the loop's per-round shuffle volume (rank rows ≤ relax
     // output ≤ edges × |anchors|)
     val workRows = undDeg.count() * math.max(1, anchors.size)
-    withLoopParallelism(spark, workRows) {
+    fixpoint(spark, workRows, width) {
+      // deg is the src's row count in undDeg, which the CSR recounts
+      val as = anchors.toArray
+      inOneTask(undDeg.select(col("src"), col("dst")),
+          longColumns("qid", "node", "r")) { rows =>
+        TaskLoops.pprConverged(rows, as, PprConvScale, maxRounds)
+      }
+    } {
       val a = anchors.toDF("qid")
       val teleport = a.select(col("qid"), col("qid").as("node"),
         lit(PprConvScale * 15 / 100).as("r"))
@@ -682,9 +756,10 @@ object GraphOps {
     val undDeg = truncated(und.join(deg, "src"))
     val spark = und.sparkSession
     import spark.implicits._
-    // scale-adaptive loop parallelism — see [[withLoopParallelism]]
+    // scale-adaptive width, as [[fixpoint]]'s wide path (this fixed-round
+    // walk has no one-task path)
     val workRows = undDeg.count() * math.max(1, anchors.size)
-    withLoopParallelism(spark, workRows) {
+    graft.plans.ScopedWidth.scoped(spark, workRows) {
       val a = anchors.toDF("qid")
       val teleport = a.select(col("qid"), col("qid").as("node"),
         lit(PprScale * 15 / 100).as("r"))
@@ -1038,16 +1113,18 @@ object GraphOps {
     * with no neighbors keeps its label. Fixed k is the operator
     * contract (sync LPA has no fixpoint guarantee — a path 2-colors
     * itself and oscillates — so production runs price k rounds, exactly
-    * like the PPR walk). Each round is ONE equi-join (adjacency ×
-    * label frame), ONE (node, label) count-aggregate, and ONE top-1
-    * window per node — k rounds = k shuffle trios, lineage truncated
-    * per round; the count frame is bounded by Σ deg, never all-pairs. */
+    * like the PPR walk). Rounds run as [[lpaLoop]] describes. */
   def labelPropagation(spark: SparkSession, customer: DataFrame,
-      iters: Int = 3): DataFrame = {
+      iters: Int = 3): DataFrame =
+    lpaLoop(chainAdjacency(customer),
+      customer.select(col("c_custkey").as("node")), iters)
+
+  /** The undirected, lineage-cut (src, dst) view of [[weightedChainEdges]]
+    * — the fixture graph of [[labelPropagation]] and [[kCore]]. */
+  private[graft] def chainAdjacency(customer: DataFrame): DataFrame = {
     val e = weightedChainEdges(customer).select(col("src"), col("dst"))
-    val und = truncated(e.unionByName(
+    truncated(e.unionByName(
       e.select(col("dst").as("src"), col("src").as("dst"))))
-    lpaLoop(und, customer.select(col("c_custkey").as("node")), iters)
   }
 
   /** LPA over the REAL student equi-rule graph — community detection on
@@ -1074,16 +1151,24 @@ object GraphOps {
 
   /** The shared synchronous-LPA loop: k rounds of mode-of-neighbors
     * (ties to the smallest label; isolated nodes keep their own) over a
-    * given undirected adjacency — ONE equi-join, ONE (node, label)
-    * count-aggregate, ONE top-1 window per round, lineage truncated per
-    * round; the count frame is bounded by Σ deg, never all-pairs. */
-  private def lpaLoop(und: DataFrame, nodes: DataFrame,
-      iters: Int): DataFrame = {
+    * given undirected adjacency. On the wide path ([[fixpoint]]) a round
+    * is ONE equi-join, ONE (node, label) count-aggregate and ONE top-1
+    * window — k rounds = k shuffle trios, lineage truncated per round; the
+    * count frame is bounded by Σ deg, never all-pairs. At width 1 the
+    * rounds run in one task over the edge rows plus the node frame. */
+  private[graft] def lpaLoop(und: DataFrame, nodes: DataFrame,
+      iters: Int, width: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // scale-adaptive loop parallelism — see [[withLoopParallelism]]; every
-    // caller passes a checkpointed adjacency, so the count is one trivial
-    // job over materialized blocks
-    withLoopParallelism(und.sparkSession, und.count()) {
+    // every caller passes a checkpointed adjacency, so the count is one
+    // trivial job over materialized blocks
+    fixpoint(und.sparkSession, und.count(), width) {
+      val input = und.select(col("src"), col("dst"), lit(false).as("is_node"))
+        .unionByName(nodes.select(col("node").as("src"),
+          col("node").as("dst"), lit(true).as("is_node")))
+      inOneTask(input, longColumns("node", "label")) { rows =>
+        (TaskLoops.lpa(rows, iters), iters)
+      }._1.orderBy(col("node"))
+    } {
     var lab = truncated(nodes.select(col("node"), col("node").as("label")))
     for (_ <- 1 to iters) {
       val counts = und.join(lab, und("dst") === lab("node"))
@@ -1112,14 +1197,12 @@ object GraphOps {
     *
     * Shape at 100 TB: each round is ONE degree aggregate (map-side
     * combined, node-sized) + two semi-joins restricting the edge frame —
-    * R rounds = R shuffle trios, lineage truncated per round, nothing on
-    * the driver. Output = surviving nodes with residual degree. */
+    * R rounds = R shuffle trios on [[kCoreLoop]]'s wide path, lineage
+    * truncated per round, nothing on the driver. Output = surviving nodes
+    * with residual degree. */
   def kCore(spark: SparkSession, customer: DataFrame, k: Int = 3,
-      rounds: Int = 3): DataFrame = {
-    val e = weightedChainEdges(customer).select(col("src"), col("dst"))
-    kCoreLoop(truncated(e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst")))), k, rounds)
-  }
+      rounds: Int = 3): DataFrame =
+    kCoreLoop(chainAdjacency(customer), k, rounds)
 
   /** k-core peeling over the REAL student equi-rule graph (the capped
     * adjacency — the [[labelPropagationStudents]] rationale): separates
@@ -1137,13 +1220,19 @@ object GraphOps {
       k: Int = 30, rounds: Int = 3): DataFrame =
     kCoreLoop(truncated(spark.table(table)), k, rounds)
 
-  /** The shared bounded-peel loop: each round is ONE degree aggregate +
-    * two semi-joins restricting the edge frame to survivors — R rounds =
-    * R shuffle trios, lineage truncated per round. */
-  private def kCoreLoop(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // scale-adaptive loop parallelism — see [[withLoopParallelism]]; every
-    // caller passes a checkpointed edge frame
-    withLoopParallelism(edges.sparkSession, edges.count()) {
+  /** The shared bounded-peel loop. On the wide path ([[fixpoint]]) each
+    * round is ONE degree aggregate + two semi-joins restricting the edge
+    * frame to survivors — R rounds = R shuffle trios, lineage truncated
+    * per round; at width 1 the rounds run in one task. */
+  private[graft] def kCoreLoop(edges: DataFrame, k: Int, rounds: Int,
+      width: Option[Int] = None): DataFrame = {
+    // every caller passes a checkpointed edge frame
+    fixpoint(edges.sparkSession, edges.count(), width) {
+      inOneTask(edges.select(col("src"), col("dst")),
+          longColumns("id", "deg")) { rows =>
+        (TaskLoops.kCore(rows, k, rounds), rounds)
+      }._1.orderBy(col("id"))
+    } {
     var und = edges
     for (_ <- 1 to rounds) {
       val surv = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))

@@ -387,18 +387,25 @@ object Streams {
     * guard blob + one file generation per micro-batch forever; pass
     * `maxBatches = 0` to opt out) (single-writer assumption: the swap
     * must not race a concurrent writer; readers between micro-batches
-    * see either generation, both correct). */
+    * see either generation, both correct). Micro-batches write from the
+    * stream's cloned session, so after each one the caller's session
+    * (`newDocs.sparkSession`) refreshes the index tables it may already
+    * have read — otherwise it keeps serving the pre-drain listing. */
   def incrementalIndexing(newDocs: DataFrame, table: String,
-      maxBatches: Int = 16): StreamingQuery =
+      maxBatches: Int = 16): StreamingQuery = {
+    val caller = newDocs.sparkSession
     newDocs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.ops.Search.indexDeltaIdempotent(table, batch)
         if (maxBatches > 0)
           graft.ops.Search.compactIfNeeded(batch.sparkSession, table, maxBatches)
-        ()
+        Seq(s"${table}_postings", s"${table}_stats")
+          .filter(caller.catalog.tableExists)
+          .foreach(caller.catalog.refreshTable)
       }
       .outputMode("append")
       .start()
+  }
 
   /** Streaming ingest into the standing q-gram FUZZY index —
     * [[incrementalIndexing]] for gram postings: each micro-batch runs

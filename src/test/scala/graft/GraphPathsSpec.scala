@@ -66,6 +66,21 @@ class GraphPathsSpec extends SparkSpec {
       "reliable mode wrote no checkpoint data")
   }
 
+  // after the test above: the checkpoint dir is set from here on
+  test("one-task converged PPR: reliable checkpoints == local checkpoints") {
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    def walk() = {
+      val (df, rounds) = GraphOps.pprConvergedBatchWithRounds(
+        und, Seq(1L, 999L), width = Some(1))
+      (df.collect().map(_.toSeq).toSet, rounds)
+    }
+    val local = walk()
+    spark.conf.set("spark.graft.pathCheckpoint", "reliable")
+    val reliable = try walk() finally spark.conf.unset("spark.graft.pathCheckpoint")
+    assert(reliable === local)
+  }
+
   test("chain wrapper is unchanged by the core extraction") {
     import spark.implicits._
     val customers = (0L to 24L).toDF("c_custkey")
@@ -641,28 +656,46 @@ class GraphPathsSpec extends SparkSpec {
     assert(s2.subsetOf(s1) && s3.subsetOf(s2))
   }
 
+  /** Spark jobs one call of `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    var jobs = 0
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      Thread.sleep(1000) // listener delivery is async
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs
+  }
+
+  // the 30-node fixture derives width 1, so this pins the width-2 dataflow
   test("labelPropagation: each extra round adds a bounded constant number of jobs") {
     import spark.implicits._
     val customer = (0L to 29L).toDF("c_custkey")
-    def jobsFor(iters: Int): Int = {
-      var jobs = 0
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        GraphOps.labelPropagation(spark, customer, iters).collect()
-        Thread.sleep(1000) // listener delivery is async
-      } finally spark.sparkContext.removeSparkListener(l)
-      jobs
+    def jobsFor(iters: Int): Int = jobsOf {
+      GraphOps.lpaLoop(GraphOps.chainAdjacency(customer),
+        customer.select(col("c_custkey").as("node")), iters, Some(2)).collect()
     }
     val j1 = jobsFor(1)
     val j3 = jobsFor(3)
     val perRound = (j3 - j1) / 2.0
     assert(j3 > j1 && perRound == perRound.floor && perRound <= 6,
       s"expected a constant <=6 jobs per extra LPA round, got j1=$j1 j3=$j3")
+  }
+
+  test("labelPropagation at width 1: the rounds run in one task, so extra " +
+      "rounds add no jobs") {
+    import spark.implicits._
+    val customer = (0L to 29L).toDF("c_custkey")
+    def jobsFor(iters: Int): Int =
+      jobsOf(GraphOps.labelPropagation(spark, customer, iters).collect())
+    val j1 = jobsFor(1)
+    val j3 = jobsFor(3)
+    assert(j1 === j3, s"expected equal job counts, got j1=$j1 j3=$j3")
   }
 
   test("featureAggregate: hand-computed floor-mean folds; isolated node keeps its feature") {

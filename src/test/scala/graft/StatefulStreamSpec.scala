@@ -100,6 +100,34 @@ class StatefulStreamSpec extends SparkSpec {
     CacheScope.unpersistAll()
   }
 
+  test("streaming index ingest: the calling session reads the drained index") {
+    import graft.ops.Search
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "graph databases store students as nodes", "en", "synthetic", 39L),
+      (2L, "spark runs the graph analytics in batch", "en", "synthetic", 39L),
+      (3L, "students share a college and a board", "en", "synthetic", 36L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val wh = Files.createTempDirectory("bm25-fresh-wh").toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_bm25_fresh_test LOCATION '$wh'")
+    val table = "graft_bm25_fresh_test.idx"
+    Search.buildIndex(docs, table)
+    val term = "quuxwort"
+    // this session has now read the index: its relation cache holds it
+    assert(Search.bm25Indexed(spark, table, Seq(term)).isEmpty)
+    val newDoc = Seq((1000000L, s"$term $term arrives with the feed", "en",
+      "synthetic", 35L)).toDF("doc_id", "text", "lang", "source", "n_chars")
+    val feed = Files.createTempDirectory("bm25-fresh-in").toFile.getAbsolutePath + "/in"
+    newDoc.repartition(1).write.parquet(feed)
+    val q = Streams.incrementalIndexing(
+      spark.readStream.schema(docs.schema).parquet(feed), table)
+    try q.processAllAvailable() finally q.stop()
+    val got = Search.bm25Indexed(spark, table, Seq(term)).collect()
+      .map(_.getAs[Long]("doc_id")).toSeq
+    assert(got === Seq(1000000L), "the drained document is not visible")
+    spark.sql("DROP DATABASE graft_bm25_fresh_test CASCADE")
+  }
+
   test("streaming curation: zero-keep first batch doesn't poison later batches") {
     import graft.ops.{Dedup, TextAnalysis}
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
