@@ -210,7 +210,8 @@ object AnnEntry {
       val wh = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx")
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
-      Similarity.buildIvfPqIndex(Tables.embeddings(s, d), "graft_idx.ivfpq")
+      Similarity.buildIvfIndex(Tables.embeddings(s, d), "graft_idx.ivfpq",
+        Similarity.Codec.Pq)
       Similarity.annIvfPqIndexedTopK(s, "graft_idx.ivfpq")
     }),
     // fused-index incremental ingest: base build freezes BOTH quantizers
@@ -222,9 +223,9 @@ object AnnEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        "graft_idx.ivfpqd")
-      Similarity.ivfPqIndexDelta("graft_idx.ivfpqd",
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
+        "graft_idx.ivfpqd", Similarity.Codec.Pq)
+      Similarity.ivfIndexDelta("graft_idx.ivfpqd",
         emb.filter(col("vec_id") % 5 === 0))
       Similarity.annIvfPqIndexedTopK(s, "graft_idx.ivfpqd")
     }),
@@ -237,7 +238,8 @@ object AnnEntry {
       val wh = java.nio.file.Files.createTempDirectory("graft-ivfsq-idx")
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
-      Similarity.buildIvfSqIndex(Tables.embeddings(s, d), "graft_idx.ivfsq")
+      Similarity.buildIvfIndex(Tables.embeddings(s, d), "graft_idx.ivfsq",
+        Similarity.Codec.Sq8)
       Similarity.annIvfSqIndexedTopK(s, "graft_idx.ivfsq")
     }),
     // SQ8 incremental ingest: delta assigned against the stored
@@ -249,9 +251,9 @@ object AnnEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfSqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        "graft_idx.ivfsqd")
-      Similarity.ivfSqIndexDelta("graft_idx.ivfsqd",
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
+        "graft_idx.ivfsqd", Similarity.Codec.Sq8)
+      Similarity.ivfIndexDelta("graft_idx.ivfsqd",
         emb.filter(col("vec_id") % 5 === 0))
       Similarity.annIvfSqIndexedTopK(s, "graft_idx.ivfsqd")
     }),
@@ -265,13 +267,13 @@ object AnnEntry {
       val wh = java.nio.file.Files.createTempDirectory("graft-ivfpqr-idx")
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
-      Similarity.buildIvfPqResidualIndex(Tables.embeddings(s, d),
-        "graft_idx.ivfpqr")
+      Similarity.buildIvfIndex(Tables.embeddings(s, d),
+        "graft_idx.ivfpqr", Similarity.Codec.PqResidual)
       Similarity.annIvfPqResidualTopK(s, "graft_idx.ivfpqr")
     }),
     // residual-index incremental ingest: the delta is assigned AND
-    // residual-encoded against the stored artifacts (ivfPqIndexDelta
-    // branches on the recorded 'enc' provenance — mixing encodings
+    // residual-encoded against the stored artifacts (ivfIndexDelta
+    // encodes under the stored codec's provenance — mixing encodings
     // would silently mis-score every ADC candidate). Oracle-only (not
     // benched): its cost shape is already priced by the
     // sim_ann_ivfpq_index_delta and sim_ann_ivfpq_residual rows
@@ -280,9 +282,9 @@ object AnnEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfPqResidualIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        "graft_idx.ivfpqrd")
-      Similarity.ivfPqIndexDelta("graft_idx.ivfpqrd",
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
+        "graft_idx.ivfpqrd", Similarity.Codec.PqResidual)
+      Similarity.ivfIndexDelta("graft_idx.ivfpqrd",
         emb.filter(col("vec_id") % 5 === 0))
       Similarity.annIvfPqResidualTopK(s, "graft_idx.ivfpqrd")
     }),

@@ -290,8 +290,8 @@ object RetrievalEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val emb = Tables.embeddings(s, d)
-      Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
-        "graft_idx.ivfpqs")
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
+        "graft_idx.ivfpqs", Similarity.Codec.Pq)
       val feed = java.nio.file.Files.createTempDirectory("graft-pq-feed")
         .toFile.getAbsolutePath + "/in"
       val delta = emb.filter(col("vec_id") % 5 === 0)
@@ -302,7 +302,7 @@ object RetrievalEntry {
         .parquet(feed)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.ivfPqIndexDeltaIdempotent("graft_idx.ivfpqs", batch)
+          Similarity.ivfIndexDeltaIdempotent("graft_idx.ivfpqs", batch)
           Similarity.compactIvfIfNeeded(s, "graft_idx.ivfpqs")
           ()
         }

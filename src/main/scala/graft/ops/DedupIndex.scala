@@ -90,21 +90,8 @@ object DedupIndex {
       newDocs: DataFrame): Unit = {
     Swap.recoverUnpartitioned(spark, table)
     if (!spark.catalog.tableExists(table)) { build(newDocs, table); return }
-    val novel = IngestGuard.suspectPredicate(spark, table, "doc_id") match {
-      case Some(hit) =>
-        val suspects = newDocs.select(col("doc_id")).distinct().filter(hit)
-        if (suspects.isEmpty) newDocs
-        else {
-          val present = spark.table(table).select(col("doc_id"))
-            .join(broadcast(suspects), Seq("doc_id"), "left_semi")
-            .distinct()
-          newDocs.join(broadcast(present), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-        }
-      case None =>
-        newDocs.join(spark.table(table).select(col("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-    }
+    val novel = IngestGuard.novel(spark, table, newDocs, "doc_id",
+      spark.table(table))
     if (!novel.isEmpty) delta(spark, table, novel)
   }
 

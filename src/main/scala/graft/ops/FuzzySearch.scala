@@ -107,7 +107,7 @@ object FuzzySearch {
     // interrupted compaction swap, not a fresh catalog — roll it
     // forward before appending (the ingestPreamble discipline)
     if (!spark.catalog.tableExists(s"${table}_grams"))
-      Similarity.recoverPartitionedSwap(spark, s"${table}_grams")
+      Swap.recoverPartitioned(spark, s"${table}_grams")
     // standing _names — not just _guard — is the sentinel: a torn
     // buildIndex (crash after the _names write, before _grams/guard
     // land) leaves _names with NO guard, and appending would CREATE
@@ -169,21 +169,8 @@ object FuzzySearch {
     if (!spark.catalog.tableExists(s"${table}_names")) {
       buildIndex(delta, table); return
     }
-    val novel = graft.ops.IngestGuard.suspectPredicate(spark, table, "id")
-      match {
-        case Some(hit) =>
-          val suspects = delta.select(col("id")).distinct().filter(hit)
-          if (suspects.isEmpty) delta
-          else {
-            val present = spark.table(s"${table}_names").select(col("id"))
-              .join(broadcast(suspects), Seq("id"), "left_semi").distinct()
-            delta.join(broadcast(present), Seq("id"), "left_anti")
-              .localCheckpoint()
-          }
-        case None =>
-          delta.join(spark.table(s"${table}_names").select(col("id"))
-            .distinct(), Seq("id"), "left_anti").localCheckpoint()
-      }
+    val novel = graft.ops.IngestGuard.novel(spark, table, delta, "id",
+      spark.table(s"${table}_names"))
     if (!novel.isEmpty) indexDelta(table, novel)
   }
 
@@ -263,9 +250,9 @@ object FuzzySearch {
     * crash at any intermediate state leaves its anti-join a no-op. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    Similarity.recoverPartitionedSwap(spark, s"${table}_grams")
+    Swap.recoverPartitioned(spark, s"${table}_grams")
     recoverNamesSwap(spark, table)
-    Similarity.compactPartitioned(spark, s"${table}_grams", "bucket",
+    Swap.compactPartitioned(spark, s"${table}_grams", "bucket",
       df => Tombstones.filter(spark, table, df, "id"))
     if (spark.catalog.tableExists(Tombstones.sidecar(table))) {
       // physical fold of the victims' name rows through the unpartitioned

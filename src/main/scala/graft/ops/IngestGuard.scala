@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Delta-proportional id-disjointness enforcement for the standing indexes
-  * ([[Search.indexDelta]], [[Similarity.ivfIndexDelta]]).
+  * ([[Search.indexDelta]], [[Similarity.ivfIndexDelta]], …), and the
+  * replay filter ([[novel]]) their idempotent twins share.
   *
   * The precondition both ingests must enforce — "delta ids are NEW" — used
   * to be checked by semi-joining the standing index's id column against the
@@ -165,6 +166,39 @@ object IngestGuard {
         s"$what precondition violated: delta contains $idCol value(s) " +
           s"already in the standing index (e.g. ${clash.headOption.map(_.get(0))}); " +
           "re-ingest would silently corrupt the additive index state")
+    }
+  }
+
+  /** The rows of `delta` whose `idCol` is NOT already in `standing` —
+    * the replay filter every idempotent (at-least-once) ingest runs, so
+    * a redelivered streaming micro-batch is a no-op instead of a crash
+    * loop or duplicated index rows. Exact confirmation runs only for the
+    * bloom-suspect SLIVER of the delta (true replays + fpp-rare false
+    * hits): the standing id column is probed against the broadcast
+    * sliver, never anti-joined against the whole delta, so a clean batch
+    * pays just the bloom probe. An index without a sidecar treats every
+    * id as suspect. A filtered novel set is lineage-CUT (eager
+    * localCheckpoint): it derives from the table the caller is about to
+    * append to, and the append would otherwise invalidate the cached
+    * plan mid-ingest — later writes would re-evaluate the anti-join
+    * against the just-appended rows and see an empty delta (the bug a
+    * (0, null) BM25 stats row once exposed). */
+  def novel(spark: SparkSession, table: String, delta: DataFrame,
+      idCol: String, standing: => DataFrame): DataFrame = {
+    def standingIds = standing.select(col(idCol))
+    suspectPredicate(spark, table, idCol) match {
+      case Some(hit) =>
+        val suspects = delta.select(col(idCol)).distinct().filter(hit)
+        if (suspects.isEmpty) delta
+        else {
+          val present = standingIds
+            .join(broadcast(suspects), Seq(idCol), "left_semi").distinct()
+          delta.join(broadcast(present), Seq(idCol), "left_anti")
+            .localCheckpoint()
+        }
+      case None =>
+        delta.join(standingIds.distinct(), Seq(idCol), "left_anti")
+          .localCheckpoint()
     }
   }
 }

@@ -192,21 +192,8 @@ object Phrase {
     if (!spark.catalog.tableExists(s"${table}_pos")) { // bootstrap
       buildPositional(delta, table, buckets); return
     }
-    val standingIds = spark.table(s"${table}_pos").select(col("doc_id"))
-    val novel = IngestGuard.suspectPredicate(spark, table, "doc_id") match {
-      case Some(hit) =>
-        val suspects = delta.select(col("doc_id")).distinct().filter(hit)
-        if (suspects.isEmpty) delta
-        else {
-          val present = standingIds
-            .join(broadcast(suspects), Seq("doc_id"), "left_semi").distinct()
-          delta.join(broadcast(present), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-        }
-      case None => // legacy index without a guard: everything is suspect
-        delta.join(standingIds.distinct(), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-    }
+    val novel = IngestGuard.novel(spark, table, delta, "doc_id",
+      spark.table(s"${table}_pos"))
     if (!novel.isEmpty) positionalDelta(table, novel, buckets)
   }
 
@@ -232,19 +219,18 @@ object Phrase {
   /** Compact a delta-grown / tombstoned positional index back to
     * build-fresh layout: one rewrite into exactly `buckets` files with
     * victims physically excluded, staged + swapped crash-recoverably
-    * ([[Search.compactIndex]]'s rename protocol), ONE guard bloom over
-    * the surviving ids, sidecar retired LAST. */
+    * ([[Swap.stageThenSwap]]), ONE guard bloom over the surviving ids,
+    * sidecar retired LAST. */
   def positionalCompact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
     recoverPositionalSwap(spark, table)
-    val staged = s"${table}_pos_compacting"
-    Tombstones.filter(spark, table, spark.table(s"${table}_pos"), "doc_id")
-      .repartition(buckets, col("term"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(staged)
-    spark.sql(s"ALTER TABLE ${table}_pos RENAME TO ${table}_pos_retired")
-    spark.sql(s"ALTER TABLE $staged RENAME TO ${table}_pos")
-    spark.sql(s"DROP TABLE ${table}_pos_retired")
+    Swap.stageThenSwap(spark, s"${table}_pos",
+        Tombstones.filter(spark, table, spark.table(s"${table}_pos"),
+          "doc_id")) { (df, staged) =>
+      df.repartition(buckets, col("term"))
+        .write.mode("overwrite")
+        .bucketBy(buckets, "term").sortBy("term")
+        .format("parquet").saveAsTable(staged)
+    }
     IngestGuard.write(spark,
       spark.table(s"${table}_pos").select(col("doc_id")).distinct(),
       "doc_id", table, overwrite = true)
@@ -330,22 +316,9 @@ object Phrase {
   }
 
   /** Repair an interrupted [[positionalCompact]] swap — the
-    * [[Search.recoverIndexSwap]] state machine on the `_pos` names. */
-  def recoverPositionalSwap(spark: SparkSession, table: String): Boolean = {
-    val live = s"${table}_pos"
-    val staged = s"${table}_pos_compacting"
-    val retired = s"${table}_pos_retired"
-    val rolledForward =
-      if (!spark.catalog.tableExists(live) && spark.catalog.tableExists(staged)) {
-        spark.sql(s"ALTER TABLE $staged RENAME TO $live")
-        true
-      } else false
-    if (spark.catalog.tableExists(live) && spark.catalog.tableExists(staged))
-      spark.sql(s"DROP TABLE $staged")
-    if (spark.catalog.tableExists(live) && spark.catalog.tableExists(retired))
-      spark.sql(s"DROP TABLE $retired")
-    rolledForward
-  }
+    * [[Swap.recoverUnpartitioned]] state machine on the `_pos` names. */
+  def recoverPositionalSwap(spark: SparkSession, table: String): Boolean =
+    Swap.recoverUnpartitioned(spark, s"${table}_pos")
 
   /** Index-backed exact-phrase top-k — identical frame to [[phraseTopK]].
     *

@@ -565,23 +565,8 @@ object Search {
     if (!spark.catalog.tableExists(s"${table}_postings")) { // bootstrap
       indexDelta(table, delta, buckets); return
     }
-    val standingIds = spark.table(s"${table}_postings").select(col("doc_id"))
-    val novel = IngestGuard.suspectPredicate(spark, table, "doc_id") match {
-      case Some(hit) =>
-        val suspects = delta.select(col("doc_id")).distinct().filter(hit)
-        if (suspects.isEmpty) delta
-        else {
-          // confirmed replays = standing ∩ suspect sliver (broadcast the
-          // sliver; the standing column is scanned once, pruned by it)
-          val present = standingIds
-            .join(broadcast(suspects), Seq("doc_id"), "left_semi").distinct()
-          delta.join(broadcast(present), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-        }
-      case None => // legacy index without a sidecar: everything is suspect
-        delta.join(standingIds.distinct(), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-    }
+    val novel = IngestGuard.novel(spark, table, delta, "doc_id",
+      spark.table(s"${table}_postings"))
     if (!novel.isEmpty) indexDelta(table, novel, buckets)
   }
 
@@ -600,32 +585,29 @@ object Search {
     * (spec-gated).
     *
     * The rewrite stages into `{table}_postings_compacting`, then swaps via
-    * rename-away (live → `_retired`, staged → live, drop `_retired`) —
-    * Spark cannot overwrite a table it is reading, and a single atomic
-    * table-replace DDL doesn't exist, so the swap is instead made
-    * CRASH-RECOVERABLE: every intermediate catalog state is one
-    * [[recoverIndexSwap]] call away from a readable index (roll the
-    * staged copy forward, or drop a leftover), and the ingest path
-    * refuses to bootstrap over a mid-swap catalog (see [[indexDelta]]) —
+    * rename-away ([[Swap.stageThenSwap]]: live → `_retired`, staged →
+    * live, drop `_retired`) — Spark cannot overwrite a table it is
+    * reading, and a single atomic table-replace DDL doesn't exist, so the
+    * swap is instead made CRASH-RECOVERABLE: every intermediate catalog
+    * state is one [[recoverIndexSwap]] call away from a readable index
+    * (roll the staged copy forward, or drop a leftover), and the ingest
+    * path refuses to bootstrap over a mid-swap catalog (see [[indexDelta]]) —
     * the silent-wrong-scores hazard of a delta-only postings table
     * against full-corpus additive stats cannot arise. */
   def compactIndex(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
     recoverIndexSwap(spark, table) // roll forward/clean any interrupted swap
-    val staged = s"${table}_postings_compacting"
     // the rewrite folds tombstones away physically (the delete lifecycle's
     // deferred rewrite — see Tombstones); the sidecar is dropped LAST, so
     // a crash at any intermediate state leaves its anti-join a no-op
-    Tombstones.filter(spark, table, spark.table(s"${table}_postings"),
-        "doc_id")
+    Swap.stageThenSwap(spark, s"${table}_postings", Tombstones.filter(spark,
+        table, spark.table(s"${table}_postings"), "doc_id")) { (df, staged) =>
       // repartition on the SAME hash family bucketing uses (Murmur3), so
       // each write task holds exactly one bucket -> one file per bucket
-      .repartition(buckets, col("term"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(staged)
-    spark.sql(s"ALTER TABLE ${table}_postings RENAME TO ${table}_postings_retired")
-    spark.sql(s"ALTER TABLE $staged RENAME TO ${table}_postings")
-    spark.sql(s"DROP TABLE ${table}_postings_retired")
+      df.repartition(buckets, col("term"))
+        .write.mode("overwrite")
+        .bucketBy(buckets, "term").sortBy("term")
+        .format("parquet").saveAsTable(staged)
+    }
     // additive stats rows fold to one exact row (integer-valued doubles);
     // k tiny rows collect to the driver — never corpus data
     // coalesce: an index built over an empty corpus has a null-sum stats
@@ -663,21 +645,8 @@ object Search {
     * needs no repair at all: multi-row stats and multi-blob guards are the
     * normal additive state — re-running compaction folds them. Returns
     * true iff a roll-forward restored a missing live table. */
-  def recoverIndexSwap(spark: SparkSession, table: String): Boolean = {
-    val live = s"${table}_postings"
-    val staged = s"${table}_postings_compacting"
-    val retired = s"${table}_postings_retired"
-    val rolledForward =
-      if (!spark.catalog.tableExists(live) && spark.catalog.tableExists(staged)) {
-        spark.sql(s"ALTER TABLE $staged RENAME TO $live")
-        true
-      } else false
-    if (spark.catalog.tableExists(live) && spark.catalog.tableExists(staged))
-      spark.sql(s"DROP TABLE $staged")
-    if (spark.catalog.tableExists(live) && spark.catalog.tableExists(retired))
-      spark.sql(s"DROP TABLE $retired")
-    rolledForward
-  }
+  def recoverIndexSwap(spark: SparkSession, table: String): Boolean =
+    Swap.recoverUnpartitioned(spark, s"${table}_postings")
 
   /** Compaction POLICY: compact when the index has accumulated more than
     * `maxBatches` ingest generations OR the guard sidecar has grown past

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over the `embeddings` table
@@ -45,6 +45,12 @@ object Similarity {
   private def cosFromNorms(v: Column, qv: Column, nrm: Column, qnrm: Column): Column =
     dot(v, qv) / (nrm * qnrm)
 
+  /** The exact pair score every query path ranks on: candidate `v`
+    * against query `qv` from their stored norms, rounded to 6 decimals —
+    * the cross-engine cut key. */
+  private def cos6: Column =
+    round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
+
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
@@ -81,8 +87,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6))
+      .withColumn("cos", cos6)
       .withColumn("rank",
         row_number().over(Window.partitionBy(col("qid"))
           .orderBy(desc("cos"), col("vec_id"))))
@@ -127,9 +132,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       // slim to scalar columns BEFORE the cut — the heap exchange should
       // carry (qid, vec_id, cos, bucket), not 64-dim vectors
-      .select(col("qid"), col("vec_id"), col("bucket"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
+      .select(col("qid"), col("vec_id"), col("bucket"), cos6.as("cos"))
     rankedTopKPerQuery(scored, k)
       .select(col("qid"), col("vec_id"), col("rank"),
         round(col("cos"), 4).as("cos"), col("bucket"))
@@ -153,9 +156,7 @@ object Similarity {
         explode(array(col("bucket") +: flips: _*)).as("bucket"))
     val scored = e.join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
+      .select(col("qid"), col("vec_id"), cos6.as("cos"))
     rankedTopKPerQuery(scored, k)
       .select(col("qid"), col("vec_id"), col("rank"), round(col("cos"), 4).as("cos"))
       .orderBy(col("qid"), col("rank"))
@@ -184,13 +185,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       // slim to scalar columns BEFORE the cut — the heap exchange carries
       // (qid, vec_id, cell, cos), not 64-dim vectors
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
-    rankedTopKPerQuery(scored, k)
-      .select(col("qid"), col("vec_id"), col("rank"),
-        round(col("cos"), 4).as("cos"), col("cell"))
-      .orderBy(col("qid"), col("rank"))
+      .select(col("qid"), col("vec_id"), col("cell"), cos6.as("cos"))
+    rankedCells(scored, k)
   }
 
   /** IVF with a TRAINED coarse quantizer: cells are the label-seeded
@@ -210,7 +206,7 @@ object Similarity {
     * corpus exchange carries a single slim row per vector; probing is an
     * equi-join on cell id against nprobe·queries broadcast rows; the heap
     * cut bounds what crosses the final exchange. Production materializes
-    * the inverted lists once (the buildIndex pattern); here they derive
+    * the inverted lists once ([[buildIvfIndex]]); here they derive
     * in-query so the DuckDB oracle can replay the whole chain. */
   def annIvfTrainedTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 3,
       nprobe: Int = 2): DataFrame = {
@@ -218,58 +214,42 @@ object Similarity {
     // centroid aggregation — materialize it once (CacheScope; the cached
     // set is k·dims values, label-count rows)
     val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
-    val celled = assignedCells(embeddings, cent)
-    val e = withNorm(vecs(embeddings))
-      .withColumn("xq", transform(col("v"),
-        x => round(x * 1000).cast("long") * lit(1000L)))
-    val dist = aggregate(
-      zip_with(col("xq"), col("cvec"), (x, c) => (x - c) * (x - c)),
+    val q0 = withNorm(vecs(embeddings)).filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"),
+        col("nrm").as("qnrm"), quantized(col("v")).as("xq"))
+    rankedCells(exactScored(assignedCells(embeddings, cent), q0, cent, nprobe),
+      k)
+  }
+
+  /** The exact integer space every cell assignment, probe and residual
+    * compares in: x·10³ rounded HALF_UP, scaled to the centroids' 10⁶
+    * `cvec` scale — engine-reproducible, so the oracle replays it. */
+  private def quantized(v: Column): Column =
+    transform(v, x => round(x * 1000).cast("long") * lit(1000L))
+
+  /** Exact integer squared L2 distance between two array<long> columns. */
+  private def sqDist(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
       lit(0L), (acc, d) => acc + d)
-    // nprobe nearest cells per query through the same bounded heaps —
-    // nQueries·|cells| rows, cut map-side
-    val probes = graft.plans.TopK.perKeyMin(
-        e.filter(col("vec_id") < nQueries).join(broadcast(cent))
-          .select(col("vec_id").as("qid"), col("c_label").as("cell"),
-            dist.as("d2")),
-        Seq("qid"), "d2", "cell", nprobe)
-      .select(col("qid"), col("cell"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .join(probes, "qid")
-    val scored = celled.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
+
+  /** The IVF result frame: [[rankedTopKPerQuery]]'s cut as (qid, vec_id,
+    * rank, cos at 4 decimals, cell), ordered. */
+  private def rankedCells(scored: DataFrame, k: Int): DataFrame =
     rankedTopKPerQuery(scored, k)
       .select(col("qid"), col("vec_id"), col("rank"),
         round(col("cos"), 4).as("cos"), col("cell"))
       .orderBy(col("qid"), col("rank"))
-  }
 
-  /** Materialize the trained-IVF index — the "production builds the
-    * inverted lists once" promise of [[annIvfTrainedTopK]] made real, the
-    * [[Search.buildIndex]] pattern applied to ANN: `{table}_ivf` holds
-    * (vec_id, v, nrm) PARTITIONED BY cell, so the inverted lists are
-    * partition directories and a probe's cell equi-join prunes at SCAN
-    * time via dynamic partition pruning (the layout_dpp discipline);
-    * `{table}_centroids` holds the trained quantizer. Build cost = the
-    * centroid aggregation + one corpus argmin pass; every query after
-    * reads only its probed cells — never the corpus. */
-  /** (vec_id, v, nrm, cell) — every vector of `df` assigned to its argmin
-    * cell over the GIVEN centroids (broadcast cross + partial min-struct
-    * agg; one slim row per vector crosses the exchange). Shared by the
-    * index build and the frozen-quantizer delta ingest. */
-  private def assignedCells(df: DataFrame, cent: DataFrame): DataFrame = {
-    val e = withNorm(vecs(df))
-      .withColumn("xq", transform(col("v"),
-        x => round(x * 1000).cast("long") * lit(1000L)))
-    val dist = aggregate(
-      zip_with(col("xq"), col("cvec"), (x, c) => (x - c) * (x - c)),
-      lit(0L), (acc, d) => acc + d)
-    e.join(broadcast(cent))
+  /** (vec_id, v, nrm, label, cell) — every vector of `df` assigned to its
+    * argmin cell over the GIVEN centroids (broadcast cross + partial
+    * min-struct agg; one slim row per vector crosses the exchange). The
+    * coarse-assignment step of the index build, the frozen-quantizer
+    * delta, the trained in-query IVF and semantic dedup. */
+  private def assignedCells(df: DataFrame, cent: DataFrame): DataFrame =
+    withNorm(vecs(df)).withColumn("xq", quantized(col("v")))
+      .join(broadcast(cent))
       .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-        col("c_label"), dist.as("d2"))
+        col("c_label"), sqDist(col("xq"), col("cvec")).as("d2"))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("d2"), col("c_label"))).as("best"),
         first(col("v")).as("v"), first(col("nrm")).as("nrm"),
@@ -281,51 +261,299 @@ object Similarity {
         first(col("label")).as("label"))
       .select(col("vec_id"), col("v"), col("nrm"), col("label"),
         col("best.c_label").as("cell"))
+
+  /** How the inverted lists store each vector beside its raw `v` — the
+    * only part of the IVF index that varies (IVFADC, Jégou et al., TPAMI
+    * 2011: one inverted file, a pluggable code). Coarse assignment, list
+    * write, probe selection, candidate scan and rank are shared; a codec
+    * supplies its trained artifact table, how it encodes assigned rows,
+    * and its ADC scorer. [[Codec.stored]] is the one place that reads
+    * which codec a table stores.
+    *
+    * The compression ladder (FAISS terms): [[Codec.Flat]] keeps raw
+    * vectors only and scores every probed candidate with the exact
+    * cosine; [[Codec.Sq8]] adds one byte per dim (8× smaller candidate
+    * IO, near-exact); [[Codec.Pq]] 8 PQ codes per vector (32×, lossy);
+    * [[Codec.PqResidual]] PQ over the coarse-cell residual (32×, tighter
+    * codes). A lossy codec's probe reads ONLY (vec_id, cell, code) from
+    * the probed cells, cuts a (d2, vec_id) shortlist on its exact-integer
+    * ADC distance and rescores the survivors on raw vectors. Every
+    * trained artifact is FROZEN at build time (the production IVF
+    * contract): deltas assign and encode against the stored tables, and
+    * only a retrain replaces them. */
+  sealed abstract class Codec(val name: String,
+      private[ops] val artifact: Option[String]) {
+
+    /** `rows` — the assigned rows (vec_id, v, nrm, label, cell) of the
+      * raw vectors `src` — plus this codec's code column, encoded against
+      * the STORED artifact table; `train` (a build) first trains that
+      * table on `src` and writes it. */
+    private[ops] def encode(src: DataFrame, rows: DataFrame,
+        cent: DataFrame, table: String, train: Boolean): DataFrame = rows
+
+    /** (qid, vec_id, cell, d2): the exact-integer ADC distance of every
+      * probed candidate in `cand`, read from the code column — never
+      * `v`. [[Codec.Flat]] has no ADC step: it ranks the exact cosine. */
+    private[ops] def adc(table: String, cand: DataFrame, q0: DataFrame,
+        probes: DataFrame, cent: DataFrame): DataFrame =
+      throw new IllegalStateException(s"the $name codec has no ADC step")
+
+    private[ops] def stores(table: String): String =
+      artifact.fold(s"$name lists (raw vectors only)")(a =>
+        s"$name codes against ${table}_$a")
   }
 
-  def buildIvfIndex(embeddings: DataFrame, table: String): Unit = {
-    dropStaleArtifacts(embeddings.sparkSession, table, keep = Set.empty)
+  object Codec {
+    case object Flat extends Codec("flat", None)
+
+    /** Raw-vector PQ ([[Centroids.pqCodes]]: 8 small ints for 64 floats)
+      * against the per-subspace label-centroid codebook `{t}_pqbook`; one
+      * ADC lookup table per query. */
+    case object Pq extends Codec("pq", Some("pqbook")) {
+      override private[ops] def encode(src: DataFrame, rows: DataFrame,
+          cent: DataFrame, table: String, train: Boolean): DataFrame = {
+        if (train) writeCodebook(Centroids.pqCodebook(src), "raw", table)
+        rows.join(packCodes(Centroids.pqCodes(src,
+          src.sparkSession.table(s"${table}_pqbook"))), "vec_id")
+      }
+      override private[ops] def adc(table: String, cand: DataFrame,
+          q0: DataFrame, probes: DataFrame, cent: DataFrame): DataFrame =
+        pqAdc(table, cand, q0, probes, cent, perCell = false)
+    }
+
+    /** The IVFADC refinement (§III): PQ encodes the coarse-cell RESIDUAL
+      * r = x − centroid(cell(x)) instead of x. The coarse quantizer
+      * already explains the centroid component of every vector, so
+      * residuals concentrate around zero and the same 8 codes buy more
+      * precision. The residual is exact integer subtraction at scale 10⁶
+      * against a sample-seeded residual codebook
+      * ([[Centroids.residualCodebook]]); an ADC distance against a
+      * residual code is only meaningful relative to that candidate's
+      * cell, so the LUT is keyed per (query, probed cell) — nprobe×
+      * larger, still a few thousand broadcast rows. */
+    case object PqResidual extends Codec("pqresidual", Some("pqbook")) {
+      override private[ops] def encode(src: DataFrame, rows: DataFrame,
+          cent: DataFrame, table: String, train: Boolean): DataFrame = {
+        // consumed twice (codebook training + encode) — tracked
+        val res = graft.CacheScope.track(rows
+          .withColumn("xq", quantized(col("v")))
+          .join(broadcast(cent), col("cell") === col("c_label"))
+          .select(col("vec_id"), col("v"), col("nrm"), col("label"),
+            col("cell"),
+            zip_with(col("xq"), col("cvec"), (x, c) => x - c).as("rvec")))
+        if (train) writeCodebook(Centroids.residualCodebook(
+          res.select(col("vec_id"), col("rvec"))), "residual", table)
+        res.drop("rvec")
+          .join(packCodes(Centroids.pqCodesFromInt(
+            res.select(col("vec_id"), col("rvec").as("xq")),
+            src.sparkSession.table(s"${table}_pqbook"))), "vec_id")
+      }
+      override private[ops] def adc(table: String, cand: DataFrame,
+          q0: DataFrame, probes: DataFrame, cent: DataFrame): DataFrame =
+        pqAdc(table, cand, q0, probes, cent, perCell = true)
+    }
+
+    /** Scalar quantization (FAISS `IndexIVFScalarQuantizer`): each dim
+      * compresses to one byte-range code against a per-dim [min, max]
+      * trained over the corpus (`{t}_sqrange`: dim, minq, maxq) — code =
+      * round((q − min)·255 / (max − min)) on the exact scale-10³ integer
+      * q, so codes are engine-reproducible ([[sqCodes]]; a delta value
+      * outside the frozen range saturates). ADC is 64 integer mult-adds
+      * per candidate on the dequantized codes ([[sqDecode255]]) — no
+      * lookup table. */
+    case object Sq8 extends Codec("sq8", Some("sqrange")) {
+      override private[ops] def encode(src: DataFrame, rows: DataFrame,
+          cent: DataFrame, table: String, train: Boolean): DataFrame = {
+        // per-dim min/max of the scale-1e3 integer q: map-side combine
+        // collapses the 64× explode before the 64-group exchange
+        if (train) vecs(src)
+          .select(posexplode(transform(col("v"),
+            x => round(x * 1000).cast("long"))).as(Seq("dim", "q")))
+          .groupBy(col("dim"))
+          .agg(min(col("q")).as("minq"), max(col("q")).as("maxq"))
+          .write.mode("overwrite").format("parquet")
+          .saveAsTable(s"${table}_sqrange")
+        rows.crossJoin(broadcast(sqRangeArrays(src.sparkSession, table)))
+          .select(col("vec_id"), col("v"), col("nrm"), col("label"),
+            col("cell"),
+            sqCodes(transform(col("v"), x => round(x * 1000).cast("long")))
+              .as("sq"))
+      }
+      override private[ops] def adc(table: String, cand: DataFrame,
+          q0: DataFrame, probes: DataFrame, cent: DataFrame): DataFrame = {
+        // the query side at scale q·255, matching sqDecode255's scale
+        val qs = q0.select(col("qid"), transform(col("qv"),
+          x => round(x * 1000).cast("long") * lit(255L)).as("qs"))
+        // dequantize BEFORE the probes fan-out: a candidate probed by m
+        // queries decodes once, not m times
+        cand.select(col("vec_id"), col("cell"), col("sq"))
+          .crossJoin(broadcast(sqRangeArrays(cand.sparkSession, table)))
+          .withColumn("dec", sqDecode255(col("sq")))
+          .join(broadcast(probes), Seq("cell"))
+          .filter(col("vec_id") =!= col("qid"))
+          .join(broadcast(qs), Seq("qid"))
+          .select(col("qid"), col("vec_id"), col("cell"),
+            sqDist(col("qs"), col("dec")).as("d2"))
+      }
+    }
+
+    val all: Seq[Codec] = Seq(Flat, Pq, PqResidual, Sq8)
+
+    /** Write a PQ codebook with its code provenance (`enc`). */
+    private def writeCodebook(book: DataFrame, enc: String,
+        table: String): Unit =
+      book.withColumn("enc", lit(enc))
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(s"${table}_pqbook")
+
+    /** PQ asymmetric distance ([[Codec.Pq]], [[Codec.PqResidual]]): a LUT
+      * of exact integer subvector distances — query side × stored
+      * codebook — then each candidate sums its 8 code lookups over the
+      * codes-only scan. The residual codec keys the LUT per (query, probed
+      * cell), its query side being the query residual xq − cvec(cell);
+      * raw PQ keys it per query. */
+    private def pqAdc(table: String, cand: DataFrame, q0: DataFrame,
+        probes: DataFrame, cent: DataFrame, perCell: Boolean): DataFrame = {
+      val subDims = Dim / Centroids.SubSpaces
+      val keys = if (perCell) Seq("qid", "cell") else Seq("qid")
+      val qside =
+        if (!perCell) q0.select(col("qid"), col("xq").as("qr"))
+        else probes.join(q0.select(col("qid"), col("xq")), "qid")
+          .join(broadcast(cent), col("cell") === col("c_label"))
+          .select(col("qid"), col("cell"),
+            zip_with(col("xq"), col("cvec"), (x, c) => x - c).as("qr"))
+      // nQueries (× nprobe) × SubSpaces × |codebook| rows — a broadcast
+      val lut = qside.select(keys.map(col) :+ posexplode(
+          transform(sequence(lit(0), lit(Centroids.SubSpaces - 1)),
+            s => slice(col("qr"), s * subDims + 1, lit(subDims))))
+          .as(Seq("sub", "qs")): _*)
+        .join(broadcast(cand.sparkSession.table(s"${table}_pqbook")), "sub")
+        .select(keys.map(col) ++ Seq(col("sub"), col("c_label").as("code"),
+          sqDist(col("qs"), col("cvec")).as("sd2")): _*)
+      cand.select(col("vec_id"), col("cell"), col("codes"))
+        .join(broadcast(probes), Seq("cell"))
+        .filter(col("vec_id") =!= col("qid"))
+        .select(col("qid"), col("vec_id"), col("cell"),
+          posexplode(col("codes")).as(Seq("sub", "code")))
+        .join(broadcast(lut), keys ++ Seq("sub", "code"))
+        .groupBy(col("qid"), col("vec_id"), col("cell"))
+        .agg(sum(col("sd2")).as("d2"))
+    }
+
+    /** (vec_id, codes) — per-subspace codes packed sub-ordered into one
+      * array column, the inverted-list storage form. */
+    private def packCodes(c: DataFrame): DataFrame = c
+      .groupBy(col("vec_id"))
+      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
+      .select(col("vec_id"), transform(col("sc"), s => s("code")).as("codes"))
+
+    /** The 64-entry SQ trainer as one broadcastable row (minv, rng arrays
+      * in dim order) — the form [[sqCodes]]/[[sqDecode255]] zip against. */
+    private def sqRangeArrays(spark: SparkSession,
+        table: String): DataFrame =
+      spark.table(s"${table}_sqrange")
+        .agg(array_sort(collect_list(struct(col("dim"), col("minq"),
+          (col("maxq") - col("minq")).as("rng")))).as("md"))
+        .select(transform(col("md"), s => s("minq")).as("minv"),
+          transform(col("md"), s => s("rng")).as("rng"))
+
+    /** code_d = round((q_d − min_d)·255 / range_d) clamped to [0, 255]
+      * (a DELTA value outside the frozen trained range must still fit the
+      * byte code — the standard SQ saturation), 0 on a degenerate
+      * (zero-range) dim — exact-integer numerator, one IEEE divide, the
+      * same HALF_UP round both engines implement. */
+    private def sqCodes(q: Column): Column =
+      zip_with(q, arrays_zip(col("minv"), col("rng")), (qd, s) =>
+        when(s("rng") === 0L, 0L).otherwise(
+          greatest(lit(0L), least(lit(255L),
+            round((qd - s("minv")).cast("double") * 255.0
+              / s("rng").cast("double")).cast("long")))))
+
+    /** Dequantized candidate at scale q·255: min_d·255 + code_d·range_d —
+      * exact integer, so ADC distances against qs = q·255 are exact. */
+    private def sqDecode255(sq: Column): Column =
+      zip_with(sq, arrays_zip(col("minv"), col("rng")),
+        (c, s) => s("minv") * 255L + c * s("rng"))
+
+    /** The codec `table` stores — the ONE reader of the stored code
+      * format (every delta, probe and retrain that cares asks here): no
+      * trained artifact means [[Flat]]; `{t}_sqrange` means [[Sq8]];
+      * `{t}_pqbook` carries its code provenance in `enc` ('raw' |
+      * 'residual') — a PQ code is only comparable to an ADC table built
+      * the same way. One metadata-sized read, and only for a PQ table. */
+    def stored(spark: SparkSession, table: String): Codec = {
+      val pq = spark.catalog.tableExists(s"${table}_pqbook")
+      val sq = spark.catalog.tableExists(s"${table}_sqrange")
+      require(!(pq && sq),
+        s"$table carries BOTH ${table}_pqbook and ${table}_sqrange — a " +
+          "stale artifact from a pre-provenance build; re-run the intended " +
+          "codec's build (builds drop the other codecs' artifacts) before " +
+          "ingesting, probing or retraining")
+      if (sq) Sq8
+      else if (!pq) Flat
+      else {
+        val book = spark.table(s"${table}_pqbook")
+        // a codebook persisted before provenance landed carries no enc
+        // column — every such index stored raw codes
+        if (!book.columns.contains("enc")) Pq
+        else book.select(col("enc")).limit(1).collect().headOption
+          .map(r => if (r.getString(0) == "residual") PqResidual else Pq)
+          .getOrElse(throw new IllegalStateException(
+            s"${table}_pqbook exists but is EMPTY — the fused index was " +
+              "built over an empty corpus (or the codebook write was " +
+              "lost); every query/ingest/retrain path needs the stored " +
+              "encoding provenance. Rebuild the index over a non-empty " +
+              "corpus"))
+      }
+    }
+  }
+
+  /** Materialize the IVF index under `codec` — the "production builds
+    * the inverted lists once" promise of [[annIvfTrainedTopK]] made
+    * real, the [[Search.buildIndex]] pattern applied to ANN:
+    * `{table}_ivf` holds (vec_id, v, nrm, label, cell[, code]) PARTITIONED
+    * BY cell, so the inverted lists are partition directories and a
+    * probe's cell equi-join prunes at SCAN time via dynamic partition
+    * pruning (the layout_dpp discipline); `{table}_centroids` holds the
+    * trained coarse quantizer and the codec's artifact table its trained
+    * code quantizer. Build cost = the centroid aggregation + one corpus
+    * argmin pass + the codec's training and encode; every query after
+    * reads only its probed cells — never the corpus. */
+  def buildIvfIndex(embeddings: DataFrame, table: String,
+      codec: Codec): Unit = {
+    val spark = embeddings.sparkSession
+    dropStaleArtifacts(spark, table, codec)
     val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
     cent.write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_centroids")
-    assignedCells(embeddings, cent)
-      .repartition(col("cell")) // one file per cell from generation zero
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(embeddings.sparkSession, embeddings, "vec_id",
-      table, overwrite = true)
+    writeLists(codec.encode(embeddings, assignedCells(embeddings, cent), cent,
+      table, train = true), table, "overwrite")
+    graft.ops.IngestGuard.write(spark, embeddings, "vec_id", table,
+      overwrite = true)
   }
 
-  /** Incremental ingest into a standing IVF index: delta vectors are
-    * assigned against the STORED centroids — the quantizer is FROZEN at
+  def buildIvfIndex(embeddings: DataFrame, table: String): Unit =
+    buildIvfIndex(embeddings, table, Codec.Flat)
+
+  /** Write list rows cell-partitioned: one file per (touched) cell per
+    * generation, from generation zero on. */
+  private def writeLists(rows: DataFrame, table: String,
+      mode: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").format("parquet")
+      .saveAsTable(s"${table}_ivf")
+
+  /** Incremental ingest into a standing IVF index of any codec: delta
+    * vectors are assigned against the STORED centroids and encoded
+    * against the stored codec artifact — the quantizers are FROZEN at
     * build time, as in production IVF, so the standing corpus is never
     * re-read or re-assigned and ingest cost is delta-sized (the
     * [[Search.indexDelta]] contract for ANN). The centroids drift from
     * what full retraining would give as deltas accumulate; that drift is
     * measurable by comparing `sim_ann_ivf_index_delta` against a fresh
     * [[buildIvfIndex]] — the re-train-vs-ingest trade every production
-    * IVF schedules. vec_id-disjointness is ENFORCED via
-    * [[graft.ops.IngestGuard]] (the additive bloom sidecar — the ingest
-    * never reads the standing inverted lists; the exact semi-probe runs
-    * only on a bloom hit): a re-ingested vector would silently duplicate
-    * inside its inverted list. */
-  def ivfIndexDelta(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!ingestPreamble(table, delta, Seq("centroids"), "ivfIndexDelta"))
-      return
-    assignedCells(delta, spark.table(s"${table}_centroids"))
-      .repartition(col("cell")) // one file per touched cell per generation
-      .write.mode("append").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(spark, delta, "vec_id", table,
-      overwrite = false)
-  }
-
-  /** The shared ingest preamble every IVF-family delta runs — ONE site
-    * for the protocol the round-12 adjudication hardened, so a future
-    * fix cannot miss an index family. Returns false when the delta is
-    * empty (caller no-ops: skip the empty list-file generation;
-    * IngestGuard.write already skips zero-row blooms). Otherwise:
+    * IVF schedules ([[retrainIfNeeded]]). An empty delta is a no-op (no
+    * empty list-file generation). Otherwise:
     *
     *  1. The frozen trained artifacts are a PREREQUISITE (ingest
     *     assigns/encodes against them) — fail with intent, not a bare
@@ -337,15 +565,17 @@ object Similarity {
     *     delta-only lists that a guard sized for the full corpus then
     *     "protects": silent data loss at query time. Roll the swap
     *     forward; refuse loudly if that fails.
-    *  3. vec_id disjointness asserted via the guard sidecar
-    *     (delta-proportional — the standing lists are never read). */
-  private def ingestPreamble(table: String, delta: DataFrame,
-      artifacts: Seq[String], caller: String): Boolean = {
+    *  3. vec_id disjointness is ENFORCED via [[graft.ops.IngestGuard]]
+    *     (the additive bloom sidecar — the ingest never reads the
+    *     standing lists; the exact semi-probe runs only on a bloom hit):
+    *     a re-ingested vector would silently duplicate inside its list. */
+  def ivfIndexDelta(table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
-    if (delta.isEmpty) return false
-    val names = artifacts.map(a => s"${table}_$a")
+    if (delta.isEmpty) return
+    val codec = Codec.stored(spark, table)
+    val names = ("centroids" +: codec.artifact.toSeq).map(a => s"${table}_$a")
     require(names.forall(spark.catalog.tableExists),
-      s"$caller needs the trained artifacts: ${names.mkString(" and ")} — " +
+      s"ivfIndexDelta needs the trained artifacts: ${names.mkString(" and ")} — " +
         "run the matching build first (an IVF-family index cannot " +
         "bootstrap from an empty catalog; assignment/encoding require " +
         "the stored quantizers)")
@@ -353,7 +583,7 @@ object Similarity {
         spark.catalog.tableExists(s"${table}_guard")) {
       recoverIvfSwap(spark, table)
       require(spark.catalog.tableExists(s"${table}_ivf"),
-        s"$caller refusing to bootstrap: ${table}_guard exists but " +
+        s"ivfIndexDelta refusing to bootstrap: ${table}_guard exists but " +
           s"${table}_ivf is missing and no staged copy was found to roll " +
           "forward — delta-only inverted lists under a full-corpus guard " +
           "would silently drop the standing vectors from every probe. " +
@@ -361,96 +591,62 @@ object Similarity {
     }
     if (spark.catalog.tableExists(s"${table}_ivf"))
       graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "vec_id",
-        spark.table(s"${table}_ivf"), caller)
-    true
+        spark.table(s"${table}_ivf"), "ivfIndexDelta")
+    val cent = spark.table(s"${table}_centroids")
+    writeLists(codec.encode(delta, assignedCells(delta, cent), cent, table,
+      train = false), table, "append")
+    graft.ops.IngestGuard.write(spark, delta, "vec_id", table,
+      overwrite = false)
   }
 
-  /** Drop the OTHER layouts' trained artifacts when (re)building a
-    * table under a given layout: every consumer (delta ingest, retrain,
-    * the query entry points) dispatches on which artifact tables exist,
-    * so a stale `_pqbook` left by a previous fused build under the same
-    * name would silently retrain/ingest the wrong layout. */
-  private def dropStaleArtifacts(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: Set[String]): Unit = {
-    Seq("pqbook", "sqrange").filterNot(keep).foreach(a =>
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_$a"))
+  /** Drop the OTHER codecs' trained artifacts when (re)building a table
+    * under `codec` — [[Codec.stored]] decides by which artifact tables
+    * exist, so a stale `_pqbook` left by a previous PQ build under the
+    * same name would silently retrain/ingest the wrong codec. */
+  private def dropStaleArtifacts(spark: SparkSession, table: String,
+      codec: Codec): Unit = {
+    Codec.all.flatMap(_.artifact).distinct
+      .filterNot(codec.artifact.contains)
+      .foreach(a => spark.sql(s"DROP TABLE IF EXISTS ${table}_$a"))
     // stale tombstones die with the generation they were cut against —
     // a fresh build's vec_ids owe nothing to a previous index's deletes
     graft.ops.Tombstones.drop(spark, table)
   }
 
   /** At-least-once-safe IVF ingest — [[ivfIndexDelta]]'s idempotent twin
-    * (the [[Search.indexDeltaIdempotent]] contract for ANN): already-
-    * indexed vec_ids are SKIPPED, so a replayed streaming micro-batch is
-    * a no-op instead of duplicate list entries or a crash loop. Exact
-    * confirmation only for the bloom-suspect sliver; the novel set is
-    * lineage-cut before writes (it derives from the table being appended
-    * to — the insert-time cache-invalidation trap, see the Search twin). */
+    * (the [[Search.indexDeltaIdempotent]] contract for ANN, every
+    * codec): already-indexed vec_ids are SKIPPED through the shared
+    * [[IngestGuard.novel]] replay filter, so a replayed streaming
+    * micro-batch is a no-op instead of duplicate list entries or a crash
+    * loop; the novel survivors are assigned and encoded against the
+    * stored frozen artifacts exactly as a batch delta would be. */
   def ivfIndexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
     if (!spark.catalog.tableExists(s"${table}_ivf")) {
       ivfIndexDelta(table, delta); return
     }
-    val novel = novelAgainstLists(spark, table, delta)
+    val novel = graft.ops.IngestGuard.novel(spark, table, delta, "vec_id",
+      spark.table(s"${table}_ivf"))
     if (!novel.isEmpty) ivfIndexDelta(table, novel)
-  }
-
-  /** The delta rows whose vec_id is NOT already in the standing lists —
-    * the replay filter both idempotent ingest twins share. Exact
-    * confirmation only for the bloom-suspect sliver; the novel set is
-    * lineage-cut before writes (it derives from the table being appended
-    * to — the insert-time cache-invalidation trap, see the Search twin). */
-  private def novelAgainstLists(spark: org.apache.spark.sql.SparkSession,
-      table: String, delta: DataFrame): DataFrame = {
-    val standingIds = spark.table(s"${table}_ivf").select(col("vec_id"))
-    graft.ops.IngestGuard.suspectPredicate(spark, table, "vec_id") match {
-      case Some(hit) =>
-        val suspects = delta.select(col("vec_id")).distinct().filter(hit)
-        if (suspects.isEmpty) delta
-        else {
-          val present = standingIds
-            .join(broadcast(suspects), Seq("vec_id"), "left_semi").distinct()
-          delta.join(broadcast(present), Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-        }
-      case None =>
-        delta.join(standingIds.distinct(), Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-    }
-  }
-
-  /** At-least-once-safe FUSED ingest — [[ivfPqIndexDelta]]'s idempotent
-    * twin (the [[ivfIndexDeltaIdempotent]] contract for the PQ-fused
-    * lists): a replayed streaming micro-batch must be a no-op, not
-    * duplicate (vec_id, codes) rows in a cell partition. Same
-    * delta-proportional replay filter ([[novelAgainstLists]]); the novel
-    * survivors are then assigned AND encoded against the stored frozen
-    * artifacts exactly as a batch delta would be. */
-  def ivfPqIndexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!spark.catalog.tableExists(s"${table}_ivf")) {
-      ivfPqIndexDelta(table, delta); return
-    }
-    val novel = novelAgainstLists(spark, table, delta)
-    if (!novel.isEmpty) ivfPqIndexDelta(table, novel)
   }
 
   /** Compact a delta-grown IVF index: every [[ivfIndexDelta]] appends its
     * own file set into each touched cell partition plus one guard blob —
     * after many ingests a probed cell reads one file per ingest (the
     * [[Search.compactIndex]] small-files problem in partition-dir form).
-    * Rewrites the cell-partitioned lists once (same layout, so DPP-pruned
-    * probes and future deltas are unchanged), rebuilds one guard bloom.
-    * The centroids — the frozen quantizer — are NOT touched: compaction
-    * is a layout operation, never a retrain (drift stays measurable via
-    * `sim_ann_ivf_drift`). Queries before/after are row-identical. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
+    * Rewrites the cell-partitioned lists once through the
+    * crash-recoverable [[Swap.compactPartitioned]] (same layout, so
+    * DPP-pruned probes and future deltas are unchanged), rebuilds one
+    * guard bloom. The trained artifacts — the frozen quantizers — are
+    * NOT touched: compaction is a layout operation, never a retrain
+    * (drift stays measurable via `sim_ann_ivf_drift`). Queries
+    * before/after are row-identical. */
+  def compactIvfIndex(spark: SparkSession, table: String): Unit = {
     recoverIvfSwap(spark, table) // roll forward/clean any interrupted swap
     // the rewrite folds tombstoned vectors away physically (the delete
     // lifecycle's deferred rewrite); the sidecar is dropped LAST, so a
     // crash at any intermediate state leaves its anti-join a no-op
-    compactPartitioned(spark, s"${table}_ivf", "cell",
+    Swap.compactPartitioned(spark, s"${table}_ivf", "cell",
       df => graft.ops.Tombstones.filter(spark, table, df, "vec_id"))
     graft.ops.IngestGuard.write(spark,
       spark.table(s"${table}_ivf").select(col("vec_id")),
@@ -458,89 +654,11 @@ object Similarity {
     graft.ops.Tombstones.drop(spark, table)
   }
 
-  /** Rewrite a partitioned index table to one file per partition dir
-    * through the crash-recoverable swap — the generic core shared by the
-    * IVF lists (cell partitions) and the fuzzy gram postings (bucket
-    * partitions). Scheme (the [[Search.compactIndex]] scheme, with one
-    * partitioned-table twist): stage the compacted copy, rename the live
-    * generation away, DROP it, THEN rename the staged copy in — every
-    * intermediate state is one [[recoverPartitionedSwap]] away from a
-    * readable index, and delta ingest refuses to bootstrap over a
-    * mid-swap catalog. The retired generation MUST be dropped while the
-    * live path is still empty: a rename keeps the catalog's
-    * per-partition locations pointing at the ORIGINAL path, and DROP
-    * TABLE follows those custom locations — dropping the retired table
-    * after the staged copy lands at the original path would delete the
-    * new live data out from under it (observed, not hypothetical). */
-  private[ops] def compactPartitioned(
-      spark: org.apache.spark.sql.SparkSession, live: String,
-      partCol: String,
-      xform: DataFrame => DataFrame = identity): Unit = {
-    val staged = s"${live}_compacting"
-    xform(spark.table(live))
-      .repartition(col(partCol)) // one writer task per value -> one file per dir
-      .write.mode("overwrite").partitionBy(partCol).format("parquet")
-      .saveAsTable(staged)
-    spark.sql(s"ALTER TABLE $live RENAME TO ${live}_retired")
-    spark.sql(s"DROP TABLE ${live}_retired")
-    spark.sql(s"ALTER TABLE $staged RENAME TO $live")
-    // rename moves the data dir but the catalog's partition entries still
-    // point at the staging location — re-discover them from the new path
-    // (without this the renamed table reads as EMPTY)
-    spark.sql(s"MSCK REPAIR TABLE $live")
-  }
-
-  /** Repair an interrupted [[compactIvfIndex]] swap — the
-    * [[Search.recoverIndexSwap]] scheme for the cell-partitioned lists,
-    * plus two partitioned-table twists: a roll-forward rename needs the
-    * MSCK partition re-discovery, and the retired generation is only ever
-    * dropped while the live path is absent (its stale per-partition
-    * locations point THERE — see [[compactIvfIndex]]). A live table whose
-    * partition entries point outside its own location (crash between the
-    * rename-in and the MSCK) is re-repaired in place. Idempotent cheap
-    * DDL + one dir listing; returns true iff a roll-forward restored a
-    * missing live table. */
-  def recoverIvfSwap(spark: org.apache.spark.sql.SparkSession,
-      table: String): Boolean =
-    recoverPartitionedSwap(spark, s"${table}_ivf")
-
-  /** The generic swap-repair core — see [[recoverIvfSwap]]'s contract;
-    * `live` is the full partitioned table name (`…_ivf` or `…_grams`). */
-  private[ops] def recoverPartitionedSwap(
-      spark: org.apache.spark.sql.SparkSession, live: String): Boolean = {
-    val staged = s"${live}_compacting"
-    val retired = s"${live}_retired"
-    val rolledForward =
-      if (!spark.catalog.tableExists(live) && spark.catalog.tableExists(staged)) {
-        // retired first, while the live path is still empty — its stale
-        // partition locations are no-op deletes only in this state
-        if (spark.catalog.tableExists(retired))
-          spark.sql(s"DROP TABLE $retired")
-        spark.sql(s"ALTER TABLE $staged RENAME TO $live")
-        spark.sql(s"MSCK REPAIR TABLE $live")
-        true
-      } else false
-    if (spark.catalog.tableExists(live)) {
-      if (spark.catalog.tableExists(staged))
-        spark.sql(s"DROP TABLE $staged") // stale restage; live wins
-      // crash between rename-in and MSCK: live's partition entries still
-      // point at the staging path — detectable (locations outside the
-      // table location) and repairable in place
-      val cat = spark.sessionState.catalog
-      val ident = org.apache.spark.sql.catalyst.TableIdentifier(
-        live.split('.').last,
-        live.split('.').dropRight(1).lastOption)
-      val loc = cat.getTableMetadata(ident).location.toString
-      if (cat.listPartitions(ident).exists(
-          !_.location.toString.startsWith(loc)))
-        spark.sql(s"MSCK REPAIR TABLE $live")
-      // live ∧ retired without a staged copy is not a state this scheme
-      // produces (retired is dropped before the rename-in); a foreign
-      // retired table is left untouched — dropping it would follow its
-      // stale partition locations into the live data
-    }
-    rolledForward
-  }
+  /** Repair an interrupted [[compactIvfIndex]] swap on the
+    * cell-partitioned lists ([[Swap.recoverPartitioned]]); returns true
+    * iff a roll-forward restored a missing live table. */
+  def recoverIvfSwap(spark: SparkSession, table: String): Boolean =
+    Swap.recoverPartitioned(spark, s"${table}_ivf")
 
   /** Compaction POLICY for the IVF lists — [[Search.compactIfNeeded]]
     * applied to ANN: compact when ingest generations exceed `maxBatches`
@@ -556,7 +674,7 @@ object Similarity {
     * at most ONE file per touched cell, and a probed cell reads ≤
     * `maxBatches` + build files between compactions (spec-gated in
     * AnnLifecycleSpec's small-delta cadence test). */
-  def compactIvfIfNeeded(spark: org.apache.spark.sql.SparkSession,
+  def compactIvfIfNeeded(spark: SparkSession,
       table: String, maxBatches: Int = 16,
       maxSidecarBytes: Long = 64L << 20): Boolean = {
     val due = graft.ops.IngestGuard.compactionDue(spark, table, maxBatches,
@@ -565,13 +683,33 @@ object Similarity {
     due
   }
 
+  /** The exact probe-and-score every raw-vector probe shares: each query
+    * of `q0` (qid, qv, qnrm, xq, + any columns `matches` reads) probes its
+    * `nprobe` nearest cells ([[probesFor]]), the candidate read of `idx`
+    * (the lists — or a predicate-filtered view of them) joins the
+    * broadcast probed queries on cell, so DPP prunes the scan to the
+    * probed lists, and every candidate gets the exact rounded cosine:
+    * (qid, vec_id, cell, + `keep`, cos). */
+  private def exactScored(idx: DataFrame, q0: DataFrame, cent: DataFrame,
+      nprobe: Int, matches: Option[Column] = None,
+      keep: Seq[String] = Nil): DataFrame = {
+    val q = q0.drop("xq").join(probesFor(q0, cent, nprobe), "qid")
+    val pairs = idx.join(broadcast(q), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+    matches.fold(pairs)(pairs.filter)
+      .select((Seq("qid", "vec_id", "cell") ++ keep).map(col) :+
+        cos6.as("cos"): _*)
+  }
+
   /** Query the materialized IVF index: SAME RESULT as
     * [[annIvfTrainedTopK]] (both oracled against the same SQL), but the
     * corpus is never re-trained or re-assigned — probes resolve against
     * the stored centroids, and the candidate read is the cell-partitioned
     * index pruned to the probed cells by dynamic partition pruning. Query
-    * cost is proportional to the probed lists' size, not the corpus. */
-  def annIvfIndexedTopK(spark: org.apache.spark.sql.SparkSession,
+    * cost is proportional to the probed lists' size, not the corpus.
+    * Every codec's lists carry `v`, so this exact probe serves any of
+    * them. */
+  def annIvfIndexedTopK(spark: SparkSession,
       table: String, nQueries: Int = 8, k: Int = 3,
       nprobe: Int = 2): DataFrame =
     annIvfIndexedTopK(spark, table, fixtureQueries(spark, table, nQueries),
@@ -583,24 +721,10 @@ object Similarity {
     * are not rows of the index), where the fixture form's `vec_id <
     * nQueries` filter is a full-index point-scan per query batch. The
     * standing index is read ONLY through the DPP-pruned probed cells. */
-  def annIvfIndexedTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table)
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    val q = q0.select(col("qid"), col("qv"), col("qnrm")).join(probes, "qid")
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
-    rankedTopKPerQuery(scored, k)
-      .select(col("qid"), col("vec_id"), col("rank"),
-        round(col("cos"), 4).as("cos"), col("cell"))
-      .orderBy(col("qid"), col("rank"))
-  }
+  def annIvfIndexedTopK(spark: SparkSession,
+      table: String, queries: DataFrame, k: Int, nprobe: Int): DataFrame =
+    rankedCells(exactScored(lists(spark, table), externalQ0(queries),
+      spark.table(s"${table}_centroids"), nprobe), k)
 
   /** ATTRIBUTE-FILTERED ANN — the production retrieval shape ("nearest
     * within source = X / lang = Y"): vector top-k under a row predicate
@@ -612,42 +736,27 @@ object Similarity {
     * its probed cells but scores only the 1% (row-group pruning cuts
     * even the read when the attribute clusters). Within the probed
     * cells the result is EXACT under the predicate — pre-filtering a
-    * plain (raw-vector) list loses nothing, unlike the fused ADC path
-    * where a shortlist cut before the predicate can starve the result
-    * set (the post-filter trade [[annFilteredRecall]] measures; see
-    * BASELINE.md round-15 for the recorded adjudication). Recall vs a
-    * FILTERED brute force is the usual IVF story: the predicate thins
-    * every probed cell, so matching unfiltered recall needs nprobe
-    * scaled by ~1/selectivity (measured in `AnnFilteredSpec`). */
-  def annIvfFilteredTopK(spark: org.apache.spark.sql.SparkSession,
+    * plain (raw-vector) list loses nothing, unlike the ADC path where a
+    * shortlist cut before the predicate can starve the result set (the
+    * post-filter trade [[annFilteredRecall]] measures; see BASELINE.md
+    * round-15 for the recorded adjudication). Recall vs a FILTERED brute
+    * force is the usual IVF story: the predicate thins every probed
+    * cell, so matching unfiltered recall needs nprobe scaled by
+    * ~1/selectivity (measured in `AnnFilteredSpec`). */
+  def annIvfFilteredTopK(spark: SparkSession,
       table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
       nprobe: Int = 2): DataFrame =
     annIvfFilteredTopK(spark, table,
       fixtureQueries(spark, table, nQueries), pred, k, nprobe)
 
   /** External-query form of [[annIvfFilteredTopK]] — same contract as
-    * the unfiltered external probe: queries arrive as a broadcast-sized
-    * (qid, v) frame, the standing lists are read only through the
-    * DPP-pruned probed cells, now with `pred` pushed into that scan. */
-  def annIvfFilteredTopK(spark: org.apache.spark.sql.SparkSession,
+    * the unfiltered external probe, now with `pred` pushed into the
+    * DPP-pruned probed-cell scan. */
+  def annIvfFilteredTopK(spark: SparkSession,
       table: String, queries: DataFrame, pred: Column, k: Int,
-      nprobe: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table).filter(pred)
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    val q = q0.select(col("qid"), col("qv"), col("qnrm")).join(probes, "qid")
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
-    rankedTopKPerQuery(scored, k)
-      .select(col("qid"), col("vec_id"), col("rank"),
-        round(col("cos"), 4).as("cos"), col("cell"))
-      .orderBy(col("qid"), col("rank"))
-  }
+      nprobe: Int): DataFrame =
+    rankedCells(exactScored(lists(spark, table).filter(pred),
+      externalQ0(queries), spark.table(s"${table}_centroids"), nprobe), k)
 
   /** The POST-FILTER alternative the industry adjudicates against:
     * probe UNFILTERED, cut a widened top-(widen·k) shortlist, THEN
@@ -660,20 +769,11 @@ object Similarity {
     * Post-filter only wins where a filter cannot be pushed into the
     * candidate scan (opaque scorers, encrypted attributes) — not this
     * engine's lists. */
-  def annIvfFilteredPostTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfFilteredPostTopK(spark: SparkSession,
       table: String, queries: DataFrame, pred: Column, k: Int,
       nprobe: Int, widen: Int = 3): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table)
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    val q = q0.select(col("qid"), col("qv"), col("qnrm")).join(probes, "qid")
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"), col("label"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
+    val scored = exactScored(lists(spark, table), externalQ0(queries),
+      spark.table(s"${table}_centroids"), nprobe, keep = Seq("label"))
     // widened UNFILTERED cut first (the post-filter mistake being
     // priced), predicate second, final rank over the survivors
     import org.apache.spark.sql.expressions.Window
@@ -692,7 +792,7 @@ object Similarity {
     * predicate's survivors), averaged over the fixture queries — one
     * row per mode. The deterministic ratio-of-counts shape every other
     * recall row uses, so the DuckDB oracle reproduces it exactly. */
-  def annFilteredRecall(spark: org.apache.spark.sql.SparkSession,
+  def annFilteredRecall(spark: SparkSession,
       table: String, embeddings: DataFrame, pred: Column,
       nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
       widen: Int = 3): DataFrame = {
@@ -715,9 +815,7 @@ object Similarity {
     rankedTopKPerQuery(
       e.filter(pred).crossJoin(broadcast(qv))
         .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")),
-            6).as("cos")), k)
+        .select(col("qid"), col("vec_id"), cos6.as("cos")), k)
       .select(col("qid"), col("vec_id"))
   }
 
@@ -743,21 +841,21 @@ object Similarity {
   }
 
   /** The FUSED-rung pre-vs-post adjudication ([[annFilteredRecall]] on
-    * the PQ layout): pre = predicate before the ADC shortlist cut
+    * the PQ codec): pre = predicate before the ADC shortlist cut
     * ([[annIvfPqFilteredTopK]]); post = the unfiltered fused pipeline's
     * widened top-(widen·k) cut filtered after the fact
     * ([[annIvfPqFilteredPostTopK]]) — the mode whose recall collapses
     * with selectivity unless widen AND shortlist scale by
     * ~1/selectivity. Same exact filtered brute-force truth, same
     * ratio-of-counts rows, so the DuckDB oracle reproduces it. */
-  def annFusedFilteredRecall(spark: org.apache.spark.sql.SparkSession,
+  def annFusedFilteredRecall(spark: SparkSession,
       table: String, embeddings: DataFrame, pred: Column,
       nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
       widen: Int = 3): DataFrame = {
     val q = fixtureQueries(spark, table, nQueries)
     preVsPostRecall(filteredTruth(embeddings, pred, nQueries, k),
       nQueries, k,
-      annIvfPqFilteredTopK(spark, table, q, pred, k, nprobe, -1),
+      probe(spark, table, Some(Codec.Pq), q, k, nprobe, -1, Some(pred)),
       annIvfPqFilteredPostTopK(spark, table, q, pred, k, nprobe, widen))
   }
 
@@ -772,7 +870,7 @@ object Similarity {
     * scan filter (they differ per query), but the filter is codegen'd
     * against the broadcast side — no shuffle, no per-query scan. Exact
     * within probed cells under each query's own constraint. */
-  def annIvfLabelMatchedTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfLabelMatchedTopK(spark: SparkSession,
       table: String, nQueries: Int = 8, k: Int = 3,
       nprobe: Int = 2): DataFrame =
     annIvfLabelMatchedTopK(spark, table,
@@ -782,27 +880,14 @@ object Similarity {
 
   /** External-query form of [[annIvfLabelMatchedTopK]]: `queries` is a
     * broadcast-sized (qid, v, qlabel) frame. */
-  def annIvfLabelMatchedTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfLabelMatchedTopK(spark: SparkSession,
       table: String, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table)
     val q0 = externalQ0(queries.select(col("qid"), col("v")))
-    val ql = queries.select(col("qid").cast("long").as("qid"),
-      col("qlabel"))
-    val probes = probesFor(q0, cent, nprobe)
-    val q = q0.select(col("qid"), col("qv"), col("qnrm"))
-      .join(ql, "qid").join(probes, "qid")
-    val scored = idx.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid") &&
-        col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
-    rankedTopKPerQuery(scored, k)
-      .select(col("qid"), col("vec_id"), col("rank"),
-        round(col("cos"), 4).as("cos"), col("cell"))
-      .orderBy(col("qid"), col("rank"))
+      .join(queries.select(col("qid").cast("long").as("qid"),
+        col("qlabel")), "qid")
+    rankedCells(exactScored(lists(spark, table), q0,
+      spark.table(s"${table}_centroids"), nprobe,
+      matches = Some(col("label") === col("qlabel"))), k)
   }
 
   /** Selectivity SWEEP of the fused pre-vs-post adjudication — the
@@ -824,7 +909,7 @@ object Similarity {
     * legs — where the predicate lives INSIDE the probe, the mode's whole
     * point — stay per-predicate plans. */
   def annFusedFilteredSelectivitySweep(
-      spark: org.apache.spark.sql.SparkSession, table: String,
+      spark: SparkSession, table: String,
       embeddings: DataFrame, preds: Seq[(String, Column)],
       nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
       widen: Int = 3): DataFrame = {
@@ -835,7 +920,7 @@ object Similarity {
     // iteration 2) — whose DROP re-resolves every live cached plan
     // against the mid-rebuild catalog and throws TABLE_OR_VIEW_NOT_FOUND
     // (the drop-side twin of the INSERT-invalidation gotcha at
-    // Search.indexDeltaIdempotent). The checkpoint cuts the catalog
+    // IngestGuard.novel). The checkpoint cuts the catalog
     // lineage to an in-memory RDD: widen·k×nQueries rows + labels.
     val wideLabeled =
       annIvfPqIndexedTopK(spark, table, q, widen * k, nprobe, -1)
@@ -849,234 +934,112 @@ object Similarity {
     val scoredAll = graft.CacheScope.track(
       e.crossJoin(broadcast(qv))
         .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), col("label"),
-          round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")),
-            6).as("cos")))
+        .select(col("qid"), col("vec_id"), col("label"), cos6.as("cos")))
     preds.map { case (tag, p) =>
       val truth = rankedTopKPerQuery(scoredAll.filter(p), k)
         .select(col("qid"), col("vec_id"))
       preVsPostRecall(truth, nQueries, k,
-          annIvfPqFilteredTopK(spark, table, q, p, k, nprobe, -1),
+          probe(spark, table, Some(Codec.Pq), q, k, nprobe, -1, Some(p)),
           postFilterCut(wideLabeled, p, k))
         .select(lit(tag).as("sel"), col("mode"), col("recall"))
     }.reduce(_.unionAll(_))
       .orderBy(col("sel"), desc("mode"))
   }
 
-  /** Build the PQ-FUSED IVF index: the [[buildIvfIndex]] layout with one
-    * addition — each inverted-list row also carries the vector's PQ codes
-    * ([[Centroids.pqCodes]], 8 small ints for 64 floats), and the
-    * per-subspace codebook is stored as `{table}_pqbook`. Because parquet
-    * is columnar, the ADC probe reads ONLY (vec_id, cell, codes) from the
-    * probed cells — the 32×-compressed representation — and the raw `v`
-    * column is read just twice: for the handful of query vectors and for
-    * the shortlist rescore. This is the composition that makes 100 TB ANN
-    * IO-feasible: candidate scan bytes scale with codes, not vectors.
-    * Both quantizers (coarse cells + PQ codebook) are FROZEN at build
-    * time, the production IVF-PQ contract. */
-  def buildIvfPqIndex(embeddings: DataFrame, table: String): Unit = {
-    dropStaleArtifacts(embeddings.sparkSession, table, keep = Set("pqbook"))
-    val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
-    cent.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    val book = Centroids.pqCodebook(embeddings)
-    // enc records HOW codes were computed ('raw' | 'residual'): a code
-    // is only comparable to an ADC table built the same way, so every
-    // later consumer (delta ingest, retrain, the query entry points)
-    // branches on this provenance instead of silently mis-encoding
-    book.withColumn("enc", lit("raw"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_pqbook")
-    // codes as a sub-ordered array: one slim row per vector joins the
-    // cell assignment — the inverted lists ARE the code store
-    assignedCells(embeddings, cent)
-      .join(packCodes(Centroids.pqCodes(embeddings, book)), "vec_id")
-      .repartition(col("cell")) // one file per cell from generation zero
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(embeddings.sparkSession, embeddings, "vec_id",
-      table, overwrite = true)
-  }
-
-  /** Incremental ingest into the PQ-fused index — [[ivfIndexDelta]] with
-    * BOTH quantizers frozen: delta vectors are assigned against the
-    * stored coarse centroids AND encoded against the stored PQ codebook
-    * (`{table}_pqbook`), then appended into the cell partitions; the
-    * standing lists are never read (the [[IngestGuard]] sidecar enforces
-    * vec_id disjointness delta-proportionally). Codebook drift joins
-    * centroid drift in the retrain trade: both refresh together via
-    * [[retrainIfNeeded]]-style rebuilds, never piecemeal — a code is
-    * only comparable to an ADC lookup table built from the SAME
-    * codebook generation. */
-  def ivfPqIndexDelta(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!ingestPreamble(table, delta, Seq("centroids", "pqbook"),
-        "ivfPqIndexDelta")) return
-    val cent = spark.table(s"${table}_centroids")
-    val book = spark.table(s"${table}_pqbook")
-    if (fusedEnc(spark, table) == "residual") {
-      // residual provenance: the delta's exact integer residuals are
-      // encoded against the STORED residual codebook — the same frozen
-      // artifacts the standing codes used, so merged lists stay
-      // ADC-comparable. Tracked: consumed twice (list rows + encode)
-      val withR = graft.CacheScope.track(assignedCells(delta, cent)
-        .withColumn("xq", transform(col("v"),
-          x => round(x * 1000).cast("long") * lit(1000L)))
-        .join(broadcast(cent), col("cell") === col("c_label"))
-        .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-          col("cell"),
-          zip_with(col("xq"), col("cvec"), (x, c) => x - c).as("rvec")))
-      withR.select(col("vec_id"), col("v"), col("nrm"), col("label"),
-          col("cell"))
-        .join(packCodes(Centroids.pqCodesFromInt(
-          withR.select(col("vec_id"), col("rvec").as("xq")), book)), "vec_id")
-        .repartition(col("cell")) // one file per touched cell per generation
-        .write.mode("append").partitionBy("cell").format("parquet")
-        .saveAsTable(s"${table}_ivf")
-    } else {
-      assignedCells(delta, cent)
-        .join(packCodes(Centroids.pqCodes(delta, book)), "vec_id")
-        .repartition(col("cell")) // one file per touched cell per generation
-        .write.mode("append").partitionBy("cell").format("parquet")
-        .saveAsTable(s"${table}_ivf")
-    }
-    graft.ops.IngestGuard.write(spark, delta, "vec_id", table,
-      overwrite = false)
-  }
-
-  /** (vec_id, codes) — per-subspace codes packed sub-ordered into one
-    * array column, the inverted-list storage form. */
-  private def packCodes(c: DataFrame): DataFrame = c
-    .groupBy(col("vec_id"))
-    .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-    .select(col("vec_id"), transform(col("sc"), s => s("code")).as("codes"))
-
-  /** The stored code-encoding provenance of a fused index ('raw' |
-    * 'residual') — one metadata-sized lookup against `{t}_pqbook`. A
-    * PQ code is only comparable to an ADC lookup table built the same
-    * way, so ingest, retrain, and the query entry points all branch on
-    * (or assert) this instead of silently mixing encodings. */
-  private def fusedEnc(spark: org.apache.spark.sql.SparkSession,
-      table: String): String = {
-    val book = spark.table(s"${table}_pqbook")
-    // a codebook persisted before provenance landed carries no enc
-    // column — every such index stored raw codes, so default to it
-    // instead of failing the read five calls deep
-    if (!book.columns.contains("enc")) "raw"
-    else book.select(col("enc")).limit(1).collect().headOption
-      .map(_.getString(0))
-      .getOrElse(throw new IllegalStateException(
-        s"${table}_pqbook exists but is EMPTY — the fused index was built " +
-          "over an empty corpus (or the codebook write was lost); every " +
-          "query/ingest/retrain path needs the stored encoding provenance. " +
-          s"Rebuild the index (buildIvfPqIndex/buildIvfPqResidualIndex) " +
-          "over a non-empty corpus"))
-  }
-
-  /** Query the PQ-fused IVF index — the full IVF-PQ ladder served from
-    * the materialized index: probes resolve against the stored coarse
-    * centroids (DPP-pruned cell reads, the [[annIvfIndexedTopK]]
-    * contract), then candidates are scored in the COMPRESSED domain —
-    * per-query ADC lookup table (query subvector × stored PQ codebook,
-    * exact integer distances) + 8 LUT lookups per candidate over the
-    * stored `codes` column, never touching `v` — and only the
-    * `shortlist` ADC survivors are rescored on raw vectors with the
-    * exact rounded cosine. Every stage is exact integer math or the
+  /** The ONE indexed probe over a standing IVF index of any codec: the
+    * DPP-pruned read of each query's `nprobe` probed cells (`pred`, when
+    * given, filters that candidate scan BEFORE any cut — pre-filter
+    * semantics, so a lossy shortlist competes among the predicate's
+    * survivors only and needs no 1/selectivity correction), then the
+    * stored codec's scoring — [[Codec.Flat]] ranks the exact cosine of
+    * every candidate; a lossy codec cuts the (d2, vec_id) ADC shortlist
+    * over its codes ([[Codec.adc]]; columnar storage keeps `v` out of
+    * that scan) and rescores the survivors on raw vectors
+    * ([[shortlistRescore]]). Every stage is exact integer math or the
     * rounded cosine, so the whole chain (including which candidates the
-    * lossy ADC shortlist keeps) is engine-reproducible and oracled.
-    *
-    * Shape at 100 TB: candidate IO = probed-cell code bytes (32× smaller
-    * than vectors); the shortlist rescore reads `v` for
-    * nQueries·shortlist rows via an id semi-join back into the probed
-    * cells; both cuts are the bounded [[graft.plans.TopKPerKey]] heaps. */
-  def annIvfPqIndexedTopK(spark: org.apache.spark.sql.SparkSession,
+    * lossy shortlist keeps) is engine-reproducible and oracled.
+    * `expected` is the codec a codec-named entry point serves; a table
+    * storing another is refused — an ADC table built for one code format
+    * mis-scores every candidate of another. */
+  private def probe(spark: SparkSession, table: String,
+      expected: Option[Codec], queries: DataFrame, k: Int, nprobe: Int,
+      shortlist: Int, pred: Option[Column] = None): DataFrame = {
+    val codec = Codec.stored(spark, table)
+    expected.foreach(e => require(e == codec,
+      s"$table stores ${codec.stores(table)}, not ${e.stores(table)} — " +
+        "query it through the entry point for its stored codec (an ADC " +
+        "table built for one code format mis-scores every candidate of " +
+        "another)"))
+    val cent = spark.table(s"${table}_centroids")
+    val idx = lists(spark, table)
+    val cand = pred.fold(idx)(idx.filter)
+    val q0 = externalQ0(queries)
+    if (codec == Codec.Flat) rankedCells(exactScored(cand, q0, cent, nprobe), k)
+    else shortlistRescore(idx, q0,
+      codec.adc(table, cand, q0, probesFor(q0, cent, nprobe), cent), k,
+      resolveShortlist(shortlist, nprobe))
+  }
+
+  /** [[probe]] under the codec the catalog says `table` stores — one
+    * entry point for every codec. `queries` is a caller-supplied
+    * broadcast-sized (qid, v) frame; the standing index is read ONLY
+    * through the DPP-pruned probed cells. */
+  def annIvfProbeTopK(spark: SparkSession, table: String,
+      queries: DataFrame, k: Int, nprobe: Int, shortlist: Int): DataFrame =
+    probe(spark, table, None, queries, k, nprobe, shortlist)
+
+  /** Fixture-query form of [[annIvfProbeTopK]] (see [[fixtureQueries]]). */
+  def annIvfProbeTopK(spark: SparkSession, table: String,
+      nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
+      shortlist: Int = -1): DataFrame =
+    annIvfProbeTopK(spark, table, fixtureQueries(spark, table, nQueries), k,
+      nprobe, shortlist)
+
+  // Codec-named probes: [[probe]] refusing any other stored codec.
+
+  def annIvfPqIndexedTopK(spark: SparkSession,
       table: String, nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
       shortlist: Int = -1): DataFrame =
     annIvfPqIndexedTopK(spark, table, fixtureQueries(spark, table, nQueries),
       k, nprobe, shortlist)
 
-  /** External-query-vector form of [[annIvfPqIndexedTopK]] — see
-    * [[fixtureQueries]] for why this is the 100 TB shape: `queries` is a
-    * caller-supplied broadcast-sized (qid, v) frame, and the standing
-    * index is read ONLY through the DPP-pruned probed cells (codes-only
-    * ADC scan + shortlist rescore). */
-  def annIvfPqIndexedTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfPqIndexedTopK(spark: SparkSession,
       table: String, queries: DataFrame, k: Int, nprobe: Int,
       shortlist: Int): DataFrame =
-    pqAdcTopK(spark, table, queries, k, nprobe, shortlist, identity)
+    probe(spark, table, Some(Codec.Pq), queries, k, nprobe, shortlist)
 
-  /** The raw-code ADC pipeline with a pluggable CANDIDATE transform —
-    * ONE derivation site for the unfiltered probe (identity) and the
-    * attribute-filtered probe ([[annIvfPqFilteredTopK]] passes
-    * `_.filter(pred)`, applied to the codes-only scan BEFORE the ADC
-    * shortlist cut — the predicate-before-cut ordering that keeps the
-    * shortlist competing among the predicate's survivors only). */
-  private def pqAdcTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int,
-      shortlist: Int, candFilter: DataFrame => DataFrame): DataFrame = {
-    require(fusedEnc(spark, table) == "raw",
-      s"$table stores RESIDUAL codes — query it with annIvfPqResidualTopK " +
-        "(a raw-vector ADC table against residual codes mis-scores every " +
-        "candidate)")
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val book = spark.table(s"${table}_pqbook")
-    val idx = lists(spark, table)
-    val subDims = Dim / Centroids.SubSpaces
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    // per-query ADC lookup table: (qid, sub, code) -> exact integer
-    // distance — nQueries × SubSpaces × |codebook| rows, a broadcast
-    val qsubs = q0.select(col("qid"), posexplode(
-        transform(sequence(lit(0), lit(Centroids.SubSpaces - 1)),
-          s => slice(col("xq"), s * subDims + 1, lit(subDims))))
-        .as(Seq("sub", "qs")))
-    val lutDist = aggregate(
-      zip_with(col("qs"), col("cvec"), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, d) => acc + d)
-    val lut = qsubs.join(broadcast(book), "sub")
-      .select(col("qid"), col("sub"), col("c_label").as("code"),
-        lutDist.as("sd2"))
-    // ADC scan: candidates read (vec_id, cell, codes) ONLY — column
-    // pruning keeps the 64-double v out of the probed-cell scan (the
-    // candidate transform's predicate, when present, pushes into this
-    // scan as a data filter alongside it)
-    val cand = candFilter(idx).select(col("vec_id"), col("cell"),
-        col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-    val adc = cand.join(broadcast(lut), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"), col("cell"))
-      .agg(sum(col("sd2")).as("d2"))
-    shortlistRescore(idx, q0, adc, k, resolveShortlist(shortlist, nprobe))
-  }
+  def annIvfPqResidualTopK(spark: SparkSession,
+      table: String, nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
+      shortlist: Int = -1): DataFrame =
+    probe(spark, table, Some(Codec.PqResidual),
+      fixtureQueries(spark, table, nQueries), k, nprobe, shortlist)
 
-  /** ATTRIBUTE-FILTERED fused (IVF-PQ) ANN — [[annIvfFilteredTopK]]'s
-    * pre-filter semantics on the 32×-compressed rung: the predicate
-    * applies to the codes-only DPP-pruned candidate scan BEFORE the ADC
-    * shortlist cut, so the shortlist ranks ONLY the predicate's
-    * survivors and the post-filter starvation mode (an unfiltered
-    * shortlist cut keeping mostly non-matching candidates, recall
-    * collapsing as selectivity tightens unless the shortlist scales
-    * with 1/selectivity) cannot arise — the shortlist∝nprobe rule needs
-    * NO selectivity correction in this ordering. The rescore reads raw
-    * vectors for the (already-filtered) shortlist survivors only.
-    * [[annFusedFilteredRecall]] measures this mode against the widened
-    * post-filter alternative; BASELINE.md round-16 records the
-    * adjudication. */
-  def annIvfPqFilteredTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfSqIndexedTopK(spark: SparkSession,
+      table: String, nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
+      shortlist: Int = -1): DataFrame =
+    probe(spark, table, Some(Codec.Sq8),
+      fixtureQueries(spark, table, nQueries), k, nprobe, shortlist)
+
+  def annIvfPqFilteredTopK(spark: SparkSession,
       table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
       nprobe: Int = 2, shortlist: Int = -1): DataFrame =
-    annIvfPqFilteredTopK(spark, table,
-      fixtureQueries(spark, table, nQueries), pred, k, nprobe, shortlist)
+    probe(spark, table, Some(Codec.Pq),
+      fixtureQueries(spark, table, nQueries), k, nprobe, shortlist,
+      Some(pred))
 
-  /** External-query form of [[annIvfPqFilteredTopK]]. */
-  def annIvfPqFilteredTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, pred: Column, k: Int,
-      nprobe: Int, shortlist: Int): DataFrame =
-    pqAdcTopK(spark, table, queries, k, nprobe, shortlist, _.filter(pred))
+  def annIvfPqResidualFilteredTopK(spark: SparkSession,
+      table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
+      nprobe: Int = 2, shortlist: Int = -1): DataFrame =
+    probe(spark, table, Some(Codec.PqResidual),
+      fixtureQueries(spark, table, nQueries), k, nprobe, shortlist,
+      Some(pred))
+
+  def annIvfSqFilteredTopK(spark: SparkSession,
+      table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
+      nprobe: Int = 2, shortlist: Int = -1): DataFrame =
+    probe(spark, table, Some(Codec.Sq8),
+      fixtureQueries(spark, table, nQueries), k, nprobe, shortlist,
+      Some(pred))
 
   /** The POST-FILTER fused alternative, existing to be measured (the
     * [[annIvfFilteredPostTopK]] adjudication on the compressed rung):
@@ -1087,7 +1050,7 @@ object Similarity {
     * non-matching candidates is recall lost — matching the pre-filter
     * mode needs widen AND shortlist scaled by ~1/selectivity
     * ([[annFusedFilteredRecall]] prices exactly this). */
-  def annIvfPqFilteredPostTopK(spark: org.apache.spark.sql.SparkSession,
+  def annIvfPqFilteredPostTopK(spark: SparkSession,
       table: String, queries: DataFrame, pred: Column, k: Int,
       nprobe: Int, widen: Int = 3, shortlist: Int = -1): DataFrame =
     postFilterCut(
@@ -1120,7 +1083,7 @@ object Similarity {
     * shortlist can DROP recall (raw PQ 0.167 → 0.125 at nprobe 2 → 8 with
     * shortlist pinned at 10), because more probed candidates compete for
     * the same lossy ADC cut. The real tuning rule is shortlist ∝ nprobe,
-    * so every fused entry point derives `shortlist = ShortlistPerProbe ×
+    * so every lossy probe derives `shortlist = ShortlistPerProbe ×
     * nprobe` unless the caller overrides — at the default nprobe = 2
     * that is the historical 10, so single-point rows are unchanged. */
   val ShortlistPerProbe = 5
@@ -1140,7 +1103,7 @@ object Similarity {
     * scan per query batch for data the caller should supply, which is
     * why every indexed entry point also takes an external `queries`
     * DataFrame and this form is just its wrapper. */
-  private def fixtureQueries(spark: org.apache.spark.sql.SparkSession,
+  private def fixtureQueries(spark: SparkSession,
       table: String, nQueries: Int): DataFrame =
     lists(spark, table).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v"))
@@ -1156,24 +1119,24 @@ object Similarity {
     * (replay-skip, guard checks) deliberately read the RAW table — a
     * tombstoned id is still physically present and re-inserting it
     * before a compact must be refused, not shadowed. */
-  private def lists(spark: org.apache.spark.sql.SparkSession,
+  private def lists(spark: SparkSession,
       table: String): DataFrame =
     graft.ops.Tombstones.filter(spark, table,
       spark.table(s"${table}_ivf"), "vec_id")
 
-  /** DELETE vectors from the standing IVF-family index — the
-    * [[graft.ops.Tombstones]] lifecycle for ANN (works identically on
-    * the plain, PQ, residual, and SQ8 layouts: all share the `_ivf`
-    * lists): append the victim vec_ids to the broadcast-sized
-    * `{table}_tombstones` sidecar; every probe anti-joins it;
-    * [[compactIvfIndex]] folds the victims away physically, rebuilds
-    * the guard bloom without them (re-ingest becomes a plain insert
-    * again), and drops the sidecar. Unlike the BM25 family there is no
-    * additive stats table to correct — per-cell/df statistics are
-    * computed from the lists at read time. Unknown and already-deleted
-    * ids are ignored; delete cost is one column-pruned vec_id pass to
-    * confirm presence plus a tiny sidecar append — never a list
-    * rewrite. */
+  /** DELETE vectors from the standing IVF index — the
+    * [[graft.ops.Tombstones]] lifecycle for ANN (identical for every
+    * codec: all share the `_ivf` lists): append the victim vec_ids to
+    * the broadcast-sized `{table}_tombstones` sidecar; every probe
+    * anti-joins it; [[compactIvfIndex]] folds the victims away
+    * physically, rebuilds the guard bloom without them (re-ingest
+    * becomes a plain insert again), and drops the sidecar;
+    * [[retrainIfNeeded]] rebuilds from a corpus filtered through it.
+    * Unlike the BM25 family there is no additive stats table to correct
+    * — per-cell/df statistics are computed from the lists at read time.
+    * Unknown and already-deleted ids are ignored; delete cost is one
+    * column-pruned vec_id pass to confirm presence plus a tiny sidecar
+    * append — never a list rewrite. */
   def ivfIndexDelete(table: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
     require(spark.catalog.tableExists(s"${table}_ivf"),
@@ -1195,31 +1158,28 @@ object Similarity {
   /** Normalize a caller-supplied (qid, v) query frame into the q0 form
     * every indexed entry point consumes (qid, qv, qnrm, xq). qnrm and xq
     * derive from v through the SAME expressions the index build stored
-    * ([[withNorm]] / the scale-10^6 quantization), so external and
-    * fixture forms return identical rows for identical vectors. */
-  private def externalQ0(queries: DataFrame): DataFrame =
+    * ([[withNorm]] / [[quantized]]), so external and fixture forms
+    * return identical rows for identical vectors. */
+  private def externalQ0(queries: DataFrame): DataFrame = {
+    graft.functions.DotProduct.register(queries.sparkSession)
     queries.select(col("qid").cast("long").as("qid"),
         col("v").cast("array<double>").as("qv"))
       .withColumn("qnrm", sqrt(dot(col("qv"), col("qv"))))
-      .withColumn("xq", transform(col("qv"),
-        x => round(x * 1000).cast("long") * lit(1000L)))
+      .withColumn("xq", quantized(col("qv")))
+  }
 
   /** The nprobe nearest stored cells per query by exact integer distance
     * — ONE site for probe semantics, so a tie-break change cannot
-    * diverge between the plain, PQ, residual, and SQ paths. */
+    * diverge between codecs. */
   private def probesFor(q0: DataFrame, cent: DataFrame,
-      nprobe: Int): DataFrame = {
-    val dist = aggregate(
-      zip_with(col("xq"), col("cvec"), (x, c) => (x - c) * (x - c)),
-      lit(0L), (acc, d) => acc + d)
+      nprobe: Int): DataFrame =
     graft.plans.TopK.perKeyMin(
-        q0.join(broadcast(cent))
-          .select(col("qid"), col("c_label").as("cell"), dist.as("d2")),
+        q0.join(broadcast(cent)).select(col("qid"),
+          col("c_label").as("cell"), sqDist(col("xq"), col("cvec")).as("d2")),
         Seq("qid"), "d2", "cell", nprobe)
       .select(col("qid"), col("cell"))
-  }
 
-  /** The ADC→exact tail shared by every fused probe: the (d2, vec_id)
+  /** The ADC→exact tail shared by every lossy probe: the (d2, vec_id)
     * shortlist cut over ADC scores, then the raw-vector rescore — v is
     * read for the nQueries·shortlist survivors only, pruned to the
     * probed cells. */
@@ -1232,352 +1192,20 @@ object Similarity {
     val scored = idx.select(col("vec_id"), col("cell"), col("v"), col("nrm"))
       .join(broadcast(sl), Seq("cell", "vec_id"))
       .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
-    rankedTopKPerQuery(scored, k)
-      .select(col("qid"), col("vec_id"), col("rank"),
-        round(col("cos"), 4).as("cos"), col("cell"))
-      .orderBy(col("qid"), col("rank"))
-  }
-
-  /** Build the RESIDUAL-encoded fused index — [[buildIvfPqIndex]] with
-    * the IVFADC refinement (Jégou et al., TPAMI 2011, §III): PQ encodes
-    * the coarse-cell RESIDUAL r = x − centroid(cell(x)) instead of x
-    * itself. The coarse quantizer already explains the centroid
-    * component of every vector, so raw-vector PQ wastes its codes
-    * re-describing cell geometry; residuals concentrate into a tighter
-    * distribution around zero and the same 8 codes buy strictly more
-    * precision — the standard production IVF-PQ layout. Costs one extra
-    * broadcast join at build (residual = xq − cvec, exact integer
-    * subtraction at scale 10^6) and makes the query LUT per-(query,
-    * probed-cell) instead of per-query (nprobe× larger, still a few
-    * thousand broadcast rows). Table layout is identical to the raw
-    * variant — `{t}_centroids`, `{t}_pqbook` (residual codebook),
-    * cell-partitioned `{t}_ivf` carrying (v, nrm, cell, codes) — so
-    * compaction/guard machinery applies unchanged. */
-  def buildIvfPqResidualIndex(embeddings: DataFrame, table: String): Unit =
-    buildIvfPqResidualIndex(embeddings, table, Centroids.ResidualLloydRounds)
-
-  private[ops] def buildIvfPqResidualIndex(embeddings: DataFrame,
-      table: String, lloydRounds: Int): Unit = {
-    dropStaleArtifacts(embeddings.sparkSession, table, keep = Set("pqbook"))
-    val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
-    cent.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    // exact integer residual per vector against its assigned cell:
-    // consumed twice (codebook training + encode) — tracked
-    val res = graft.CacheScope.track(
-      assignedCells(embeddings, cent)
-        .withColumn("xq", transform(col("v"),
-          x => round(x * 1000).cast("long") * lit(1000L)))
-        .join(broadcast(cent), col("cell") === col("c_label"))
-        .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-          col("cell"),
-          zip_with(col("xq"), col("cvec"), (x, c) => x - c).as("rvec")))
-    val book = Centroids.residualCodebook(res.select(col("vec_id"), col("rvec")),
-      lloydRounds)
-    book.withColumn("enc", lit("residual"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_pqbook")
-    val spark = embeddings.sparkSession
-    // label rides along (the assignedCells attribute discipline) so the
-    // residual layout stays filterable like the other rungs
-    res.select(col("vec_id"), col("v"), col("nrm"), col("label"),
-        col("cell"))
-      .join(packCodes(Centroids.pqCodesFromInt(
-        res.select(col("vec_id"), col("rvec").as("xq")),
-        spark.table(s"${table}_pqbook"))), "vec_id")
-      .repartition(col("cell")) // one file per cell from generation zero
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(spark, embeddings, "vec_id", table,
-      overwrite = true)
-  }
-
-  /** Query the residual-encoded fused index — [[annIvfPqIndexedTopK]]
-    * with the LUT rebased per probed cell: an ADC distance against a
-    * residual code is only meaningful relative to that candidate's cell
-    * centroid, so the lookup table keys on (qid, cell, sub, code) with
-    * the QUERY residual qr = xq − cvec(cell) on the query side of each
-    * subspace distance. Everything else is the fused contract unchanged:
-    * DPP-pruned codes-only candidate scan (never v), exact integer LUT
-    * sums, (d2, vec_id) shortlist, raw-vector rescore for the survivors
-    * only. */
-  def annIvfPqResidualTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
-      shortlist: Int = -1): DataFrame =
-    annIvfPqResidualTopK(spark, table, fixtureQueries(spark, table, nQueries),
-      k, nprobe, shortlist)
-
-  /** External-query-vector form of [[annIvfPqResidualTopK]] — the
-    * caller-supplied (qid, v) shape; see [[fixtureQueries]]. */
-  def annIvfPqResidualTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int,
-      shortlist: Int): DataFrame =
-    residualAdcTopK(spark, table, queries, k, nprobe, shortlist, identity)
-
-  /** ATTRIBUTE-FILTERED residual (IVFADC) ANN — completes the filtered
-    * contract across the whole compression ladder (raw / SQ8 / PQ /
-    * residual-PQ): the predicate applies to the codes-only scan BEFORE
-    * the per-cell-rebased ADC shortlist cut, same
-    * [[annIvfPqFilteredTopK]] ordering and guarantees. */
-  def annIvfPqResidualFilteredTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
-      nprobe: Int = 2, shortlist: Int = -1): DataFrame =
-    annIvfPqResidualFilteredTopK(spark, table,
-      fixtureQueries(spark, table, nQueries), pred, k, nprobe, shortlist)
-
-  /** External-query form of [[annIvfPqResidualFilteredTopK]]. */
-  def annIvfPqResidualFilteredTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, pred: Column, k: Int,
-      nprobe: Int, shortlist: Int): DataFrame =
-    residualAdcTopK(spark, table, queries, k, nprobe, shortlist,
-      _.filter(pred))
-
-  /** The residual ADC pipeline with a pluggable candidate transform —
-    * the [[pqAdcTopK]] single-derivation-site discipline, LUT rebased
-    * per probed cell. */
-  private def residualAdcTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int,
-      shortlist: Int, candFilter: DataFrame => DataFrame): DataFrame = {
-    require(fusedEnc(spark, table) == "residual",
-      s"$table stores RAW codes — query it with annIvfPqIndexedTopK " +
-        "(a per-cell residual ADC table against raw codes mis-scores " +
-        "every candidate)")
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val book = spark.table(s"${table}_pqbook")
-    val idx = lists(spark, table)
-    val subDims = Dim / Centroids.SubSpaces
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    // per-(query, probed-cell) residual LUT: nQueries × nprobe ×
-    // SubSpaces × |codebook| exact integer distances — a broadcast
-    val qres = probes.join(q0.select(col("qid"), col("xq")), "qid")
-      .join(broadcast(cent), col("cell") === col("c_label"))
-      .select(col("qid"), col("cell"),
-        zip_with(col("xq"), col("cvec"), (x, c) => x - c).as("qr"))
-    val qsubs = qres.select(col("qid"), col("cell"), posexplode(
-        transform(sequence(lit(0), lit(Centroids.SubSpaces - 1)),
-          s => slice(col("qr"), s * subDims + 1, lit(subDims))))
-        .as(Seq("sub", "qs")))
-    val lutDist = aggregate(
-      zip_with(col("qs"), col("cvec"), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, d) => acc + d)
-    val lut = qsubs.join(broadcast(book), "sub")
-      .select(col("qid"), col("cell"), col("sub"),
-        col("c_label").as("code"), lutDist.as("sd2"))
-    val cand = candFilter(idx).select(col("vec_id"), col("cell"),
-        col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-    val adc = cand.join(broadcast(lut), Seq("qid", "cell", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"), col("cell"))
-      .agg(sum(col("sd2")).as("d2"))
-    shortlistRescore(idx, q0, adc, k, resolveShortlist(shortlist, nprobe))
-  }
-
-  /** Build the SCALAR-quantized (SQ8) IVF index — the middle rung of the
-    * production ANN compression ladder (raw 1× / SQ8 8× / PQ 32×, the
-    * FAISS `IndexIVFScalarQuantizer` point): each of the 64 dims
-    * compresses to one byte-range code against a per-dim [min, max]
-    * trained over the corpus — code = round((q − min)·255 / (max − min))
-    * on the exact scale-10³ integer q, so codes are engine-reproducible.
-    * 8× smaller candidate IO than raw vectors at near-exact recall
-    * (quantization error ≤ range/510 per dim), vs PQ's 32× at lossy
-    * recall — the recall/IO trade a 100 TB deployment picks per
-    * workload. Artifacts: `{t}_centroids` (coarse quantizer),
-    * `{t}_sqrange` (64 rows: dim, minq, maxq — the frozen SQ trainer),
-    * cell-partitioned `{t}_ivf` carrying (v, nrm, cell, sq). The code
-    * computation is one broadcast of the 64-entry range arrays +
-    * zip_with — no explode, no extra shuffle over the corpus. */
-  def buildIvfSqIndex(embeddings: DataFrame, table: String): Unit = {
-    val spark = embeddings.sparkSession
-    dropStaleArtifacts(spark, table, keep = Set("sqrange"))
-    val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
-    cent.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    // per-dim min/max of the scale-1e3 integer q: map-side combine
-    // collapses the 64× explode before the 64-group exchange
-    vecs(embeddings)
-      .select(posexplode(transform(col("v"),
-        x => round(x * 1000).cast("long"))).as(Seq("dim", "q")))
-      .groupBy(col("dim"))
-      .agg(min(col("q")).as("minq"), max(col("q")).as("maxq"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_sqrange")
-    assignedCells(embeddings, cent)
-      .crossJoin(broadcast(sqRangeArrays(spark, table)))
-      .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-        col("cell"),
-        sqCodes(transform(col("v"), x => round(x * 1000).cast("long")))
-          .as("sq"))
-      .repartition(col("cell")) // one file per cell from generation zero
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(spark, embeddings, "vec_id", table,
-      overwrite = true)
-  }
-
-  /** Incremental ingest into the SQ8 index — the frozen-artifact
-    * contract for scalar quantization: delta vectors are assigned
-    * against the stored coarse centroids AND coded against the stored
-    * per-dim [min, max] (`{t}_sqrange` — codes are only comparable to
-    * dequantizations from the same trainer; a delta value outside the
-    * trained range saturates to the 0/255 boundary codes, exactly as
-    * production SQ does — see [[sqCodes]]). Standing lists never
-    * read; the [[IngestGuard]] sidecar enforces vec_id disjointness
-    * delta-proportionally. */
-  def ivfSqIndexDelta(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!ingestPreamble(table, delta, Seq("centroids", "sqrange"),
-        "ivfSqIndexDelta")) return
-    assignedCells(delta, spark.table(s"${table}_centroids"))
-      .crossJoin(broadcast(sqRangeArrays(spark, table)))
-      .select(col("vec_id"), col("v"), col("nrm"), col("label"),
-        col("cell"),
-        sqCodes(transform(col("v"), x => round(x * 1000).cast("long")))
-          .as("sq"))
-      .repartition(col("cell")) // one file per touched cell per generation
-      .write.mode("append").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
-    graft.ops.IngestGuard.write(spark, delta, "vec_id", table,
-      overwrite = false)
-  }
-
-  /** At-least-once-safe SQ ingest — [[ivfSqIndexDelta]]'s idempotent
-    * twin (the [[ivfIndexDeltaIdempotent]] contract for the SQ8 lists):
-    * a replayed streaming micro-batch is a no-op via the shared
-    * [[novelAgainstLists]] replay filter; novel survivors are assigned
-    * and byte-coded against the stored frozen artifacts exactly as a
-    * batch delta would be. Completes streaming symmetry across the
-    * compression ladder. */
-  def ivfSqIndexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!spark.catalog.tableExists(s"${table}_ivf")) {
-      ivfSqIndexDelta(table, delta); return
-    }
-    val novel = novelAgainstLists(spark, table, delta)
-    if (!novel.isEmpty) ivfSqIndexDelta(table, novel)
-  }
-
-  /** The 64-entry SQ trainer as one broadcastable row (minv, rng arrays
-    * in dim order) — the form [[sqCodes]]/[[sqDecode255]] zip against. */
-  private def sqRangeArrays(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame =
-    spark.table(s"${table}_sqrange")
-      .agg(array_sort(collect_list(struct(col("dim"), col("minq"),
-        (col("maxq") - col("minq")).as("rng")))).as("md"))
-      .select(transform(col("md"), s => s("minq")).as("minv"),
-        transform(col("md"), s => s("rng")).as("rng"))
-
-  /** code_d = round((q_d − min_d)·255 / range_d) clamped to [0, 255]
-    * (a DELTA value outside the frozen trained range must still fit the
-    * byte code — the standard SQ saturation), 0 on a degenerate
-    * (zero-range) dim — exact-integer numerator, one IEEE divide, the
-    * same HALF_UP round both engines implement. */
-  private def sqCodes(q: Column): Column =
-    zip_with(q, arrays_zip(col("minv"), col("rng")), (qd, s) =>
-      when(s("rng") === 0L, 0L).otherwise(
-        greatest(lit(0L), least(lit(255L),
-          round((qd - s("minv")).cast("double") * 255.0
-            / s("rng").cast("double")).cast("long")))))
-
-  /** Dequantized candidate at scale q·255: min_d·255 + code_d·range_d —
-    * exact integer, so ADC distances against qs = q·255 are exact. */
-  private def sqDecode255(sq: Column): Column =
-    zip_with(sq, arrays_zip(col("minv"), col("rng")),
-      (c, s) => s("minv") * 255L + c * s("rng"))
-
-  /** Query the SQ8 IVF index: DPP-pruned probes (the fused contract),
-    * then candidates are scored on DEQUANTIZED codes — d2 =
-    * Σ(q·255 − decode255(code))², exact integer math per dim, the sq
-    * column read instead of v (8× less candidate IO) — with the usual
-    * (d2, vec_id) shortlist cut and raw-vector rescore. Unlike PQ there
-    * is no lookup table: SQ's ADC is 64 integer mult-adds per candidate
-    * against two broadcast 64-entry arrays. */
-  def annIvfSqIndexedTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, nQueries: Int = 8, k: Int = 3, nprobe: Int = 2,
-      shortlist: Int = -1): DataFrame =
-    annIvfSqIndexedTopK(spark, table, fixtureQueries(spark, table, nQueries),
-      k, nprobe, shortlist)
-
-  /** External-query-vector form of [[annIvfSqIndexedTopK]] — the
-    * caller-supplied (qid, v) shape; see [[fixtureQueries]]. */
-  def annIvfSqIndexedTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int,
-      shortlist: Int): DataFrame =
-    sqAdcTopK(spark, table, queries, k, nprobe, shortlist, identity)
-
-  /** ATTRIBUTE-FILTERED SQ8 ANN — the [[annIvfPqFilteredTopK]] contract
-    * on the 8× rung: predicate into the codes-only scan BEFORE the
-    * shortlist cut, exact-under-predicate up to the (now
-    * survivor-only) lossy cut, no selectivity correction needed. */
-  def annIvfSqFilteredTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, pred: Column, nQueries: Int = 8, k: Int = 3,
-      nprobe: Int = 2, shortlist: Int = -1): DataFrame =
-    annIvfSqFilteredTopK(spark, table,
-      fixtureQueries(spark, table, nQueries), pred, k, nprobe, shortlist)
-
-  /** External-query form of [[annIvfSqFilteredTopK]]. */
-  def annIvfSqFilteredTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, pred: Column, k: Int,
-      nprobe: Int, shortlist: Int): DataFrame =
-    sqAdcTopK(spark, table, queries, k, nprobe, shortlist, _.filter(pred))
-
-  /** The SQ8 ADC pipeline with a pluggable candidate transform — the
-    * [[pqAdcTopK]] single-derivation-site discipline for the 8× rung. */
-  private def sqAdcTopK(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, k: Int, nprobe: Int,
-      shortlist: Int, candFilter: DataFrame => DataFrame): DataFrame = {
-    // layout contract, symmetric with the fused entry points' enc check
-    // (ONE site — all overloads flow through here): a non-SQ table
-    // would otherwise fail five calls deep on a missing _sqrange/sq
-    // column instead of naming the right entry point
-    require(spark.catalog.tableExists(s"${table}_sqrange"),
-      s"$table is not an SQ8 index (no ${table}_sqrange trainer) — query " +
-        "the entry point matching the stored layout: annIvfPqIndexedTopK/" +
-        "annIvfPqResidualTopK for a fused index, annIvfIndexedTopK for " +
-        "plain IVF")
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table)
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    // the query side at scale q·255, matching sqDecode255's output scale
-    val qs = q0.select(col("qid"), transform(col("qv"),
-      x => round(x * 1000).cast("long") * lit(255L)).as("qs"))
-    // dequantize BEFORE the probes fan-out: a candidate probed by m
-    // queries decodes once, not m times
-    val adc = candFilter(idx).select(col("vec_id"), col("cell"), col("sq"))
-      .crossJoin(broadcast(sqRangeArrays(spark, table)))
-      .withColumn("dec", sqDecode255(col("sq")))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(qs), Seq("qid"))
-      .select(col("qid"), col("vec_id"), col("cell"),
-        aggregate(zip_with(col("qs"), col("dec"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, d) => acc + d).as("d2"))
-    shortlistRescore(idx, q0, adc, k, resolveShortlist(shortlist, nprobe))
+      .select(col("qid"), col("vec_id"), col("cell"), cos6.as("cos"))
+    rankedCells(scored, k)
   }
 
   /** (vec_id, cell) only — the assignment exchange without the index
     * payload, for audits that never store the vectors. */
-  private def cellsOnly(df: DataFrame, cent: DataFrame): DataFrame = {
-    val e = vecs(df).withColumn("xq", transform(col("v"),
-      x => round(x * 1000).cast("long") * lit(1000L)))
-    val dist = aggregate(
-      zip_with(col("xq"), col("cvec"), (x, c) => (x - c) * (x - c)),
-      lit(0L), (acc, d) => acc + d)
-    e.join(broadcast(cent))
-      .select(col("vec_id"), col("c_label"), dist.as("d2"))
+  private def cellsOnly(df: DataFrame, cent: DataFrame): DataFrame =
+    vecs(df).withColumn("xq", quantized(col("v")))
+      .join(broadcast(cent))
+      .select(col("vec_id"), col("c_label"),
+        sqDist(col("xq"), col("cvec")).as("d2"))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("d2"), col("c_label"))).as("best"))
       .select(col("vec_id"), col("best.c_label").as("cell"))
-  }
 
   /** Quantizer-drift audit: how many vectors sit in a different cell
     * under the base-trained (frozen) quantizer than full retraining
@@ -1610,31 +1238,42 @@ object Similarity {
     * vectors whose exact integer-space argmin cell under the STORED
     * frozen quantizer differs from one trained on the CURRENT corpus —
     * the [[annIvfDrift]] audit against the live index), and when it
-    * reaches `minDrift`, retrain the quantizer and rebuild the lists
-    * ([[buildIvfIndex]] over the current corpus). Unlike compaction this
-    * IS a retrain — cells move by design; recall is restored at the
-    * price of one corpus re-read + rebuild, which is why it runs behind
-    * a threshold instead of every ingest. Provenance is recorded in
-    * `{table}_quantizer_log` (one row per decision: corpus size, drift,
-    * threshold, fired) so index lineage stays auditable. Returns the
-    * decision row (n_vectors, n_moved, drift, threshold, retrained) —
-    * drift measured BEFORE any rebuild, so the row is reproducible from
-    * the pre-decision state. `corpus` is the source-of-truth embedding
-    * table (retraining reads the corpus by definition; the standing
-    * lists don't carry the label column the seeding needs). */
-  def retrainIfNeeded(spark: org.apache.spark.sql.SparkSession,
+    * reaches `minDrift`, retrain the quantizers and rebuild the lists
+    * ([[buildIvfIndex]] over the current corpus, under the codec that
+    * stands — a PQ index comes back PQ with the same code provenance, a
+    * flat one flat). Unlike compaction this IS a retrain — cells move by
+    * design; recall is restored at the price of one corpus re-read +
+    * rebuild, which is why it runs behind a threshold instead of every
+    * ingest. Provenance is recorded in `{table}_quantizer_log` (one row
+    * per decision: corpus size, drift, threshold, fired) so index
+    * lineage stays auditable. Returns the decision row (n_vectors,
+    * n_moved, drift, threshold, retrained) — drift measured BEFORE any
+    * rebuild, so the row is reproducible from the pre-decision state.
+    * `corpus` is the source-of-truth embedding table (a retrain trains
+    * on the corpus by definition). Vectors deleted through
+    * [[ivfIndexDelete]] since the last compaction are filtered out of it
+    * through the standing tombstones before both the decision and the
+    * rebuild, so a retrain never resurrects them. */
+  def retrainIfNeeded(spark: SparkSession,
       table: String, corpus: DataFrame, minDrift: Double): DataFrame = {
+    val codec = Codec.stored(spark, table)
+    // eager lineage cut: the rebuild drops the sidecar this filter reads
+    val live =
+      if (!spark.catalog.tableExists(graft.ops.Tombstones.sidecar(table)))
+        corpus
+      else graft.ops.Tombstones.filter(spark, table, corpus, "vec_id")
+        .localCheckpoint()
     val stored = spark.table(s"${table}_centroids")
-    val fresh = graft.CacheScope.track(Centroids.centroidVectors(corpus))
+    val fresh = graft.CacheScope.track(Centroids.centroidVectors(live))
     // both assignment frames are cached BY LOGICAL PLAN: a second decision
     // in the same scope (the fires/no-op pair the oracle row runs) reuses
     // them instead of re-aggregating the corpus twice; a rebuild refreshes
     // the {table}_centroids relation, so a post-retrain decision
     // recomputes against the new quantizer (spec-gated: third decision
     // measures drift 0)
-    val a = graft.CacheScope.track(cellsOnly(corpus, stored)
+    val a = graft.CacheScope.track(cellsOnly(live, stored)
       .select(col("vec_id"), col("cell").as("stored_cell")))
-    val b = graft.CacheScope.track(cellsOnly(corpus, fresh)
+    val b = graft.CacheScope.track(cellsOnly(live, fresh)
       .select(col("vec_id"), col("cell").as("fresh_cell")))
     val decision = a.join(b, "vec_id")
       .agg(count(lit(1)).as("n_vectors"),
@@ -1646,67 +1285,35 @@ object Similarity {
       .withColumn("threshold", lit(minDrift))
       .withColumn("retrained", col("drift") >= col("threshold"))
       .localCheckpoint() // pin the decision before any rebuild mutates state
-    val fired = decision.select(col("retrained")).collect()(0).getBoolean(0)
-    // a retrain rebuilds THE LAYOUT THAT STANDS: a fused index must come
-    // back fused (same code-encoding provenance — rebuilding plain would
-    // drop the codes column and break every ADC query), a plain index
-    // comes back plain
-    // layout dispatch below assumes at most ONE rung's artifacts stand; a
-    // catalog written before dropStaleArtifacts landed can carry both, in
-    // which case the PQ branch would silently win and an SQ index would be
-    // rebuilt fused
-    require(!(spark.catalog.tableExists(s"${table}_pqbook") &&
-        spark.catalog.tableExists(s"${table}_sqrange")),
-      s"$table carries BOTH ${table}_pqbook and ${table}_sqrange — a stale " +
-        "artifact from a pre-provenance build; re-run the intended rung's " +
-        "build (builds now drop the other layout's artifacts) before " +
-        "retraining")
-    if (fired) {
-      if (spark.catalog.tableExists(s"${table}_pqbook")) {
-        if (fusedEnc(spark, table) == "residual")
-          buildIvfPqResidualIndex(corpus, table)
-        else buildIvfPqIndex(corpus, table)
-      } else if (spark.catalog.tableExists(s"${table}_sqrange"))
-        buildIvfSqIndex(corpus, table)
-      else buildIvfIndex(corpus, table)
-    }
+    if (decision.select(col("retrained")).collect()(0).getBoolean(0))
+      buildIvfIndex(live, table, codec)
     decision.write.mode("append").format("parquet")
       .saveAsTable(s"${table}_quantizer_log")
     decision
   }
 
-  /** Probe-bounded cosine RANGE search from a standing IVF-family index
-    * — the indexed counterpart of [[nearDupPairs]] and the query shape
-    * dedup/link-discovery actually runs at scale ("everything within
-    * cosine t of these vectors", not top-k): candidates are the
+  /** Probe-bounded cosine RANGE search from a standing IVF index of any
+    * codec — the indexed counterpart of [[nearDupPairs]] and the query
+    * shape dedup/link-discovery actually runs at scale ("everything
+    * within cosine t of these vectors", not top-k): candidates are the
     * DPP-pruned probed cells, scored with the exact rounded cosine, and
     * every row at or above `threshold` survives — no heap cut, so the
     * output is bounded by the true match count in the probed cells.
     * Recall is probe-bounded exactly like the top-k entry points
     * (nprobe is the knob); within the probed cells the result is EXACT
     * (no ADC prefilter — a lossy filter could silently drop true
-    * matches, which a range query, unlike top-k, cannot tolerate).
-    * Works on every layout (plain/fused/SQ lists all carry v). */
-  def annIvfRangeSearch(spark: org.apache.spark.sql.SparkSession,
+    * matches, which a range query, unlike top-k, cannot tolerate). */
+  def annIvfRangeSearch(spark: SparkSession,
       table: String, queries: DataFrame, threshold: Double,
-      nprobe: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    val cent = spark.table(s"${table}_centroids")
-    val idx = lists(spark, table)
-    val q0 = externalQ0(queries)
-    val probes = probesFor(q0, cent, nprobe)
-    val q = q0.select(col("qid"), col("qv"), col("qnrm")).join(probes, "qid")
-    idx.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6))
+      nprobe: Int): DataFrame =
+    exactScored(lists(spark, table), externalQ0(queries),
+        spark.table(s"${table}_centroids"), nprobe)
       .filter(col("cos") >= threshold)
       .select(col("qid"), col("vec_id"), round(col("cos"), 4).as("cos"),
         col("cell"))
       .orderBy(col("qid"), col("vec_id"))
-  }
 
-  def annIvfRangeSearch(spark: org.apache.spark.sql.SparkSession,
+  def annIvfRangeSearch(spark: SparkSession,
       table: String, nQueries: Int = 8, threshold: Double = 0.25,
       nprobe: Int = 2): DataFrame =
     annIvfRangeSearch(spark, table, fixtureQueries(spark, table, nQueries),
@@ -1725,7 +1332,7 @@ object Similarity {
     * scan cost IS the physical list until compaction rewrites it, and
     * maintenance decisions (compact, split, retrain) price the physical
     * layout, not the logical corpus. */
-  def annIvfIndexStats(spark: org.apache.spark.sql.SparkSession,
+  def annIvfIndexStats(spark: SparkSession,
       table: String): DataFrame = {
     val sizes = spark.table(s"${table}_ivf")
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -1754,7 +1361,7 @@ object Similarity {
     * serve from standing indexes over the same corpus; the truth side is
     * the already-oracled brute-force chain, so every recall value is
     * engine-reproducible. */
-  def annNprobeSweep(spark: org.apache.spark.sql.SparkSession,
+  def annNprobeSweep(spark: SparkSession,
       embeddings: DataFrame, tPq: String, tRes: String, tSq: String,
       nQueries: Int = 8, k: Int = 3,
       shortlistPerProbe: Int = ShortlistPerProbe,
@@ -1812,7 +1419,7 @@ object Similarity {
     * neighbors below the default cut — recall 0.58 → 0.75 from slpp 5 →
     * 10 at nprobe 8 while residual/SQ8 never need the second knob).
     * Output: (rung, nprobe, shortlist_per_probe, recall). */
-  def annParamSweep(spark: org.apache.spark.sql.SparkSession,
+  def annParamSweep(spark: SparkSession,
       embeddings: DataFrame, tPq: String, tRes: String, tSq: String,
       nQueries: Int = 8, k: Int = 3,
       nprobes: Seq[Int] = Seq(1, 2, 4, 8),
@@ -1860,7 +1467,7 @@ object Similarity {
     * validation slice once per index generation; the chosen config then
     * serves every query — tuning cost amortized, recall target explicit
     * instead of folklore. */
-  def annNprobeAutoTune(spark: org.apache.spark.sql.SparkSession,
+  def annNprobeAutoTune(spark: SparkSession,
       embeddings: DataFrame, tPq: String, tRes: String, tSq: String,
       target: Double = 0.7): DataFrame =
     paramPick(annParamSweep(spark, embeddings, tPq, tRes, tSq), target)
@@ -1920,9 +1527,7 @@ object Similarity {
       // the positive cut drops would-be positives BEFORE the heap cut, so
       // the bounded heaps (and the rank window over their output) see only
       // the negative sliver, slimmed to scalar columns
-      .select(col("qid"), col("vec_id"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("cos"))
+      .select(col("qid"), col("vec_id"), cos6.as("cos"))
       .filter(col("cos") < posThreshold)
     rankedTopKPerQuery(scored, k)
       .select(col("qid"), col("vec_id"), col("rank"),
@@ -2034,8 +1639,7 @@ object Similarity {
       .select(col("v").as("qv"), col("nrm").as("qnrm"))
     val cands = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= anchorId)
-      .withColumn("rel", round(cosFromNorms(col("v"), col("qv"),
-        col("nrm"), col("qnrm")), 6))
+      .withColumn("rel", cos6)
       .orderBy(desc("rel"), col("vec_id")).limit(shortlist)
       .select(col("vec_id"), col("v"), col("nrm"), col("rel"))
     mmrGreedy(cands, k, lambda)
@@ -2048,7 +1652,7 @@ object Similarity {
     * byte-identical to the scan form's. The oracle mirrors the probe
     * (same trained-IVF chain as every `sim_ann_ivf_*` row) and the same
     * unrolled greedy. */
-  def mmrRerankIndexed(spark: org.apache.spark.sql.SparkSession,
+  def mmrRerankIndexed(spark: SparkSession,
       table: String, anchorId: Long = 0L, shortlist: Int = 30, k: Int = 8,
       lambda: Double = 0.7, nprobe: Int = 2): DataFrame = {
     val ids = annIvfIndexedTopK(spark, table, 1, shortlist, nprobe)
@@ -2058,9 +1662,7 @@ object Similarity {
       .select(col("v").as("qv"), col("nrm").as("qnrm"))
     val cands = lst.join(broadcast(ids), "vec_id")
       .crossJoin(broadcast(anchor))
-      .select(col("vec_id"), col("v"), col("nrm"),
-        round(cosFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 6)
-          .as("rel"))
+      .select(col("vec_id"), col("v"), col("nrm"), cos6.as("rel"))
     mmrGreedy(cands, k, lambda)
   }
 

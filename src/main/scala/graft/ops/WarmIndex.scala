@@ -81,15 +81,18 @@ object WarmIndex {
 
   def ivfPq(spark: SparkSession, sfDir: String): String =
     ensure(spark, sfDir, "ivfpq")(t =>
-      Similarity.buildIvfPqIndex(Tables.embeddings(spark, sfDir), t))
+      Similarity.buildIvfIndex(Tables.embeddings(spark, sfDir), t,
+        Similarity.Codec.Pq))
 
   def ivfPqResidual(spark: SparkSession, sfDir: String): String =
     ensure(spark, sfDir, "ivfpqr")(t =>
-      Similarity.buildIvfPqResidualIndex(Tables.embeddings(spark, sfDir), t))
+      Similarity.buildIvfIndex(Tables.embeddings(spark, sfDir), t,
+        Similarity.Codec.PqResidual))
 
   def ivfSq(spark: SparkSession, sfDir: String): String =
     ensure(spark, sfDir, "ivfsq")(t =>
-      Similarity.buildIvfSqIndex(Tables.embeddings(spark, sfDir), t))
+      Similarity.buildIvfIndex(Tables.embeddings(spark, sfDir), t,
+        Similarity.Codec.Sq8))
 
   def bm25(spark: SparkSession, sfDir: String): String =
     ensure(spark, sfDir, "bm25")(t =>

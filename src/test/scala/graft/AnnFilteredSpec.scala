@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 import graft.ops.Similarity
+import graft.ops.Similarity.Codec
 
 /** Attribute-filtered ANN ([[Similarity.annIvfFilteredTopK]]): the
   * predicate must reach the DPP-pruned list scan as a pushed data filter
@@ -89,13 +90,13 @@ class AnnFilteredSpec extends SparkSpec {
 
     for ((tag, build, query) <- Seq[(String, String => Unit,
         String => org.apache.spark.sql.DataFrame)](
-      ("pq", tb => Similarity.buildIvfPqIndex(emb, tb),
+      ("pq", tb => Similarity.buildIvfIndex(emb, tb, Codec.Pq),
         tb => Similarity.annIvfPqFilteredTopK(spark, tb,
           col("label") === 3)),
-      ("sq", tb => Similarity.buildIvfSqIndex(emb, tb),
+      ("sq", tb => Similarity.buildIvfIndex(emb, tb, Codec.Sq8),
         tb => Similarity.annIvfSqFilteredTopK(spark, tb,
           col("label") === 3)),
-      ("pqr", tb => Similarity.buildIvfPqResidualIndex(emb, tb),
+      ("pqr", tb => Similarity.buildIvfIndex(emb, tb, Codec.PqResidual),
         tb => Similarity.annIvfPqResidualFilteredTopK(spark, tb,
           col("label") === 3)))) {
       val tb = s"graft_ff_test.$tag"

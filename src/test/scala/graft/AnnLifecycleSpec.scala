@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 import graft.ops.{Centroids, Similarity}
+import graft.ops.Similarity.Codec
 
 /** Round-12 ANN lifecycle completions: the PQ-FUSED IVF index (codes
   * stored IN the inverted lists, ADC-scored candidates, raw-vector
@@ -38,7 +39,7 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfpq-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfpq_test LOCATION '$wh'")
     val t = "graft_ivfpq_test.idx"
-    Similarity.buildIvfPqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Pq)
     val got = Similarity.annIvfPqIndexedTopK(spark, t)
     val rows = got.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getInt(4)))
@@ -202,9 +203,9 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfpqd-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfpqd_test LOCATION '$wh'")
     val t = "graft_ivfpqd_test.idx"
-    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0), t)
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t, Codec.Pq)
     val bookBefore = spark.table(s"${t}_pqbook").collect().map(_.toSeq).toSet
-    Similarity.ivfPqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+    Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
 
     // neither trained artifact moved (frozen-quantizer contract × 2)
     assert(spark.table(s"${t}_pqbook").collect().map(_.toSeq).toSet
@@ -222,7 +223,7 @@ class AnnLifecycleSpec extends SparkSpec {
 
     // re-ingest throws; compaction is layout-only on the fused index too
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+      Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
     }
     Similarity.compactIvfIndex(spark, t)
     assert(Similarity.annIvfPqIndexedTopK(spark, t).collect().map(r =>
@@ -236,7 +237,7 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfpqr-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfpqr_test LOCATION '$wh'")
     val t = "graft_ivfpqr_test.idx"
-    Similarity.buildIvfPqResidualIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.PqResidual)
     val got = Similarity.annIvfPqResidualTopK(spark, t)
     val rows = got.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getInt(4)))
@@ -289,17 +290,17 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfpqi-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfpqi_test LOCATION '$wh'")
     val t = "graft_ivfpqi_test.idx"
-    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0), t)
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t, Codec.Pq)
     val delta = emb.filter(col("vec_id") % 5 === 0)
     // micro-batch split, second batch REPLAYED (at-least-once delivery),
     // plus a full-delta replay after the drain — all must fold to the
     // exact batch-delta state
     val b0 = delta.filter(col("vec_id") % 2 === 0)
     val b1 = delta.filter(col("vec_id") % 2 === 1)
-    Similarity.ivfPqIndexDeltaIdempotent(t, b0)
-    Similarity.ivfPqIndexDeltaIdempotent(t, b1)
-    Similarity.ivfPqIndexDeltaIdempotent(t, b1) // replayed micro-batch
-    Similarity.ivfPqIndexDeltaIdempotent(t, delta) // full-delta replay
+    Similarity.ivfIndexDeltaIdempotent(t, b0)
+    Similarity.ivfIndexDeltaIdempotent(t, b1)
+    Similarity.ivfIndexDeltaIdempotent(t, b1) // replayed micro-batch
+    Similarity.ivfIndexDeltaIdempotent(t, delta) // full-delta replay
     val idx = spark.table(s"${t}_ivf")
     assert(idx.count() === emb.count(), "replay duplicated fused-list rows")
     assert(idx.filter(col("codes").isNull).count() === 0)
@@ -315,7 +316,7 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfsq-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfsq_test LOCATION '$wh'")
     val t = "graft_ivfsq_test.idx"
-    Similarity.buildIvfSqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Sq8)
     val got = Similarity.annIvfSqIndexedTopK(spark, t)
     val rows = got.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getInt(4)))
@@ -439,9 +440,9 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfsqd-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfsqd_test LOCATION '$wh'")
     val t = "graft_ivfsqd_test.idx"
-    Similarity.buildIvfSqIndex(emb.filter(col("vec_id") % 5 =!= 0), t)
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t, Codec.Sq8)
     val rangeBefore = spark.table(s"${t}_sqrange").collect().map(_.toSeq).toSet
-    Similarity.ivfSqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+    Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
     assert(spark.table(s"${t}_sqrange").collect().map(_.toSeq).toSet
       === rangeBefore, "delta ingest mutated the SQ trainer")
     val idx = spark.table(s"${t}_ivf")
@@ -455,11 +456,11 @@ class AnnLifecycleSpec extends SparkSpec {
     assert(got.toSeq === ivfSqExpected(emb, _ % 5 != 0).toSeq,
       "delta-maintained SQ8 index diverged from the independent base-trained chain")
     intercept[IllegalArgumentException] {
-      Similarity.ivfSqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+      Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
     }
     // at-least-once replay via the idempotent twin is a no-op (the
     // streaming contract for the SQ rung)
-    Similarity.ivfSqIndexDeltaIdempotent(t, emb.filter(col("vec_id") % 5 === 0))
+    Similarity.ivfIndexDeltaIdempotent(t, emb.filter(col("vec_id") % 5 === 0))
     assert(spark.table(s"${t}_ivf").count() === emb.count(),
       "idempotent SQ replay duplicated list rows")
     // retrain on an SQ index rebuilds SQ (trainer refreshed on the full
@@ -481,16 +482,17 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ivfpqrd-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfpqrd_test LOCATION '$wh'")
     val t = "graft_ivfpqrd_test.idx"
-    Similarity.buildIvfPqResidualIndex(emb.filter(col("vec_id") % 5 =!= 0), t)
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t,
+      Codec.PqResidual)
     // the raw-ADC query refuses a residual index (mixed encodings would
     // silently mis-score, so the mismatch must be loud)
     intercept[IllegalArgumentException] {
       Similarity.annIvfPqIndexedTopK(spark, t)
     }
-    // delta encodes RESIDUALS against the stored codebook (the 'enc'
-    // branch in ivfPqIndexDelta) — merged result matches the
+    // delta encodes RESIDUALS against the stored codebook (the stored
+    // codec ivfIndexDelta reads) — merged result matches the
     // independent base-trained IVFADC chain exactly
-    Similarity.ivfPqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+    Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
     val got = Similarity.annIvfPqResidualTopK(spark, t).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getInt(4)))
     assert(got.toSeq === ivfPqExpected(emb, _ % 5 != 0, residual = true).toSeq,
@@ -506,9 +508,9 @@ class AnnLifecycleSpec extends SparkSpec {
     // fused build first, then the same table name switches to SQ8 — the
     // stale _pqbook must go, or layout dispatch (retrain, delta ingest)
     // would silently rebuild the OLD rung
-    Similarity.buildIvfPqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Pq)
     assert(spark.catalog.tableExists(s"${t}_pqbook"))
-    Similarity.buildIvfSqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Sq8)
     assert(!spark.catalog.tableExists(s"${t}_pqbook"),
       "layout switch left the stale PQ codebook standing")
     val fired = Similarity.retrainIfNeeded(spark, t, emb, 0.0).collect()(0)
@@ -527,8 +529,8 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-fret-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_fret_test LOCATION '$wh'")
     val t = "graft_fret_test.idx"
-    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0), t)
-    Similarity.ivfPqIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t, Codec.Pq)
+    Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") % 5 === 0))
     val fired = Similarity.retrainIfNeeded(spark, t, emb, 0.0).collect()(0)
     assert(fired.getAs[Boolean]("retrained"))
     // the rebuild came back FUSED on the full corpus: codes on every
@@ -587,9 +589,9 @@ class AnnLifecycleSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val wh = Files.createTempDirectory("graft-sweep-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_sweep_test LOCATION '$wh'")
-    Similarity.buildIvfPqIndex(emb, "graft_sweep_test.pq")
-    Similarity.buildIvfPqResidualIndex(emb, "graft_sweep_test.res")
-    Similarity.buildIvfSqIndex(emb, "graft_sweep_test.sq")
+    Similarity.buildIvfIndex(emb, "graft_sweep_test.pq", Codec.Pq)
+    Similarity.buildIvfIndex(emb, "graft_sweep_test.res", Codec.PqResidual)
+    Similarity.buildIvfIndex(emb, "graft_sweep_test.sq", Codec.Sq8)
     val rows = Similarity.annNprobeSweep(spark, emb, "graft_sweep_test.pq",
         "graft_sweep_test.res", "graft_sweep_test.sq").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
@@ -623,7 +625,7 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-ext-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ext_test LOCATION '$wh'")
     val t = "graft_ext_test.idx"
-    Similarity.buildIvfPqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Pq)
     // query vectors from the CORPUS (the caller's side), not the index
     val q = emb.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("qid"), col("embedding").as("v"))
@@ -754,7 +756,7 @@ class AnnLifecycleSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-guard-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_guard_test LOCATION '$wh'")
     val t = "graft_guard_test.idx"
-    Similarity.buildIvfPqIndex(emb, t)
+    Similarity.buildIvfIndex(emb, t, Codec.Pq)
     // SQ query on a fused table: contract message, not a missing-column
     // failure five calls deep
     val e1 = intercept[IllegalArgumentException] {
@@ -815,6 +817,120 @@ class AnnLifecycleSpec extends SparkSpec {
       "4 ingest generations did not trigger the batch-bound compaction")
     assert(maxFilesPerCell() === 1,
       "compaction left more than one file in a cell dir")
+  }
+
+
+  /** Independent plain-Scala FLAT IVF chain: label centroids over the
+    * `trainPred` subset, argmin cells for every vector, the NProbe
+    * nearest cells per query, and the exact rounded cosine over every
+    * probed candidate — no code, no shortlist. */
+  private def ivfFlatExpected(emb: org.apache.spark.sql.DataFrame,
+      trainPred: Long => Boolean): Seq[(Long, Long, Int, Double, Int)] = {
+    val data = emb.select(col("vec_id"), col("label"), col("embedding"))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
+      .sortBy(_._1)
+    val dim = data.head._3.length
+    val xq = data.map { case (id, _, v) =>
+      id -> v.map(x => rnd(x.toDouble * 1000) * 1000L) }.toMap
+    val c6 = data.filter(d => trainPred(d._1)).groupBy(_._2).map {
+      case (lbl, vs) =>
+        val sums = Array.fill(dim)(0L)
+        vs.foreach { case (_, _, v) =>
+          var i = 0
+          while (i < dim) { sums(i) += rnd(v(i).toDouble * 1000); i += 1 }
+        }
+        lbl -> sums.map(s => rnd(
+          BigDecimal(s.toDouble / (1000.0 * vs.length))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble * 1000000.0))
+    }
+    def d2(a: Array[Long], c: Array[Long]): Long =
+      a.indices.map { i => val d = a(i) - c(i); d * d }.sum
+    val cell = xq.map { case (id, a) =>
+      id -> c6.toSeq.map { case (l, c) => (d2(a, c), l) }.min._2 }
+    val probes = (0L until NQ).map { qid =>
+      qid -> c6.toSeq.map { case (l, c) => (d2(xq(qid), c), l) }
+        .sorted.take(NProbe).map(_._2).toSet
+    }.toMap
+    val vecs = data.map { case (id, _, v) => id -> v.map(_.toDouble) }.toMap
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val nrm = vecs.map { case (id, v) => id -> math.sqrt(dot(v, v)) }
+    (0L until NQ).flatMap { qid =>
+      data.map(_._1)
+        .filter(id => id != qid && probes(qid).contains(cell(id)))
+        .map(id => (round6(dot(vecs(id), vecs(qid)) / (nrm(id) * nrm(qid))), id))
+        .sortBy { case (c, id) => (-c, id) }.take(K).zipWithIndex.map {
+          case ((c, id), i) => (qid, id, i + 1, round4(c), cell(id))
+        }
+    }
+  }
+
+  test("generic delta + idempotent replay over every codec: merged lists == the independent base-trained chains") {
+    import java.nio.file.Files
+    val emb = Tables.embeddings(spark, sfDir)
+    val wh = Files.createTempDirectory("graft-codec-wh").toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_codec_test LOCATION '$wh'")
+    val delta = emb.filter(col("vec_id") % 5 === 0)
+    val base: Long => Boolean = _ % 5 != 0
+    for ((codec, want) <- Seq[(Codec, () => Seq[(Long, Long, Int, Double, Int)])](
+        Codec.Flat -> (() => ivfFlatExpected(emb, base)),
+        Codec.Pq -> (() => ivfPqExpected(emb, base)),
+        Codec.PqResidual -> (() => ivfPqExpected(emb, base, residual = true)),
+        Codec.Sq8 -> (() => ivfSqExpected(emb, base)))) withClue(codec.name) {
+      val t = s"graft_codec_test.${codec.name}"
+      Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), t, codec)
+      Similarity.ivfIndexDelta(t, delta)
+      assert(Codec.stored(spark, t) === codec)
+      val n = spark.table(s"${t}_ivf").count()
+      val guards = spark.table(s"${t}_guard").count()
+      assert(n === emb.count(), "the delta did not land exactly once")
+      // the replayed batch is a no-op: no list rows, no guard generation
+      Similarity.ivfIndexDeltaIdempotent(t, delta)
+      assert(spark.table(s"${t}_ivf").count() === n,
+        "idempotent replay duplicated list rows")
+      assert(spark.table(s"${t}_guard").count() === guards,
+        "idempotent replay appended a guard generation")
+      val got = Similarity.annIvfProbeTopK(spark, t).collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getInt(4)))
+      assert(got.toSeq === want().toSeq,
+        "delta-maintained index diverged from the independent base-trained chain")
+    }
+  }
+
+  test("retrainIfNeeded never resurrects vectors deleted since the last compaction") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfDir)
+    val wh = Files.createTempDirectory("graft-retdel-wh").toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_retdel_test LOCATION '$wh'")
+    val t = "graft_retdel_test.idx"
+    Similarity.buildIvfIndex(emb, t)
+    // victims: vectors the fixture probe answers with (not the anchors)
+    val victims = Similarity.annIvfIndexedTopK(spark, t)
+      .filter(col("vec_id") >= NQ).select(col("vec_id")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(victims.nonEmpty, "fixture rot: no non-anchor answers to delete")
+    Similarity.ivfIndexDelete(t, victims.toSeq.toDF("vec_id"))
+
+    val fired = Similarity.retrainIfNeeded(spark, t, emb, 0.0).collect()(0)
+    assert(fired.getAs[Boolean]("retrained"))
+    assert(fired.getAs[Long]("n_vectors") === emb.count() - victims.size,
+      "the drift decision counted deleted vectors")
+    assert(spark.table(s"${t}_ivf")
+        .filter(col("vec_id").isin(victims.toSeq: _*)).count() === 0,
+      "retrain rebuilt deleted vectors into the lists")
+    for (answer <- Seq(Similarity.annIvfIndexedTopK(spark, t),
+        Similarity.annIvfIndexedTopK(spark, t, NQ, K, 8),
+        Similarity.annIvfRangeSearch(spark, t, NQ, 0.0, 8)))
+      assert(!answer.collect().exists(r => victims(r.getAs[Long]("vec_id"))),
+        "a deleted vector surfaced in a probe answer after the retrain")
+    // the rebuilt guard no longer carries the victims: re-ingest is a
+    // plain insert, as after a compaction
+    Similarity.ivfIndexDelta(t, emb.filter(col("vec_id") === victims.min))
   }
 
 }

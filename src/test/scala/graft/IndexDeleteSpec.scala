@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 import graft.ops.{Dedup, FuzzySearch, Search, Similarity, Tombstones}
+import graft.ops.Similarity.Codec
 
 /** The tombstone deletion lifecycle ([[graft.ops.Tombstones]]) — the one
   * CRUD edge the insert-only index families lacked: delete must be
@@ -161,7 +162,7 @@ class IndexDeleteSpec extends SparkSpec {
     // the FUSED layouts share the lists: a delete must filter the ADC
     // candidates too (same sidecar, same anti-join)
     val tf = s"$db.ivfpq"
-    Similarity.buildIvfPqIndex(emb, tf)
+    Similarity.buildIvfIndex(emb, tf, Codec.Pq)
     val pqBefore = Similarity.annIvfPqIndexedTopK(spark, tf)
     val pqVictims = pqBefore.filter(col("vec_id") >= 8)
       .select(col("vec_id")).distinct()

@@ -95,47 +95,51 @@ class IndexSwapRecoverySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val wh = Files.createTempDirectory("graft-ivfswap-wh").toFile.getAbsolutePath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ivfswap LOCATION '$wh'")
-    val t = "graft_ivfswap.idx"
-    Similarity.buildIvfIndex(emb, t)
-    val want = Similarity.annIvfIndexedTopK(spark, t).collect().map(_.toSeq)
+    // every codec shares the cell-partitioned lists and so the swap:
+    // table-driven over all four, each probed through its own codec
+    for (codec <- Similarity.Codec.all) withClue(codec.name) {
+      val t = s"graft_ivfswap.${codec.name}"
+      Similarity.buildIvfIndex(emb, t, codec)
+      val want = Similarity.annIvfProbeTopK(spark, t).collect().map(_.toSeq)
 
-    // crash between rename-away and rename-in (partitioned table: the
-    // roll-forward must also re-discover partitions via MSCK)
-    spark.table(s"${t}_ivf")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${t}_ivf_compacting")
-    spark.sql(s"ALTER TABLE ${t}_ivf RENAME TO ${t}_ivf_retired")
-    assert(Similarity.recoverIvfSwap(spark, t), "ivf roll-forward did not fire")
-    assert(!spark.catalog.tableExists(s"${t}_ivf_compacting"))
-    assert(!spark.catalog.tableExists(s"${t}_ivf_retired"))
-    assert(Similarity.annIvfIndexedTopK(spark, t).collect().map(_.toSeq).toSeq
-      === want.toSeq, "recovered IVF index diverged")
+      // crash between rename-away and rename-in (partitioned table: the
+      // roll-forward must also re-discover partitions via MSCK)
+      spark.table(s"${t}_ivf")
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").format("parquet")
+        .saveAsTable(s"${t}_ivf_compacting")
+      spark.sql(s"ALTER TABLE ${t}_ivf RENAME TO ${t}_ivf_retired")
+      assert(Similarity.recoverIvfSwap(spark, t), "ivf roll-forward did not fire")
+      assert(!spark.catalog.tableExists(s"${t}_ivf_compacting"))
+      assert(!spark.catalog.tableExists(s"${t}_ivf_retired"))
+      assert(Similarity.annIvfProbeTopK(spark, t).collect().map(_.toSeq).toSeq
+        === want.toSeq, "recovered IVF index diverged")
 
-    // crash AFTER the rename-in but BEFORE the MSCK: live exists but its
-    // partition entries still point at the staging path — recovery must
-    // detect the out-of-location entries and repair in place
-    spark.table(s"${t}_ivf")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").format("parquet")
-      .saveAsTable(s"${t}_ivf_compacting")
-    spark.sql(s"ALTER TABLE ${t}_ivf RENAME TO ${t}_ivf_retired")
-    spark.sql(s"DROP TABLE ${t}_ivf_retired")
-    spark.sql(s"ALTER TABLE ${t}_ivf_compacting RENAME TO ${t}_ivf")
-    assert(spark.table(s"${t}_ivf").count() === 0, // the stale-entry symptom
-      "precondition: un-MSCKed rename should read empty")
-    Similarity.recoverIvfSwap(spark, t)
-    assert(Similarity.annIvfIndexedTopK(spark, t).collect().map(_.toSeq).toSeq
-      === want.toSeq, "in-place MSCK repair diverged")
+      // crash AFTER the rename-in but BEFORE the MSCK: live exists but its
+      // partition entries still point at the staging path — recovery must
+      // detect the out-of-location entries and repair in place
+      spark.table(s"${t}_ivf")
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").format("parquet")
+        .saveAsTable(s"${t}_ivf_compacting")
+      spark.sql(s"ALTER TABLE ${t}_ivf RENAME TO ${t}_ivf_retired")
+      spark.sql(s"DROP TABLE ${t}_ivf_retired")
+      spark.sql(s"ALTER TABLE ${t}_ivf_compacting RENAME TO ${t}_ivf")
+      assert(spark.table(s"${t}_ivf").count() === 0, // the stale-entry symptom
+        "precondition: un-MSCKed rename should read empty")
+      Similarity.recoverIvfSwap(spark, t)
+      assert(Similarity.annIvfProbeTopK(spark, t).collect().map(_.toSeq).toSeq
+        === want.toSeq, "in-place MSCK repair diverged")
 
-    // lists gone, guard standing, no staged copy: delta ingest must refuse
-    // (delta-only lists under a full-corpus guard silently drop the
-    // standing vectors from every probe)
-    spark.sql(s"DROP TABLE ${t}_ivf")
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfIndexDelta(t, emb.limit(5))
+      // lists gone, guard standing, no staged copy: delta ingest must refuse
+      // (delta-only lists under a full-corpus guard silently drop the
+      // standing vectors from every probe)
+      spark.sql(s"DROP TABLE ${t}_ivf")
+      val ex = intercept[IllegalArgumentException] {
+        Similarity.ivfIndexDelta(t, emb.limit(5))
+      }
+      assert(ex.getMessage.contains("refusing to bootstrap"), ex.getMessage)
     }
-    assert(ex.getMessage.contains("refusing to bootstrap"), ex.getMessage)
   }
 
   test("indexDelta/ivfIndexDelta: empty delta is a no-op (no generation, no stats row)") {
