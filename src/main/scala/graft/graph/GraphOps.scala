@@ -291,7 +291,7 @@ object GraphOps {
       maxRounds: Int): (DataFrame, Int) = {
     require(Seq(LongType, IntegerType).contains(und.schema("w").dataType),
       "weighted shortest paths need integral weights (exact long sums)")
-    val (out, rounds) = inOneTask(
+    val (out, rounds) = inOneTask("sssp",
         und.select(col("src"), col("dst"), col("w").cast("long")),
         longColumns("node", "dist")) { rows =>
       TaskLoops.sssp(rows, anchorId, maxRounds)
@@ -412,7 +412,9 @@ object GraphOps {
     * [[graft.plans.TopKPerKey]] operator (≤ cap rows per node per
     * partition ever reach the shuffle).
     *
-    * Scale shape: the degree dim joins the capped edge frame ONCE before
+    * Scale shape ([[pprWalk]]): at derived width 1 the k rounds run in
+    * memory inside one Spark task, so extra rounds add no jobs. On the
+    * wide path the degree dim joins the capped edge frame ONCE before
     * the loop; each round is ONE equi-join (sparse rank frame × incident
     * edges) and ONE sum-aggregate — k rounds = k shuffle pairs, the same
     * relax-and-fold discipline as [[shortestPathsBounded]]. The rank
@@ -543,8 +545,9 @@ object GraphOps {
   /** BATCH PPR off the standing adjacency — the family's DataFrame-batch
     * frontend discipline (`topKIndexedBatch`/`bm25_search_batch` applied
     * to the walk): ALL anchors advance through the SAME k folds, keyed by
-    * (qid, node), so the whole batch costs k shuffle rounds regardless of
-    * |anchors| and driver work is O(1) per anchor. A missing anchor id
+    * (qid, node), so the whole batch costs k shuffle rounds on the wide
+    * path (one task at width 1) regardless of |anchors| and driver work
+    * is O(1) per anchor. A missing anchor id
     * degenerates to its teleport row (the negative case rides along). */
   def personalizedPageRankBatchIndexed(spark: SparkSession, table: String,
       anchors: Seq[Long], iters: Int = 3): DataFrame =
@@ -654,26 +657,33 @@ object GraphOps {
   /** Runs `loop` over every row of `input` inside ONE Spark task and
     * lineage-cuts the rows it emits ([[truncated]], so
     * `spark.graft.pathCheckpoint=reliable` still holds): the emitted
-    * frame and the loop's round count. */
-  private def inOneTask(input: DataFrame, schema: StructType)(
+    * frame and the loop's round count. The jobs it runs carry the job
+    * description `graft fixpoint <name>: one task` (the caller's
+    * description is restored afterwards), so event logs and the UI name
+    * the loop instead of a call site. */
+  private def inOneTask(name: String, input: DataFrame, schema: StructType)(
       loop: Iterator[Row] => (Iterator[Row], Int)): (DataFrame, Int) = {
     import scala.jdk.CollectionConverters._
     val spark = input.sparkSession
     val sc = spark.sparkContext
-    val rounds = sc.collectionAccumulator[Int]("fixpoint rounds")
-    val rows = input.rdd
-    // an empty input may plan to zero partitions; the loop still runs once
-    val one =
-      if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[Row], 1)
-      else rows.coalesce(1)
-    val out = truncated(spark.createDataFrame(one.mapPartitions { it =>
-      val (emitted, n) = loop(it)
-      rounds.add(n)
-      emitted
-    }, schema))
-    // a recomputed task (a reliable checkpoint writes in a second job)
-    // adds the same count again
-    (out, rounds.value.asScala.max)
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft fixpoint $name: one task")
+    try {
+      val rounds = sc.collectionAccumulator[Int]("fixpoint rounds")
+      val rows = input.rdd
+      // an empty input may plan to zero partitions; the loop still runs once
+      val one =
+        if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[Row], 1)
+        else rows.coalesce(1)
+      val out = truncated(spark.createDataFrame(one.mapPartitions { it =>
+        val (emitted, n) = loop(it)
+        rounds.add(n)
+        emitted
+      }, schema))
+      // a recomputed task (a reliable checkpoint writes in a second job)
+      // adds the same count again
+      (out, rounds.value.asScala.max)
+    } finally sc.setLocalProperty("spark.job.description", prior)
   }
 
   private[graft] def pprConvergedBatchWithRounds(und: DataFrame,
@@ -691,7 +701,7 @@ object GraphOps {
     fixpoint(spark, workRows, width) {
       // deg is the src's row count in undDeg, which the CSR recounts
       val as = anchors.toArray
-      inOneTask(undDeg.select(col("src"), col("dst")),
+      inOneTask("pprConverged", undDeg.select(col("src"), col("dst")),
           longColumns("qid", "node", "r")) { rows =>
         TaskLoops.pprConverged(rows, as, PprConvScale, maxRounds)
       }
@@ -749,17 +759,28 @@ object GraphOps {
 
   /** The walk core: `iters` scaled-integer power-iteration rounds over a
     * given capped adjacency, keyed by (qid = anchor, node) so one pass
-    * serves any number of personalization sources. */
-  private def pprWalk(und: DataFrame, anchors: Seq[Long],
-      iters: Int): DataFrame = {
-    val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val undDeg = truncated(und.join(deg, "src"))
+    * serves any number of personalization sources. At derived width 1
+    * ([[fixpoint]]) the rounds run in one task as the converged walk
+    * bounded to `iters` rounds — the same rows, since a round applied to
+    * a fixpoint is a no-op, so halting there early changes nothing; above
+    * it, each round is one relax join and one sum-aggregate. `width`
+    * overrides the derivation (the specs' seam). */
+  private[graft] def pprWalk(und: DataFrame, anchors: Seq[Long],
+      iters: Int, width: Option[Int] = None): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
-    // scale-adaptive width, as [[fixpoint]]'s wide path (this fixed-round
-    // walk has no one-task path)
-    val workRows = undDeg.count() * math.max(1, anchors.size)
-    graft.plans.ScopedWidth.scoped(spark, workRows) {
+    // rank rows ≤ relax output ≤ edges × |anchors|; the degree join below
+    // keeps the edge count, and the one-task CSR counts degrees itself
+    val workRows = und.count() * math.max(1, anchors.size)
+    fixpoint(spark, workRows, width) {
+      val as = anchors.toArray
+      inOneTask("pprWalk", und.select(col("src"), col("dst")),
+          longColumns("qid", "node", "r")) { rows =>
+        TaskLoops.pprConverged(rows, as, PprScale, iters)
+      }._1
+    } {
+      val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val undDeg = truncated(und.join(deg, "src"))
       val a = anchors.toDF("qid")
       val teleport = a.select(col("qid"), col("qid").as("node"),
         lit(PprScale * 15 / 100).as("r"))
@@ -1008,7 +1029,8 @@ object GraphOps {
     * means are exact long floor-divisions), so the DuckDB oracle
     * reproduces every value bit-exactly. Scale shape: each round is ONE
     * equi-join (adjacency × current feature frame) and ONE sum/count
-    * aggregate — k rounds = k shuffle pairs, the [[pprWalk]] discipline;
+    * aggregate — k rounds = k shuffle pairs, the wide [[pprWalk]]'s
+    * discipline (this loop has no one-task path);
     * isolated nodes ride the union side and keep their own feature
     * (mean over {v} alone). */
   def featureAggregate(spark: SparkSession, adjTable: String,
@@ -1041,7 +1063,7 @@ object GraphOps {
     *
     * The neighbor probe is the J3/J5 one-vs-all broadcast shape
     * ([[graft.ops.EdgeRules.incrementalEdges]]): the anchor's single row
-    * broadcast against the corpus, one streaming pass per rule — NOT the
+    * broadcast against the corpus, one streaming pass for all rules — NOT the
     * full 4-rule self-join backfill filtered to the anchor afterwards,
     * which materializes the near-clique Θ(n²) pair set just to keep the
     * anchor-incident sliver (measured 3.1s → 1.7s ≈ the bare walk's own
@@ -1165,7 +1187,7 @@ object GraphOps {
       val input = und.select(col("src"), col("dst"), lit(false).as("is_node"))
         .unionByName(nodes.select(col("node").as("src"),
           col("node").as("dst"), lit(true).as("is_node")))
-      inOneTask(input, longColumns("node", "label")) { rows =>
+      inOneTask("labelPropagation", input, longColumns("node", "label")) { rows =>
         (TaskLoops.lpa(rows, iters), iters)
       }._1.orderBy(col("node"))
     } {
@@ -1228,7 +1250,7 @@ object GraphOps {
       width: Option[Int] = None): DataFrame = {
     // every caller passes a checkpointed edge frame
     fixpoint(edges.sparkSession, edges.count(), width) {
-      inOneTask(edges.select(col("src"), col("dst")),
+      inOneTask("kCore", edges.select(col("src"), col("dst")),
           longColumns("id", "deg")) { rows =>
         (TaskLoops.kCore(rows, k, rounds), rounds)
       }._1.orderBy(col("id"))

@@ -109,7 +109,9 @@ private[graph] object TaskLoops {
     * anchor frame does.
     * A round's share is `((r div deg) * 85) div 100`; the batch halts on
     * the first round in which every anchor's rank rows equal the previous
-    * round's (the full-outer mismatch probe: same keys, same values). */
+    * round's (the full-outer mismatch probe: same keys, same values).
+    * With `maxRounds = iters` it is also the fixed-round walk: a round
+    * applied to a fixpoint is a no-op, so halting early changes no row. */
   def pprConverged(edges: Iterator[Row], anchors: Array[Long], scale: Long,
       maxRounds: Int): (Iterator[Row], Int) = {
     val g = csr(edges, weighted = false, anchors)

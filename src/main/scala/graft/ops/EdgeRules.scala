@@ -10,10 +10,20 @@ import graft.functions.Norm
   * similarity edges between all student pairs.
   *
   * Physical shape (SURVEY.md §2.3 J1/J2, §4):
-  *  - Each attribute rule is an EQUI self-join on the normalized attribute —
-  *    Catalyst plans a shuffled hash / sort-merge join on `norm(attr)`, NOT a
-  *    cartesian product (the Cypher `MATCH (a),(b)` all-pairs pattern must
-  *    never become a cross join at scale).
+  *  - The attribute rules run as ONE EQUI self-join: each student becomes
+  *    one `(rel_type, norm(attr))` row per rule with a non-empty key, and
+  *    the pairs come from joining those rows on `(rel_type, key, salt)` —
+  *    Catalyst plans a shuffled hash / sort-merge join, NOT a cartesian
+  *    product (the Cypher `MATCH (a),(b)` all-pairs pattern must never
+  *    become a cross join at scale). `rel_type` is part of the key because
+  *    two rules can share a key string (college "x", board "x"). One join
+  *    instead of a union of per-rule joins matters on small inputs: each
+  *    join broadcasts its own build side, and each broadcast is a Spark
+  *    job of its own. The price is one build side holding every rule's
+  *    rows: at sf0.1 a warm backfill runs about 1.3× the per-rule union's
+  *    time (a cold one runs faster, with three jobs instead of nine).
+  *  - The one-vs-all delta ([[incrementalEdges]]) is likewise one pass:
+  *    one broadcast of the new row, one row per matching rule.
   *  - The interest rule's `arrays_overlap` predicate has no equi key, so we
   *    rewrite it as explode → equi-join on token → group back — all shuffles
   *    on token/pair keys that scale linearly with data × token frequency.
@@ -25,10 +35,23 @@ object EdgeRules {
   /** One equi-rule: pairs with equal non-null normalized `attr`
     * (create_relationships.py:16-77 — SAME_COLLEGE / SAME_BOARD /
     * SAME_STREAM / NEARBY are all this shape). */
-  def equiRule(students: DataFrame, attr: String, relType: String): DataFrame = {
+  def equiRule(students: DataFrame, attr: String, relType: String): DataFrame =
+    equiRules(students, Seq(attr -> relType))
+
+  /** The `(attr, relType)` rules as one salted self-join: pairs with equal
+    * non-empty normalized `attr` under the same `relType`, one row per
+    * connecting rule. */
+  private def equiRules(students: DataFrame,
+      rules: Seq[(String, String)]): DataFrame = {
     val salt = pairSalt(students)
-    val a = students.select(col("id").as("src"), Norm.norm(col(attr)).as("k"))
-      .filter(col(attr).isNotNull && Norm.norm(col(attr)) =!= "")
+    // one (rel_type, k) row per student per rule; norm maps null to "", so
+    // the non-empty filter also drops null attributes
+    val keyed = students
+      .select(col("id"), explode(array(rules.map { case (attr, t) =>
+        struct(lit(t).as("rel_type"), Norm.norm(col(attr)).as("k")) }: _*)).as("r"))
+      .select(col("id"), col("r.rel_type").as("rel_type"), col("r.k").as("k"))
+      .filter(col("k") =!= "")
+    val a = keyed.select(col("id").as("src"), col("rel_type"), col("k"))
       .withColumn("salt", pmod(col("src"), lit(salt)).cast("int"))
       // Low-cardinality join key (a handful of colleges/boards): without the
       // salt the join has ≤|distinct k| parallel units and the pair
@@ -40,16 +63,20 @@ object EdgeRules {
       // user shuffle is REPARTITION_BY_COL, which AQE's OptimizeSkewedJoin
       // refuses to split — the `edges_skew_aqe` experiment turns it off
       // (manualShuffle=false) to hand the exchange to ENSURE_REQUIREMENTS.
+      // The width scales with the rule count: the join emits every rule's
+      // pairs, as the per-rule joins it replaces did with pairParallelism
+      // tasks each (at sf0.1 the unscaled width ran about 2× the union's
+      // time).
       .transform(df =>
         if (manualShuffle(students))
-          df.repartition(pairParallelism(students), col("k"), col("salt"))
+          df.repartition(pairParallelism(students) * rules.size,
+            col("rel_type"), col("k"), col("salt"))
         else df)
-    val b = students.select(col("id").as("dst"), Norm.norm(col(attr)).as("k"))
-      .filter(col(attr).isNotNull && Norm.norm(col(attr)) =!= "")
+    val b = keyed.select(col("id").as("dst"), col("rel_type"), col("k"))
       .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-    a.join(b, Seq("k", "salt"))              // equi-join on (normalized key, salt)
+    a.join(b, Seq("rel_type", "k", "salt"))  // equi-join on (rule, key, salt)
       .filter(col("src") < col("dst"))       // unordered-pair dedupe
-      .select(col("src"), col("dst"), lit(relType).as("rel_type"))
+      .select(col("src"), col("dst"), col("rel_type"))
   }
 
   /** SHARES_INTEREST (create_relationships.py:80-93): pairs whose normalized
@@ -115,7 +142,7 @@ object EdgeRules {
       .transform(df =>
         if (manualShuffle(norm))
           df.repartition(pairParallelism(norm), col("tok"), col("salt"))
-        else df) // see equiRule
+        else df) // see equiRules
     val b = toks.select(col("id").as("dst"), col("arr").as("b_arr"), col("tok"))
       .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
     // A pair sharing k tokens appears k times in the token join; emitting it
@@ -165,21 +192,21 @@ object EdgeRules {
     "stream" -> "SAME_STREAM",
     "address" -> "NEARBY")
 
-  /** Full backfill over the students view: the enabled equi rules unioned.
+  /** Full backfill over the students view: the enabled equi rules in one
+    * self-join ([[equiRules]]).
     * `enabled` mirrors run_all's per-edge-type booleans
     * (create_relationships.py:96-106, `run_all(create_board=..., ...)` and
     * the --no-* CLI flags below it) as the set of relationship types to
-    * build; defaults to all four. Each disabled rule removes its entire
-    * self-join from the plan — not a post-filter — so a partial backfill
-    * costs only the rules it runs. */
+    * build; defaults to all four. A disabled rule contributes no keyed
+    * rows to the join — not a post-filter — so a partial backfill costs
+    * only the rules it runs. */
   def backfill(
       students: DataFrame,
       enabled: Set[String] = AllEquiRules.map(_._2).toSet): DataFrame = {
     val rules = AllEquiRules.filter { case (_, t) => enabled.contains(t) }
     require(rules.nonEmpty,
       s"backfill: no known edge type in $enabled (known: ${AllEquiRules.map(_._2)})")
-    rules.map { case (attr, t) => equiRule(students, attr, t) }
-      .reduce(_.unionByName(_))
+    equiRules(students, rules)
   }
 
   /** MERGE-as-anti-join (J7): edges in `candidates` not already present in
@@ -224,23 +251,19 @@ object EdgeRules {
 
   /** Incremental variant (J5, EP1 step c — student_service.py:62-106): edges
     * between ONE new student and all existing ones. The new side is a single
-    * row → broadcast it; each rule is one streaming pass over `existing`. */
+    * row → broadcast it; one streaming pass over `existing` emits a row per
+    * rule that connects the pair. */
   def incrementalEdges(existing: DataFrame, newStudent: DataFrame): DataFrame = {
-    val n = broadcast(newStudent.select(
-      col("id").as("n_id"), col("college").as("n_college"),
-      col("board").as("n_board"), col("stream").as("n_stream"),
-      col("address").as("n_address")))
-    val joined = existing.crossJoin(n).filter(col("id") =!= col("n_id"))
-    def rule(attr: String, relType: String) =
-      joined
-        .filter(col(attr).isNotNull && col(s"n_$attr").isNotNull &&
-          Norm.norm(col(attr)) =!= "" && Norm.normEq(col(attr), col(s"n_$attr")))
-        .select(
-          least(col("id"), col("n_id")).as("src"),
-          greatest(col("id"), col("n_id")).as("dst"),
-          lit(relType).as("rel_type"))
-    Seq(rule("college", "SAME_COLLEGE"), rule("board", "SAME_BOARD"),
-      rule("stream", "SAME_STREAM"), rule("address", "NEARBY"))
-      .reduce(_.unionByName(_))
+    val n = broadcast(newStudent.select(col("id").as("n_id") +:
+      AllEquiRules.map { case (attr, _) => col(attr).as(s"n_$attr") }: _*))
+    // the rel types of the rules matching this pair, null where one does not
+    val matching = array(AllEquiRules.map { case (attr, t) =>
+      when(Norm.norm(col(attr)) =!= "" &&
+        Norm.normEq(col(attr), col(s"n_$attr")), lit(t)) }: _*)
+    existing.crossJoin(n).filter(col("id") =!= col("n_id"))
+      .select(
+        least(col("id"), col("n_id")).as("src"),
+        greatest(col("id"), col("n_id")).as("dst"),
+        explode(filter(matching, _.isNotNull)).as("rel_type"))
   }
 }

@@ -23,13 +23,14 @@ import org.apache.spark.sql.SparkSession
   * NOT thread-safe across concurrent driver jobs: the set/restore pair
   * mutates SHARED session conf, so a scoped operator must never run on
   * a concurrent-build pool (see WarmIndex.prebuildAll's invariant) or
-  * beside other driver work. The graph fixpoint loops read [[width]]
-  * without scoping when it is 1: they then run in one task and never
-  * touch conf, which is what lets the backfill batch run PPR beside
-  * LPA and k-core on two driver threads at bench scale. Their wide path
-  * (width > 1) and the recipe composer still scope, so concurrent wide
-  * loops would race on the shared setting until conf moves to child
-  * sessions.
+  * beside other driver work. The graph fixpoint loops — the fixed-round
+  * PPR walk included — read [[width]] without scoping when it is 1: they
+  * then run in one task and never touch conf, which is what lets the
+  * backfill batch run PPR beside LPA and k-core on two driver threads,
+  * and serve run the PPR recommend beside other requests, at bench
+  * scale. Their wide path (width > 1) and the recipe composer still
+  * scope, so concurrent wide loops would race on the shared setting
+  * until conf moves to child sessions.
   *
   * Gate by WORK SHAPE, not just size: the width prices SHUFFLE volume.
   * A loop whose per-row cost is not byte-proportional (bfsPaths' path

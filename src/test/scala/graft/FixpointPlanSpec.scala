@@ -10,7 +10,9 @@ import graft.graph.GraphOps
   * per-round dataflow. Both sides must return the same rows and the same
   * round count, on fixtures with the cases where the two plans could
   * drift: a missing anchor, a dst that is never a src, an isolated node,
-  * duplicate edge rows, few rounds and a `k` above every degree. */
+  * duplicate edge rows, few rounds and a `k` above every degree. The
+  * fixed-round PPR walk is pinned the same way: at width 1 it runs as the
+  * converged walk bounded to its round count. */
 class FixpointPlanSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -63,6 +65,42 @@ class FixpointPlanSpec extends SparkSpec {
     }
   }
 
+  test("fixed-round PPR walk: one task == width 2 for 0, 1 and 3 rounds, " +
+      "with a missing and a duplicated anchor") {
+    for (anchors <- Seq(Seq(1L), Seq(1L, 4L, 999L), Seq(2L, 2L, 5L));
+         iters <- Seq(0, 1, 3))
+      atBothWidths(s"walk $anchors x $iters") { w =>
+        rows(GraphOps.pprWalk(edges, anchors, iters, Some(w)))
+      }
+    for (iters <- Seq(0, 1, 3))
+      atBothWidths(s"walk empty graph x $iters") { w =>
+        rows(GraphOps.pprWalk(edges.filter(lit(false)), Seq(1L, 2L), iters,
+          Some(w)))
+      }
+  }
+
+  test("one-task jobs carry the loop's description; the caller's is restored") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(s.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    sc.setJobDescription("caller")
+    try {
+      GraphOps.pprWalk(edges, Seq(1L), 3, Some(1)).collect()
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      Thread.sleep(1000) // listener delivery is async
+      assert(seen.contains("graft fixpoint pprWalk: one task"), seen)
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+  }
+
   test("SSSP: converged and bounded, one task == width 2") {
     for (anchor <- Seq(1L, 99L); maxRounds <- Seq(1, 3, 64)) {
       atBothWidths(s"sssp converged $anchor x $maxRounds") { w =>
@@ -107,23 +145,41 @@ class FixpointPlanSpec extends SparkSpec {
     }
   }
 
+  /** 40 students over the four equi rules, one interest token each. */
+  private def students40: DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, false),
+      StructField("name", StringType, false),
+      StructField("address", StringType, true),
+      StructField("college", StringType, true),
+      StructField("board", StringType, true),
+      StructField("stream", StringType, true),
+      StructField("interests", ArrayType(StringType), true)))
+    spark.createDataFrame((0L until 40L).map(i =>
+      Row(i, s"s$i", s"a${i % 5}", s"c${i % 4}", s"b${i % 3}", s"st${i % 7}",
+        Seq(s"i${i % 6}"))).asJava, schema)
+  }
+
+  /** `a` and `b` on two driver threads == `a` then `b` on this one, and
+    * the session's shuffle width is unchanged afterwards. */
+  private def concurrentEqualsSequential[A, B](a: => A, b: => B): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val sequential = (a, b)
+    val fa = Future(a)
+    val fb = Future(b)
+    val concurrent = (Await.result(fa, 5.minutes), Await.result(fb, 5.minutes))
+    assert(concurrent === sequential)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+  }
+
   test("backfill's shape: converged batch PPR beside LPA + k-core on two " +
       "driver threads == sequential runs; shuffle width unchanged") {
-    val students = {
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("id", LongType, false),
-        StructField("name", StringType, false),
-        StructField("address", StringType, true),
-        StructField("college", StringType, true),
-        StructField("board", StringType, true),
-        StructField("stream", StringType, true),
-        StructField("interests", ArrayType(StringType), true)))
-      spark.createDataFrame((0L until 40L).map(i =>
-        Row(i, s"s$i", s"a${i % 5}", s"c${i % 4}", s"b${i % 3}", s"st${i % 7}",
-          Seq.empty[String])).asJava, schema)
-    }
+    val students = students40
     spark.sql("DROP TABLE IF EXISTS fixpoint_concurrent_adj")
     GraphOps.buildAdjacencyTable(students, "fixpoint_concurrent_adj")
     val table = "fixpoint_concurrent_adj"
@@ -132,17 +188,26 @@ class FixpointPlanSpec extends SparkSpec {
     def lpaThenKCore() = (
       rows(GraphOps.labelPropagationStudentsIndexed(spark, table, students)),
       rows(GraphOps.kCoreStudentsIndexed(spark, table, k = 10)))
-    try {
-      val width = spark.conf.get("spark.sql.shuffle.partitions")
-      val sequential = (ppr(), lpaThenKCore())
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      val a = Future(ppr())
-      val b = Future(lpaThenKCore())
-      val concurrent = (Await.result(a, 5.minutes), Await.result(b, 5.minutes))
-      assert(concurrent === sequential)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
-    } finally spark.sql("DROP TABLE IF EXISTS fixpoint_concurrent_adj")
+    try concurrentEqualsSequential(ppr(), lpaThenKCore())
+    finally spark.sql("DROP TABLE IF EXISTS fixpoint_concurrent_adj")
+  }
+
+  test("serve's shape: PPR recommend beside the pair relationship on two " +
+      "driver threads == sequential runs; shuffle width unchanged") {
+    val students = students40
+    spark.sql("DROP TABLE IF EXISTS fixpoint_serve_adj")
+    GraphOps.buildAdjacencyTable(students, "fixpoint_serve_adj")
+    def recommend() = rows(GraphOps.personalizedPageRankRecommendIndexed(
+      spark, "fixpoint_serve_adj", students, 7L))
+    def pair() = {
+      val stPair = students.filter(col("name").isin("s3", "s15"))
+      val edges = graft.ops.EdgeRules.backfill(stPair)
+        .withColumn("common", lit(null).cast("array<string>"))
+        .unionByName(graft.ops.EdgeRules.interestRule(
+          stPair.select(col("id"), col("interests"))))
+      rows(graft.ops.StudentQueries.pairRelationship(students, edges, "s3", "s15"))
+    }
+    try concurrentEqualsSequential(recommend(), pair())
+    finally spark.sql("DROP TABLE IF EXISTS fixpoint_serve_adj")
   }
 }

@@ -227,7 +227,8 @@ class GraphPathsSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(l)
       try {
-        GraphOps.personalizedPageRankIndexed(spark, "ppr_adj_spec2", 1L, iters)
+        // the 4-node fixture derives width 1; this pins the width-2 dataflow
+        GraphOps.pprWalk(spark.table("ppr_adj_spec2"), Seq(1L), iters, Some(2))
           .collect()
         Thread.sleep(1000) // listener delivery is async
       } finally spark.sparkContext.removeSparkListener(l)
@@ -685,6 +686,25 @@ class GraphPathsSpec extends SparkSpec {
     val perRound = (j3 - j1) / 2.0
     assert(j3 > j1 && perRound == perRound.floor && perRound <= 6,
       s"expected a constant <=6 jobs per extra LPA round, got j1=$j1 j3=$j3")
+  }
+
+  test("PPR walk at width 1: the rounds run in one task, so extra rounds " +
+      "add no jobs") {
+    // 30 students in three colleges
+    val none = lit(null).cast("string")
+    val students = spark.range(30).select(col("id"),
+      concat(lit("s"), col("id")).as("name"), none.as("address"),
+      concat(lit("c"), col("id") % 3).as("college"), none.as("board"),
+      none.as("stream"))
+    spark.sql("DROP TABLE IF EXISTS ppr_adj_spec3")
+    GraphOps.buildAdjacencyTable(students, "ppr_adj_spec3")
+    def jobsFor(iters: Int): Int = jobsOf(GraphOps
+      .personalizedPageRankIndexed(spark, "ppr_adj_spec3", 1L, iters).collect())
+    try {
+      val j1 = jobsFor(1)
+      val j3 = jobsFor(3)
+      assert(j1 === j3, s"expected equal job counts, got j1=$j1 j3=$j3")
+    } finally spark.sql("DROP TABLE IF EXISTS ppr_adj_spec3")
   }
 
   test("labelPropagation at width 1: the rounds run in one task, so extra " +

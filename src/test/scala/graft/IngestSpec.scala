@@ -116,14 +116,21 @@ class IngestSpec extends SparkSpec {
     val expected = full.filter(col("rel_type").isin("SAME_COLLEGE", "SAME_STREAM"))
     assert(partial.exceptAll(expected).count() === 0)
     assert(expected.exceptAll(partial).count() === 0)
-    // a disabled rule never enters the plan (no post-filter): the partial
-    // plan carries exactly 2 joins, the full one 4
+    // a disabled rule never enters the plan (no post-filter): the enabled
+    // rules share one join, and only their rel types appear in the plan
     def nJoins(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
       }.size
-    assert(nJoins(partial) === 2)
-    assert(nJoins(full) === 4)
+    def relTypes(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
+            if v != null => v.toString
+      })).toSet.intersect(EdgeRules.AllEquiRules.map(_._2).toSet)
+    assert(nJoins(partial) === 1)
+    assert(nJoins(full) === 1)
+    assert(relTypes(partial) === Set("SAME_COLLEGE", "SAME_STREAM"))
+    assert(relTypes(full) === EdgeRules.AllEquiRules.map(_._2).toSet)
     intercept[IllegalArgumentException](EdgeRules.backfill(fixture, Set("NOPE")))
   }
 }
