@@ -41,15 +41,36 @@ object GraphOps {
     Graph(vertices, edges)
   }
 
-  /** Connected components: GraphX label propagation to the minimum vertex
-    * id — for the star construction the component id is provably
-    * min(custkey) per (nationkey, mktsegment) group, which is the closed
-    * form the DuckDB oracle checks. */
-  def connectedComponents(spark: SparkSession, customer: DataFrame): DataFrame = {
-    val cc = similarityGraph(customer).connectedComponents().vertices
-    spark.createDataFrame(cc.map { case (id, comp) => (id, comp) })
-      .toDF("id", "component")
-      .orderBy(col("id"))
+  /** Connected components: label propagation to the minimum vertex id —
+    * for the star construction the component id is provably min(custkey)
+    * per (nationkey, mktsegment) group, which is the closed form the
+    * DuckDB oracle checks.
+    *
+    * The plan follows the size of the data ([[fitsOneTask]], with
+    * |customer| work rows): at derived width 1 ONE Spark task links each
+    * (nationkey, mktsegment) group as a star and runs a union-find to the
+    * minimum id ([[TaskLoops.components]]) — no hub aggregate, no join,
+    * none of GraphX's Pregel jobs — and, its single partition being
+    * emitted in id order, needs no range-partitioned sort; above it
+    * GraphX's `connectedComponents` runs. Both give one row per distinct
+    * vertex. `width` overrides the derivation (the specs' seam). */
+  def connectedComponents(spark: SparkSession, customer: DataFrame): DataFrame =
+    connectedComponentsAt(spark, customer, None)
+
+  private[graft] def connectedComponentsAt(spark: SparkSession,
+      customer: DataFrame, width: Option[Int]): DataFrame = {
+    if (fitsOneTask(spark, customer.count(), width))
+      inOneTask("connectedComponents", customer.select(col("c_custkey"),
+          col("c_nationkey"), col("c_mktsegment")),
+          longColumns("id", "component")) { rows =>
+        (TaskLoops.components(rows), 0)
+      }._1.sortWithinPartitions(col("id"))
+    else {
+      val cc = similarityGraph(customer).connectedComponents().vertices
+      spark.createDataFrame(cc.map { case (id, comp) => (id, comp) })
+        .toDF("id", "component")
+        .orderBy(col("id"))
+    }
   }
 
   /** Vertex degrees of the similarity graph (vertices with ≥1 edge — GraphX
@@ -529,11 +550,38 @@ object GraphOps {
 
   /** Materialize the capped adjacency as a standing catalog table — the
     * graph family's WarmIndex layout (built once per corpus, served to
-    * the query-only twins). */
+    * the query-only twins).
+    *
+    * The plan follows the size of the data ([[fitsOneTask]]): the work is
+    * bounded by [[ruleCandidates]]' |students| × |rules| × (cap+1)
+    * candidate rows. At derived width 1 the whole build — per-rule
+    * group tops, pairing, dedup and the per-node cap — runs in ONE Spark
+    * task over the students' normalized rule keys
+    * ([[TaskLoops.cappedAdjacency]]) and writes one file; above it
+    * [[cappedAdjacency]]'s dataflow runs. Same rows either way. */
   def buildAdjacencyTable(students: DataFrame, table: String,
       neighborCap: Int = 32): Unit =
-    cappedAdjacency(students, neighborCap)
-      .write.mode("overwrite").saveAsTable(table)
+    buildAdjacencyTableAt(students, table, neighborCap, None)
+
+  /** [[buildAdjacencyTable]] at a given width (None = derived; the specs'
+    * seam). */
+  private[graft] def buildAdjacencyTableAt(students: DataFrame, table: String,
+      neighborCap: Int, width: Option[Int]): Unit = {
+    import graft.functions.Norm
+    val rules = graft.ops.EdgeRules.AllEquiRules
+    val workRows = students.count() * rules.size * (neighborCap + 1)
+    if (fitsOneTask(students.sparkSession, workRows, width)) {
+      val keyed = students.select(col("id").cast("long") +:
+        rules.map { case (attr, _) => Norm.norm(col(attr)) }: _*)
+      described("cappedAdjacency", students.sparkSession) {
+        oneTaskFrame(keyed, longColumns("src", "dst"))(
+          TaskLoops.cappedAdjacency(_, rules.size, neighborCap))
+          .write.mode("overwrite").saveAsTable(table)
+      }
+    } else
+      cappedAdjacency(students, neighborCap)
+        .write.mode("overwrite").saveAsTable(table)
+  }
 
   /** PPR walk served from a standing adjacency table ([[buildAdjacencyTable]])
     * — the query-only form: k relax rounds and nothing else, the amortized
@@ -651,40 +699,61 @@ object GraphOps {
     if (w == 1) oneTask else graft.plans.ScopedWidth.at(spark, w)(wide)
   }
 
+  /** The same plan choice for a one-shot step (the adjacency build,
+    * connected components): whether `workRows` rows derive width 1, so the
+    * step runs in one task. Their wide path runs at the session width and
+    * sets no conf, so both stay safe on a concurrent build pool
+    * (`WarmIndex.prebuildAll`). */
+  private def fitsOneTask(spark: SparkSession, workRows: Long,
+      width: Option[Int]): Boolean =
+    width.getOrElse(graft.plans.ScopedWidth.width(spark, workRows)) == 1
+
   private def longColumns(names: String*): StructType =
     StructType(names.map(StructField(_, LongType, nullable = false)))
 
-  /** Runs `loop` over every row of `input` inside ONE Spark task and
-    * lineage-cuts the rows it emits ([[truncated]], so
-    * `spark.graft.pathCheckpoint=reliable` still holds): the emitted
-    * frame and the loop's round count. The jobs it runs carry the job
-    * description `graft fixpoint <name>: one task` (the caller's
-    * description is restored afterwards), so event logs and the UI name
-    * the loop instead of a call site. */
-  private def inOneTask(name: String, input: DataFrame, schema: StructType)(
-      loop: Iterator[Row] => (Iterator[Row], Int)): (DataFrame, Int) = {
-    import scala.jdk.CollectionConverters._
-    val spark = input.sparkSession
+  /** Runs `body` with the job description `graft fixpoint <name>: one
+    * task` and restores the caller's description afterwards, so event
+    * logs and the UI name the step instead of a call site. */
+  private def described[T](name: String, spark: SparkSession)(body: => T): T = {
     val sc = spark.sparkContext
     val prior = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft fixpoint $name: one task")
-    try {
-      val rounds = sc.collectionAccumulator[Int]("fixpoint rounds")
-      val rows = input.rdd
-      // an empty input may plan to zero partitions; the loop still runs once
-      val one =
-        if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[Row], 1)
-        else rows.coalesce(1)
-      val out = truncated(spark.createDataFrame(one.mapPartitions { it =>
+    try body
+    finally sc.setLocalProperty("spark.job.description", prior)
+  }
+
+  /** The rows `f` emits from every row of `input`, computed inside ONE
+    * Spark task (lazily: nothing runs until the frame is consumed). */
+  private def oneTaskFrame(input: DataFrame, schema: StructType)(
+      f: Iterator[Row] => Iterator[Row]): DataFrame = {
+    val spark = input.sparkSession
+    val rows = input.rdd
+    // an empty input may plan to zero partitions; the loop still runs once
+    val one =
+      if (rows.partitions.isEmpty) spark.sparkContext.parallelize(Seq.empty[Row], 1)
+      else rows.coalesce(1)
+    spark.createDataFrame(one.mapPartitions(f), schema)
+  }
+
+  /** Runs `loop` over every row of `input` inside ONE Spark task
+    * ([[oneTaskFrame]], under [[described]]) and lineage-cuts the rows it
+    * emits ([[truncated]], so `spark.graft.pathCheckpoint=reliable` still
+    * holds): the emitted frame and the loop's round count. */
+  private def inOneTask(name: String, input: DataFrame, schema: StructType)(
+      loop: Iterator[Row] => (Iterator[Row], Int)): (DataFrame, Int) =
+    described(name, input.sparkSession) {
+      import scala.jdk.CollectionConverters._
+      val rounds = input.sparkSession.sparkContext
+        .collectionAccumulator[Int]("fixpoint rounds")
+      val out = truncated(oneTaskFrame(input, schema) { it =>
         val (emitted, n) = loop(it)
         rounds.add(n)
         emitted
-      }, schema))
+      })
       // a recomputed task (a reliable checkpoint writes in a second job)
       // adds the same count again
       (out, rounds.value.asScala.max)
-    } finally sc.setLocalProperty("spark.job.description", prior)
-  }
+    }
 
   private[graft] def pprConvergedBatchWithRounds(und: DataFrame,
       anchors: Seq[Long], maxRounds: Int = PprConvMaxRounds,

@@ -57,14 +57,19 @@ private[graph] object TaskLoops {
     build(src.result, dst.result, if (weighted) w.result else null, extra)
   }
 
-  private def build(src: Array[Long], dst: Array[Long], w: Array[Long],
-      extra: Array[Long]): Csr = {
-    val all = Array.concat(src, dst, extra)
+  /** `all` sorted ascending without repeats (sorts `all` in place). */
+  private def sortedDistinct(all: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(all)
     var n = 0
     for (i <- all.indices)
       if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
-    val ids = java.util.Arrays.copyOf(all, n)
+    java.util.Arrays.copyOf(all, n)
+  }
+
+  private def build(src: Array[Long], dst: Array[Long], w: Array[Long],
+      extra: Array[Long]): Csr = {
+    val ids = sortedDistinct(Array.concat(src, dst, extra))
+    val n = ids.length
     def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
     val si = src.map(index)
     val off = new Array[Int](n + 1)
@@ -256,5 +261,108 @@ private[graph] object TaskLoops {
     }
     degrees()
     g.ids.indices.iterator.filter(deg(_) > 0).map(i => Row(g.ids(i), deg(i)))
+  }
+
+  /** Connected components of the similarity star over (id, key_1 … key_n)
+    * rows: a row links its id to its group's — the rows with equal keys,
+    * none of them null, as the equi-join that finds a group's hub
+    * requires; a row with a null key only adds its vertex. One (id,
+    * component) row per distinct id, in id order, the component being the
+    * smallest id it reaches — GraphX's labelling over
+    * [[GraphOps.similarityGraph]]. Each group is linked as a star around
+    * its first row (the min-id hub gives the same components), then a
+    * union-find whose roots are the smallest dense index (= smallest id,
+    * the indices being id-ordered). */
+  def components(rows: Iterator[Row]): Iterator[Row] = {
+    val (src, dst) = (new Longs, new Longs)
+    val first = new java.util.HashMap[Seq[Any], java.lang.Long]
+    rows.foreach { r =>
+      val id = long(r, 0)
+      val key = (1 until r.length).map(r.get)
+      val hub = if (key.contains(null)) id else first.computeIfAbsent(key, _ => id).longValue
+      src += id; dst += hub
+    }
+    val g = build(src.result, dst.result, null, Array.empty)
+    val root = Array.tabulate(g.n)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (root(r) != r) r = root(r)
+      var j = i
+      while (root(j) != r) { val next = root(j); root(j) = r; j = next }
+      r
+    }
+    for (s <- 0 until g.n; e <- g.off(s) until g.off(s + 1)) {
+      val (a, b) = (find(s), find(g.dst(e)))
+      if (a < b) root(b) = a else if (b < a) root(a) = b
+    }
+    g.ids.indices.iterator.map(i => Row(g.ids(i), g.ids(find(i))))
+  }
+
+  /** The capped rule adjacency over (id, k_1 … k_r) rows — a student and
+    * its `r` normalized rule keys, "" where it has none: the (src, dst)
+    * rows [[GraphOps.cappedAdjacency]] computes, the cap smallest distinct
+    * neighbors per node. As its dataflow does, per rule and per non-empty
+    * key it takes the cap+1 smallest id ROWS of the key group (a
+    * duplicated student row holds two slots; a null id sorts first and
+    * holds a slot but pairs with nothing), pairs every member with them
+    * minus itself, drops duplicate pairs and keeps the cap smallest dsts
+    * per src. Pairs are dense id ranks packed into one long (src high,
+    * dst low), so one primitive sort orders them by (src, dst). */
+  def cappedAdjacency(rows: Iterator[Row], rules: Int, cap: Int): Iterator[Row] = {
+    val id = new Longs
+    val isNull = new java.util.BitSet
+    val keys = Array.fill(rules)(Array.newBuilder[String])
+    rows.foreach { r =>
+      if (r.isNullAt(0)) isNull.set(id.size)
+      id += (if (r.isNullAt(0)) 0L else r.getLong(0))
+      for (j <- 0 until rules) keys(j) += r.getString(j + 1)
+    }
+    val n = id.size
+    val present = new Longs
+    for (i <- 0 until n if !isNull.get(i)) present += id.a(i)
+    val ids = sortedDistinct(present.result)
+    // 1-based ranks; 0 is a null id, first in ascending order
+    val rank = Array.tabulate(n)(i =>
+      if (isNull.get(i)) 0 else java.util.Arrays.binarySearch(ids, id.a(i)) + 1)
+    val low = 0xffffffffL
+    val pairs = new Longs
+    val members = new Longs
+    for (j <- 0 until rules) {
+      val k = keys(j).result()
+      val group = new java.util.HashMap[String, Integer]
+      members.size = 0
+      for (i <- 0 until n if k(i) != null && k(i).nonEmpty) {
+        val g = group.computeIfAbsent(k(i), _ => group.size)
+        members += (g.toLong << 32) | rank(i)
+      }
+      java.util.Arrays.sort(members.a, 0, members.size)
+      var a = 0
+      while (a < members.size) {
+        var b = a
+        while (b < members.size && (members.a(b) >>> 32) == (members.a(a) >>> 32))
+          b += 1
+        val tops = math.min(b, a + cap + 1)
+        for (m <- a until b; t <- a until tops) {
+          val (s, d) = (members.a(m) & low, members.a(t) & low)
+          if (s != 0 && d != 0 && s != d) pairs += (s << 32) | d
+        }
+        a = b
+      }
+    }
+    java.util.Arrays.sort(pairs.a, 0, pairs.size)
+    val out = new Longs
+    var kept = 0
+    for (i <- 0 until pairs.size) {
+      val p = pairs.a(i)
+      val first = i == 0 || (pairs.a(i - 1) >>> 32) != (p >>> 32)
+      if (first) kept = 0
+      if ((i == 0 || pairs.a(i - 1) != p) && kept < cap) {
+        out += p; kept += 1
+      }
+    }
+    (0 until out.size).iterator.map { i =>
+      val p = out.a(i)
+      Row(ids((p >>> 32).toInt - 1), ids((p & low).toInt - 1))
+    }
   }
 }

@@ -56,6 +56,13 @@ object DedupIndex {
         "run build first")
     IngestGuard.assertDisjoint(spark, table, newDocs, "doc_id",
       spark.table(table), "DedupIndex.delta")
+    append(spark, table, newDocs, buckets)
+  }
+
+  /** The band rows' bucketed append and guard blob, for doc_ids already
+    * known new. */
+  private def append(spark: SparkSession, table: String, newDocs: DataFrame,
+      buckets: Int = 8): Unit = {
     Dedup.lshBands(newDocs)
       .repartition(buckets, col("b"), col("k"))
       .write.mode("append")
@@ -85,14 +92,16 @@ object DedupIndex {
     * SLIVER of the batch (the standing doc_id column is probed against
     * the broadcast sliver — delta-proportional); the novel set is
     * lineage-cut before the append (it derives from the table being
-    * appended to). Batch 0 bootstraps an empty catalog. */
+    * appended to) and appended without [[delta]]'s second probe (one
+    * guard read and one bloom probe per batch; see
+    * [[IngestGuard.novel]]). Batch 0 bootstraps an empty catalog. */
   def deltaIdempotent(spark: SparkSession, table: String,
       newDocs: DataFrame): Unit = {
     Swap.recoverUnpartitioned(spark, table)
     if (!spark.catalog.tableExists(table)) { build(newDocs, table); return }
     val novel = IngestGuard.novel(spark, table, newDocs, "doc_id",
       spark.table(table))
-    if (!novel.isEmpty) delta(spark, table, novel)
+    if (!novel.isEmpty) append(spark, table, novel)
   }
 
   /** DELETE documents from the standing band index — right-to-erasure

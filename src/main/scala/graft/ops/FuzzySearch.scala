@@ -97,6 +97,16 @@ object FuzzySearch {
   def indexDelta(table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
     if (delta.isEmpty) return
+    standingChecked(spark, table)
+    graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "id",
+      spark.table(s"${table}_names"), "fuzzyIndexDelta")
+    append(table, delta)
+  }
+
+  /** Rolls forward an interrupted swap and refuses a catalog that is not
+    * a whole standing index — the precondition of every append. */
+  private def standingChecked(spark: org.apache.spark.sql.SparkSession,
+      table: String): Unit = {
     // a missing names table next to a staged copy is an interrupted
     // tombstone-fold swap (compactIndex) — roll it forward first
     recoverNamesSwap(spark, table)
@@ -119,8 +129,12 @@ object FuzzySearch {
         "to roll forward — delta-only postings would silently miss " +
         "every base name. Rebuild via buildIndex (or restore the " +
         "postings) before ingesting")
-    graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "id",
-      spark.table(s"${table}_names"), "fuzzyIndexDelta")
+  }
+
+  /** The delta's names and gram postings, the df sidecar's rows and the
+    * guard blob, for ids already known new. */
+  private def append(table: String, delta: DataFrame): Unit = {
+    val spark = delta.sparkSession
     writeIndex(delta, table, overwrite = false)
     // keep the ADVISORY df sidecar FRESH when the deployment opted into
     // it: gram df is additive (the probe folds rows by sum), so the
@@ -147,7 +161,9 @@ object FuzzySearch {
     * bloom-suspect sliver of the delta (delta-proportional — the
     * standing names are read just for the suspect ids); the novel set
     * is lineage-cut before the append (it derives from the table being
-    * appended to — the insert-time cache-invalidation trap).
+    * appended to — the insert-time cache-invalidation trap) and appended
+    * without [[indexDelta]]'s second probe (one guard read and one bloom
+    * probe per batch; see [[graft.ops.IngestGuard.novel]]).
     *
     * SCOPE of the guarantee (the family-wide contract shared with
     * [[Search.indexDeltaIdempotent]] / [[Similarity
@@ -171,7 +187,7 @@ object FuzzySearch {
     }
     val novel = graft.ops.IngestGuard.novel(spark, table, delta, "id",
       spark.table(s"${table}_names"))
-    if (!novel.isEmpty) indexDelta(table, novel)
+    if (!novel.isEmpty) { standingChecked(spark, table); append(table, novel) }
   }
 
   /** DELETE names from the standing fuzzy index — the [[Tombstones]]

@@ -56,7 +56,11 @@ object Ingest {
     val delta0 = Option(interestDelta)
       .map(d => equiDelta.withColumn("common", Norm.emptyStrArray).unionByName(d))
       .getOrElse(equiDelta.withColumn("common", Norm.emptyStrArray))
-    val delta = EdgeRules.mergeNew(delta0, edges)
+    // every candidate is (least(o, id), greatest(o, id), …), so only an
+    // existing edge touching `id` can match one: the anti-join's build
+    // side is the newcomer's edges, not the whole edge table
+    val delta = EdgeRules.mergeNew(delta0,
+      edges.filter(col("src") === id || col("dst") === id))
     (appended, id, delta)
   }
 

@@ -74,12 +74,36 @@ object IngestGuard {
         if (n == 0) return
         keyed.stat.bloomFilter("k", n, fppFor(n))
       } finally keyed.unpersist(false)
+    save(spark, bloom, table, overwrite)
+  }
+
+  /** [[write]]'s append for a batch whose row count the caller already
+    * holds (`rows` > 0): the rows bound the distinct ids from above, so a
+    * bloom sized for them, at [[fppFor]]`(rows)`, is at least as sparse
+    * and as strict as one sized for the distinct count — built in ONE
+    * pass over the batch, with no distinct and no count. Returns the
+    * blob's bytes. */
+  def appendSized(spark: SparkSession, batch: DataFrame, idCol: String,
+      table: String, rows: Long): Long = {
+    require(rows > 0, "appendSized needs a non-empty batch")
+    val bloom = batch.select(col(idCol).cast("string").as("k"))
+      .stat.bloomFilter("k", rows, fppFor(rows))
+    save(spark, bloom, table, overwrite = false)
+  }
+
+  /** Appends (or, with `overwrite`, replaces) the sidecar with `bloom`'s
+    * blob; returns the blob's bytes. */
+  private def save(spark: SparkSession,
+      bloom: org.apache.spark.util.sketch.BloomFilter, table: String,
+      overwrite: Boolean): Long = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
+    val blob = bos.toByteArray
     import spark.implicits._
-    Seq(Tuple1(bos.toByteArray)).toDF("bloom").write
+    Seq(Tuple1(blob)).toDF("bloom").write
       .mode(if (overwrite) "overwrite" else "append")
       .format("parquet").saveAsTable(guardTable(table))
+    blob.length.toLong
   }
 
   /** (generation count, cumulative blob bytes) of the guard sidecar —
@@ -109,9 +133,39 @@ object IngestGuard {
     * dimension cannot silently diverge between families. Reads k tiny
     * sidecar rows, never the index. */
   def compactionDue(spark: SparkSession, table: String, maxBatches: Int,
-      maxSidecarBytes: Long): Boolean = {
-    val (generations, sidecarBytes) = sidecarSize(spark, table)
-    generations > maxBatches || sidecarBytes > maxSidecarBytes
+      maxSidecarBytes: Long): Boolean =
+    due(sidecarSize(spark, table), maxBatches, maxSidecarBytes)
+
+  /** [[compactionDue]]'s rule over an already known sidecar size. */
+  def due(size: (Long, Long), maxBatches: Int, maxSidecarBytes: Long): Boolean =
+    size._1 > maxBatches || size._2 > maxSidecarBytes
+
+  /** The guard sidecar as one ingest reads it: every blob, or None when
+    * no sidecar exists. Read ONCE per ingest, it serves the replay filter
+    * ([[novel]]) and prices the compaction policy ([[size]]), so an
+    * idempotent ingest collects `{table}_guard` once. */
+  final class Sidecar private[IngestGuard] (
+      blobs: Option[Array[Array[Byte]]]) {
+    /** [[sidecarSize]]'s (generation count, cumulative blob bytes). */
+    def size: (Long, Long) = blobs.fold((0L, 0L))(b =>
+      (b.length.toLong, b.map(_.length.toLong).sum))
+
+    /** [[suspectPredicate]] over these blobs. */
+    def predicate(idCol: String): Option[org.apache.spark.sql.Column] =
+      blobs.map(_
+        .map(b => call_function("bloom_might_contain",
+          col(idCol).cast("string"), lit(b)))
+        .reduce(_ || _))
+  }
+
+  /** Collect the guard sidecar's blobs (one small job), or None without a
+    * sidecar. */
+  def read(spark: SparkSession, table: String): Sidecar = {
+    graft.functions.BloomMightContain.register(spark)
+    new Sidecar(
+      if (!spark.catalog.tableExists(guardTable(table))) None
+      else Some(spark.table(guardTable(table)).collect()
+        .map(_.getAs[Array[Byte]]("bloom"))))
   }
 
   /** The OR-of-blobs suspicion predicate over `idCol` (each blob becomes
@@ -123,18 +177,8 @@ object IngestGuard {
     * suspect SLIVER only, which is true replays + fpp-rare misses, never
     * the whole delta. */
   def suspectPredicate(spark: SparkSession, table: String,
-      idCol: String): Option[org.apache.spark.sql.Column] = {
-    graft.functions.BloomMightContain.register(spark)
-    if (!spark.catalog.tableExists(guardTable(table))) None
-    else {
-      val blobs = spark.table(guardTable(table)).collect()
-        .map(_.getAs[Array[Byte]]("bloom"))
-      Some(blobs
-        .map(b => call_function("bloom_might_contain",
-          col(idCol).cast("string"), lit(b)))
-        .reduce(_ || _))
-    }
-  }
+      idCol: String): Option[org.apache.spark.sql.Column] =
+    read(spark, table).predicate(idCol)
 
   /** Fast-path membership suspicion: does ANY `idCol` value in `delta`
     * hit a guard bloom? Reads the sidecar + the delta only, never the
@@ -184,9 +228,18 @@ object IngestGuard {
     * against the just-appended rows and see an empty delta (the bug a
     * (0, null) BM25 stats row once exposed). */
   def novel(spark: SparkSession, table: String, delta: DataFrame,
-      idCol: String, standing: => DataFrame): DataFrame = {
+      idCol: String, standing: => DataFrame): DataFrame =
+    novel(read(spark, table), delta, idCol, standing)
+
+  /** [[novel]] over an already read sidecar. An ingest that filters with
+    * it appends the novel rows without probing again: they are disjoint
+    * from the standing index by construction, which is the whole of
+    * [[assertDisjoint]]'s check — so one idempotent ingest reads the
+    * sidecar once and probes the bloom once. */
+  def novel(guard: Sidecar, delta: DataFrame, idCol: String,
+      standing: => DataFrame): DataFrame = {
     def standingIds = standing.select(col(idCol))
-    suspectPredicate(spark, table, idCol) match {
+    guard.predicate(idCol) match {
       case Some(hit) =>
         val suspects = delta.select(col(idCol)).distinct().filter(hit)
         if (suspects.isEmpty) delta

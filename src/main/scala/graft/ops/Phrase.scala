@@ -173,10 +173,17 @@ object Phrase {
       s"positionalDelta: no standing index at $table — build first")
     IngestGuard.assertDisjoint(spark, table, delta, "doc_id",
       spark.table(s"${table}_pos"), "positionalDelta")
+    append(table, delta, buckets)
+  }
+
+  /** The delta's bucketed postings append and guard blob, for ids
+    * already known new. */
+  private def append(table: String, delta: DataFrame, buckets: Int): Unit = {
     posPostings(delta).write.mode("append")
       .bucketBy(buckets, "term").sortBy("term")
       .format("parquet").saveAsTable(s"${table}_pos")
-    IngestGuard.write(spark, delta, "doc_id", table, overwrite = false)
+    IngestGuard.write(delta.sparkSession, delta, "doc_id", table,
+      overwrite = false)
   }
 
   /** At-least-once-safe ingest ([[Search.indexDeltaIdempotent]]'s recipe,
@@ -185,7 +192,10 @@ object Phrase {
     * is confirmed exactly only for the bloom-suspect SLIVER of the delta;
     * the novel set's lineage is CUT (eager localCheckpoint) before the
     * append — it derives from the postings table the append mutates.
-    * Batch 0 bootstraps an empty catalog via a full build. */
+    * The novel rows append without [[positionalDelta]]'s second probe
+    * (one guard read and one bloom probe per batch; see
+    * [[IngestGuard.novel]]). Batch 0 bootstraps an empty catalog via a
+    * full build. */
   def positionalDeltaIdempotent(table: String, delta: DataFrame,
       buckets: Int = 8): Unit = {
     val spark = delta.sparkSession
@@ -194,7 +204,7 @@ object Phrase {
     }
     val novel = IngestGuard.novel(spark, table, delta, "doc_id",
       spark.table(s"${table}_pos"))
-    if (!novel.isEmpty) positionalDelta(table, novel, buckets)
+    if (!novel.isEmpty) append(table, novel, buckets)
   }
 
   /** Tombstone deletion ([[Tombstones]] discipline): append the victim

@@ -436,41 +436,69 @@ object Search {
     * check itself is delta-proportional; the exact postings semi-probe
     * only runs on a bloom hit (a real clash, about to throw anyway). */
   def indexDelta(table: String, delta: DataFrame, buckets: Int = 8): Unit = {
+    ingest(table, delta, buckets, replay = false); ()
+  }
+
+  /** One delta ingest; `replay` filters already-indexed doc_ids
+    * ([[indexDeltaIdempotent]]) where the plain form refuses them. Returns
+    * the guard sidecar's (generations, bytes) after the ingest when it
+    * read the sidecar, for the compaction policy ([[streamedBatch]]). */
+  private def ingest(table: String, delta: DataFrame, buckets: Int,
+      replay: Boolean): Option[(Long, Long)] = {
     val spark = delta.sparkSession
-    // an empty delta is a no-op, mirroring IngestGuard.write's n == 0 skip:
-    // without this it would append an empty postings file generation and a
-    // (0.0, null) stats row — harmless to query-time sums, but generations
-    // inflate and an all-empty corpus would NPE compactIndex's stats fold
-    if (delta.isEmpty) return
-    // a first-ever delta BOOTSTRAPS the index (append creates the tables):
-    // nothing standing exists to clash with, so the guard is skipped — the
-    // streaming-ingest entry point starts from an empty catalog. But a
-    // missing postings table NEXT TO standing _stats/_guard is NOT a fresh
-    // catalog — it is an interrupted compaction swap, and bootstrapping
-    // over it would create a delta-only postings table whose scores fold
-    // against the old FULL-CORPUS additive stats: silently wrong answers.
-    // Try to roll the swap forward; refuse loudly if that doesn't restore.
-    if (!spark.catalog.tableExists(s"${table}_postings") &&
-        (spark.catalog.tableExists(s"${table}_stats") ||
-          spark.catalog.tableExists(s"${table}_guard"))) {
-      recoverIndexSwap(spark, table)
-      require(spark.catalog.tableExists(s"${table}_postings"),
-        s"indexDelta refusing to bootstrap: ${table}_stats/_guard exist " +
-          s"but ${table}_postings is missing and no staged copy was found " +
-          "to roll forward — a delta-only postings table against standing " +
-          "full-corpus stats would silently mis-score every bm25Indexed " +
-          "answer. Restore the postings table (or drop the stale " +
-          "_stats/_guard sidecars) before ingesting")
+    val postingsT = s"${table}_postings"
+    // the replay filter reads the guard once; the append after it needs
+    // no second probe, and the blobs price the compaction decision
+    val guard =
+      if (replay && spark.catalog.tableExists(postingsT))
+        Some(IngestGuard.read(spark, table))
+      else None
+    val batch = guard.fold(delta)(
+      IngestGuard.novel(_, delta, "doc_id", spark.table(postingsT)))
+    // ONE aggregate over the batch: the emptiness check, the additive
+    // stats row and the guard bloom's size. An empty delta is a no-op,
+    // mirroring IngestGuard.write's n == 0 skip: without this it would
+    // append an empty postings file generation and a (0.0, null) stats
+    // row — harmless to query-time sums, but generations inflate and an
+    // all-empty corpus would NPE compactIndex's stats fold
+    val stats = statsRow(batch).collect()(0)
+    val rows = stats.getDouble(0).toLong
+    if (rows == 0) return guard.map(_.size)
+    val before = guard.map(_.size).orElse {
+      // a first-ever delta BOOTSTRAPS the index (append creates the
+      // tables): nothing standing exists to clash with, so the guard is
+      // skipped — the streaming-ingest entry point starts from an empty
+      // catalog. But a missing postings table NEXT TO standing
+      // _stats/_guard is NOT a fresh catalog — it is an interrupted
+      // compaction swap, and bootstrapping over it would create a
+      // delta-only postings table whose scores fold against the old
+      // FULL-CORPUS additive stats: silently wrong answers. Try to roll
+      // the swap forward; refuse loudly if that doesn't restore.
+      if (!spark.catalog.tableExists(postingsT) &&
+          (spark.catalog.tableExists(s"${table}_stats") ||
+            spark.catalog.tableExists(s"${table}_guard"))) {
+        recoverIndexSwap(spark, table)
+        require(spark.catalog.tableExists(postingsT),
+          s"indexDelta refusing to bootstrap: ${table}_stats/_guard exist " +
+            s"but ${table}_postings is missing and no staged copy was found " +
+            "to roll forward — a delta-only postings table against standing " +
+            "full-corpus stats would silently mis-score every bm25Indexed " +
+            "answer. Restore the postings table (or drop the stale " +
+            "_stats/_guard sidecars) before ingesting")
+      }
+      if (spark.catalog.tableExists(postingsT)) {
+        IngestGuard.assertDisjoint(spark, table, batch, "doc_id",
+          spark.table(postingsT), "indexDelta")
+        None
+      } else Some((0L, 0L))
     }
-    if (spark.catalog.tableExists(s"${table}_postings"))
-      IngestGuard.assertDisjoint(spark, table, delta, "doc_id",
-        spark.table(s"${table}_postings"), "indexDelta")
-    postings(delta).write.mode("append")
+    postings(batch).write.mode("append")
       .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(s"${table}_postings")
-    statsRow(delta).write.mode("append")
-      .format("parquet").saveAsTable(s"${table}_stats")
-    IngestGuard.write(spark, delta, "doc_id", table, overwrite = false)
+      .format("parquet").saveAsTable(postingsT)
+    spark.createDataFrame(java.util.List.of(stats), stats.schema)
+      .write.mode("append").format("parquet").saveAsTable(s"${table}_stats")
+    val blob = IngestGuard.appendSized(spark, batch, "doc_id", table, rows)
+    before.map { case (generations, bytes) => (generations + 1, bytes + blob) }
   }
 
   /** DELETE documents from the standing index — the tombstone lifecycle
@@ -558,16 +586,36 @@ object Search {
     * statsRow/guard would re-evaluate the anti-join against the
     * just-appended postings and see an empty delta (a real bug this
     * spec's first run caught: a (0, null) stats row silently poisoning
-    * avgdl/N for every later query). */
+    * avgdl/N for every later query).
+    *
+    * One probe per batch: the guard sidecar is collected once
+    * ([[IngestGuard.read]]) and the bloom probed once ([[IngestGuard
+    * .novel]]); the novel rows are then appended WITHOUT
+    * [[indexDelta]]'s `assertDisjoint` — they are disjoint by
+    * construction. One aggregate over them is the emptiness check, the
+    * stats row and the size of the batch's bloom
+    * ([[IngestGuard.appendSized]]). A bootstrap batch (no postings yet)
+    * takes the same path, with no probe at all. */
   def indexDeltaIdempotent(table: String, delta: DataFrame,
       buckets: Int = 8): Unit = {
-    val spark = delta.sparkSession
-    if (!spark.catalog.tableExists(s"${table}_postings")) { // bootstrap
-      indexDelta(table, delta, buckets); return
-    }
-    val novel = IngestGuard.novel(spark, table, delta, "doc_id",
-      spark.table(s"${table}_postings"))
-    if (!novel.isEmpty) indexDelta(table, novel, buckets)
+    ingest(table, delta, buckets, replay = true); ()
+  }
+
+  /** A streaming micro-batch ([[graft.streaming.Streams.incrementalIndexing]]):
+    * [[indexDeltaIdempotent]], then — when `maxBatches` > 0 —
+    * [[compactIfNeeded]]'s policy, decided from the guard blobs the
+    * replay filter already read plus the one this batch appended, so
+    * the batch reads `{table}_guard` once. (A bootstrap over a
+    * rolled-forward swap falls back to reading the sidecar size.) */
+  private[graft] def streamedBatch(table: String, batch: DataFrame,
+      maxBatches: Int, buckets: Int = 8,
+      maxSidecarBytes: Long = 64L << 20): Unit = {
+    val spark = batch.sparkSession
+    val after = ingest(table, batch, buckets, replay = true)
+    if (maxBatches > 0 && IngestGuard.due(
+        after.getOrElse(IngestGuard.sidecarSize(spark, table)),
+        maxBatches, maxSidecarBytes))
+      compactIndex(spark, table, buckets)
   }
 
   /** Compact a delta-grown index back to build-fresh layout. Every

@@ -572,6 +572,16 @@ object Similarity {
   def ivfIndexDelta(table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
     if (delta.isEmpty) return
+    val codec = trainedCodec(spark, table)
+    if (spark.catalog.tableExists(s"${table}_ivf"))
+      graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "vec_id",
+        spark.table(s"${table}_ivf"), "ivfIndexDelta")
+    append(table, delta, codec)
+  }
+
+  /** The stored codec, once the catalog is known to hold a standing (or
+    * bootstrappable) index — steps 1 and 2 of [[ivfIndexDelta]]. */
+  private def trainedCodec(spark: SparkSession, table: String): Codec = {
     val codec = Codec.stored(spark, table)
     val names = ("centroids" +: codec.artifact.toSeq).map(a => s"${table}_$a")
     require(names.forall(spark.catalog.tableExists),
@@ -589,9 +599,13 @@ object Similarity {
           "would silently drop the standing vectors from every probe. " +
           "Restore the lists (or drop the stale _guard) before ingesting")
     }
-    if (spark.catalog.tableExists(s"${table}_ivf"))
-      graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "vec_id",
-        spark.table(s"${table}_ivf"), "ivfIndexDelta")
+    codec
+  }
+
+  /** The delta's assigned, encoded list rows and guard blob, for vec_ids
+    * already known new. */
+  private def append(table: String, delta: DataFrame, codec: Codec): Unit = {
+    val spark = delta.sparkSession
     val cent = spark.table(s"${table}_centroids")
     writeLists(codec.encode(delta, assignedCells(delta, cent), cent, table,
       train = false), table, "append")
@@ -619,7 +633,9 @@ object Similarity {
     * [[IngestGuard.novel]] replay filter, so a replayed streaming
     * micro-batch is a no-op instead of duplicate list entries or a crash
     * loop; the novel survivors are assigned and encoded against the
-    * stored frozen artifacts exactly as a batch delta would be. */
+    * stored frozen artifacts exactly as a batch delta would be, and
+    * appended without [[ivfIndexDelta]]'s second probe (one guard read
+    * and one bloom probe per batch). */
   def ivfIndexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
     if (!spark.catalog.tableExists(s"${table}_ivf")) {
@@ -627,7 +643,7 @@ object Similarity {
     }
     val novel = graft.ops.IngestGuard.novel(spark, table, delta, "vec_id",
       spark.table(s"${table}_ivf"))
-    if (!novel.isEmpty) ivfIndexDelta(table, novel)
+    if (!novel.isEmpty) append(table, novel, trainedCodec(spark, table))
   }
 
   /** Compact a delta-grown IVF index: every [[ivfIndexDelta]] appends its

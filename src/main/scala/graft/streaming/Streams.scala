@@ -382,7 +382,9 @@ object Streams {
     * per-batch cost is batch-proportional (the guard's contract), and
     * [[graft.ops.Search.compactIndex]] is the scheduled companion that
     * folds the accumulated per-batch file generations back down — the
-    * [[graft.ops.Search.compactIfNeeded]] policy runs after each ingest,
+    * [[graft.ops.Search.compactIfNeeded]] policy runs after each ingest
+    * ([[graft.ops.Search.streamedBatch]]: decided from the guard blobs
+    * the replay filter read, so a batch reads the guard once),
     * ON by default (a long-running stream would otherwise accrete one
     * guard blob + one file generation per micro-batch forever; pass
     * `maxBatches = 0` to opt out) (single-writer assumption: the swap
@@ -396,9 +398,7 @@ object Streams {
     val caller = newDocs.sparkSession
     newDocs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Search.indexDeltaIdempotent(table, batch)
-        if (maxBatches > 0)
-          graft.ops.Search.compactIfNeeded(batch.sparkSession, table, maxBatches)
+        graft.ops.Search.streamedBatch(table, batch, maxBatches)
         Seq(s"${table}_postings", s"${table}_stats")
           .filter(caller.catalog.tableExists)
           .foreach(caller.catalog.refreshTable)

@@ -145,6 +145,77 @@ class FixpointPlanSpec extends SparkSpec {
     }
   }
 
+  /** Students whose rule keys hold every case the one-task adjacency
+    * could read differently from the dataflow: null, "", space-only and
+    * mixed-case keys; a college group of 36 (larger than cap+1 for caps
+    * 1, 2 and 32), a singleton college, a student with no non-empty key,
+    * duplicated student rows (one of them at the edge of the group's
+    * top list) and a null id. */
+  private def ruleKeyed: DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, true),
+      StructField("address", StringType, true),
+      StructField("college", StringType, true),
+      StructField("board", StringType, true),
+      StructField("stream", StringType, true)))
+    val spelled = Seq("Alpha", "ALPHA", "  alpha ", "alpha")
+    val rows = (1L to 36L).map(i => Row(i,
+        if (i % 4 == 0) null else if (i % 4 == 1) "  " else s"A${i % 2}",
+        spelled((i % 4).toInt),
+        Seq("b0", "B1 ", "", null)((i % 4).toInt),
+        if (i % 3 == 0) s"Sci" else "")) ++ Seq(
+      Row(37L, null, "Solo", "b0", null),
+      Row(38L, null, null, null, null),
+      Row(39L, "", "", "   ", ""),
+      Row(null, "a1", "alpha", "b1", "sci"),
+      Row(1L, "  ", "Alpha", "B1 ", ""),
+      Row(3L, "a1", "alpha", "b0", "sci"),
+      Row(3L, "a1", "alpha", "b0", "sci"),
+      Row(37L, null, "Solo", "b0", null))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("capped adjacency build: one task == width 2 for caps 1, 2 and 32 " +
+      "(null, blank, mixed-case and duplicated keys and rows)") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-adjplan")
+      .toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_adjplan LOCATION '$wh'")
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    for (cap <- Seq(1, 2, 32))
+      atBothWidths(s"adjacency cap=$cap") { w =>
+        val t = s"graft_adjplan.adj_${cap}_$w"
+        GraphOps.buildAdjacencyTableAt(ruleKeyed, t, cap, Some(w))
+        rows(spark.table(t))
+      }
+    // the fixture reaches the cap: some node keeps exactly cap neighbors
+    val kept = spark.table("graft_adjplan.adj_2_1").groupBy("src").count()
+      .agg(max("count")).first().getLong(0)
+    assert(kept === 2)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+  }
+
+  test("connected components: one task == GraphX, with singleton groups, " +
+      "a null group key and duplicated custkeys") {
+    import spark.implicits._
+    // 7 is alone in its group, 8 has a null nation; 3 is listed twice in
+    // one group and 5 in two groups, joining them
+    val customer = Seq((1L, Some(1L), "A"), (2L, Some(1L), "A"),
+      (3L, Some(1L), "A"), (3L, Some(1L), "A"), (4L, Some(2L), "A"),
+      (5L, Some(2L), "A"), (5L, Some(3L), "B"), (6L, Some(3L), "B"),
+      (7L, Some(4L), "B"), (8L, None, "B"), (9L, Some(5L), "C"),
+      (10L, Some(5L), "C"))
+      .toDF("c_custkey", "c_nationkey", "c_mktsegment")
+    atBothWidths("connected components") { w =>
+      rows(GraphOps.connectedComponentsAt(spark, customer, Some(w)))
+    }
+    assert(GraphOps.connectedComponentsAt(spark, customer, Some(1))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq ===
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L,
+        7L -> 7L, 8L -> 8L, 9L -> 9L, 10L -> 9L))
+  }
+
   /** 40 students over the four equi rules, one interest token each. */
   private def students40: DataFrame = {
     import scala.jdk.CollectionConverters._

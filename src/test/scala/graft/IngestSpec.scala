@@ -82,6 +82,62 @@ class IngestSpec extends SparkSpec {
     assert(edgeSet(existing.unionByName(delta)) === edgeSet(fullEdges(students2)))
   }
 
+  test("onboarding's MERGE reads only the newcomer's edges: same delta as " +
+      "the unpruned anti-join, and the build side carries the filter") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-ingest-merge")
+      .toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_ingest_merge LOCATION '$wh'")
+    val newbie = spark.createDataFrame(Seq(
+      Row(0L, "KESHAV", "Lalitpur", "Trinity College", "Nepal Board", null, Seq("Math", "cricket"))
+    ).asJava, schema).drop("id")
+    // the full backfill (unrelated to the newcomer, id 6) plus three of
+    // its edges already present: two its onboarding derives again, one
+    // (6, 9) it never derives
+    val backfilled = EdgeRules.backfill(fixture)
+      .withColumn("common", graft.functions.Norm.emptyStrArray)
+      .unionByName(EdgeRules.interestRule(fixture.select("id", "interests"))
+        .select(col("src"), col("dst"), col("rel_type"), col("common")))
+    import spark.implicits._
+    val present = Seq((3L, 6L, "SAME_COLLEGE", Seq.empty[String]),
+        (1L, 6L, "SHARES_INTEREST", Seq("math")),
+        (6L, 9L, "NEARBY", Seq.empty[String]))
+      .toDF("src", "dst", "rel_type", "common")
+    backfilled.unionByName(present).write.mode("overwrite")
+      .saveAsTable("graft_ingest_merge.edges")
+    val edges = spark.table("graft_ingest_merge.edges")
+    val (_, id, delta) = Ingest.onboard(fixture, edges, newbie)
+    // every candidate, with no existing edge to merge against
+    val (_, _, candidates) =
+      Ingest.onboard(fixture, edges.filter(lit(false)), newbie)
+    val unpruned = EdgeRules.mergeNew(candidates, edges)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("src"), col("dst"), col("rel_type"),
+          array_join(col("common"), "|"))
+        .collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    assert(rows(delta) === rows(unpruned))
+    assert(rows(delta).size === rows(candidates).size - 2)
+    assert(!rows(delta).exists(_.startsWith("3,6,SAME_COLLEGE")))
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    // the optimizer may push the anti-join below the candidates' union:
+    // every copy's build side must be pruned
+    val builds = delta.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == LeftAnti => j.right
+    }
+    assert(builds.nonEmpty)
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo,
+      Literal, Or}
+    for (build <- builds) {
+      val conds = build.collect { case f: Filter => f.condition }
+      assert(conds.exists(_.exists {
+        case Or(EqualTo(a: Attribute, Literal(x, _)),
+            EqualTo(b: Attribute, Literal(y, _))) =>
+          Set(a.name, b.name) == Set("src", "dst") && x == id && y == id
+        case _ => false
+      }), conds)
+    }
+  }
+
   test("syncLowercase rewrites all string attrs and reports the count") {
     val uppered = fixture.withColumn("name", upper(col("name")))
     val (updated, n) = Ingest.syncLowercase(uppered)

@@ -3,27 +3,80 @@
 counts, and the job group / call site — the per-phase breakdown the
 optimization rounds use to find where a lifecycle row's wall time goes.
 
-Usage: evlog_jobs.py <eventlog-file> [minMs]
+Usage: evlog_jobs.py <eventlog> [minMs]
+
+<eventlog> is a plain event log file, a zstd-compressed one (`*.zstd`,
+`*.zst`), or a rolled log directory (`eventlog_v2_*`, Spark 4's default),
+whose `events_*` files are read in index order. Compressed files are piped
+through the installed `zstd -dc`.
+
+A job whose own call site is unknown (`?` — AQE runs its stage jobs on a
+pool thread, so they carry no caller frame) is labelled from its SQL
+execution: the first `graft.`/`perfbench.` frame of that execution's
+`SparkListenerSQLExecutionStart` details, found through the job's
+`spark.sql.execution.id` property. A job outside any SQL execution (file
+listing and schema inference when a parquet path is read) falls back to
+the first such frame of its stages' details.
 """
 import json
+import re
+import subprocess
 import sys
+from pathlib import Path
+
+FRAME_PREFIXES = ("graft.", "perfbench.")
+
+
+def log_files(path):
+    p = Path(path)
+    if not p.is_dir():
+        return [p]
+    def index(f):
+        m = re.match(r"events_(\d+)_", f.name)
+        return int(m.group(1)) if m else -1
+    return sorted((f for f in p.iterdir() if f.name.startswith("events_")),
+                  key=index)
+
+
+def lines(path):
+    for f in log_files(path):
+        if f.suffix in (".zstd", ".zst"):
+            out = subprocess.run(["zstd", "-dc", str(f)], check=True,
+                                 capture_output=True).stdout
+            yield from out.decode("utf-8").splitlines()
+        else:
+            with open(f) as fh:
+                yield from fh
+
+
+def first_frame(details):
+    """The first engine or benchmark frame of a call-site long form."""
+    for frame in (details or "").splitlines():
+        frame = frame.strip()
+        if frame.startswith(FRAME_PREFIXES):
+            return frame
+    return None
 
 
 def main(path, min_ms=0):
     jobs = {}
-    stage_tasks = {}
-    for line in open(path):
+    executions = {}
+    for line in lines(path):
         try:
             e = json.loads(line)
         except json.JSONDecodeError:
             continue
-        ev = e.get("Event")
+        ev = e.get("Event", "")
         if ev == "SparkListenerJobStart":
             props = e.get("Properties") or {}
+            stage_frames = [first_frame(st.get("Details"))
+                            for st in e.get("Stage Infos", [])]
             jobs[e["Job ID"]] = {
                 "start": e["Submission Time"],
                 "end": None,
                 "site": props.get("callSite.short", "?"),
+                "stage_frame": next((f for f in stage_frames if f), None),
+                "execution": props.get("spark.sql.execution.id"),
                 "desc": props.get("spark.job.description", ""),
                 "stages": len(e.get("Stage Infos", [])),
                 "tasks": sum(s.get("Number of Tasks", 0)
@@ -32,6 +85,12 @@ def main(path, min_ms=0):
         elif ev == "SparkListenerJobEnd":
             if e["Job ID"] in jobs:
                 jobs[e["Job ID"]]["end"] = e["Completion Time"]
+        elif ev.endswith("SparkListenerSQLExecutionStart"):
+            executions[str(e["executionId"])] = first_frame(e.get("details"))
+    for j in jobs.values():
+        if j["site"] in ("?", ""):
+            j["site"] = (executions.get(str(j["execution"]))
+                         or j["stage_frame"] or "?")
     total = 0
     rows = []
     for jid, j in sorted(jobs.items()):
@@ -45,9 +104,11 @@ def main(path, min_ms=0):
     for jid, ms, j in rows:
         label = j["site"]
         if j["desc"]:
-            label += f"  [{j['desc'][:60]}]"
+            label += f"  [{' '.join(j['desc'].split())[:60]}]"
         print(f"{jid:>4} {ms:>7} {j['stages']:>4} {j['tasks']:>5}  {label}")
-    print(f"-- {len(jobs)} jobs, sum of job wall {total/1000.0:.2f}s "
+    unlabelled = sum(j["site"] in ("?", "") for _, _, j in rows)
+    print(f"-- {len(jobs)} jobs, sum of job wall {total/1000.0:.2f}s, "
+          f"{unlabelled} without a call site "
           "(jobs can overlap; gaps between jobs are driver-side time)")
 
 
