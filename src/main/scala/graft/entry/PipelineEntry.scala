@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.IndelRatio
 import graft.model.Tables
 import graft.ops._
+import graft.streaming.Streams
 
 /** Training-data pipeline: multimodal, sampling/mixture, quantiles, sketches, packing, decontamination.
   * Rows split verbatim from SparkEntry (round 17); composed back in
@@ -130,21 +131,12 @@ object PipelineEntry {
       val mirror = media.filter(col("kind") === "image")
         .select((col("doc_id") + 1000000L).as("doc_id"), col("kind"),
           col("bytes"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-phash-feed")
-        .toFile.getAbsolutePath + "/in"
-      mirror.filter(col("doc_id") % 2 === 0).repartition(1)
-        .write.parquet(feed)
       // batch 2 = the odd half PLUS a replay of the full mirror set —
       // the idempotency probe rides the real stream
-      mirror.repartition(1).write.mode("append").parquet(feed)
-      val q = s.readStream.schema(mirror.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Multimodal.phashIngest(s, "graft_idx.phashs", batch); ()
-        }
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(mirror.filter(col("doc_id") % 2 === 0), mirror))(
+        Streams.drain(_, "stream_phash_ingest") { (batch, _) =>
+          Multimodal.phashIngest(s, "graft_idx.phashs", batch)
+        })
       Multimodal.phashPairs(s.table("graft_idx.phashs"))
     }),
     // training-data pipeline: text cleaning (markup/URL strip + ws collapse;
@@ -212,20 +204,15 @@ object PipelineEntry {
     "stream_decontam" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("source") =!= "src0")
-      val feed = java.nio.file.Files.createTempDirectory("graft-decon-feed")
-        .toFile.getAbsolutePath + "/in"
-      corpus.filter(col("doc_id") % 2 === 1).repartition(1).write.parquet(feed)
-      corpus.filter(col("doc_id") % 2 === 0).repartition(1)
-        .write.mode("append").parquet(feed)
       val out = java.nio.file.Files.createTempDirectory("graft-decon-out")
         .toFile.getAbsolutePath + "/scored"
       // the fixed eval-suite side, cached once and probed by every batch
       val benchSh = graft.CacheScope.track(Decontam.benchSet(docs))
-      val q = graft.streaming.Streams.incrementalDecontam(
-        s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        benchSh, out)
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(corpus.filter(col("doc_id") % 2 === 1),
+          corpus.filter(col("doc_id") % 2 === 0)))(
+        Streams.drain(_, "stream_decontam") { (batch, _) =>
+          Decontam.score(batch, benchSh).write.mode("append").parquet(out)
+        })
       s.read.parquet(out).orderBy(col("doc_id"))
     }),
     // training-data pipeline: PII redaction (emails/IPv4/phones) with a
@@ -304,18 +291,14 @@ object PipelineEntry {
     // needed); shares the batch row's oracle
     "stream_hll_ingest" -> ((s, d) => {
       val li = Tables.lineitem(s, d)
-      val feed = java.nio.file.Files.createTempDirectory("graft-hll-feed")
-        .toFile.getAbsolutePath + "/in"
-      li.filter(col("l_orderkey") % 2 === 1).repartition(1).write.parquet(feed)
-      li.filter(col("l_orderkey") % 2 === 0).repartition(1)
-        .write.mode("append").parquet(feed)
       val regDir = java.nio.file.Files.createTempDirectory("graft-hll-regs")
         .toFile.getAbsolutePath + "/regs"
-      val q = graft.streaming.Streams.incrementalHllIngest(
-        s.readStream.schema(li.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        regDir, "l_returnflag", "l_orderkey")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(li.filter(col("l_orderkey") % 2 === 1),
+          li.filter(col("l_orderkey") % 2 === 0)))(
+        Streams.drain(_, "stream_hll_ingest") { (batch, _) =>
+          Sketches.hllRegisters(batch, "l_returnflag", "l_orderkey")
+            .write.mode("append").parquet(regDir)
+        })
       val merged = s.read.parquet(regDir)
         .groupBy(col("g"), col("b")).agg(max(col("mb")).as("mb"))
       Sketches.hllEstimate(merged, li, "l_returnflag", "l_orderkey")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.IndelRatio
 import graft.model.Tables
 import graft.ops._
+import graft.streaming.Streams
 
 /** Data-quality gate, layout/partitioning ops, SCD2, profiling, centroid/PQ diagnostics.
   * Rows split verbatim from SparkEntry (round 17); composed back in
@@ -263,16 +264,12 @@ object QualityLayoutEntry {
       val docs = Tables.documents(s, d)
       val binned = Quality.driftBin(lengthenedDocs(docs))
         .select(col("bin"), col("doc_id"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-sdd-feed")
-        .toFile.getAbsolutePath + "/in"
-      binned.filter(col("doc_id") % 2 === 0).repartition(1).write.parquet(feed)
-      binned.filter(col("doc_id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalViewMaintenance(
-        s.readStream.schema(binned.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.sdd", Seq("bin"), Seq(), "doc_id")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(binned.filter(col("doc_id") % 2 === 0),
+          binned.filter(col("doc_id") % 2 === 1)))(
+        Streams.drain(_, "stream_dist_drift") { (batch, bid) =>
+          MatView.foldBatch("graft_idx.sdd", bid, batch, Seq("bin"), Seq(),
+            "doc_id")
+        })
       val hb = MatView.read(s, "graft_idx.sdd", Seq("bin"), Seq())
         .select(col("bin"), col("cnt").as("cb"))
       val nb = hb.agg(sum(col("cb"))).collect()(0).getLong(0)
@@ -305,17 +302,12 @@ object QualityLayoutEntry {
         .unionByName(ev.filter(to_date(col("ts")) === "2024-01-28"))
         .unionByName(ev.filter(to_date(col("ts")) === "2024-01-28"))
         .select(to_date(col("ts")).as("obs_date"), col("event_id"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-vt-feed")
-        .toFile.getAbsolutePath + "/in"
-      corrupted.filter(col("obs_date") <= "2024-01-15")
-        .repartition(1).write.parquet(feed)
-      corrupted.filter(col("obs_date") > "2024-01-15")
-        .repartition(1).write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalViewMaintenance(
-        s.readStream.schema(corrupted.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.vts", Seq("obs_date"), Seq(), "event_id")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(corrupted.filter(col("obs_date") <= "2024-01-15"),
+          corrupted.filter(col("obs_date") > "2024-01-15")))(
+        Streams.drain(_, "stream_volume_trend") { (batch, bid) =>
+          MatView.foldBatch("graft_idx.vts", bid, batch, Seq("obs_date"),
+            Seq(), "event_id")
+        })
       Quality.volumeTrendFrom(
         MatView.read(s, "graft_idx.vts", Seq("obs_date"), Seq())
           .select(col("obs_date"), col("cnt").as("n")))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.IndelRatio
 import graft.model.Tables
 import graft.ops._
+import graft.streaming.Streams
 
 /** Lexical retrieval: BM25 scan + index family, phrase/positional, hybrid fusion, streaming ingest.
   * Rows split verbatim from SparkEntry (round 17); composed back in
@@ -235,16 +236,9 @@ object RetrievalEntry {
       Search.buildIndex(docs, "graft_idx.bm25sdel")
       val victims = docs.filter(col("doc_id") % 7 === 3)
         .select(col("doc_id"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-del-feed")
-        .toFile.getAbsolutePath + "/in"
-      victims.filter(col("doc_id") % 2 === 1).repartition(1)
-        .write.parquet(feed)
-      victims.repartition(1).write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalDeletion(
-        s.readStream.schema(victims.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        Search.indexDelete("graft_idx.bm25sdel", _))
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(victims.filter(col("doc_id") % 2 === 1), victims))(
+        Streams.incrementalDeletion(_,
+          Search.indexDelete("graft_idx.bm25sdel", _)))
       Search.bm25Indexed(s, "graft_idx.bm25sdel")
     }),
     // streaming ANN ingest: base-built IVF index (frozen quantizer),
@@ -257,25 +251,16 @@ object RetrievalEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val emb = Tables.embeddings(s, d)
       Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0), "graft_idx.ivfs")
-      val feed = java.nio.file.Files.createTempDirectory("graft-emb-feed")
-        .toFile.getAbsolutePath + "/in"
       val delta = emb.filter(col("vec_id") % 5 === 0)
-      delta.filter(col("vec_id") % 2 === 0).repartition(1).write.parquet(feed)
-      delta.filter(col("vec_id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      Streams.replay(s, Seq(delta.filter(col("vec_id") % 2 === 0),
+          delta.filter(col("vec_id") % 2 === 1)))(
+        Streams.drain(_, "stream_ann_ingest") { (batch, _) =>
           Similarity.ivfIndexDeltaIdempotent("graft_idx.ivfs", batch)
           // scheduled maintenance, default bounds (generations + sidecar
           // bytes) — a no-op at this scale, wired so the streaming path
           // exercises the same policy the bm25 ingest runs
           Similarity.compactIvfIfNeeded(s, "graft_idx.ivfs")
-          ()
-        }
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+        })
       Similarity.annIvfIndexedTopK(s, "graft_idx.ivfs")
     }),
     // streaming ingest into the PQ-FUSED index: base build freezes BOTH
@@ -292,22 +277,13 @@ object RetrievalEntry {
       val emb = Tables.embeddings(s, d)
       Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
         "graft_idx.ivfpqs", Similarity.Codec.Pq)
-      val feed = java.nio.file.Files.createTempDirectory("graft-pq-feed")
-        .toFile.getAbsolutePath + "/in"
       val delta = emb.filter(col("vec_id") % 5 === 0)
-      delta.filter(col("vec_id") % 2 === 0).repartition(1).write.parquet(feed)
-      delta.filter(col("vec_id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      Streams.replay(s, Seq(delta.filter(col("vec_id") % 2 === 0),
+          delta.filter(col("vec_id") % 2 === 1)))(
+        Streams.drain(_, "stream_ivfpq_ingest") { (batch, _) =>
           Similarity.ivfIndexDeltaIdempotent("graft_idx.ivfpqs", batch)
           Similarity.compactIvfIfNeeded(s, "graft_idx.ivfpqs")
-          ()
-        }
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+        })
       Similarity.annIvfPqIndexedTopK(s, "graft_idx.ivfpqs")
     }),
     // streaming ingest into the standing index — a REAL bounded stream
@@ -320,17 +296,9 @@ object RetrievalEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val docs = Tables.documents(s, d)
-      val feed = java.nio.file.Files.createTempDirectory("graft-docs-feed")
-        .toFile.getAbsolutePath + "/in"
-      docs.filter(col("doc_id") % 2 === 0).repartition(1)
-        .write.parquet(feed)
-      docs.filter(col("doc_id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalIndexing(
-        s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.bm25s")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1)))(
+        Streams.incrementalIndexing(_, "graft_idx.bm25s"))
       Search.bm25Indexed(s, "graft_idx.bm25s")
     }),
     // streaming ingest into the standing FUZZY index: file-source
@@ -345,16 +313,11 @@ object RetrievalEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val docs = Tables.documents(s, d)
-      val feed = java.nio.file.Files.createTempDirectory("graft-pos-feed")
-        .toFile.getAbsolutePath + "/in"
-      docs.filter(col("doc_id") % 2 === 0).repartition(1).write.parquet(feed)
-      docs.filter(col("doc_id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalPositionalIndexing(
-        s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.poss")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 === 1)))(
+        Streams.drain(_, "stream_phrase_ingest") { (batch, _) =>
+          Phrase.positionalDeltaIdempotent("graft_idx.poss", batch)
+        })
       Phrase.phraseIndexedTopK(s, "graft_idx.poss")
     }),
     "stream_fuzzy_ingest" -> ((s, d) => {
@@ -362,16 +325,12 @@ object RetrievalEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val st = Tables.students(s, d)
-      val feed = java.nio.file.Files.createTempDirectory("graft-st-feed")
-        .toFile.getAbsolutePath + "/in"
-      st.filter(col("id") % 2 === 0).repartition(1).write.parquet(feed)
-      st.filter(col("id") % 2 === 1).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalFuzzyIndexing(
-        s.readStream.schema(st.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.fuzzys")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(st.filter(col("id") % 2 === 0),
+          st.filter(col("id") % 2 === 1)))(
+        Streams.drain(_, "stream_fuzzy_ingest") { (batch, _) =>
+          FuzzySearch.indexDeltaIdempotent("graft_idx.fuzzys", batch)
+          FuzzySearch.compactIfNeeded(batch.sparkSession, "graft_idx.fuzzys")
+        })
       FuzzySearch.topKIndexed(s, "graft_idx.fuzzys", fuzzyQuery)
     }),
     // keyword extraction: full-vocab tf-idf, min-df pruned before the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.IndelRatio
 import graft.model.Tables
 import graft.ops._
+import graft.streaming.Streams
 
 /** Student/graph CRUD, edge rules, ingest, range/as-of joins (SURVEY §2.1/§2.3).
   * Rows split verbatim from SparkEntry (round 17); composed back in
@@ -201,21 +202,10 @@ object StudentEntry {
       val maxId = students.agg(max(col("id"))).collect()(0).getLong(0)
       val (n1, n2) = (maxId + 1, maxId + 2)
       val newRows = newStreamStudents(s, n1, n2)
-      val feed = java.nio.file.Files.createTempDirectory("graft-adj-feed")
-        .toFile.getAbsolutePath + "/in"
-      newRows.filter(col("id") === n1).repartition(1).write.parquet(feed)
-      newRows.filter(col("id") === n2).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalAdjacencyMaintenance(
-        s.readStream.schema(newRows.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.adjstream", "graft_idx.adjstream_corpus")
-      q.processAllAvailable(); q.stop()
-      // the stream's rewrites ran in the cloned micro-batch session —
-      // refresh this session's possibly-primed relation cache before
-      // reading the final state (stale listings point at deleted files)
-      s.catalog.refreshTable("graft_idx.adjstream")
-      s.catalog.refreshTable("graft_idx.adjstream_corpus")
+      Streams.replay(s, Seq(newRows.filter(col("id") === n1),
+          newRows.filter(col("id") === n2)))(
+        Streams.incrementalAdjacencyMaintenance(_,
+          "graft_idx.adjstream", "graft_idx.adjstream_corpus"))
       val adj = s.table("graft_idx.adjstream")
       val gained = adj.filter(col("dst").isin(n1, n2))
         .select(col("src")).distinct()

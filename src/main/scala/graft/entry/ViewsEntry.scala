@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.IndelRatio
 import graft.model.Tables
 import graft.ops._
+import graft.streaming.Streams
 
 /** IVM / materialized views + CDC + streaming twins + dedup index lifecycle.
   * Rows split verbatim from SparkEntry (round 17); composed back in
@@ -195,16 +196,12 @@ object ViewsEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
-      val feed = java.nio.file.Files.createTempDirectory("graft-mvd-feed")
-        .toFile.getAbsolutePath + "/in"
-      o.filter(col("o_orderkey") % 2 === 1).repartition(1).write.parquet(feed)
-      o.filter(col("o_orderkey") % 2 === 0).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalDistinctMaintenance(
-        s.readStream.schema(o.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.mvds", Seq("o_orderpriority"), "o_custkey", "o_orderkey")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
+          o.filter(col("o_orderkey") % 2 === 0)))(
+        Streams.drain(_, "stream_mv_distinct") { (batch, bid) =>
+          MatView.foldBatchDistinct("graft_idx.mvds", bid, batch,
+            Seq("o_orderpriority"), "o_custkey", "o_orderkey")
+        })
       MatView.readDistinct(s, "graft_idx.mvds",
         Seq("o_orderpriority"), "o_custkey")
         .select(col("o_orderpriority"), col("ndv"), col("cnt"))
@@ -219,16 +216,12 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-mvm-feed")
-        .toFile.getAbsolutePath + "/in"
-      o.filter(col("o_orderkey") % 2 === 1).repartition(1).write.parquet(feed)
-      o.filter(col("o_orderkey") % 2 === 0).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalMinMaxMaintenance(
-        s.readStream.schema(o.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.mvms", Seq("o_custkey"), Seq("price"), "o_orderkey")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
+          o.filter(col("o_orderkey") % 2 === 0)))(
+        Streams.drain(_, "stream_mv_minmax") { (batch, bid) =>
+          MatView.foldBatchMinMax("graft_idx.mvms", bid, batch,
+            Seq("o_custkey"), Seq("price"), "o_orderkey")
+        })
       MatView.readMinMax(s, "graft_idx.mvms", Seq("o_custkey"), Seq("price"))
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("min_price").cast("double").as("min_price"),
@@ -269,21 +262,17 @@ object ViewsEntry {
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
       MatView.build(o.filter(col("o_orderkey") % 5 =!= 0),
         "graft_idx.mvscdc", Seq("o_custkey"), Seq("price"), "o_orderkey")
-      val feed = java.nio.file.Files.createTempDirectory("graft-cdc-feed")
-        .toFile.getAbsolutePath + "/in"
-      o.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 2 === 1)
-        .withColumn("op", lit("I")).repartition(1).write.parquet(feed)
-      o.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 2 === 0)
-        .withColumn("op", lit("I"))
-        .unionByName(o.filter(col("o_orderkey") % 5 =!= 0 &&
-          col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))
-        .repartition(1).write.mode("append").parquet(feed)
-      val schema = o.withColumn("op", lit("I")).schema
-      val q = graft.streaming.Streams.incrementalCdcMaintenance(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.mvscdc", Seq("o_custkey"), Seq("price"))
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(
+          o.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 2 === 1)
+            .withColumn("op", lit("I")),
+          o.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 2 === 0)
+            .withColumn("op", lit("I"))
+            .unionByName(o.filter(col("o_orderkey") % 5 =!= 0 &&
+              col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))))(
+        Streams.drain(_, "stream_mv_cdc") { (batch, bid) =>
+          MatView.applyCdc("graft_idx.mvscdc", bid, batch, Seq("o_custkey"),
+            Seq("price"))
+        })
       MatView.read(s, "graft_idx.mvscdc", Seq("o_custkey"), Seq("price"))
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
@@ -300,16 +289,12 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-mv-feed")
-        .toFile.getAbsolutePath + "/in"
-      o.filter(col("o_orderkey") % 2 === 1).repartition(1).write.parquet(feed)
-      o.filter(col("o_orderkey") % 2 === 0).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalViewMaintenance(
-        s.readStream.schema(o.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.mvs", Seq("o_custkey"), Seq("price"), "o_orderkey")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
+          o.filter(col("o_orderkey") % 2 === 0)))(
+        Streams.drain(_, "stream_mv_ingest") { (batch, bid) =>
+          MatView.foldBatch("graft_idx.mvs", bid, batch, Seq("o_custkey"),
+            Seq("price"), "o_orderkey")
+        })
       MatView.read(s, "graft_idx.mvs", Seq("o_custkey"), Seq("price"))
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
@@ -325,17 +310,12 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
       val cut = to_date(lit("1996-01-01"))
-      val feed = java.nio.file.Files.createTempDirectory("graft-scd2-feed")
-        .toFile.getAbsolutePath + "/in"
-      o.filter(col("o_orderdate") <= cut).repartition(1).write.parquet(feed)
-      o.filter(col("o_orderdate") > cut).repartition(1)
-        .write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalScd2Maintenance(
-        s.readStream.schema(o.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.scd2s", "o_custkey", "o_orderdate", "o_orderkey",
-        "o_orderpriority")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(o.filter(col("o_orderdate") <= cut),
+          o.filter(col("o_orderdate") > cut)))(
+        Streams.drain(_, "stream_scd2_apply") { (batch, bid) =>
+          Scd.foldScd2Batch("graft_idx.scd2s", bid, batch, "o_custkey",
+            "o_orderdate", "o_orderkey", "o_orderpriority")
+        })
       s.table("graft_idx.scd2s_scd2")
         .select(col("o_custkey"), col("version"), col("valid_from"),
           col("valid_to"), col("o_orderpriority").as("priority"),
@@ -352,15 +332,11 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val docs = Tables.documents(s, d)
       val idx = docs.filter(col("doc_id") % 5 =!= 0)
-      val feed = java.nio.file.Files.createTempDirectory("graft-lsh-feed")
-        .toFile.getAbsolutePath + "/in"
-      idx.filter(col("doc_id") % 2 === 1).repartition(1).write.parquet(feed)
-      idx.repartition(1).write.mode("append").parquet(feed)
-      val q = graft.streaming.Streams.incrementalDedupIndexing(
-        s.readStream.schema(idx.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed),
-        "graft_idx.lshstream")
-      q.processAllAvailable(); q.stop()
+      Streams.replay(s, Seq(idx.filter(col("doc_id") % 2 === 1), idx))(
+        Streams.drain(_, "stream_dedup_ingest") { (batch, _) =>
+          DedupIndex.deltaIdempotent(batch.sparkSession, "graft_idx.lshstream",
+            batch)
+        })
       DedupIndex.candidates(s, "graft_idx.lshstream",
         docs.filter(col("doc_id") % 5 === 0))
     }),

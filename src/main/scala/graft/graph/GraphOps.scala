@@ -573,7 +573,8 @@ object GraphOps {
     if (fitsOneTask(students.sparkSession, workRows, width)) {
       val keyed = students.select(col("id").cast("long") +:
         rules.map { case (attr, _) => Norm.norm(col(attr)) }: _*)
-      described("cappedAdjacency", students.sparkSession) {
+      described(students.sparkSession,
+          "graft fixpoint cappedAdjacency: one task") {
         oneTaskFrame(keyed, longColumns("src", "dst"))(
           TaskLoops.cappedAdjacency(_, rules.size, neighborCap))
           .write.mode("overwrite").saveAsTable(table)
@@ -711,13 +712,14 @@ object GraphOps {
   private def longColumns(names: String*): StructType =
     StructType(names.map(StructField(_, LongType, nullable = false)))
 
-  /** Runs `body` with the job description `graft fixpoint <name>: one
-    * task` and restores the caller's description afterwards, so event
-    * logs and the UI name the step instead of a call site. */
-  private def described[T](name: String, spark: SparkSession)(body: => T): T = {
+  /** Runs `body` with the job description `label` and restores the
+    * caller's description afterwards, so event logs and the UI name the
+    * step instead of a call site. */
+  private[graft] def described[T](spark: SparkSession, label: String)(
+      body: => T): T = {
     val sc = spark.sparkContext
     val prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft fixpoint $name: one task")
+    sc.setJobDescription(label)
     try body
     finally sc.setLocalProperty("spark.job.description", prior)
   }
@@ -741,7 +743,7 @@ object GraphOps {
     * holds): the emitted frame and the loop's round count. */
   private def inOneTask(name: String, input: DataFrame, schema: StructType)(
       loop: Iterator[Row] => (Iterator[Row], Int)): (DataFrame, Int) =
-    described(name, input.sparkSession) {
+    described(input.sparkSession, s"graft fixpoint $name: one task") {
       import scala.jdk.CollectionConverters._
       val rounds = input.sparkSession.sparkContext
         .collectionAccumulator[Int]("fixpoint rounds")

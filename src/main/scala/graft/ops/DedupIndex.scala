@@ -88,7 +88,8 @@ object DedupIndex {
 
   /** At-least-once-safe band ingest — [[delta]]'s idempotent twin (the
     * family-wide streaming contract): a replayed micro-batch is a
-    * no-op. Replay filter: exact confirmation only for the bloom-suspect
+    * no-op (a replayed doc would duplicate its band rows physically).
+    * Replay filter: exact confirmation only for the bloom-suspect
     * SLIVER of the batch (the standing doc_id column is probed against
     * the broadcast sliver — delta-proportional); the novel set is
     * lineage-cut before the append (it derives from the table being

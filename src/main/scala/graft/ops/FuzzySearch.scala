@@ -157,7 +157,7 @@ object FuzzySearch {
   /** At-least-once-safe fuzzy ingest — [[indexDelta]]'s idempotent twin
     * (the [[Search.indexDeltaIdempotent]] contract for gram postings): a
     * replayed streaming micro-batch must be a no-op, not doubled gram
-    * counts. Replay filter: exact confirmation only for the
+    * counts (they would inflate every count-filter sum). Replay filter: exact confirmation only for the
     * bloom-suspect sliver of the delta (delta-proportional — the
     * standing names are read just for the suspect ids); the novel set
     * is lineage-cut before the append (it derives from the table being

@@ -188,7 +188,8 @@ object Phrase {
 
   /** At-least-once-safe ingest ([[Search.indexDeltaIdempotent]]'s recipe,
     * stats-free): SKIPS already-indexed doc_ids instead of throwing — the
-    * idempotent form a streaming `foreachBatch` sink needs. The skip set
+    * idempotent form a streaming `foreachBatch` sink needs (a replayed doc
+    * would double-count its occurrences). The skip set
     * is confirmed exactly only for the bloom-suspect SLIVER of the delta;
     * the novel set's lineage is CUT (eager localCheckpoint) before the
     * append — it derives from the postings table the append mutates.

@@ -129,7 +129,10 @@ object Sketches {
   /** The (g, b, mb) register table — the sketch itself. Registers merge
     * by MAX, so any partition of the input (shards, micro-batches)
     * yields partial register tables whose max-merge equals the one-shot
-    * table: the property the streaming twin folds on. */
+    * table: the property the streaming twin (`stream_hll_ingest`, one
+    * append of partial registers per micro-batch) folds on. A redelivered
+    * batch is a physical no-op after the max-merge, so that feed needs no
+    * batch-id ledger. */
   private[graft] def hllRegisters(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
     val hashed = df.select(col(groupCol).as("g"),

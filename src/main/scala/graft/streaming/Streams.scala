@@ -1,12 +1,17 @@
 package graft.streaming
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import org.apache.spark.sql.graft.GraftSql
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.graph.GraphOps
 import graft.ops.EdgeRules
 
 /** Output row of the stateful per-user counter. */
@@ -315,6 +320,44 @@ object Streams {
       }
   }
 
+  /** The one micro-batch loop: starts `feed` as an append-mode
+    * `foreachBatch` query that hands each micro-batch and its id to
+    * `sink`. Every job a batch runs carries the description `graft stream
+    * <name>: batch <id>` ([[graft.graph.GraphOps.described]]), so an event
+    * log attributes a drain's jobs to it. Sinks write from the stream's
+    * cloned session, whose table relation cache is separate from the
+    * caller's (`feed.sparkSession`); after each batch the caller's cached
+    * relations are dropped, so a caller that read a table before the drain
+    * reads what the sink wrote, not the pre-drain file listing. */
+  def drain(feed: DataFrame, name: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val caller = feed.sparkSession
+    feed.writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        try GraphOps.described(batch.sparkSession,
+          s"graft stream $name: batch $id")(sink(batch, id))
+        finally GraftSql.invalidateCachedTables(caller)
+      }
+      .outputMode("append")
+      .start()
+  }
+
+  /** Replays `parts` as a bounded file-source stream — each part one
+    * parquet file, one file per micro-batch, in order — through the query
+    * `start` builds on it; drains the query, stops it (also when a batch
+    * fails) and deletes the feed directory. */
+  def replay(spark: SparkSession, parts: Seq[DataFrame])(
+      start: DataFrame => StreamingQuery): Unit = {
+    val root = Files.createTempDirectory("graft-feed")
+    val feed = root.resolve("in").toString
+    try {
+      parts.foreach(_.repartition(1).write.mode("append").parquet(feed))
+      val q = start(spark.readStream.schema(parts.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(feed))
+      try q.processAllAvailable() finally q.stop()
+    } finally FileUtils.deleteDirectory(root.toFile)
+  }
+
   /** Onboarding-as-stream: each micro-batch of new students is joined
     * against the existing students table with the incremental edge rules
     * (EP1 step c) and the results are handed to `sink` (in production an
@@ -322,337 +365,115 @@ object Streams {
   def incrementalIngest(
       spark: SparkSession, newStudents: DataFrame, existing: DataFrame,
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    newStudents.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(EdgeRules.incrementalEdges(existing, batch), id)
-      }
-      .outputMode("append")
-      .start()
+    drain(newStudents, "incrementalIngest") { (batch, id) =>
+      sink(EdgeRules.incrementalEdges(existing, batch), id)
+    }
 
-  /** Streaming maintenance of the PARTITIONED standing adjacency — the
-    * graph layout's member of the streaming index-ingest family (the
-    * eighth standing layout to gain a streaming twin). Each micro-batch
-    * of onboarded students is folded one student at a time in id order
-    * (onboarding assigns MAX+1 ids, so arrival order IS id order): the
-    * J5 one-vs-all incremental edges against the CURRENT corpus table,
-    * then [[graft.graph.GraphOps.adjacencyApplyDelta]]'s bucket-pruned
-    * slice rewrite, then an id-guarded append of the student to the
-    * corpus table (the guard makes an at-least-once replay a no-op on
-    * the corpus; the apply is replay-idempotent by construction — same
-    * slices, same partitions). Per-batch cost: one broadcast pass over
-    * the corpus per student + touched-bucket rewrites — never a full
-    * backfill, never a full table rewrite. A drained stream serves
-    * walks identically to a from-scratch rebuild over the post-ingest
-    * corpus (stream==batch gated by the entry row's from-scratch
-    * oracle). The per-batch id collect is batch-sized (onboarding
-    * control rows), not corpus-sized. */
+  /** Streaming maintenance of the PARTITIONED standing adjacency. Each
+    * micro-batch of onboarded students is folded one student at a time in
+    * id order (onboarding assigns MAX+1 ids, so arrival order IS id
+    * order): the J5 one-vs-all incremental edges against the CURRENT
+    * corpus table, then [[graft.graph.GraphOps.adjacencyApplyDelta]]'s
+    * bucket-pruned slice rewrite, then an id-guarded append of the
+    * student to the corpus table (the guard makes an at-least-once replay
+    * a no-op on the corpus; the apply is replay-idempotent by
+    * construction — same slices, same partitions). Per-batch cost: one
+    * broadcast pass over the corpus per student + touched-bucket
+    * rewrites — never a full backfill, never a full table rewrite. The
+    * per-batch id collect is batch-sized, not corpus-sized. */
   def incrementalAdjacencyMaintenance(newStudents: DataFrame,
       adjTable: String, corpusTable: String): StreamingQuery =
-    newStudents.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.localCheckpoint()
-        val ids = b.select(col("id")).collect().map(_.getLong(0)).sorted
-        for (id <- ids) {
-          val row = b.filter(col("id") === id)
-          val corpus = spark.table(corpusTable)
-          val edges = EdgeRules.incrementalEdges(corpus, row)
-            .select(col("src"), col("dst"))
-          graft.graph.GraphOps.adjacencyApplyDelta(spark, adjTable,
-            edges, id)
-          row.join(corpus.select(col("id")), Seq("id"), "left_anti")
-            .localCheckpoint()
-            .write.mode("append").saveAsTable(corpusTable)
-        }
-        ()
+    drain(newStudents, "incrementalAdjacencyMaintenance") { (batch, _) =>
+      val spark = batch.sparkSession
+      val b = batch.localCheckpoint()
+      val ids = b.select(col("id")).collect().map(_.getLong(0)).sorted
+      for (id <- ids) {
+        val row = b.filter(col("id") === id)
+        val corpus = spark.table(corpusTable)
+        val edges = EdgeRules.incrementalEdges(corpus, row)
+          .select(col("src"), col("dst"))
+        GraphOps.adjacencyApplyDelta(spark, adjTable, edges, id)
+        row.join(corpus.select(col("id")), Seq("id"), "left_anti")
+          .localCheckpoint()
+          .write.mode("append").saveAsTable(corpusTable)
       }
-      .outputMode("append")
-      .start()
+    }
 
   /** Streaming ingest into the standing BM25 index — the continuous form
-    * of [[graft.ops.Search.indexDelta]]: each micro-batch's postings are
-    * derived from the batch alone and appended bucketed; corpus stats and
-    * the disjointness-guard bloom each gain one additive row per batch.
-    * Uses the IDEMPOTENT ingest variant because foreachBatch is
-    * at-least-once: a replayed micro-batch (crash between append and
-    * checkpoint commit) must be a no-op, not a crash loop and not a
-    * double-count. After the stream drains, the index answers queries
-    * identically to a one-shot [[graft.ops.Search.buildIndex]] over the
-    * same corpus — stream==batch gated in StatefulStreamSpec. At scale:
-    * per-batch cost is batch-proportional (the guard's contract), and
-    * [[graft.ops.Search.compactIndex]] is the scheduled companion that
-    * folds the accumulated per-batch file generations back down — the
-    * [[graft.ops.Search.compactIfNeeded]] policy runs after each ingest
-    * ([[graft.ops.Search.streamedBatch]]: decided from the guard blobs
-    * the replay filter read, so a batch reads the guard once),
-    * ON by default (a long-running stream would otherwise accrete one
-    * guard blob + one file generation per micro-batch forever; pass
-    * `maxBatches = 0` to opt out) (single-writer assumption: the swap
-    * must not race a concurrent writer; readers between micro-batches
-    * see either generation, both correct). Micro-batches write from the
-    * stream's cloned session, so after each one the caller's session
-    * (`newDocs.sparkSession`) refreshes the index tables it may already
-    * have read — otherwise it keeps serving the pre-drain listing. */
+    * of [[graft.ops.Search.indexDelta]] through
+    * [[graft.ops.Search.streamedBatch]]: the IDEMPOTENT ingest variant,
+    * because `foreachBatch` is at-least-once (a replayed micro-batch must
+    * be a no-op), followed by the [[graft.ops.Search.compactIfNeeded]]
+    * policy, ON by default (a long-running stream would otherwise accrete
+    * one guard blob + one file generation per micro-batch forever; pass
+    * `maxBatches = 0` to opt out). After the stream drains, the index
+    * answers queries identically to a one-shot
+    * [[graft.ops.Search.buildIndex]] over the same corpus — stream==batch
+    * gated in StatefulStreamSpec. */
   def incrementalIndexing(newDocs: DataFrame, table: String,
-      maxBatches: Int = 16): StreamingQuery = {
-    val caller = newDocs.sparkSession
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Search.streamedBatch(table, batch, maxBatches)
-        Seq(s"${table}_postings", s"${table}_stats")
-          .filter(caller.catalog.tableExists)
-          .foreach(caller.catalog.refreshTable)
-      }
-      .outputMode("append")
-      .start()
-  }
-
-  /** Streaming ingest into the standing q-gram FUZZY index —
-    * [[incrementalIndexing]] for gram postings: each micro-batch runs
-    * [[graft.ops.FuzzySearch.indexDeltaIdempotent]] (at-least-once
-    * replays are no-ops — doubled gram counts would inflate every
-    * count-filter sum) and the generation/byte-bounded compaction
-    * policy; batch 0 bootstraps an empty catalog. A drained stream
-    * serves [[graft.ops.FuzzySearch.topKIndexed]] identically to a
-    * one-shot build — gated on the same scan-path oracle. */
-  def incrementalFuzzyIndexing(newStudents: DataFrame, table: String,
       maxBatches: Int = 16): StreamingQuery =
-    newStudents.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.FuzzySearch.indexDeltaIdempotent(table, batch)
-        if (maxBatches > 0)
-          graft.ops.FuzzySearch.compactIfNeeded(batch.sparkSession, table,
-            maxBatches)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming ingest into the standing LSH band index —
-    * [[incrementalIndexing]] for the dedup family: each micro-batch runs
-    * [[graft.ops.DedupIndex.deltaIdempotent]] (at-least-once replays are
-    * no-ops — a replayed doc would duplicate its band rows physically);
-    * batch 0 bootstraps an empty catalog. A drained stream serves
-    * [[graft.ops.DedupIndex.candidates]] identically to a one-shot
-    * build. Completes streaming-safe ingest symmetry across all SIX
-    * standing index families. */
-  def incrementalDedupIndexing(newDocs: DataFrame,
-      table: String): StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.DedupIndex.deltaIdempotent(batch.sparkSession, table,
-          batch)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming ingest into the standing POSITIONAL index
-    * ([[graft.ops.Phrase]] family): each micro-batch runs
-    * [[graft.ops.Phrase.positionalDeltaIdempotent]] (at-least-once
-    * replays are no-ops — a replayed doc would double-count its
-    * occurrences); batch 0 bootstraps an empty catalog. A drained stream
-    * serves [[graft.ops.Phrase.phraseIndexedTopK]] identically to a
-    * one-shot build — streaming-safe ingest symmetry now spans all SEVEN
-    * standing index families. */
-  def incrementalPositionalIndexing(newDocs: DataFrame,
-      table: String): StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Phrase.positionalDeltaIdempotent(table, batch)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming MATERIALIZED-VIEW maintenance — [[graft.ops.MatView]]
-    * folded per micro-batch under batch-id idempotence (`foldBatch`'s
-    * ledger — the exactly-once `foreachBatch` recipe; the view keeps no
-    * row identity, so idempotence lives at the batch level). A drained
-    * stream reads identically to a one-shot build over the same rows. */
-  def incrementalViewMaintenance(newRows: DataFrame, table: String,
-      keys: Seq[String], sums: Seq[String], idCol: String): StreamingQuery =
-    newRows.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.MatView.foldBatch(table, bid, batch, keys, sums, idCol)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming maintenance of the DISTINCT view — the feed as a
-    * `foreachBatch` sink over [[graft.ops.MatView.foldBatchDistinct]]:
-    * each micro-batch appends its refcounted support partials once
-    * under the batch-id ledger. Exact ndv stays fresh at feed cost. */
-  def incrementalDistinctMaintenance(newRows: DataFrame, table: String,
-      keys: Seq[String], valueCol: String, idCol: String): StreamingQuery =
-    newRows.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.MatView.foldBatchDistinct(table, bid, batch, keys,
-          valueCol, idCol)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming maintenance of the MIN/MAX view — insert generations
-    * under the batch-id ledger ([[graft.ops.MatView.foldBatchMinMax]]);
-    * deletes stay a takedown-feed concern (they need the surviving
-    * base — see the fold's scaladoc). */
-  def incrementalMinMaxMaintenance(newRows: DataFrame, table: String,
-      keys: Seq[String], cols: Seq[String], idCol: String): StreamingQuery =
-    newRows.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.MatView.foldBatchMinMax(table, bid, batch, keys, cols,
-          idCol)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming SCD2 dimension maintenance — the observation feed as a
-    * `foreachBatch` sink over [[graft.ops.Scd.foldScd2Batch]]: batch 0
-    * bootstraps the dimension, each later micro-batch applies as an
-    * affected-keys-only incremental fold under the batch-id ledger
-    * (redelivery no-ops BEFORE the monotone-feed refusal can see the
-    * replayed observations — see the fold's scaladoc for why the two
-    * guards must be ordered that way). The production shape: an entity-
-    * attribute event topic keeps a billions-of-entities versioned
-    * dimension fresh at feed cost, never re-window-the-history cost. */
-  def incrementalScd2Maintenance(obs: DataFrame, table: String,
-      key: String, date: String, obsId: String,
-      value: String): StreamingQuery =
-    obs.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Scd.foldScd2Batch(table, bid, batch, key, date,
-          obsId, value)
-        ()
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming CDC apply — the change feed (op = I/D, full row images)
-    * as a `foreachBatch` sink over [[graft.ops.MatView.applyCdc]]: each
-    * micro-batch folds as one generation under the batch-id ledger, so
-    * crash redelivery is a strict no-op and a batch never half-applies
-    * across its inserts and deletes. The production IVM shape: a
-    * Debezium topic keeps a 100 TB-base aggregate fresh at change-feed
-    * cost, never base-scan cost. */
-  def incrementalCdcMaintenance(changes: DataFrame, table: String,
-      keys: Seq[String], sums: Seq[String]): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.MatView.applyCdc(table, bid, batch, keys, sums)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    drain(newDocs, "incrementalIndexing") { (batch, _) =>
+      graft.ops.Search.streamedBatch(table, batch, maxBatches)
+    }
 
   /** Streaming DELETION from a standing index — the takedown feed
-    * (right-to-erasure ids arriving continuously) as a `foreachBatch`
-    * sink: each micro-batch applies the family's tombstone delete
-    * (`delete` is the family entry point — [[graft.ops.Search
-    * .indexDelete]], [[graft.ops.Similarity.ivfIndexDelete]], or
+    * (right-to-erasure ids arriving continuously): each micro-batch
+    * applies the family's tombstone delete (`delete` is the family entry
+    * point — [[graft.ops.Search.indexDelete]],
+    * [[graft.ops.Similarity.ivfIndexDelete]], or
     * [[graft.ops.FuzzySearch.indexDelete]], partially applied to the
     * table). At-least-once safety needs NO extra replay filter here:
-    * the delete lifecycle is idempotent by construction —
     * [[graft.ops.Tombstones.freshOnly]] makes a re-delivered victim a
     * no-op, including the BM25 negative stats row and the fuzzy
-    * advisory-df correction (a replayed batch must not double-subtract
-    * either) — so the redelivery window every ingest twin closes with
-    * sliver-confirm logic is closed for free on the delete side.
-    * Replay is spec-gated in `IndexDeleteSpec` with a feed that
-    * delivers the same victim file twice. */
+    * advisory-df correction. Replay is spec-gated in `IndexDeleteSpec`
+    * with a feed that delivers the same victim file twice. */
   def incrementalDeletion(victimIds: DataFrame,
       delete: DataFrame => Unit): StreamingQuery =
-    victimIds.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => delete(batch); () }
-      .outputMode("append")
-      .start()
+    drain(victimIds, "incrementalDeletion")((batch, _) => delete(batch))
 
-  /** Streaming HLL maintenance — the mergeable-register property doing
-    * its job: each micro-batch appends its PARTIAL register table
-    * (delta-sized — at most groups × 256 rows regardless of batch size),
-    * and the read-side max-merge of all generations equals the one-shot
-    * sketch EXACTLY (max is associative/commutative/idempotent — even a
-    * redelivered batch is a physical no-op after the merge, so this twin
-    * needs no batch-id ledger). This is the sketch a 100 TB ingest keeps
-    * fresh at register-table cost, never rescanning the corpus. */
-  def incrementalHllIngest(newRows: DataFrame, regDir: String,
-      groupCol: String, valueCol: String): StreamingQuery =
-    newRows.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Sketches.hllRegisters(batch, groupCol, valueCol)
-          .write.mode("append").parquet(regDir)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming decontamination — score each arriving micro-batch of
-    * training docs against the STANDING benchmark shingle set (the eval
-    * suite is fixed; at 100 TB it is MBs against a continuous TB-scale
-    * ingest). Per-doc scoring is stateless given the bench set, so
-    * incremental == batch by construction: each batch pays one
-    * batch-sized shingle explode + one join against the bench side, and
-    * the appended union equals [[graft.ops.Decontam.overlap]] over the
-    * drained corpus (same oracle row). */
-  def incrementalDecontam(newDocs: DataFrame, benchSh: DataFrame,
-      scoredDir: String): StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Decontam.score(batch, benchSh)
-          .write.mode("append").parquet(scoredDir)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming corpus curation — the continuous-ingest capstone: per
-    * micro-batch, keep-first exact dedup WITHIN the batch (min doc_id
-    * per content hash), an anti-join against the STANDING curated
-    * corpus's hashes (re-read per batch — at scale, the [[graft.ops
-    * .DedupIndex]] bucketed table instead of a raw re-read), then the
-    * quality gate, then append. With arrival order following doc_id, the
-    * final curated set equals the batch keep-first dedup ∩ quality keep
-    * — stream==batch gated in `StatefulStreamSpec`. */
+  /** Streaming corpus curation — per micro-batch, keep-first exact dedup
+    * WITHIN the batch (min doc_id per content hash), an anti-join against
+    * the STANDING curated corpus's hashes (re-read per batch — at scale,
+    * the [[graft.ops.DedupIndex]] bucketed table instead of a raw
+    * re-read), then the quality gate, then append. With arrival order
+    * following doc_id, the final curated set equals the batch keep-first
+    * dedup ∩ quality keep — stream==batch gated in `StatefulStreamSpec`. */
   def incrementalCuration(newDocs: DataFrame,
       curatedDir: String): StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch.withColumn("h",
-          md5(graft.ops.Dedup.normText(col("text")).cast("binary")))
-        val firstInBatch = hashed
-          .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-        // only the batch-0 missing-directory case may fall back to an
-        // empty standing set — a transient read failure must FAIL the
-        // batch, or previously-curated hashes get re-admitted silently.
-        // The probe goes through the Hadoop FileSystem of the path (HDFS/
-        // S3/local alike): a driver-local java.io.File check is always
-        // false on remote stores, which would silently re-admit every
-        // previously-curated hash — a correctness bug only visible off
-        // the laptop. The explicit read schema covers the other edge: a
-        // first batch keeping ZERO docs writes a parquet dir with no data
-        // files, which would fail schema inference on the next batch.
-        val hPath = new org.apache.hadoop.fs.Path(curatedDir)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val standingSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "h", org.apache.spark.sql.types.StringType)))
-        val standing =
-          if (!fs.exists(hPath))
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              standingSchema)
-          else spark.read.schema(standingSchema).parquet(curatedDir)
-        val novel = hashed
-          .join(firstInBatch, Seq("h", "doc_id"), "left_semi")
-          .join(standing, Seq("h"), "left_anti")
-        val kept = novel.join(
-          graft.ops.TextAnalysis.quality(novel.drop("h"))
-            .filter(col("quality") === "keep").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        kept.write.mode("append").parquet(curatedDir)
-      }
-      .outputMode("append")
-      .start()
+    drain(newDocs, "incrementalCuration") { (batch, _) =>
+      val spark = batch.sparkSession
+      val hashed = batch.withColumn("h",
+        md5(graft.ops.Dedup.normText(col("text")).cast("binary")))
+      val firstInBatch = hashed
+        .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+      // only the batch-0 missing-directory case may fall back to an
+      // empty standing set — a transient read failure must FAIL the
+      // batch, or previously-curated hashes get re-admitted silently.
+      // The probe goes through the Hadoop FileSystem of the path (HDFS/
+      // S3/local alike): a driver-local java.io.File check is always
+      // false on remote stores, which would silently re-admit every
+      // previously-curated hash — a correctness bug only visible off
+      // the laptop. The explicit read schema covers the other edge: a
+      // first batch keeping ZERO docs writes a parquet dir with no data
+      // files, which would fail schema inference on the next batch.
+      val hPath = new org.apache.hadoop.fs.Path(curatedDir)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val standingSchema = StructType(Seq(
+        org.apache.spark.sql.types.StructField(
+          "h", org.apache.spark.sql.types.StringType)))
+      val standing =
+        if (!fs.exists(hPath))
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            standingSchema)
+        else spark.read.schema(standingSchema).parquet(curatedDir)
+      val novel = hashed
+        .join(firstInBatch, Seq("h", "doc_id"), "left_semi")
+        .join(standing, Seq("h"), "left_anti")
+      val kept = novel.join(
+        graft.ops.TextAnalysis.quality(novel.drop("h"))
+          .filter(col("quality") === "keep").select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+      kept.write.mode("append").parquet(curatedDir)
+    }
 }

@@ -352,6 +352,31 @@ class IndexDeleteSpec extends SparkSpec {
       "redelivery appended duplicate tombstones")
   }
 
+  test("streaming delete feed: a caller that read the index before the " +
+      "drain reads the post-delete index, _stats fold included") {
+    val db = freshDb("sdelcaller")
+    val docs = Tables.documents(spark, sfDir)
+    val t = s"$db.bm"
+    Search.buildIndex(docs, t)
+    val victims = docs.filter(col("doc_id") % 7 === 3).select(col("doc_id"))
+    Search.buildIndex(docs.join(victims, Seq("doc_id"), "left_anti"),
+      s"$db.ref")
+
+    // the read primes this session's cached relations of the index tables;
+    // the deletes then run in the stream's own session
+    Search.bm25Indexed(spark, t).collect()
+    graft.streaming.Streams.replay(spark, Seq(victims))(
+      graft.streaming.Streams.incrementalDeletion(_, Search.indexDelete(t, _)))
+
+    assert(rows(Search.bm25Indexed(spark, t)) ===
+        rows(Search.bm25Indexed(spark, s"$db.ref")),
+      "the caller read the pre-drain index")
+    assert(rows(spark.table(s"${t}_stats").agg(sum("n_docs"), sum("sum_dl")))
+        === rows(spark.table(s"$db.ref_stats")
+          .agg(sum("n_docs"), sum("sum_dl"))),
+      "the caller's _stats fold missed the deletion's negative row")
+  }
+
   test("tombstoned id is refused by strict delta and skipped by " +
       "idempotent delta until compaction") {
     val db = freshDb("delguard")

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -67,7 +69,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental ingest computes per-batch edge deltas via foreachBatch") {
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -94,6 +95,58 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(edges.toSet === Set(
       (1L, 3L, "SAME_COLLEGE"), (1L, 3L, "NEARBY"), (2L, 3L, "SAME_STREAM")))
+  }
+
+  test("drain labels every micro-batch job and keeps the caller's " +
+      "description; replay leaves no feed behind and stops a failed query") {
+    val sc = spark.sparkContext
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def feeds = tmp.list().filter(_.startsWith("graft-feed")).toSet
+    val feedsBefore = feeds
+    // description of every job the drain's query runs, by query id
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p => jobs.add(
+          (p.getProperty("sql.streaming.queryId"),
+            p.getProperty("spark.job.description"))))
+    }
+    val events = Tables.events(spark, sfDir)
+    val parts = Seq(events.filter(col("user_id") % 2 === 0),
+      events.filter(col("user_id") % 2 === 1))
+    var counts = Seq.empty[Long]
+    var queryId = ""
+    sc.addSparkListener(l)
+    sc.setJobDescription("caller")
+    try {
+      Streams.replay(spark, parts) { feed =>
+        val q = Streams.drain(feed, "spec") { (batch, _) =>
+          counts :+= batch.count()
+          batch.groupBy("event_type").count().collect()
+        }
+        queryId = q.id.toString
+        q
+      }
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      Thread.sleep(1000) // listener delivery is async
+      assert(counts === parts.map(_.count()))
+      val drained = jobs.asScala.filter(_._1 == queryId).map(_._2).toSet
+      assert(drained === Set("graft stream spec: batch 0",
+        "graft stream spec: batch 1"))
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.replay(spark, parts)(Streams.drain(_, "spec_failing") {
+        (_, _) => throw new IllegalStateException("sink failed")
+      })
+    }
+    assert(e.getMessage.contains("sink failed"))
+    assert(spark.streams.active.isEmpty, "a failed drain left its query up")
+    assert(feeds === feedsBefore, "replay left a feed directory behind")
   }
 
   test("streaming dedup (dropDuplicatesWithinWatermark): stream keys == batch keys") {

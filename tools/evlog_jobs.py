@@ -3,7 +3,7 @@
 counts, and the job group / call site — the per-phase breakdown the
 optimization rounds use to find where a lifecycle row's wall time goes.
 
-Usage: evlog_jobs.py <eventlog> [minMs]
+Usage: evlog_jobs.py [--unlabelled] <eventlog> [minMs]
 
 <eventlog> is a plain event log file, a zstd-compressed one (`*.zstd`,
 `*.zst`), or a rolled log directory (`eventlog_v2_*`, Spark 4's default),
@@ -17,7 +17,15 @@ execution: the first `graft.`/`perfbench.` frame of that execution's
 `spark.sql.execution.id` property. A job outside any SQL execution (file
 listing and schema inference when a parquet path is read) falls back to
 the first such frame of its stages' details.
+
+`--unlabelled` lists only the jobs nothing attributes: no description of
+their own, and a resolved call site that is `?` or a bare `start at
+Streams.scala` (a streaming micro-batch job outside a labelled drain). The
+description Spark gives every micro-batch job (`id = <uuid> runId = <uuid>
+batch = <n>`) names no step, so it counts as none. It exits 1 when there is
+any.
 """
+import argparse
 import json
 import re
 import subprocess
@@ -25,6 +33,9 @@ import sys
 from pathlib import Path
 
 FRAME_PREFIXES = ("graft.", "perfbench.")
+BARE_STREAM_SITE = re.compile(r"start at Streams\.scala(:\d+)?")
+SPARK_BATCH_DESC = re.compile(r"(.* )?id = [0-9a-f-]+ runId = [0-9a-f-]+ "
+                              r"batch = \d+")
 
 
 def log_files(path):
@@ -58,7 +69,8 @@ def first_frame(details):
     return None
 
 
-def main(path, min_ms=0):
+def read_jobs(path):
+    """Job id -> job, with `?` call sites resolved as the module doc says."""
     jobs = {}
     executions = {}
     for line in lines(path):
@@ -91,6 +103,25 @@ def main(path, min_ms=0):
         if j["site"] in ("?", ""):
             j["site"] = (executions.get(str(j["execution"]))
                          or j["stage_frame"] or "?")
+    return jobs
+
+
+def unlabelled(jobs):
+    """Prints the jobs nothing attributes; the exit status is 1 if any."""
+    def described(j):
+        desc = " ".join(j["desc"].split())
+        return desc and not SPARK_BATCH_DESC.fullmatch(desc)
+    bare = [(jid, j) for jid, j in sorted(jobs.items())
+            if not described(j) and (j["site"] in ("?", "")
+                                     or BARE_STREAM_SITE.fullmatch(j["site"]))]
+    for jid, j in bare:
+        print(f"{jid:>4}  {j['site']}")
+    print(f"-- {len(bare)} of {len(jobs)} jobs unlabelled")
+    return 1 if bare else 0
+
+
+def main(path, min_ms=0):
+    jobs = read_jobs(path)
     total = 0
     rows = []
     for jid, j in sorted(jobs.items()):
@@ -113,4 +144,12 @@ def main(path, min_ms=0):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], int(sys.argv[2]) if len(sys.argv) > 2 else 0)
+    ap = argparse.ArgumentParser(description="Summarize a Spark event log.")
+    ap.add_argument("eventlog")
+    ap.add_argument("min_ms", nargs="?", type=int, default=0)
+    ap.add_argument("--unlabelled", action="store_true",
+                    help="list unattributed jobs; exit 1 if any")
+    args = ap.parse_args()
+    if args.unlabelled:
+        sys.exit(unlabelled(read_jobs(args.eventlog)))
+    main(args.eventlog, args.min_ms)
