@@ -83,7 +83,7 @@ object FuzzyEntry {
       FuzzySearch.topKIndexed(s, "graft_idx.fuzzyc", fuzzyQuery)
     }),
     // DELETION from the standing q-gram index — the tombstone lifecycle
-    // completing the contract across all five index families: delete =
+    // every StandingIndex family shares: delete =
     // broadcast sidecar append (never a postings or names rewrite), every
     // candidate arm anti-joins the sidecar, compaction folds physically.
     // The oracle recomputes the scan chain over the surviving names

@@ -23,53 +23,33 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  /** Build (or replace) the band index table. `buckets` sizes the layout:
-    * at corpus scale pick shuffle-partition-sized buckets; the join works
-    * unchanged at any value because the bucket count only constrains the
-    * delta side's matching exchange. */
-  def build(docs: DataFrame, table: String, buckets: Int = 8): Unit = {
-    Dedup.lshBands(docs)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "b", "k").sortBy("b", "k")
-      .format("parquet").saveAsTable(table)
-    IngestGuard.write(docs.sparkSession, docs, "doc_id", table,
-      overwrite = true)
-  }
+  /** The band index as a [[StandingIndex]] rooted at `table` itself: the
+    * [[Dedup.lshBands]] rows bucketed and sorted on (b, k). A doc with no
+    * shingle stores no rows — it can never collide, so there is nothing
+    * to erase. `buckets` sizes the layout: at corpus scale pick
+    * shuffle-partition-sized buckets; the join works unchanged at any
+    * value because the bucket count only constrains the delta side's
+    * matching exchange. */
+  private def index(spark: SparkSession, table: String,
+      buckets: Int): StandingIndex =
+    StandingIndex(spark, table, "doc_id",
+      Seq(StandingIndex.Table("", StandingIndex.Bucketed(buckets, "b", "k"),
+        Dedup.lshBands)), Nil)
 
-  /** Incremental ingest into the standing band index — the
-    * [[Search.indexDelta]] contract for LSH bands: the delta's band rows
-    * derive from the DELTA ALONE and append into the bucketed layout
-    * (the writer shuffles only the delta to match the bucket spec; the
-    * standing corpus is never read), so ingest cost is independent of
-    * index size. Band rows are purely additive with NO stored aggregate,
-    * and [[candidates]] dedups pairs — a re-ingested doc_id would not
-    * corrupt RESULTS, only duplicate its rows physically (cost, file
-    * growth) — but the loud [[IngestGuard]] discipline applies anyway:
-    * silent physical duplication is how an index doubles between
-    * compactions without anyone noticing. */
+  /** Build (or replace) the band index table ([[StandingIndex.build]]). */
+  def build(docs: DataFrame, table: String, buckets: Int = 8): Unit =
+    index(docs.sparkSession, table, buckets).build(docs)
+
+  /** Incremental ingest — the [[Search.indexDelta]] contract for LSH
+    * bands: the delta's band rows derive from the delta alone and append
+    * into the bucketed layout, so ingest cost is independent of index
+    * size. Band rows carry no stored aggregate and [[candidates]] dedups
+    * pairs, so a re-ingested doc_id would only duplicate rows physically —
+    * the guard refuses it anyway: silent physical duplication is how an
+    * index doubles between compactions ([[StandingIndex.delta]]). */
   def delta(spark: SparkSession, table: String, newDocs: DataFrame,
-      buckets: Int = 8): Unit = {
-    if (newDocs.isEmpty) return
-    Swap.recoverUnpartitioned(spark, table)
-    require(spark.catalog.tableExists(table),
-      s"DedupIndex.delta needs a standing index: $table not found — " +
-        "run build first")
-    IngestGuard.assertDisjoint(spark, table, newDocs, "doc_id",
-      spark.table(table), "DedupIndex.delta")
-    append(spark, table, newDocs, buckets)
-  }
-
-  /** The band rows' bucketed append and guard blob, for doc_ids already
-    * known new. */
-  private def append(spark: SparkSession, table: String, newDocs: DataFrame,
-      buckets: Int = 8): Unit = {
-    Dedup.lshBands(newDocs)
-      .repartition(buckets, col("b"), col("k"))
-      .write.mode("append")
-      .bucketBy(buckets, "b", "k").sortBy("b", "k")
-      .format("parquet").saveAsTable(table)
-    IngestGuard.write(spark, newDocs, "doc_id", table, overwrite = false)
-  }
+      buckets: Int = 8): Unit =
+    index(spark, table, buckets).delta(newDocs)
 
   /** Candidate (delta, index) near-dup pairs from band collisions against
     * the materialized index. Tombstoned docs never surface as partners
@@ -86,66 +66,25 @@ object DedupIndex {
       .orderBy(col("delta_id"), col("index_id"))
   }
 
-  /** At-least-once-safe band ingest — [[delta]]'s idempotent twin (the
-    * family-wide streaming contract): a replayed micro-batch is a
-    * no-op (a replayed doc would duplicate its band rows physically).
-    * Replay filter: exact confirmation only for the bloom-suspect
-    * SLIVER of the batch (the standing doc_id column is probed against
-    * the broadcast sliver — delta-proportional); the novel set is
-    * lineage-cut before the append (it derives from the table being
-    * appended to) and appended without [[delta]]'s second probe (one
-    * guard read and one bloom probe per batch; see
-    * [[IngestGuard.novel]]). Batch 0 bootstraps an empty catalog. */
+  /** [[delta]] that skips already-indexed doc_ids — a replayed
+    * micro-batch is a no-op ([[StandingIndex.deltaIdempotent]]). */
   def deltaIdempotent(spark: SparkSession, table: String,
       newDocs: DataFrame): Unit = {
-    Swap.recoverUnpartitioned(spark, table)
-    if (!spark.catalog.tableExists(table)) { build(newDocs, table); return }
-    val novel = IngestGuard.novel(spark, table, newDocs, "doc_id",
-      spark.table(table))
-    if (!novel.isEmpty) append(spark, table, novel)
+    index(spark, table, 8).deltaIdempotent(newDocs); ()
   }
 
-  /** DELETE documents from the standing band index — right-to-erasure
-    * includes DERIVED state: a taken-down doc's minhash signatures must
-    * stop matching future deltas, or the pipeline keeps reporting the
-    * erased doc as a near-dup partner. The [[Tombstones]] lifecycle,
-    * 6th standing index family: sidecar append (never a band-table
-    * rewrite), probe-side broadcast anti-join ([[candidates]]),
-    * [[compact]] folds physically. Unknown and already-deleted ids are
-    * ignored; presence is confirmed against the band rows (every
-    * indexed doc with ≥1 shingle has rows; a shingle-less doc stored
-    * nothing and can never collide — nothing to erase). */
-  def indexDelete(spark: SparkSession, table: String, ids: DataFrame): Unit = {
-    require(spark.catalog.tableExists(table),
-      s"DedupIndex.indexDelete: no standing index at $table — build first")
-    val victims = spark.table(table).select(col("doc_id"))
-      .join(broadcast(Tombstones.freshOnly(spark, table,
-        ids.select(col("doc_id").cast("long").as("doc_id")).distinct(),
-        "doc_id")), Seq("doc_id"), "left_semi")
-      .distinct().localCheckpoint()
-    if (!victims.isEmpty) Tombstones.append(spark, table, victims, "doc_id")
-  }
+  /** DELETE documents from the band index — right-to-erasure includes
+    * DERIVED state: a taken-down doc's minhash signatures must stop
+    * matching future deltas, or the pipeline keeps reporting the erased
+    * doc as a near-dup partner. Tombstones only (never a band-table
+    * rewrite), anti-joined above the bucketed scan by [[candidates]]
+    * ([[StandingIndex.delete]]). */
+  def indexDelete(spark: SparkSession, table: String, ids: DataFrame): Unit =
+    index(spark, table, 8).delete(ids)
 
-  /** Compact the band index: rewrite WITHOUT the tombstoned docs through
-    * the crash-recoverable unpartitioned swap ([[Swap]]), preserving the
-    * bucketed-sorted layout (the co-located probe join's clustering
-    * contract), then retire the sidecar. Also the small-files fold for a
-    * future delta-append path. */
-  def compact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
-    Swap.recoverUnpartitioned(spark, table)
-    Swap.stageThenSwap(spark, table,
-      Tombstones.filter(spark, table, spark.table(table), "doc_id")) {
-      (df, staged) =>
-        df.repartition(buckets, col("b"), col("k"))
-          .write.mode("overwrite")
-          .bucketBy(buckets, "b", "k").sortBy("b", "k")
-          .format("parquet").saveAsTable(staged)
-    }
-    // guard refolds to one bloom over the SURVIVORS (a deleted doc_id
-    // becomes re-ingestable, per-batch blobs collapse), sidecar last
-    IngestGuard.write(spark,
-      spark.table(table).select(col("doc_id")).distinct(), "doc_id",
-      table, overwrite = true)
-    Tombstones.drop(spark, table)
-  }
+  /** Rewrite the band index without the tombstoned docs, keeping the
+    * bucketed-sorted layout the co-located probe join relies on
+    * ([[StandingIndex.compact]]); also the small-files fold for deltas. */
+  def compact(spark: SparkSession, table: String, buckets: Int = 8): Unit =
+    index(spark, table, buckets).compact()
 }

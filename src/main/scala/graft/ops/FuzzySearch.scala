@@ -57,300 +57,104 @@ object FuzzySearch {
   val GramQ = 2
   val GramBuckets = 16
 
-  /** Materialize the q-gram FUZZY index — the scale path [[topK]]'s full
-    * scan lacks (a 100 TB name corpus cannot be levenshtein-scanned per
-    * query): `{t}_grams` holds one row per 2-gram OCCURRENCE per name
-    * WITH its 0-based position and the name length (positional bag —
-    * the count-filtering bound below is a bag bound, distinct-set
-    * counts would over-prune, and Gravano's position filter needs
-    * `pos` and the per-pair window needs `len`), partitioned by
-    * crc32(gram) % [[GramBuckets]] so a probe's literal gram set prunes
-    * partitions at scan time (the [[Search.buildIndex]] term-bucket
-    * discipline); `{t}_names` carries the full student projection +
-    * name length for the rescore and the per-candidate bound.
-    *
-    * NOT crash-atomic when rebuilding in place: the write DROPs the old
-    * generation first (required — cached plans from it must cascade-
-    * uncache, see [[writeIndex]]), so a crash between the DROPs and the
-    * saves leaves no standing index and queries fail loudly until a
-    * rebuild ([[indexDelta]] refuses the torn state). Rebuilding a
-    * production index under live queries should stage through the
-    * [[compactIndex]] swap protocol instead of this in-place path. */
-  def buildIndex(students: DataFrame, table: String): Unit = {
-    writeIndex(students, table, overwrite = true)
-    graft.ops.IngestGuard.write(students.sparkSession, students, "id",
-      table, overwrite = true)
-  }
+  /** The q-gram FUZZY index as a [[StandingIndex]] — the scale path
+    * [[topK]]'s full scan lacks (a 100 TB name corpus cannot be
+    * levenshtein-scanned per query). `{t}_names` carries the full student
+    * projection + name length for the rescore and the per-candidate
+    * bound; it is id-complete (a name shorter than [[GramQ]] stores no
+    * grams but still has its names row), so a delete confirms presence
+    * there. `{t}_grams` holds one row per 2-gram OCCURRENCE per name WITH
+    * its 0-based position and the name length (positional bag — the
+    * count-filtering bound below is a bag bound, distinct-set counts would
+    * over-prune, and Gravano's position filter needs `pos` and the
+    * per-pair window needs `len`), partitioned by crc32(gram) %
+    * [[GramBuckets]] so a probe's literal gram set prunes partitions at
+    * scan time. Beside them the opt-in advisory `{t}_gramdf`
+    * ([[gramDfSidecar]]). */
+  private def lifecycle(spark: org.apache.spark.sql.SparkSession,
+      table: String): StandingIndex =
+    StandingIndex(spark, table, "id",
+      Seq(StandingIndex.Table("_names", StandingIndex.Plain, named),
+        StandingIndex.Table("_grams", StandingIndex.Partitioned("bucket"),
+          df => gramPostings(named(df)))),
+      Seq(gramDfSidecar(spark, table)))
 
-  /** Incremental ingest into the standing fuzzy index — the
-    * [[Search.indexDelta]] contract applied to gram postings: the
-    * delta's postings and name rows are derived from the DELTA ALONE
-    * and appended (both tables are purely additive — no stored
-    * aggregate to merge), with id-disjointness enforced through the
-    * [[graft.ops.IngestGuard]] bloom sidecar (delta-proportional; the
-    * standing postings are never read). A re-ingested id would
-    * silently double its gram counts and inflate [[topKIndexed]]'s
-    * shared sums — hence the loud guard. One file per touched bucket
-    * per generation (the repartition discipline), so a compaction
-    * batch bound caps probe-time file counts exactly as for the IVF
-    * lists. */
-  def indexDelta(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (delta.isEmpty) return
-    standingChecked(spark, table)
-    graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "id",
-      spark.table(s"${table}_names"), "fuzzyIndexDelta")
-    append(table, delta)
-  }
+  private def named(students: DataFrame): DataFrame =
+    students.withColumn("len", length(col("name")))
 
-  /** Rolls forward an interrupted swap and refuses a catalog that is not
-    * a whole standing index — the precondition of every append. */
-  private def standingChecked(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    // a missing names table next to a staged copy is an interrupted
-    // tombstone-fold swap (compactIndex) — roll it forward first
-    recoverNamesSwap(spark, table)
-    require(spark.catalog.tableExists(s"${table}_names"),
-      s"fuzzyIndexDelta needs a standing index: ${table}_names not found — " +
-        "run buildIndex first")
-    // a missing postings table NEXT TO the standing catalog is an
-    // interrupted compaction swap, not a fresh catalog — roll it
-    // forward before appending (the ingestPreamble discipline)
-    if (!spark.catalog.tableExists(s"${table}_grams"))
-      Swap.recoverPartitioned(spark, s"${table}_grams")
-    // standing _names — not just _guard — is the sentinel: a torn
-    // buildIndex (crash after the _names write, before _grams/guard
-    // land) leaves _names with NO guard, and appending would CREATE
-    // _grams from the delta alone — an index silently missing every
-    // base name's postings (Search.indexDelta's refusal, mirrored)
-    require(spark.catalog.tableExists(s"${table}_grams"),
-      s"fuzzyIndexDelta refusing to bootstrap: ${table}_names exists " +
-        s"but ${table}_grams is missing and no staged copy was found " +
-        "to roll forward — delta-only postings would silently miss " +
-        "every base name. Rebuild via buildIndex (or restore the " +
-        "postings) before ingesting")
-  }
-
-  /** The delta's names and gram postings, the df sidecar's rows and the
-    * guard blob, for ids already known new. */
-  private def append(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    writeIndex(delta, table, overwrite = false)
-    // keep the ADVISORY df sidecar FRESH when the deployment opted into
-    // it: gram df is additive (the probe folds rows by sum), so the
-    // delta's own gram counts append as one delta-sized tiny file —
-    // never a postings re-scan. This closes the staleness policy hole
-    // (a prefixSkip deployment under heavy ingest no longer degrades
-    // back to hot-list scans between compactions); a sidecar-less index
-    // still pays nothing here.
-    if (spark.catalog.tableExists(s"${table}_gramdf"))
-      gramPostings(delta.withColumn("len", length(col("name"))))
-        .groupBy(col("bucket"), col("gram"))
-        .agg(count(lit(1)).as("df"))
+  /** The ADVISORY per-gram posting-list-length sidecar `{t}_gramdf`
+    * ([[writeGramDf]]), kept fresh once a deployment opted into it: gram
+    * df is additive (the probe folds rows by sum), so a delta appends its
+    * own gram counts and a delete the victims' negative counts, each one
+    * tiny file — never a postings re-scan; compaction recounts it from the
+    * purged grams in one file. A build drops it. Correctness never depends
+    * on it: df only orders WHICH hot lists the prefix filter skips. */
+  private def gramDfSidecar(spark: org.apache.spark.sql.SparkSession,
+      table: String): StandingIndex.Additive = new StandingIndex.Additive {
+    val suffix = "_gramdf"
+    private def kept = spark.catalog.tableExists(s"${table}_gramdf")
+    private def append(grams: DataFrame, sign: Int): Unit =
+      if (kept) grams.groupBy(col("bucket"), col("gram"))
+        .agg((count(lit(1)) * sign).as("df"))
         .coalesce(1)
         .write.mode("append").format("parquet")
         .saveAsTable(s"${table}_gramdf")
-    graft.ops.IngestGuard.write(spark, delta, "id", table,
-      overwrite = false)
+    def build(batch: DataFrame): Unit = ()
+    def delta(batch: DataFrame): (Option[Long], () => Unit) =
+      (None, () => append(gramPostings(named(batch)), 1))
+    def delete(victims: DataFrame): Unit =
+      append(spark.table(s"${table}_grams")
+        .join(broadcast(victims), Seq("id"), "left_semi"), -1)
+    def compact(): Unit = if (kept) writeGramDf(spark, table)
   }
 
-  /** At-least-once-safe fuzzy ingest — [[indexDelta]]'s idempotent twin
-    * (the [[Search.indexDeltaIdempotent]] contract for gram postings): a
-    * replayed streaming micro-batch must be a no-op, not doubled gram
-    * counts (they would inflate every count-filter sum). Replay filter: exact confirmation only for the
-    * bloom-suspect sliver of the delta (delta-proportional — the
-    * standing names are read just for the suspect ids); the novel set
-    * is lineage-cut before the append (it derives from the table being
-    * appended to — the insert-time cache-invalidation trap) and appended
-    * without [[indexDelta]]'s second probe (one guard read and one bloom
-    * probe per batch; see [[graft.ops.IngestGuard.novel]]).
-    *
-    * SCOPE of the guarantee (the family-wide contract shared with
-    * [[Search.indexDeltaIdempotent]] / [[Similarity
-    * .ivfIndexDeltaIdempotent]]): it closes the REDELIVERY window — a
-    * batch fully ingested but redelivered because the crash hit between
-    * the ingest and the stream's checkpoint commit (the common
-    * at-least-once case). A crash INSIDE the multi-table ingest itself
-    * (between the names/grams/guard appends) leaves a torn generation
-    * that no append-only multi-table scheme can self-heal from the
-    * tables alone — that is a single-writer recovery scenario: rebuild
-    * from source (or restore the last compacted generation), exactly as
-    * for the bm25/IVF families. */
+  /** Materialize the fuzzy index ([[StandingIndex.build]]). */
+  def buildIndex(students: DataFrame, table: String): Unit =
+    lifecycle(students.sparkSession, table).build(students)
+
+  /** Append a delta of NEW ids: names and gram postings derive from the
+    * delta alone, one file per touched bucket per generation
+    * ([[StandingIndex.delta]]; a re-ingested id would double its gram
+    * counts and inflate [[topKIndexed]]'s shared sums, so it throws). */
+  def indexDelta(table: String, delta: DataFrame): Unit =
+    lifecycle(delta.sparkSession, table).delta(delta)
+
+  /** [[indexDelta]] that skips already-indexed ids
+    * ([[StandingIndex.deltaIdempotent]]). It closes the redelivery window
+    * of an at-least-once stream; a crash INSIDE the multi-table append
+    * leaves a torn generation no append-only scheme can self-heal — rebuild
+    * from source, as for every family. */
   def indexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    // roll forward an interrupted names swap BEFORE the bootstrap check —
-    // a mid-swap catalog must not be mistaken for a fresh one (buildIndex
-    // here would drop the standing grams and rebuild from the delta alone)
-    recoverNamesSwap(spark, table)
-    if (!spark.catalog.tableExists(s"${table}_names")) {
-      buildIndex(delta, table); return
-    }
-    val novel = graft.ops.IngestGuard.novel(spark, table, delta, "id",
-      spark.table(s"${table}_names"))
-    if (!novel.isEmpty) { standingChecked(spark, table); append(table, novel) }
+    lifecycle(delta.sparkSession, table).deltaIdempotent(delta); ()
   }
 
-  /** DELETE names from the standing fuzzy index — the [[Tombstones]]
-    * lifecycle completing the tombstone contract across all five index
-    * families (BM25 postings, the four IVF layouts, and now the q-gram
-    * index): the gram postings are insert-only, so a delete appends the
-    * victim ids to the broadcast `{t}_tombstones` sidecar and every
-    * candidate path ([[indexedCandidates]], [[batchCandidates]] — and
-    * through them every topK/correct frontend) anti-joins the broadcast
-    * sidecar on the `_names` side, above both the probed arm and the
-    * vacuous-bound fallback arm. [[compactIndex]] folds the victims away
-    * physically (grams AND names) and drops the sidecar.
-    *
-    * Victim presence is confirmed against `_names`, not the postings —
-    * `_names` is id-complete (every indexed id has a names row, even a
-    * name shorter than [[GramQ]] that stores zero gram rows), so the
-    * zero-postings blind spot [[Search.indexDelete]] documents cannot
-    * arise here. Unknown ids are ignored; re-deletes are idempotent
-    * ([[Tombstones.freshOnly]] — the advisory df correction below must
-    * not double-subtract).
-    *
-    * The ADVISORY `{t}_gramdf` sidecar, when the deployment opted into
-    * it, gets the NEGATIVE df correction (victims' gram counts as
-    * negative additive rows — probes fold df by sum, so the skip
-    * ordering prices the surviving corpus exactly, same additive scheme
-    * as the BM25 negative stats row). Priced from the victims' standing
-    * gram rows via one broadcast semi-join pass; correctness never
-    * depends on it (df is advisory — it orders WHICH hot lists are
-    * skipped, losslessness is the count-bound's).
-    *
-    * Crash ordering: tombstones FIRST — a crash before the df correction
-    * leaves victims invisible to every probe (the user-facing invariant)
-    * with an advisory sidecar marginally stale until compaction rewrites
-    * it. Re-ingesting a deleted id is refused until compaction (see
-    * [[Tombstones]]). */
-  def indexDelete(table: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_names"),
-      s"fuzzy indexDelete: no standing index at $table — build first")
-    // lineage-cut before the writes: presence derives from the sidecar
-    // via freshOnly, and the append below would invalidate that plan
-    // (the insert-time cache-invalidation trap)
-    val victims = spark.table(s"${table}_names").select(col("id"))
-      .join(broadcast(Tombstones.freshOnly(spark, table,
-        ids.select(col("id").cast("long").as("id")).distinct(), "id")),
-        Seq("id"), "left_semi")
-      .distinct().localCheckpoint()
-    if (victims.isEmpty) return
-    Tombstones.append(spark, table, victims, "id")
-    if (spark.catalog.tableExists(s"${table}_gramdf"))
-      spark.table(s"${table}_grams")
-        .join(broadcast(victims), Seq("id"), "left_semi")
-        .groupBy(col("bucket"), col("gram"))
-        .agg((-count(lit(1))).as("df"))
-        .coalesce(1)
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_gramdf")
-  }
+  /** Tombstone names the index holds ([[StandingIndex.delete]]); every
+    * candidate path ([[indexedCandidates]], [[batchCandidates]]) anti-joins
+    * the sidecar on the `_names` side, above both the probed arm and the
+    * vacuous-bound fallback arm, and the advisory gramdf gets the victims'
+    * negative counts. */
+  def indexDelete(table: String, ids: DataFrame): Unit =
+    lifecycle(ids.sparkSession, table).delete(ids)
 
-  /** Compact the delta-grown fuzzy index — the [[Similarity
-    * .compactIvfIndex]] maintenance rewrite for gram postings: the
-    * bucket-partitioned `{t}_grams` is rewritten one-file-per-bucket
-    * through the crash-recoverable staged swap, and the guard sidecar
-    * folds to one bloom. The `{t}_names` table is normally left as-is:
-    * its file count is one per generation TOTAL (unpartitioned appends —
-    * no per-bucket amplification) and it is read through an id join, so
-    * the postings rewrite is where probe latency lives. Layout-only:
-    * queries before/after are row-identical (spec-gated).
-    *
-    * With a standing tombstone sidecar ([[indexDelete]]) the rewrite
-    * also folds the victims away PHYSICALLY — the grams rewrite filters
-    * them, `_names` is rewritten through the same staged-swap scheme
-    * (victims must not resurface once the sidecar drops), the guard
-    * bloom rebuilds from the survivors (re-ingest of a deleted id
-    * becomes a plain insert again), and the sidecar is dropped LAST so a
-    * crash at any intermediate state leaves its anti-join a no-op. */
+  /** Compact the delta-grown fuzzy index: grams one file per bucket, names
+    * and grams without the tombstoned ids, one guard bloom, a recounted
+    * gramdf ([[StandingIndex.compact]]). Queries before/after are
+    * row-identical. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    Swap.recoverPartitioned(spark, s"${table}_grams")
-    recoverNamesSwap(spark, table)
-    Swap.compactPartitioned(spark, s"${table}_grams", "bucket",
-      df => Tombstones.filter(spark, table, df, "id"))
-    if (spark.catalog.tableExists(Tombstones.sidecar(table))) {
-      // physical fold of the victims' name rows through the unpartitioned
-      // staged swap ([[Swap]] — every intermediate state is one
-      // recoverNamesSwap away from a readable table)
-      Swap.stageThenSwap(spark, s"${table}_names",
-        Tombstones.filter(spark, table, spark.table(s"${table}_names"),
-          "id")) { (df, staged) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(staged)
-      }
-    }
-    graft.ops.IngestGuard.write(spark,
-      spark.table(s"${table}_names").select(col("id")), "id", table,
-      overwrite = true)
-    // rewrite the advisory df sidecar when the deployment opted into it:
-    // deltas keep it fresh with additive appends (indexDelta), so this
-    // fold is about FILE COUNT, not staleness — one file again after
-    // many ingest generations. A crash between the postings swap and
-    // this rewrite leaves a coarser-grained but still-correct sidecar,
-    // which the prefix filter tolerates by construction.
-    if (spark.catalog.tableExists(s"${table}_gramdf"))
-      writeGramDf(spark, table)
-    // victims physically gone (both rewrites above), guard rebuilt from
-    // survivors, advisory df recomputed from the purged grams — retire
-    // the sidecar (the Tombstones lifecycle's last step)
-    Tombstones.drop(spark, table)
-  }
+      table: String): Unit =
+    lifecycle(spark, table).compact()
 
-  /** Repair an interrupted `_names` staged swap ([[compactIndex]]'s
-    * tombstone fold) — the [[Search.recoverIndexSwap]] scheme for the
-    * unpartitioned names table: roll a complete staged copy forward when
-    * the live table is missing, drop a stale staged copy or leftover
-    * retired generation otherwise. Idempotent cheap DDL ([[Swap]]'s
-    * generic core); public like its siblings
-    * ([[Search.recoverIndexSwap]], [[Similarity.recoverIvfSwap]]) —
-    * swap repair is part of the maintenance API. */
+  /** Repair an interrupted compaction swap of `_names` or `_grams`
+    * ([[StandingIndex.recover]]). */
   def recoverNamesSwap(
       spark: org.apache.spark.sql.SparkSession, table: String): Boolean =
-    Swap.recoverUnpartitioned(spark, s"${table}_names")
+    lifecycle(spark, table).recover()
 
-  /** Compaction policy — [[Similarity.compactIvfIfNeeded]] for the
-    * fuzzy index: trigger on ingest generations or cumulative guard
-    * bytes; reads k tiny sidecar rows, never the postings. */
+  /** [[StandingIndex.compactIfNeeded]] for the fuzzy index. */
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession,
       table: String, maxBatches: Int = 16,
-      maxSidecarBytes: Long = 64L << 20): Boolean = {
-    val due = graft.ops.IngestGuard.compactionDue(spark, table, maxBatches,
-      maxSidecarBytes)
-    if (due) compactIndex(spark, table)
-    due
-  }
-
-  private def writeIndex(students: DataFrame, table: String,
-      overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
-    if (overwrite) {
-      // rebuild-in-session safety: DROP first so cached plans derived
-      // from the old generation (a prior query's pinned shared-count
-      // subtree) are CASCADE-uncached by the catalog. A bare
-      // overwrite-CTAS instead tries to RECACHE those dependents
-      // mid-write against the just-dropped table and fails with
-      // TABLE_OR_VIEW_NOT_FOUND (found by the bench harness's
-      // best-of-2: iteration 2 rebuilds while iteration 1's cache is
-      // still registered) — and a canonically-equal later plan could
-      // silently HIT the stale cache instead of reading the rebuild.
-      val spark = students.sparkSession
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_names")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_grams")
-      // a rebuilt corpus invalidates the advisory df sidecar; dropping
-      // (not refreshing) keeps the build band free of the stats pass —
-      // writeGramDf is the opt-in refresh
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_gramdf")
-      Tombstones.drop(spark, table) // stale deletes die with the generation
-    }
-    val named = students.withColumn("len", length(col("name")))
-    named.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_names")
-    gramPostings(named)
-      .repartition(col("bucket")) // one file per touched bucket per generation
-      .write.mode(mode).partitionBy("bucket").format("parquet")
-      .saveAsTable(s"${table}_grams")
-  }
+      maxSidecarBytes: Long = 64L << 20): Boolean =
+    lifecycle(spark, table).compactIfNeeded(maxBatches, maxSidecarBytes)
 
   /** The gram-posting rows of a (id, name, len) frame — postings keep
     * the 0-based gram POSITION (Gravano's position filter needs it at
@@ -369,7 +173,7 @@ object FuzzySearch {
       .select(col("id"), col("gram"), col("pos"), col("len"), col("bucket"))
 
   /** CRC32-derived posting bucket of one gram — the driver-side twin of
-    * the `pmod(crc32(...))` expression [[writeIndex]] stores. */
+    * the `pmod(crc32(...))` expression [[gramPostings]] stores. */
   private def bucketOf(g: String): Int = {
     val c = new java.util.zip.CRC32
     c.update(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -748,7 +552,7 @@ object FuzzySearch {
         s"thresholds only, got $threshold")
     val distPct = 100 - threshold.toInt
     // query gram OCCURRENCES, in-engine: the exact expressions
-    // writeIndex stores (code-point substr, 0-based posexplode, crc32
+    // gramPostings stores (code-point substr, 0-based posexplode, crc32
     // bucket) — external and stored grams agree by construction
     val qo = qDim.filter(col("qlen") >= GramQ)
       .select(col("qid"), col("qlen"), posexplode(

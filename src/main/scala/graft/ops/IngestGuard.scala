@@ -3,29 +3,24 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Delta-proportional id-disjointness enforcement for the standing indexes
-  * ([[Search.indexDelta]], [[Similarity.ivfIndexDelta]], …), and the
-  * replay filter ([[novel]]) their idempotent twins share.
-  *
-  * The precondition both ingests must enforce — "delta ids are NEW" — used
-  * to be checked by semi-joining the standing index's id column against the
-  * delta, an O(index) scan on every ingest that broke the modules' own
-  * contract ("ingest cost is independent of index size"). This sidecar
-  * restores the contract with the stats-row pattern: `{table}_guard` holds
-  * ONE serialized bloom filter row per ingested batch (build writes the
-  * first, each delta appends its own), so the ingest-time probe reads
-  *   k tiny fixed-size blobs (k = number of batches so far) + the delta,
-  * never the standing postings/inverted lists.
+/** Delta-proportional id-disjointness for the standing indexes: the
+  * guard every [[StandingIndex]] delta runs, and the materialized views of
+  * [[MatView]]. A delta's ids must be NEW — a re-ingested id silently
+  * doubles additive state — and checking that by semi-joining the
+  * standing id column against the delta would scan the index on every
+  * ingest. Instead `{table}_guard` holds ONE serialized bloom filter row
+  * per ingested batch (a build writes the first, each delta appends its
+  * own), so the ingest-time probe reads k tiny blobs (k = batches so far)
+  * plus the delta, never the standing data.
   *
   * Exactness: a bloom can false-positive but never false-negative, so a
   * MISS on every blob proves disjointness outright (the common case — one
   * delta-sized probe job and done). Only a HIT falls back to the exact
-  * standing-column semi-probe, i.e. the expensive path runs precisely when
-  * there is a real clash to report or an fpp-rare false suspect (per-id
-  * fpp is sized so a clean BATCH false-suspects with probability ≤ ~5%
-  * regardless of batch size — see [[fppFor]]).
-  * Either way the thrown/silent outcome is identical to the old exact
-  * check — PipelineOps-style result equality is unaffected.
+  * standing-column probe of the suspect sliver, i.e. the expensive path
+  * runs precisely when there is a real clash or an fpp-rare false suspect
+  * (per-id fpp is sized so a clean BATCH false-suspects with probability
+  * ≤ ~5% regardless of batch size — see [[fppFor]]). Either way the
+  * outcome is identical to the exact check.
   */
 object IngestGuard {
 
@@ -46,7 +41,7 @@ object IngestGuard {
   private def fppFor(n: Long): Double =
     math.max(1e-9, math.min(MaxFpp, FalseSuspectBudget / n))
 
-  private def guardTable(table: String) = s"${table}_guard"
+  private[ops] def guardTable(table: String) = s"${table}_guard"
 
   /** Executed-plan strings of the fast-path probes, recorded for the plan
     * guard spec: the contract "ingest never scans the standing index" is
@@ -124,19 +119,11 @@ object IngestGuard {
     }
   }
 
-  /** The shared compaction-trigger policy every guarded index family
-    * runs (bm25 postings, IVF lists, fuzzy grams): due when ingest
-    * generations exceed `maxBatches` OR the sidecar's cumulative blob
-    * bytes exceed `maxSidecarBytes` (each blob ships into the ingest
-    * probe plan as an expression literal, so the BYTE total must stay
-    * bounded regardless of batch sizes). ONE site, so a future trigger
-    * dimension cannot silently diverge between families. Reads k tiny
-    * sidecar rows, never the index. */
-  def compactionDue(spark: SparkSession, table: String, maxBatches: Int,
-      maxSidecarBytes: Long): Boolean =
-    due(sidecarSize(spark, table), maxBatches, maxSidecarBytes)
-
-  /** [[compactionDue]]'s rule over an already known sidecar size. */
+  /** The compaction-trigger policy over a guard size: due when ingest
+    * generations exceed `maxBatches` OR the cumulative blob bytes exceed
+    * `maxSidecarBytes` (each blob ships into the ingest probe plan as an
+    * expression literal, so the BYTE total must stay bounded regardless of
+    * batch sizes). */
   def due(size: (Long, Long), maxBatches: Int, maxSidecarBytes: Long): Boolean =
     size._1 > maxBatches || size._2 > maxSidecarBytes
 
@@ -214,28 +201,22 @@ object IngestGuard {
   }
 
   /** The rows of `delta` whose `idCol` is NOT already in `standing` —
-    * the replay filter every idempotent (at-least-once) ingest runs, so
-    * a redelivered streaming micro-batch is a no-op instead of a crash
-    * loop or duplicated index rows. Exact confirmation runs only for the
-    * bloom-suspect SLIVER of the delta (true replays + fpp-rare false
-    * hits): the standing id column is probed against the broadcast
-    * sliver, never anti-joined against the whole delta, so a clean batch
-    * pays just the bloom probe. An index without a sidecar treats every
-    * id as suspect. A filtered novel set is lineage-CUT (eager
+    * the replay filter every idempotent (at-least-once) ingest runs over
+    * the sidecar it read once ([[read]]), so a redelivered streaming
+    * micro-batch is a no-op instead of a crash loop or duplicated index
+    * rows. Exact confirmation runs only for the bloom-suspect SLIVER of
+    * the delta (true replays + fpp-rare false hits): the standing id
+    * column is probed against the broadcast sliver, never anti-joined
+    * against the whole delta, so a clean batch pays just the bloom probe.
+    * An index without a sidecar treats every id as suspect. The novel
+    * rows are disjoint from the standing index by construction — the
+    * whole of [[assertDisjoint]]'s check — so the ingest appends them
+    * without probing again. A filtered novel set is lineage-CUT (eager
     * localCheckpoint): it derives from the table the caller is about to
-    * append to, and the append would otherwise invalidate the cached
-    * plan mid-ingest — later writes would re-evaluate the anti-join
-    * against the just-appended rows and see an empty delta (the bug a
-    * (0, null) BM25 stats row once exposed). */
-  def novel(spark: SparkSession, table: String, delta: DataFrame,
-      idCol: String, standing: => DataFrame): DataFrame =
-    novel(read(spark, table), delta, idCol, standing)
-
-  /** [[novel]] over an already read sidecar. An ingest that filters with
-    * it appends the novel rows without probing again: they are disjoint
-    * from the standing index by construction, which is the whole of
-    * [[assertDisjoint]]'s check — so one idempotent ingest reads the
-    * sidecar once and probes the bloom once. */
+    * append to, and the append would otherwise invalidate the cached plan
+    * mid-ingest — later writes would re-evaluate the anti-join against
+    * the just-appended rows and see an empty delta (the bug a (0, null)
+    * BM25 stats row once exposed). */
   def novel(guard: Sidecar, delta: DataFrame, idCol: String,
       standing: => DataFrame): DataFrame = {
     def standingIds = standing.select(col(idCol))

@@ -361,7 +361,10 @@ object Multimodal {
     * derives from the table being appended to — the insert-time
     * cache-invalidation trap the other ingest twins document). Work per
     * batch ∝ batch size; the standing table is touched only through its
-    * key projection. */
+    * key projection. A streaming caller drains through
+    * [[graft.streaming.Streams.drain]], which drops the caller session's
+    * cached relations after each batch, so the next batch's anti-join
+    * lists what this one appended. */
   def phashIngest(spark: SparkSession, table: String,
       mediaBatch: DataFrame): Unit = {
     // dropDuplicates BEFORE the guard: the anti-join only sees the
@@ -374,40 +377,28 @@ object Multimodal {
     val fresh = ph.join(spark.table(table).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    if (!fresh.isEmpty) {
-      fresh.write.mode("append").saveAsTable(table)
-      // the append runs through the BATCH frame's session (foreachBatch
-      // hands over a micro-batch clone) and invalidates only THAT
-      // session's file-listing cache — without an explicit refresh the
-      // outer session's next anti-join reads the stale listing, re-admits
-      // already-ingested keys, and the replay guard silently dies
-      // (observed: duplicate hash rows on disk behind a stale count)
-      spark.catalog.refreshTable(table)
-    }
+    if (!fresh.isEmpty) fresh.write.mode("append").saveAsTable(table)
   }
+
+  /** The hash table as a [[StandingIndex]] rooted at `table` itself, for
+    * takedown: a plain table keyed by doc_id and keeping no guard (its
+    * ingest is [[phashIngest]]'s anti-join). */
+  private def phashIndex(spark: SparkSession, table: String): StandingIndex =
+    StandingIndex(spark, table, "doc_id",
+      Seq(StandingIndex.Table("", StandingIndex.Plain, phashOf(spark, _))),
+      Nil)
 
   /** DELETE images from the standing hash table — takedown reaches
     * DERIVED state (the [[DedupIndex.indexDelete]] contract for the
-    * multimodal layout, the one standing family that lacked it): a
-    * taken-down image's hash must stop surfacing as a near-dup partner,
-    * and image corpora are where takedown requests (DMCA, hash-list
-    * hits) actually arrive. Sidecar append only — never a table
-    * rewrite; [[phashLive]] anti-joins the broadcast sidecar above the
-    * standing scan; [[phashCompact]] folds physically. Unknown and
-    * already-deleted ids are ignored (presence confirms against the
-    * standing rows), so the op is idempotent under redelivery. */
+    * multimodal layout): a taken-down image's hash must stop surfacing as
+    * a near-dup partner, and image corpora are where takedown requests
+    * (DMCA, hash-list hits) actually arrive. Tombstones only, anti-joined
+    * by [[phashLive]] ([[StandingIndex.delete]]); unknown and
+    * already-deleted ids are ignored, so the op is idempotent under
+    * redelivery. */
   def phashDelete(spark: SparkSession, table: String,
-      ids: DataFrame): Unit = {
-    require(spark.catalog.tableExists(table),
-      s"Multimodal.phashDelete: no standing hash table at $table — " +
-        "build first")
-    val victims = spark.table(table).select(col("doc_id"))
-      .join(broadcast(Tombstones.freshOnly(spark, table,
-        ids.select(col("doc_id").cast("long").as("doc_id")).distinct(),
-        "doc_id")), Seq("doc_id"), "left_semi")
-      .distinct().localCheckpoint()
-    if (!victims.isEmpty) Tombstones.append(spark, table, victims, "doc_id")
-  }
+      ids: DataFrame): Unit =
+    phashIndex(spark, table).delete(ids)
 
   /** The LIVE (tombstone-filtered) view of a standing hash table — what
     * [[phashPairs]] probes between a delete and its compaction. The
@@ -416,21 +407,13 @@ object Multimodal {
   def phashLive(spark: SparkSession, table: String): DataFrame =
     Tombstones.filter(spark, table, spark.table(table), "doc_id")
 
-  /** Compact the standing hash table: rewrite WITHOUT the tombstoned
-    * rows through the crash-recoverable unpartitioned swap ([[Swap]]),
-    * then retire the sidecar — row-identical to the pre-compact
+  /** Compact the standing hash table without the tombstoned rows
+    * ([[StandingIndex.compact]]) — row-identical to the pre-compact
     * [[phashLive]] view (spec-gated), and a compacted-away doc becomes
-    * re-ingestable through [[phashIngest]]'s anti-join guard (its
-    * physical key row is gone). */
-  def phashCompact(spark: SparkSession, table: String): Unit = {
-    Swap.recoverUnpartitioned(spark, table)
-    Swap.stageThenSwap(spark, table,
-      Tombstones.filter(spark, table, spark.table(table), "doc_id")) {
-      (df, staged) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(staged)
-    }
-    Tombstones.drop(spark, table)
-  }
+    * re-ingestable through [[phashIngest]]'s anti-join (its physical key
+    * row is gone). */
+  def phashCompact(spark: SparkSession, table: String): Unit =
+    phashIndex(spark, table).compact()
 
   def resizeImages(spark: SparkSession, media: DataFrame,
       maxDim: Int = 4): DataFrame = {

@@ -134,22 +134,22 @@ object Phrase {
 
   // ------------------------------------------------ positional index
 
-  /** Materialize the positional index: `{table}_pos` (term, doc_id,
-    * positions: sorted 0-based int[]) bucketed+sorted on `term` — the
-    * [[Search.buildIndex]] layout discipline, one array row per
+  /** The positional index as a [[StandingIndex]]: `{table}_pos` (term,
+    * doc_id, positions: sorted 0-based int[]) bucketed and sorted on
+    * `term` — the [[Search.buildIndex]] layout, one array row per
     * (term, doc) instead of a tf scalar. `positions` are [[Dedup.words]]
     * offsets, so the index-backed probe and the scan-time predicate index
-    * the SAME token space. DROP-first for the same cached-plan cascade
-    * reasons as [[Search.buildIndex]]. */
-  def buildPositional(docs: DataFrame, table: String, buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_pos")
-    Tombstones.drop(spark, table) // stale deletes die with the generation
-    posPostings(docs).write.mode("overwrite")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(s"${table}_pos")
-    IngestGuard.write(spark, docs, "doc_id", table, overwrite = true)
-  }
+    * the SAME token space. No additive sidecar: a delta is the bucketed
+    * append plus its guard blob, and a delete is the tombstone append. */
+  private def lifecycle(spark: SparkSession, table: String,
+      buckets: Int): StandingIndex =
+    StandingIndex(spark, table, "doc_id",
+      Seq(StandingIndex.Table("_pos",
+        StandingIndex.Bucketed(buckets, "term"), posPostings)), Nil)
+
+  /** Materialize the positional index ([[StandingIndex.build]]). */
+  def buildPositional(docs: DataFrame, table: String, buckets: Int = 8): Unit =
+    lifecycle(docs.sparkSession, table, buckets).build(docs)
 
   /** (term, doc_id, positions) rows for a document frame. collect_list
     * order is partition-nondeterministic; the probe's shifted-
@@ -160,93 +160,28 @@ object Phrase {
       .groupBy(col("term"), col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
 
-  /** Incremental ingest: the delta's positional postings are derived from
-    * the DELTA ALONE and appended into the bucketed table — the standing
-    * corpus is never read or re-shuffled ([[Search.indexDelta]]'s
-    * contract; no stats sidecar here, so the whole ingest is the one
-    * bucketed append + a guard blob). Delta doc_ids must be NEW
-    * ([[IngestGuard.assertDisjoint]]) — a re-ingested id would duplicate
-    * its (term, doc_id) rows and double-count every occurrence. */
-  def positionalDelta(table: String, delta: DataFrame, buckets: Int = 8): Unit = {
-    val spark = delta.sparkSession
-    require(spark.catalog.tableExists(s"${table}_pos"),
-      s"positionalDelta: no standing index at $table — build first")
-    IngestGuard.assertDisjoint(spark, table, delta, "doc_id",
-      spark.table(s"${table}_pos"), "positionalDelta")
-    append(table, delta, buckets)
-  }
+  /** Append a delta of NEW doc_ids ([[StandingIndex.delta]]: a re-ingested
+    * id would duplicate its rows and double-count every occurrence). */
+  def positionalDelta(table: String, delta: DataFrame, buckets: Int = 8): Unit =
+    lifecycle(delta.sparkSession, table, buckets).delta(delta)
 
-  /** The delta's bucketed postings append and guard blob, for ids
-    * already known new. */
-  private def append(table: String, delta: DataFrame, buckets: Int): Unit = {
-    posPostings(delta).write.mode("append")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(s"${table}_pos")
-    IngestGuard.write(delta.sparkSession, delta, "doc_id", table,
-      overwrite = false)
-  }
-
-  /** At-least-once-safe ingest ([[Search.indexDeltaIdempotent]]'s recipe,
-    * stats-free): SKIPS already-indexed doc_ids instead of throwing — the
-    * idempotent form a streaming `foreachBatch` sink needs (a replayed doc
-    * would double-count its occurrences). The skip set
-    * is confirmed exactly only for the bloom-suspect SLIVER of the delta;
-    * the novel set's lineage is CUT (eager localCheckpoint) before the
-    * append — it derives from the postings table the append mutates.
-    * The novel rows append without [[positionalDelta]]'s second probe
-    * (one guard read and one bloom probe per batch; see
-    * [[IngestGuard.novel]]). Batch 0 bootstraps an empty catalog via a
-    * full build. */
+  /** [[positionalDelta]] that skips already-indexed doc_ids
+    * ([[StandingIndex.deltaIdempotent]]); a mid-swap catalog rolls
+    * forward first. */
   def positionalDeltaIdempotent(table: String, delta: DataFrame,
       buckets: Int = 8): Unit = {
-    val spark = delta.sparkSession
-    if (!spark.catalog.tableExists(s"${table}_pos")) { // bootstrap
-      buildPositional(delta, table, buckets); return
-    }
-    val novel = IngestGuard.novel(spark, table, delta, "doc_id",
-      spark.table(s"${table}_pos"))
-    if (!novel.isEmpty) append(table, novel, buckets)
+    lifecycle(delta.sparkSession, table, buckets).deltaIdempotent(delta); ()
   }
 
-  /** Tombstone deletion ([[Tombstones]] discipline): append the victim
-    * ids to the sidecar — nothing else; the positional family keeps no
-    * corpus-stats sidecar, so a delete IS the sidecar append, and the
-    * probe's broadcast anti-join makes victims unfindable immediately.
-    * Compaction folds them away physically. Unknown and re-deleted ids
-    * are no-ops. */
-  def positionalDelete(table: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_pos"),
-      s"positionalDelete: no standing index at $table — build first")
-    // lineage-cut before the append: freshOnly reads the sidecar the
-    // append below mutates (the insert-time cache-invalidation trap)
-    val fresh = Tombstones.freshOnly(spark, table,
-      ids.select(col("doc_id").cast("long").as("doc_id")).distinct(),
-      "doc_id").localCheckpoint()
-    if (!fresh.isEmpty)
-      Tombstones.append(spark, table, fresh, "doc_id")
-  }
+  /** Tombstone documents the index holds ([[StandingIndex.delete]]);
+    * unknown and re-deleted ids are no-ops. */
+  def positionalDelete(table: String, ids: DataFrame): Unit =
+    lifecycle(ids.sparkSession, table, 8).delete(ids)
 
-  /** Compact a delta-grown / tombstoned positional index back to
-    * build-fresh layout: one rewrite into exactly `buckets` files with
-    * victims physically excluded, staged + swapped crash-recoverably
-    * ([[Swap.stageThenSwap]]), ONE guard bloom over the surviving ids,
-    * sidecar retired LAST. */
-  def positionalCompact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
-    recoverPositionalSwap(spark, table)
-    Swap.stageThenSwap(spark, s"${table}_pos",
-        Tombstones.filter(spark, table, spark.table(s"${table}_pos"),
-          "doc_id")) { (df, staged) =>
-      df.repartition(buckets, col("term"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(staged)
-    }
-    IngestGuard.write(spark,
-      spark.table(s"${table}_pos").select(col("doc_id")).distinct(),
-      "doc_id", table, overwrite = true)
-    Tombstones.drop(spark, table)
-  }
+  /** Fold deltas and tombstones back to build-fresh layout
+    * ([[StandingIndex.compact]]). */
+  def positionalCompact(spark: SparkSession, table: String, buckets: Int = 8): Unit =
+    lifecycle(spark, table, buckets).compact()
 
   /** Fixture batch for the batch probe: (qid, phrase). */
   val BatchPhrases: Seq[(Int, Seq[String])] = Seq(
@@ -326,10 +261,10 @@ object Phrase {
         round(col("max_df").cast("double") / col("avg_df"), 4))
   }
 
-  /** Repair an interrupted [[positionalCompact]] swap — the
-    * [[Swap.recoverUnpartitioned]] state machine on the `_pos` names. */
+  /** Repair an interrupted [[positionalCompact]] swap
+    * ([[StandingIndex.recover]]). */
   def recoverPositionalSwap(spark: SparkSession, table: String): Boolean =
-    Swap.recoverUnpartitioned(spark, s"${table}_pos")
+    lifecycle(spark, table, 8).recover()
 
   /** Index-backed exact-phrase top-k — identical frame to [[phraseTopK]].
     *

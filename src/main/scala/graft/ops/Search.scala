@@ -368,46 +368,21 @@ object Search {
 
   // --------------------------------------------------- inverted index
 
-  /** Materialize the inverted index: `{table}_postings` (term, doc_id, dl,
-    * tf) bucketed+sorted on `term`, plus `{table}_stats` — ADDITIVE
-    * per-ingest rows (n_docs, sum_dl), summed at query time, so a delta
-    * ingest appends one row instead of rewriting (sums of integer-valued
-    * doubles are exact, and sum/count is the same division `avg` performs,
-    * so the derived avgdl is bit-identical to the scan path's). Built ONCE
-    * per corpus version; every subsequent query is a postings lookup,
-    * never a corpus scan — the repeated-query-load regime [[bm25TopK]]'s
-    * scaladoc defers to (the [[DedupIndex]] pattern applied to text
-    * retrieval).
-    *
-    * Bucketing on `term` means a point query's `term IN (...)` filter
-    * prunes to the matching buckets at scan time, and any term-keyed join
-    * or aggregation reads the index pre-clustered — the TB-scale corpus is
-    * never re-shuffled after build.
-    *
-    * NOT crash-atomic when rebuilding in place: the DROP-first discipline
-    * below is required (cached plans must cascade-uncache), so a crash
-    * between the DROPs and the saves leaves no standing index — queries
-    * fail loudly and [[indexDelta]] refuses to bootstrap over the torn
-    * state. Rebuilding a production index under live queries should stage
-    * through the [[compactIndex]] swap protocol instead. */
-  def buildIndex(docs: DataFrame, table: String, buckets: Int = 8): Unit = {
-    // rebuild-in-session safety (the FuzzySearch.writeIndex discipline):
-    // DROP first so cached plans derived from the old generation — e.g.
-    // a prior bm25TopKBatch's pinned postings join — cascade-uncache
-    // through the catalog; a bare overwrite-CTAS would try to RECACHE
-    // them mid-write against the dropped table (TABLE_OR_VIEW_NOT_FOUND)
-    // or let a canonically-equal later plan hit the stale generation
-    val spark = docs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_postings")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_stats")
-    Tombstones.drop(spark, table) // stale deletes die with the generation
-    postings(docs).write.mode("overwrite")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(s"${table}_postings")
-    statsRow(docs).write.mode("overwrite")
-      .format("parquet").saveAsTable(s"${table}_stats")
-    IngestGuard.write(docs.sparkSession, docs, "doc_id", table, overwrite = true)
-  }
+  /** The BM25 index as a [[StandingIndex]]: `{table}_postings` (term,
+    * doc_id, dl, tf) bucketed and sorted on `term`, so a point query's
+    * `term IN (...)` prunes to its buckets and a term-keyed join reads the
+    * index pre-clustered; beside it the additive `{table}_stats` rows
+    * ([[statsSidecar]]). The postings are the id-complete table: a doc
+    * whose text tokenizes to nothing stores no postings rows, so a delete
+    * cannot find it — such a doc can never surface in a result, but it
+    * stays counted in n_docs/avgdl until a rebuild (`IndexDeleteSpec`
+    * asserts the fixture corpus has none). */
+  private def lifecycle(spark: SparkSession, table: String,
+      buckets: Int): StandingIndex =
+    StandingIndex(spark, table, "doc_id",
+      Seq(StandingIndex.Table("_postings",
+        StandingIndex.Bucketed(buckets, "term"), postings)),
+      Seq(statsSidecar(spark, table)))
 
   private def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), Dedup.words(col("text")).as("w"))
@@ -421,308 +396,95 @@ object Search {
       .agg(count(lit(1)).cast("double").as("n_docs"),
         sum(col("dl")).as("sum_dl"))
 
-  /** Incremental ingest into a standing index: the delta's postings are
-    * derived map-side from the DELTA ALONE and appended into the bucketed
-    * table (the writer shuffles only the delta to match the bucket
-    * layout); corpus statistics merge by appending one additive
-    * (n_docs, sum_dl) row. The standing corpus is NEVER read or
-    * re-shuffled — ingest cost is independent of index size, the same
-    * contract `DedupIndex` proves for the LSH bands. Delta doc_ids must be
-    * NEW — enforced via [[IngestGuard]], because a violation is silent
-    * corruption: a re-ingested doc_id adds its tf rows and another
-    * n_docs/sum_dl contribution into the ADDITIVE stats, and every later
-    * [[bm25Indexed]] answer is wrong with no error anywhere. The guard
-    * probes the additive bloom sidecar, NOT the standing postings — the
-    * check itself is delta-proportional; the exact postings semi-probe
-    * only runs on a bloom hit (a real clash, about to throw anyway). */
-  def indexDelta(table: String, delta: DataFrame, buckets: Int = 8): Unit = {
-    ingest(table, delta, buckets, replay = false); ()
-  }
-
-  /** One delta ingest; `replay` filters already-indexed doc_ids
-    * ([[indexDeltaIdempotent]]) where the plain form refuses them. Returns
-    * the guard sidecar's (generations, bytes) after the ingest when it
-    * read the sidecar, for the compaction policy ([[streamedBatch]]). */
-  private def ingest(table: String, delta: DataFrame, buckets: Int,
-      replay: Boolean): Option[(Long, Long)] = {
-    val spark = delta.sparkSession
-    val postingsT = s"${table}_postings"
-    // the replay filter reads the guard once; the append after it needs
-    // no second probe, and the blobs price the compaction decision
-    val guard =
-      if (replay && spark.catalog.tableExists(postingsT))
-        Some(IngestGuard.read(spark, table))
-      else None
-    val batch = guard.fold(delta)(
-      IngestGuard.novel(_, delta, "doc_id", spark.table(postingsT)))
-    // ONE aggregate over the batch: the emptiness check, the additive
-    // stats row and the guard bloom's size. An empty delta is a no-op,
-    // mirroring IngestGuard.write's n == 0 skip: without this it would
-    // append an empty postings file generation and a (0.0, null) stats
-    // row — harmless to query-time sums, but generations inflate and an
-    // all-empty corpus would NPE compactIndex's stats fold
-    val stats = statsRow(batch).collect()(0)
-    val rows = stats.getDouble(0).toLong
-    if (rows == 0) return guard.map(_.size)
-    val before = guard.map(_.size).orElse {
-      // a first-ever delta BOOTSTRAPS the index (append creates the
-      // tables): nothing standing exists to clash with, so the guard is
-      // skipped — the streaming-ingest entry point starts from an empty
-      // catalog. But a missing postings table NEXT TO standing
-      // _stats/_guard is NOT a fresh catalog — it is an interrupted
-      // compaction swap, and bootstrapping over it would create a
-      // delta-only postings table whose scores fold against the old
-      // FULL-CORPUS additive stats: silently wrong answers. Try to roll
-      // the swap forward; refuse loudly if that doesn't restore.
-      if (!spark.catalog.tableExists(postingsT) &&
-          (spark.catalog.tableExists(s"${table}_stats") ||
-            spark.catalog.tableExists(s"${table}_guard"))) {
-        recoverIndexSwap(spark, table)
-        require(spark.catalog.tableExists(postingsT),
-          s"indexDelta refusing to bootstrap: ${table}_stats/_guard exist " +
-            s"but ${table}_postings is missing and no staged copy was found " +
-            "to roll forward — a delta-only postings table against standing " +
-            "full-corpus stats would silently mis-score every bm25Indexed " +
-            "answer. Restore the postings table (or drop the stale " +
-            "_stats/_guard sidecars) before ingesting")
-      }
-      if (spark.catalog.tableExists(postingsT)) {
-        IngestGuard.assertDisjoint(spark, table, batch, "doc_id",
-          spark.table(postingsT), "indexDelta")
-        None
-      } else Some((0L, 0L))
+  /** `{table}_stats`: one ADDITIVE (n_docs, sum_dl) row per build or
+    * delta, summed at query time — sums of integer-valued doubles are
+    * exact and sum/count is the division `avg` performs, so the derived
+    * avgdl is bit-identical to the scan path's. A delta's row is one
+    * aggregate over the batch that also counts it; a delete appends the
+    * victims' NEGATIVE row, priced from their standing (doc_id, dl)
+    * postings, so scores equal a rebuild without them; compaction folds
+    * the rows to one (an all-empty corpus folds to (0, 0), not a null). */
+  private def statsSidecar(spark: SparkSession,
+      table: String): StandingIndex.Additive = new StandingIndex.Additive {
+    val suffix = "_stats"
+    private def save(df: DataFrame, mode: String): Unit =
+      df.write.mode(mode).format("parquet").saveAsTable(s"${table}_stats")
+    def build(batch: DataFrame): Unit = save(statsRow(batch), "overwrite")
+    def delta(batch: DataFrame): (Option[Long], () => Unit) = {
+      val row = statsRow(batch).collect()(0)
+      (Some(row.getDouble(0).toLong), () =>
+        save(spark.createDataFrame(java.util.List.of(row), row.schema),
+          "append"))
     }
-    postings(batch).write.mode("append")
-      .bucketBy(buckets, "term").sortBy("term")
-      .format("parquet").saveAsTable(postingsT)
-    spark.createDataFrame(java.util.List.of(stats), stats.schema)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_stats")
-    val blob = IngestGuard.appendSized(spark, batch, "doc_id", table, rows)
-    before.map { case (generations, bytes) => (generations + 1, bytes + blob) }
+    def delete(victims: DataFrame): Unit =
+      save(spark.table(s"${table}_postings")
+        .join(broadcast(victims), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("dl")).distinct()
+        .agg((-count(lit(1))).cast("double").as("n_docs"),
+          (-sum(col("dl"))).as("sum_dl")), "append")
+    def compact(): Unit = {
+      val s = spark.table(s"${table}_stats")
+        .agg(coalesce(sum(col("n_docs")), lit(0.0)).as("n_docs"),
+          coalesce(sum(col("sum_dl")), lit(0.0)).as("sum_dl"))
+        .collect()(0)
+      import spark.implicits._
+      save(Seq((s.getDouble(0), s.getDouble(1))).toDF("n_docs", "sum_dl"),
+        "overwrite")
+    }
   }
 
-  /** DELETE documents from the standing index — the tombstone lifecycle
-    * ([[Tombstones]]): the postings are insert-only (delta appends never
-    * rewrite standing data), so at 100 TB a delete cannot be a rewrite
-    * either. A delete appends the victim doc_ids to the broadcast-sized
-    * `{table}_tombstones` sidecar plus ONE NEGATIVE additive stats row
-    * (−n_docs, −sum_dl priced from the victims' standing (doc_id, dl)
-    * rows — integer-valued doubles, so the query-time sum is exact), and
-    * every probe anti-joins the broadcast sidecar. The scores are then
-    * EXACTLY the from-scratch-rebuild-without-the-victims scores: tf/dl
-    * rows are filtered out before the per-term df aggregate, and
-    * n_docs/avgdl fold the negative row into the surviving corpus's
-    * values (spec-gated row identity in `IndexDeleteSpec`).
-    * [[compactIndex]] folds the tombstones away physically and drops the
-    * sidecar.
-    *
-    * Cost: one column-pruned (doc_id, dl) pass over the postings to
-    * price the victims + two tiny appends — never a postings rewrite.
-    * Unknown ids are ignored (no postings rows → no tombstone, no stats
-    * row); already-deleted ids are ignored ([[Tombstones.freshOnly]] —
-    * a re-delete must not double-subtract the stats). Re-ingesting a
-    * deleted id is refused until compaction (see [[Tombstones]]).
-    *
-    * ZERO-TERM caveat (distinct from "unknown ids"): a doc whose
-    * normalized text tokenizes to nothing was counted in the additive
-    * n_docs at build time but stores NO postings rows, so this presence
-    * probe cannot tell it from a never-ingested id (the guard bloom is
-    * approximate — a hit proves nothing) and deleting it leaves n_docs/
-    * avgdl including it until the next full rebuild. Consequences are
-    * bounded: such a doc can never SURFACE in any result (no postings),
-    * so the user-facing erasure invariant holds unconditionally; only
-    * the rebuild-score identity degrades, by one phantom doc in the
-    * corpus constants. An exact correction would need a doc-id→dl table
-    * the lexical family deliberately doesn't keep (the postings ARE the
-    * corpus). `IndexDeleteSpec` asserts the fixture corpus has no
-    * zero-term docs, so the spec-gated identity is exact there. */
-  def indexDelete(table: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_postings"),
-      s"indexDelete: no standing index at $table — build first")
-    val fresh = Tombstones.freshOnly(spark, table,
-      ids.select(col("doc_id").cast("long").as("doc_id")).distinct(),
-      "doc_id")
-    // the victims' standing (doc_id, dl) rows price the negative stats
-    // correction; lineage-cut before the writes (it reads the tombstone
-    // sidecar through freshOnly, and the sidecar append below would
-    // invalidate the cached plan mid-delete — the insert-time
-    // cache-invalidation trap, see indexDeltaIdempotent)
-    val victims = spark.table(s"${table}_postings")
-      .join(broadcast(fresh), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("dl")).distinct()
-      .localCheckpoint()
-    if (victims.isEmpty) return
-    // tombstones FIRST: a crash between the two appends then leaves the
-    // victims invisible to every probe (the user-facing invariant) with
-    // corpus stats uncorrected until rebuild — scores marginally stale.
-    // Stats-first would be worse on both axes: phantom docs in results,
-    // and a repair re-delete would double-subtract (freshOnly can only
-    // key off the tombstones). Not crash-atomic — two tables, no
-    // transaction log — same documented stance as the in-place rebuild.
-    Tombstones.append(spark, table, victims.select(col("doc_id")), "doc_id")
-    victims
-      .agg((-count(lit(1))).cast("double").as("n_docs"),
-        (-sum(col("dl"))).as("sum_dl"))
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_stats")
-  }
+  /** Materialize the inverted index once per corpus version; every later
+    * query is a postings lookup, never a corpus scan — the repeated-query
+    * regime [[bm25TopK]] defers to ([[StandingIndex.build]]). */
+  def buildIndex(docs: DataFrame, table: String, buckets: Int = 8): Unit =
+    lifecycle(docs.sparkSession, table, buckets).build(docs)
 
-  /** At-least-once-safe ingest: [[indexDelta]] that SKIPS already-indexed
-    * doc_ids instead of throwing — the idempotent form a streaming
-    * `foreachBatch` sink needs, where a crash between the postings append
-    * and the checkpoint commit means the SAME micro-batch is redelivered
-    * (throwing would crash-loop; ingesting would double-count). The skip
-    * set is confirmed exactly ONLY for the bloom-suspect SLIVER of the
-    * delta (true replays + fpp-rare false hits): the standing id column
-    * is probed against the broadcast sliver, never anti-joined against
-    * the whole delta, so a clean batch pays just the bloom probe and a
-    * replay pays sliver-proportional confirm work. A fully-replayed batch
-    * reduces to a no-op (no empty file generation, no zero stats row, no
-    * degenerate guard blob).
-    *
-    * The novel set's lineage is CUT (eager localCheckpoint) before any
-    * write: it is derived FROM the postings table, and the postings
-    * append would otherwise invalidate that cached plan mid-ingest —
-    * statsRow/guard would re-evaluate the anti-join against the
-    * just-appended postings and see an empty delta (a real bug this
-    * spec's first run caught: a (0, null) stats row silently poisoning
-    * avgdl/N for every later query).
-    *
-    * One probe per batch: the guard sidecar is collected once
-    * ([[IngestGuard.read]]) and the bloom probed once ([[IngestGuard
-    * .novel]]); the novel rows are then appended WITHOUT
-    * [[indexDelta]]'s `assertDisjoint` — they are disjoint by
-    * construction. One aggregate over them is the emptiness check, the
-    * stats row and the size of the batch's bloom
-    * ([[IngestGuard.appendSized]]). A bootstrap batch (no postings yet)
-    * takes the same path, with no probe at all. */
+  /** Append a delta of NEW doc_ids: its postings and stats row derive from
+    * the delta alone, so ingest cost is independent of index size
+    * ([[StandingIndex.delta]]; a re-ingested doc_id throws). */
+  def indexDelta(table: String, delta: DataFrame, buckets: Int = 8): Unit =
+    lifecycle(delta.sparkSession, table, buckets).delta(delta)
+
+  /** [[indexDelta]] that skips already-indexed doc_ids
+    * ([[StandingIndex.deltaIdempotent]]). */
   def indexDeltaIdempotent(table: String, delta: DataFrame,
       buckets: Int = 8): Unit = {
-    ingest(table, delta, buckets, replay = true); ()
+    lifecycle(delta.sparkSession, table, buckets).deltaIdempotent(delta); ()
   }
 
   /** A streaming micro-batch ([[graft.streaming.Streams.incrementalIndexing]]):
-    * [[indexDeltaIdempotent]], then — when `maxBatches` > 0 —
-    * [[compactIfNeeded]]'s policy, decided from the guard blobs the
-    * replay filter already read plus the one this batch appended, so
-    * the batch reads `{table}_guard` once. (A bootstrap over a
-    * rolled-forward swap falls back to reading the sidecar size.) */
+    * [[indexDeltaIdempotent]], then — when `maxBatches` > 0 — the
+    * compaction policy, decided from the guard size the replay filter read
+    * plus this batch's blob, so the batch reads `{table}_guard` once. */
   private[graft] def streamedBatch(table: String, batch: DataFrame,
       maxBatches: Int, buckets: Int = 8,
       maxSidecarBytes: Long = 64L << 20): Unit = {
-    val spark = batch.sparkSession
-    val after = ingest(table, batch, buckets, replay = true)
-    if (maxBatches > 0 && IngestGuard.due(
-        after.getOrElse(IngestGuard.sidecarSize(spark, table)),
-        maxBatches, maxSidecarBytes))
-      compactIndex(spark, table, buckets)
+    val index = lifecycle(batch.sparkSession, table, buckets)
+    val after = index.deltaIdempotent(batch)
+    if (maxBatches > 0) index.compactIfDue(after, maxBatches, maxSidecarBytes)
   }
 
-  /** Compact a delta-grown index back to build-fresh layout. Every
-    * [[indexDelta]] appends its own file set per bucket, one stats row,
-    * and one guard blob — correct forever, but after many ingests a
-    * term-bucket read touches one file PER INGEST (the small-files
-    * problem; at a 100 TB corpus with hourly ingest that is thousands of
-    * files per bucket within weeks) and the guard probe carries one bloom
-    * per batch. Compaction rewrites the postings once into exactly
-    * `buckets` files (same bucket spec, so queries and future delta
-    * appends are layout-identical), collapses the additive stats to one
-    * row, and rebuilds ONE guard bloom over the full id set. Cost is a
-    * single index-sized rewrite — the scheduled-maintenance price every
-    * LSM-shaped store pays; queries before/after are row-identical
-    * (spec-gated).
-    *
-    * The rewrite stages into `{table}_postings_compacting`, then swaps via
-    * rename-away ([[Swap.stageThenSwap]]: live → `_retired`, staged →
-    * live, drop `_retired`) — Spark cannot overwrite a table it is
-    * reading, and a single atomic table-replace DDL doesn't exist, so the
-    * swap is instead made CRASH-RECOVERABLE: every intermediate catalog
-    * state is one [[recoverIndexSwap]] call away from a readable index
-    * (roll the staged copy forward, or drop a leftover), and the ingest
-    * path refuses to bootstrap over a mid-swap catalog (see [[indexDelta]]) —
-    * the silent-wrong-scores hazard of a delta-only postings table
-    * against full-corpus additive stats cannot arise. */
-  def compactIndex(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
-    recoverIndexSwap(spark, table) // roll forward/clean any interrupted swap
-    // the rewrite folds tombstones away physically (the delete lifecycle's
-    // deferred rewrite — see Tombstones); the sidecar is dropped LAST, so
-    // a crash at any intermediate state leaves its anti-join a no-op
-    Swap.stageThenSwap(spark, s"${table}_postings", Tombstones.filter(spark,
-        table, spark.table(s"${table}_postings"), "doc_id")) { (df, staged) =>
-      // repartition on the SAME hash family bucketing uses (Murmur3), so
-      // each write task holds exactly one bucket -> one file per bucket
-      df.repartition(buckets, col("term"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(staged)
-    }
-    // additive stats rows fold to one exact row (integer-valued doubles);
-    // k tiny rows collect to the driver — never corpus data
-    // coalesce: an index built over an empty corpus has a null-sum stats
-    // fold — compacting it should produce the same (0, 0) row a fresh
-    // empty build would, not NPE on getDouble
-    val s = spark.table(s"${table}_stats")
-      .agg(coalesce(sum(col("n_docs")), lit(0.0)).as("n_docs"),
-        coalesce(sum(col("sum_dl")), lit(0.0)).as("sum_dl"))
-      .collect()(0)
-    import spark.implicits._
-    Seq((s.getDouble(0), s.getDouble(1))).toDF("n_docs", "sum_dl")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_stats")
-    IngestGuard.write(spark,
-      spark.table(s"${table}_postings").select(col("doc_id")).distinct(),
-      "doc_id", table, overwrite = true)
-    // the victims are physically gone (rewrite above), the stats fold
-    // already summed their negative rows into the surviving corpus's
-    // values, and the guard bloom no longer carries them (re-ingest of a
-    // deleted id becomes a plain insert again) — retire the sidecar
-    Tombstones.drop(spark, table)
-  }
+  /** Tombstone documents ([[StandingIndex.delete]]); the negative stats
+    * row keeps [[bm25Indexed]]'s scores equal to a rebuild without them. */
+  def indexDelete(table: String, ids: DataFrame): Unit =
+    lifecycle(ids.sparkSession, table, 8).delete(ids)
 
-  /** Repair an interrupted [[compactIndex]] swap. The swap's catalog
-    * states and their repairs (all idempotent, all cheap DDL — never a
-    * data rewrite):
-    *   - staged + live both present (crash before the rename-away): the
-    *     staged copy is DROPPED — the live index is authoritative and the
-    *     next compaction restages from it;
-    *   - staged + `_retired`, live missing (crash mid-swap): ROLL FORWARD —
-    *     the staged copy is complete by construction, rename it live and
-    *     drop the retired generation;
-    *   - live + `_retired` (crash after the swap, before the drop): drop
-    *     the leftover retired generation.
-    * A crash after the swap but before the stats fold / guard rebuild
-    * needs no repair at all: multi-row stats and multi-blob guards are the
-    * normal additive state — re-running compaction folds them. Returns
-    * true iff a roll-forward restored a missing live table. */
+  /** Fold a delta-grown index back to `buckets` files, one stats row and
+    * one guard bloom ([[StandingIndex.compact]]). */
+  def compactIndex(spark: SparkSession, table: String, buckets: Int = 8): Unit =
+    lifecycle(spark, table, buckets).compact()
+
+  /** Repair an interrupted [[compactIndex]] swap ([[StandingIndex.recover]]). */
   def recoverIndexSwap(spark: SparkSession, table: String): Boolean =
-    Swap.recoverUnpartitioned(spark, s"${table}_postings")
+    lifecycle(spark, table, 8).recover()
 
-  /** Compaction POLICY: compact when the index has accumulated more than
-    * `maxBatches` ingest generations OR the guard sidecar has grown past
-    * `maxSidecarBytes`. The guard sidecar's blob count IS the generation
-    * count (one row per build/ingest), so the decision reads k tiny
-    * rows — never the index. Returns whether compaction ran.
-    *
-    * The byte bound exists because each sidecar blob is embedded into the
-    * ingest probe plan as an expression literal ([[IngestGuard
-    * .suspectPredicate]]'s OR-chain) and shipped to every task: blob size
-    * scales with BATCH size (per-batch fpp sizing, ~6.5 bytes/id at the
-    * floor), so a few huge batches can bloat the probe plan to tens of MB
-    * while staying far under any sane generation count. Compaction folds
-    * the sidecar to ONE bloom over the full id set, so the probe plan's
-    * literal payload stays bounded regardless of ingest batch sizes.
-    *
-    * This is the scheduled-maintenance trigger a streaming ingest wires
-    * in ([[graft.streaming.Streams.incrementalIndexing]]): file
-    * generations, additive stats rows, and guard blobs all fold back to
-    * one before the per-batch accumulation degrades bucket reads. */
+  /** [[StandingIndex.compactIfNeeded]]: compact past `maxBatches` ingest
+    * generations or `maxSidecarBytes` of guard blobs. */
   def compactIfNeeded(spark: SparkSession, table: String,
       maxBatches: Int = 16, buckets: Int = 8,
-      maxSidecarBytes: Long = 64L << 20): Boolean = {
-    val due = IngestGuard.compactionDue(spark, table, maxBatches,
+      maxSidecarBytes: Long = 64L << 20): Boolean =
+    lifecycle(spark, table, buckets).compactIfNeeded(maxBatches,
       maxSidecarBytes)
-    if (due) compactIndex(spark, table, buckets)
-    due
-  }
 
   /** BM25 top-k from the materialized index — SAME RESULT as [[bm25TopK]]
     * (the oracle and `SearchIndexSpec` both gate it): tf/dl come from the

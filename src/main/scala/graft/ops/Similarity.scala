@@ -508,79 +508,64 @@ object Similarity {
     }
   }
 
+  /** The IVF index of any codec as a [[StandingIndex]]: `{table}_ivf`
+    * holds (vec_id, v, nrm, label, cell[, code]) PARTITIONED BY cell, so
+    * the inverted lists are partition directories and a probe's cell
+    * equi-join prunes at SCAN time via dynamic partition pruning. A batch's
+    * rows are its vectors assigned against `cent` and encoded by `codec`
+    * — trained first when `train` (a build), else against the stored,
+    * FROZEN artifacts (as in production IVF: the standing corpus is never
+    * re-read or re-assigned, and drift is retrain's business —
+    * [[retrainIfNeeded]]). No additive sidecar: per-cell statistics are
+    * computed from the lists at read time. */
+  private def ivfIndex(spark: SparkSession, table: String,
+      cent: => DataFrame, codec: => Codec, train: Boolean): StandingIndex =
+    StandingIndex(spark, table, "vec_id",
+      Seq(StandingIndex.Table("_ivf", StandingIndex.Partitioned("cell"),
+        batch => codec.encode(batch, assignedCells(batch, cent), cent,
+          table, train))), Nil)
+
+  /** [[ivfIndex]] over the stored quantizers, for every operation after
+    * the build. The codec is read only when a delta has rows to encode. */
+  private def ivfIndex(spark: SparkSession, table: String): StandingIndex =
+    ivfIndex(spark, table, spark.table(s"${table}_centroids"),
+      trainedCodec(spark, table), train = false)
+
   /** Materialize the IVF index under `codec` — the "production builds
     * the inverted lists once" promise of [[annIvfTrainedTopK]] made
-    * real, the [[Search.buildIndex]] pattern applied to ANN:
-    * `{table}_ivf` holds (vec_id, v, nrm, label, cell[, code]) PARTITIONED
-    * BY cell, so the inverted lists are partition directories and a
-    * probe's cell equi-join prunes at SCAN time via dynamic partition
-    * pruning (the layout_dpp discipline); `{table}_centroids` holds the
-    * trained coarse quantizer and the codec's artifact table its trained
-    * code quantizer. Build cost = the centroid aggregation + one corpus
-    * argmin pass + the codec's training and encode; every query after
-    * reads only its probed cells — never the corpus. */
+    * real: `{table}_centroids` holds the trained coarse quantizer and the
+    * codec's artifact table its trained code quantizer. Build cost = the
+    * centroid aggregation + one corpus argmin pass + the codec's training
+    * and encode; every query after reads only its probed cells — never
+    * the corpus. The OTHER codecs' artifacts are dropped: [[Codec.stored]]
+    * decides by which artifact tables exist, so a stale `_pqbook` would
+    * silently retrain or ingest the wrong codec. */
   def buildIvfIndex(embeddings: DataFrame, table: String,
       codec: Codec): Unit = {
     val spark = embeddings.sparkSession
-    dropStaleArtifacts(spark, table, codec)
+    Codec.all.flatMap(_.artifact).distinct
+      .filterNot(codec.artifact.contains)
+      .foreach(a => spark.sql(s"DROP TABLE IF EXISTS ${table}_$a"))
     val cent = graft.CacheScope.track(Centroids.centroidVectors(embeddings))
     cent.write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_centroids")
-    writeLists(codec.encode(embeddings, assignedCells(embeddings, cent), cent,
-      table, train = true), table, "overwrite")
-    graft.ops.IngestGuard.write(spark, embeddings, "vec_id", table,
-      overwrite = true)
+    ivfIndex(spark, table, cent, codec, train = true).build(embeddings)
   }
 
   def buildIvfIndex(embeddings: DataFrame, table: String): Unit =
     buildIvfIndex(embeddings, table, Codec.Flat)
 
-  /** Write list rows cell-partitioned: one file per (touched) cell per
-    * generation, from generation zero on. */
-  private def writeLists(rows: DataFrame, table: String,
-      mode: String): Unit =
-    rows.repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").format("parquet")
-      .saveAsTable(s"${table}_ivf")
+  /** Append a delta of NEW vec_ids to a standing IVF index of any codec,
+    * assigned and encoded against the stored quantizers
+    * ([[StandingIndex.delta]]; a re-ingested vector would silently
+    * duplicate inside its list, so it throws). A first delta against a
+    * trained but listless catalog bootstraps the lists. */
+  def ivfIndexDelta(table: String, delta: DataFrame): Unit =
+    ivfIndex(delta.sparkSession, table).delta(delta)
 
-  /** Incremental ingest into a standing IVF index of any codec: delta
-    * vectors are assigned against the STORED centroids and encoded
-    * against the stored codec artifact — the quantizers are FROZEN at
-    * build time, as in production IVF, so the standing corpus is never
-    * re-read or re-assigned and ingest cost is delta-sized (the
-    * [[Search.indexDelta]] contract for ANN). The centroids drift from
-    * what full retraining would give as deltas accumulate; that drift is
-    * measurable by comparing `sim_ann_ivf_index_delta` against a fresh
-    * [[buildIvfIndex]] — the re-train-vs-ingest trade every production
-    * IVF schedules ([[retrainIfNeeded]]). An empty delta is a no-op (no
-    * empty list-file generation). Otherwise:
-    *
-    *  1. The frozen trained artifacts are a PREREQUISITE (ingest
-    *     assigns/encodes against them) — fail with intent, not a bare
-    *     table-not-found five calls deep.
-    *  2. A first delta against a trained-but-listless catalog
-    *     bootstraps the lists; nothing standing exists to clash with.
-    *     A missing `_ivf` NEXT TO a standing `_guard` is NOT that — it
-    *     is an interrupted compaction swap; bootstrapping would create
-    *     delta-only lists that a guard sized for the full corpus then
-    *     "protects": silent data loss at query time. Roll the swap
-    *     forward; refuse loudly if that fails.
-    *  3. vec_id disjointness is ENFORCED via [[graft.ops.IngestGuard]]
-    *     (the additive bloom sidecar — the ingest never reads the
-    *     standing lists; the exact semi-probe runs only on a bloom hit):
-    *     a re-ingested vector would silently duplicate inside its list. */
-  def ivfIndexDelta(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (delta.isEmpty) return
-    val codec = trainedCodec(spark, table)
-    if (spark.catalog.tableExists(s"${table}_ivf"))
-      graft.ops.IngestGuard.assertDisjoint(spark, table, delta, "vec_id",
-        spark.table(s"${table}_ivf"), "ivfIndexDelta")
-    append(table, delta, codec)
-  }
-
-  /** The stored codec, once the catalog is known to hold a standing (or
-    * bootstrappable) index — steps 1 and 2 of [[ivfIndexDelta]]. */
+  /** The stored codec, whose frozen artifacts a delta assigns and encodes
+    * against — a prerequisite, so fail with intent, not a bare
+    * table-not-found five calls deep. */
   private def trainedCodec(spark: SparkSession, table: String): Codec = {
     val codec = Codec.stored(spark, table)
     val names = ("centroids" +: codec.artifact.toSeq).map(a => s"${table}_$a")
@@ -589,115 +574,38 @@ object Similarity {
         "run the matching build first (an IVF-family index cannot " +
         "bootstrap from an empty catalog; assignment/encoding require " +
         "the stored quantizers)")
-    if (!spark.catalog.tableExists(s"${table}_ivf") &&
-        spark.catalog.tableExists(s"${table}_guard")) {
-      recoverIvfSwap(spark, table)
-      require(spark.catalog.tableExists(s"${table}_ivf"),
-        s"ivfIndexDelta refusing to bootstrap: ${table}_guard exists but " +
-          s"${table}_ivf is missing and no staged copy was found to roll " +
-          "forward — delta-only inverted lists under a full-corpus guard " +
-          "would silently drop the standing vectors from every probe. " +
-          "Restore the lists (or drop the stale _guard) before ingesting")
-    }
     codec
   }
 
-  /** The delta's assigned, encoded list rows and guard blob, for vec_ids
-    * already known new. */
-  private def append(table: String, delta: DataFrame, codec: Codec): Unit = {
-    val spark = delta.sparkSession
-    val cent = spark.table(s"${table}_centroids")
-    writeLists(codec.encode(delta, assignedCells(delta, cent), cent, table,
-      train = false), table, "append")
-    graft.ops.IngestGuard.write(spark, delta, "vec_id", table,
-      overwrite = false)
-  }
-
-  /** Drop the OTHER codecs' trained artifacts when (re)building a table
-    * under `codec` — [[Codec.stored]] decides by which artifact tables
-    * exist, so a stale `_pqbook` left by a previous PQ build under the
-    * same name would silently retrain/ingest the wrong codec. */
-  private def dropStaleArtifacts(spark: SparkSession, table: String,
-      codec: Codec): Unit = {
-    Codec.all.flatMap(_.artifact).distinct
-      .filterNot(codec.artifact.contains)
-      .foreach(a => spark.sql(s"DROP TABLE IF EXISTS ${table}_$a"))
-    // stale tombstones die with the generation they were cut against —
-    // a fresh build's vec_ids owe nothing to a previous index's deletes
-    graft.ops.Tombstones.drop(spark, table)
-  }
-
-  /** At-least-once-safe IVF ingest — [[ivfIndexDelta]]'s idempotent twin
-    * (the [[Search.indexDeltaIdempotent]] contract for ANN, every
-    * codec): already-indexed vec_ids are SKIPPED through the shared
-    * [[IngestGuard.novel]] replay filter, so a replayed streaming
-    * micro-batch is a no-op instead of duplicate list entries or a crash
-    * loop; the novel survivors are assigned and encoded against the
-    * stored frozen artifacts exactly as a batch delta would be, and
-    * appended without [[ivfIndexDelta]]'s second probe (one guard read
-    * and one bloom probe per batch). */
+  /** [[ivfIndexDelta]] that skips already-indexed vec_ids
+    * ([[StandingIndex.deltaIdempotent]]), every codec. */
   def ivfIndexDeltaIdempotent(table: String, delta: DataFrame): Unit = {
-    val spark = delta.sparkSession
-    if (!spark.catalog.tableExists(s"${table}_ivf")) {
-      ivfIndexDelta(table, delta); return
-    }
-    val novel = graft.ops.IngestGuard.novel(spark, table, delta, "vec_id",
-      spark.table(s"${table}_ivf"))
-    if (!novel.isEmpty) append(table, novel, trainedCodec(spark, table))
+    ivfIndex(delta.sparkSession, table).deltaIdempotent(delta); ()
   }
 
-  /** Compact a delta-grown IVF index: every [[ivfIndexDelta]] appends its
-    * own file set into each touched cell partition plus one guard blob —
-    * after many ingests a probed cell reads one file per ingest (the
-    * [[Search.compactIndex]] small-files problem in partition-dir form).
-    * Rewrites the cell-partitioned lists once through the
-    * crash-recoverable [[Swap.compactPartitioned]] (same layout, so
-    * DPP-pruned probes and future deltas are unchanged), rebuilds one
-    * guard bloom. The trained artifacts — the frozen quantizers — are
-    * NOT touched: compaction is a layout operation, never a retrain
-    * (drift stays measurable via `sim_ann_ivf_drift`). Queries
-    * before/after are row-identical. */
-  def compactIvfIndex(spark: SparkSession, table: String): Unit = {
-    recoverIvfSwap(spark, table) // roll forward/clean any interrupted swap
-    // the rewrite folds tombstoned vectors away physically (the delete
-    // lifecycle's deferred rewrite); the sidecar is dropped LAST, so a
-    // crash at any intermediate state leaves its anti-join a no-op
-    Swap.compactPartitioned(spark, s"${table}_ivf", "cell",
-      df => graft.ops.Tombstones.filter(spark, table, df, "vec_id"))
-    graft.ops.IngestGuard.write(spark,
-      spark.table(s"${table}_ivf").select(col("vec_id")),
-      "vec_id", table, overwrite = true)
-    graft.ops.Tombstones.drop(spark, table)
-  }
+  /** Compact a delta-grown IVF index: one file per cell again, without
+    * the tombstoned vectors, one guard bloom ([[StandingIndex.compact]]).
+    * The trained artifacts are NOT touched: compaction is a layout
+    * operation, never a retrain (drift stays measurable via
+    * `sim_ann_ivf_drift`). Queries before/after are row-identical. */
+  def compactIvfIndex(spark: SparkSession, table: String): Unit =
+    ivfIndex(spark, table).compact()
 
   /** Repair an interrupted [[compactIvfIndex]] swap on the
-    * cell-partitioned lists ([[Swap.recoverPartitioned]]); returns true
-    * iff a roll-forward restored a missing live table. */
+    * cell-partitioned lists ([[StandingIndex.recover]]). */
   def recoverIvfSwap(spark: SparkSession, table: String): Boolean =
-    Swap.recoverPartitioned(spark, s"${table}_ivf")
+    ivfIndex(spark, table).recover()
 
-  /** Compaction POLICY for the IVF lists — [[Search.compactIfNeeded]]
-    * applied to ANN: compact when ingest generations exceed `maxBatches`
-    * or the guard sidecar's cumulative blob bytes exceed
-    * `maxSidecarBytes` (each blob ships into the ingest probe plan as an
-    * expression literal, so the BYTE total must stay bounded regardless
-    * of batch sizes — the same rationale as the Search twin). Reads k
-    * tiny sidecar rows, never the lists. Returns whether compaction ran.
-    *
-    * Per-cell FILE COUNT — the DPP-probed-read latency killer under a
-    * high ingest cadence — is subsumed by the generation bound: every
-    * delta write repartitions by cell first, so one generation appends
-    * at most ONE file per touched cell, and a probed cell reads ≤
+  /** [[StandingIndex.compactIfNeeded]] for the IVF lists. Per-cell FILE
+    * COUNT — the DPP-probed-read latency killer under a high ingest
+    * cadence — is subsumed by the generation bound: one generation appends
+    * at most ONE file per touched cell, so a probed cell reads ≤
     * `maxBatches` + build files between compactions (spec-gated in
     * AnnLifecycleSpec's small-delta cadence test). */
   def compactIvfIfNeeded(spark: SparkSession,
       table: String, maxBatches: Int = 16,
-      maxSidecarBytes: Long = 64L << 20): Boolean = {
-    val due = graft.ops.IngestGuard.compactionDue(spark, table, maxBatches,
-      maxSidecarBytes)
-    if (due) compactIvfIndex(spark, table)
-    due
-  }
+      maxSidecarBytes: Long = 64L << 20): Boolean =
+    ivfIndex(spark, table).compactIfNeeded(maxBatches, maxSidecarBytes)
 
   /** The exact probe-and-score every raw-vector probe shares: each query
     * of `q0` (qid, qv, qnrm, xq, + any columns `matches` reads) probes its
@@ -935,8 +843,8 @@ object Similarity {
     // outlive this query into a caller's NEXT index rebuild (bench
     // iteration 2) — whose DROP re-resolves every live cached plan
     // against the mid-rebuild catalog and throws TABLE_OR_VIEW_NOT_FOUND
-    // (the drop-side twin of the INSERT-invalidation gotcha at
-    // IngestGuard.novel). The checkpoint cuts the catalog
+    // (the drop-side twin of the INSERT-invalidation gotcha the replay
+    // filter of the idempotent deltas cuts). The checkpoint cuts the catalog
     // lineage to an in-memory RDD: widen·k×nQueries rows + labels.
     val wideLabeled =
       annIvfPqIndexedTopK(spark, table, q, widen * k, nprobe, -1)
@@ -1140,36 +1048,12 @@ object Similarity {
     graft.ops.Tombstones.filter(spark, table,
       spark.table(s"${table}_ivf"), "vec_id")
 
-  /** DELETE vectors from the standing IVF index — the
-    * [[graft.ops.Tombstones]] lifecycle for ANN (identical for every
-    * codec: all share the `_ivf` lists): append the victim vec_ids to
-    * the broadcast-sized `{table}_tombstones` sidecar; every probe
-    * anti-joins it; [[compactIvfIndex]] folds the victims away
-    * physically, rebuilds the guard bloom without them (re-ingest
-    * becomes a plain insert again), and drops the sidecar;
-    * [[retrainIfNeeded]] rebuilds from a corpus filtered through it.
-    * Unlike the BM25 family there is no additive stats table to correct
-    * — per-cell/df statistics are computed from the lists at read time.
-    * Unknown and already-deleted ids are ignored; delete cost is one
-    * column-pruned vec_id pass to confirm presence plus a tiny sidecar
-    * append — never a list rewrite. */
-  def ivfIndexDelete(table: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_ivf"),
-      s"ivfIndexDelete: no standing lists at $table — build first")
-    // only ids actually standing get tombstoned (the sidecar ships into
-    // every probe plan as a broadcast — don't let misses accumulate),
-    // and only ids not ALREADY tombstoned (idempotent re-delete).
-    // Lineage-cut before the append: presence derives from the sidecar
-    // via freshOnly, and the append below would invalidate that plan
-    val victims = spark.table(s"${table}_ivf").select(col("vec_id"))
-      .join(broadcast(graft.ops.Tombstones.freshOnly(spark, table,
-        ids.select(col("vec_id").cast("long").as("vec_id")).distinct(),
-        "vec_id")), Seq("vec_id"), "left_semi")
-      .distinct().localCheckpoint()
-    if (!victims.isEmpty)
-      graft.ops.Tombstones.append(spark, table, victims, "vec_id")
-  }
+  /** DELETE vectors from the standing IVF index, every codec (all share
+    * the `_ivf` lists): tombstones only, anti-joined by every probe,
+    * folded by [[compactIvfIndex]] and filtered out of the corpus
+    * [[retrainIfNeeded]] rebuilds from ([[StandingIndex.delete]]). */
+  def ivfIndexDelete(table: String, ids: DataFrame): Unit =
+    ivfIndex(ids.sparkSession, table).delete(ids)
 
   /** Normalize a caller-supplied (qid, v) query frame into the q0 form
     * every indexed entry point consumes (qid, qv, qnrm, xq). qnrm and xq

@@ -3,19 +3,20 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The crash-recoverable staged swaps every standing index's compaction
-  * runs. Spark cannot overwrite a table it is reading and no atomic
-  * table-replace DDL exists, so a compaction rewrite stages
+/** The crash-recoverable staged swaps every compaction runs — the data
+  * tables of each [[StandingIndex]] and the materialized views of
+  * [[MatView]] and [[Scd]]. Spark cannot overwrite a table it is reading
+  * and no atomic table-replace DDL exists, so a compaction rewrite stages
   * `{live}_compacting`, renames the live generation to `{live}_retired`
   * and the staged copy in — every intermediate catalog state is one
   * recover call away from a readable table, and delta ingest refuses to
   * bootstrap over a mid-swap catalog. Two schemes:
   *
   *  - UNPARTITIONED tables ([[stageThenSwap]] / [[recoverUnpartitioned]]:
-  *    BM25 and positional postings, fuzzy names, dedup bands).
+  *    bucketed and plain layouts).
   *  - PARTITIONED tables ([[compactPartitioned]] /
-  *    [[recoverPartitioned]]: IVF cell lists, fuzzy gram buckets), which
-  *    need the MSCK/locations dance and a different DROP order. */
+  *    [[recoverPartitioned]]), which need the MSCK/locations dance and a
+  *    different DROP order. */
 object Swap {
 
   /** Stage `df` as the next generation of `live` and swap it in.

@@ -4,39 +4,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deletion from the standing indexes — the tombstone sidecar every
-  * LSM-shaped store grows once takedown/right-to-erasure arrives: the
-  * index families ([[Search]] BM25 postings, [[Similarity]] IVF lists)
-  * are insert-only by design (delta appends never rewrite the standing
-  * data), so at 100 TB a delete CANNOT be a rewrite either. Instead a
-  * delete appends the victim ids to a tiny `{table}_tombstones` sidecar;
-  * every probe anti-joins the (broadcast) sidecar, and compaction — the
-  * rewrite the lifecycle already schedules — folds the tombstones away
-  * physically and drops the sidecar.
+  * LSM-shaped store grows once takedown/right-to-erasure arrives. Every
+  * [[StandingIndex]] family is insert-only by design (delta appends never
+  * rewrite the standing data), so at 100 TB a delete CANNOT be a rewrite
+  * either. Instead a delete appends the victim ids to a tiny
+  * `{table}_tombstones` sidecar; every probe anti-joins the (broadcast)
+  * sidecar, and compaction — the rewrite the lifecycle already schedules —
+  * folds the tombstones away physically and drops the sidecar.
   *
-  * Cost model: delete is sidecar-append-sized (plus, for BM25, one
-  * column-pruned pass to price the victims' negative stats row); probe
-  * overhead is one broadcast hash anti-join — never a shuffle, never a
-  * standing-data scan; compaction cost is unchanged (the rewrite was
-  * already index-sized). The sidecar is broadcast into probe plans, so
-  * the same byte-bound rationale as [[IngestGuard]] applies: fold it
-  * away via compaction before it grows past broadcast scale.
+  * Cost model: delete is sidecar-append-sized (plus one column-pruned
+  * presence pass, and for BM25 one to price the victims' negative stats
+  * row); probe overhead is one broadcast hash anti-join — never a shuffle,
+  * never a standing-data scan; compaction cost is unchanged (the rewrite
+  * was already index-sized). The sidecar is broadcast into probe plans, so
+  * the same byte-bound rationale as [[IngestGuard]] applies: fold it away
+  * via compaction before it grows past broadcast scale.
   *
-  * Re-ingest interplay: a deleted id stays PHYSICALLY present (and in
-  * the guard bloom) until compaction, so re-inserting it before a
-  * compact is refused by [[IngestGuard.assertDisjoint]] (strict delta)
-  * or skipped (idempotent delta) — the honest contract, because an
-  * append of the new rows would be shadowed by the standing tombstone.
-  * After compaction the id is gone everywhere and re-ingest is a plain
-  * insert. */
+  * Re-ingest interplay: a deleted id stays PHYSICALLY present (and in the
+  * guard bloom) until compaction, so re-inserting it before a compact is
+  * refused (strict delta) or skipped (idempotent delta) — the honest
+  * contract, because an append of the new rows would be shadowed by the
+  * standing tombstone. After compaction the id is gone everywhere and
+  * re-ingest is a plain insert. */
 object Tombstones {
 
   /** Sidecar table name for an index family root. */
   def sidecar(table: String): String = s"${table}_tombstones"
 
-  /** The subset of `ids` NOT already tombstoned — the guard a caller
-    * needs when a delete has side effects beyond the sidecar (BM25's
-    * negative stats row must not double-count a re-deleted id). Plain
-    * ids when no sidecar exists. */
+  /** The subset of `ids` NOT already tombstoned, so a re-delete appends
+    * nothing and corrects no additive sidecar twice (BM25's negative stats
+    * row). Plain ids when no sidecar exists. */
   def freshOnly(spark: SparkSession, table: String, ids: DataFrame,
       idCol: String): DataFrame =
     if (spark.catalog.tableExists(sidecar(table)))

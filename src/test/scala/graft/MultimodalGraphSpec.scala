@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.ops.Multimodal
 import graft.graph.GraphOps
+import graft.streaming.Streams
 
 /** Multimodal plumbing + GraphX structural checks. */
 class MultimodalGraphSpec extends SparkSpec {
@@ -208,20 +209,13 @@ class MultimodalGraphSpec extends SparkSpec {
     val mirror = media.filter(col("kind") === "image")
       .select((col("doc_id") + 1000000L).as("doc_id"), col("kind"),
         col("bytes"))
-    val feed = java.nio.file.Files.createTempDirectory("graft-phash-spec")
-      .toFile.getAbsolutePath + "/in"
-    mirror.filter(col("doc_id") % 2 === 0).repartition(1).write.parquet(feed)
-    // batch 2 replays batch 1's rows alongside the odd half
-    mirror.repartition(1).write.mode("append").parquet(feed)
     try {
-      val q = spark.readStream.schema(mirror.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Multimodal.phashIngest(spark, "graft_spec.phash_stream_spec", batch); ()
-        }
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+      // batch 2 replays batch 1's rows alongside the odd half
+      Streams.replay(spark, Seq(mirror.filter(col("doc_id") % 2 === 0),
+          mirror))(
+        Streams.drain(_, "phash_stream_spec") { (batch, _) =>
+          Multimodal.phashIngest(spark, "graft_spec.phash_stream_spec", batch)
+        })
       // no duplicate hash rows despite the replay
       val dups = spark.table("graft_spec.phash_stream_spec")
         .groupBy(col("doc_id")).count().filter(col("count") > 1).count()

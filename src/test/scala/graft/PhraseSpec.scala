@@ -201,4 +201,55 @@ class PhraseSpec extends SparkSpec {
     assert(Phrase.phraseIndexedTopK(spark, "graft_phrase_rec.d")
       .collect().toSeq === want, "rolled-forward index diverged")
   }
+
+  test("delete of an id the index never held tombstones nothing: a later " +
+      "delta of that id stays visible and survives compaction") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-phrase-unk")
+      .toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_phrase_unk LOCATION '$wh'")
+    val docs = Tables.documents(spark, sfDir)
+    val id = Phrase.phraseTopK(docs).collect().head.getLong(0)
+    val newcomer = docs.filter(col("doc_id") === id)
+    Phrase.buildPositional(docs, "graft_phrase_unk.r")
+    Phrase.buildPositional(docs.filter(col("doc_id") =!= id),
+      "graft_phrase_unk.d")
+    Phrase.positionalDelete("graft_phrase_unk.d", Seq(id).toDF("doc_id"))
+    Phrase.positionalDelta("graft_phrase_unk.d", newcomer)
+    val want = Phrase.phraseIndexedTopK(spark, "graft_phrase_unk.r")
+      .collect().toSeq
+    assert(Phrase.phraseIndexedTopK(spark, "graft_phrase_unk.d")
+      .collect().toSeq === want, "the newcomer stayed hidden")
+    Phrase.positionalCompact(spark, "graft_phrase_unk.d")
+    def postings(t: String) =
+      spark.table(s"${t}_pos").filter(col("doc_id") === id).count()
+    assert(postings("graft_phrase_unk.d") === postings("graft_phrase_unk.r"),
+      "compaction removed the newcomer's postings")
+    assert(Phrase.phraseIndexedTopK(spark, "graft_phrase_unk.d")
+      .collect().toSeq === want)
+  }
+
+  test("idempotent delta over a catalog stopped mid-swap rolls the staged " +
+      "copy forward: every standing doc survives") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-phrase-mid")
+      .toFile.getAbsolutePath
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_phrase_mid LOCATION '$wh'")
+    val docs = Tables.documents(spark, sfDir)
+    val t = "graft_phrase_mid.d"
+    Phrase.buildPositional(docs.filter(col("doc_id") % 5 =!= 0), t)
+    Phrase.buildPositional(docs, "graft_phrase_mid.r")
+    // positionalCompact stopped after the rename-away: staged copy
+    // complete, live generation renamed to _retired
+    spark.table(s"${t}_pos").repartition(8, col("term"))
+      .write.mode("overwrite").bucketBy(8, "term").sortBy("term")
+      .format("parquet").saveAsTable(s"${t}_pos_compacting")
+    spark.sql(s"ALTER TABLE ${t}_pos RENAME TO ${t}_pos_retired")
+    Phrase.positionalDeltaIdempotent(t, docs.filter(col("doc_id") % 5 === 0))
+    def ids(x: String) =
+      spark.table(s"${x}_pos").select(col("doc_id")).distinct().count()
+    assert(ids(t) === ids("graft_phrase_mid.r"),
+      "standing docs were lost to a delta-only bootstrap")
+    assert(Phrase.phraseIndexedTopK(spark, t).collect().toSeq ===
+      Phrase.phraseIndexedTopK(spark, "graft_phrase_mid.r").collect().toSeq)
+  }
 }
