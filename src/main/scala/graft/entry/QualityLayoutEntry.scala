@@ -259,18 +259,18 @@ object QualityLayoutEntry {
       val wh = java.nio.file.Files.createTempDirectory("graft-sdd")
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
-      Seq("graft_idx.sdd_mv", "graft_idx.sdd_batches")
+      Seq("graft_idx.sdd_mv", "graft_idx.sdd_batches", "graft_idx.sdd_guard")
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       val docs = Tables.documents(s, d)
       val binned = Quality.driftBin(lengthenedDocs(docs))
         .select(col("bin"), col("doc_id"))
+      val hist = MatView.sum("graft_idx.sdd", Seq("bin"), Seq(), "doc_id")
       Streams.replay(s, Seq(binned.filter(col("doc_id") % 2 === 0),
           binned.filter(col("doc_id") % 2 === 1)))(
         Streams.drain(_, "stream_dist_drift") { (batch, bid) =>
-          MatView.foldBatch("graft_idx.sdd", bid, batch, Seq("bin"), Seq(),
-            "doc_id")
+          hist.foldBatch(bid, batch)
         })
-      val hb = MatView.read(s, "graft_idx.sdd", Seq("bin"), Seq())
+      val hb = hist.read(s)
         .select(col("bin"), col("cnt").as("cb"))
       val nb = hb.agg(sum(col("cb"))).collect()(0).getLong(0)
       val ha = Quality.driftBin(docs).groupBy(col("bin"))
@@ -302,15 +302,15 @@ object QualityLayoutEntry {
         .unionByName(ev.filter(to_date(col("ts")) === "2024-01-28"))
         .unionByName(ev.filter(to_date(col("ts")) === "2024-01-28"))
         .select(to_date(col("ts")).as("obs_date"), col("event_id"))
+      val daily = MatView.sum("graft_idx.vts", Seq("obs_date"), Seq(),
+        "event_id")
       Streams.replay(s, Seq(corrupted.filter(col("obs_date") <= "2024-01-15"),
           corrupted.filter(col("obs_date") > "2024-01-15")))(
         Streams.drain(_, "stream_volume_trend") { (batch, bid) =>
-          MatView.foldBatch("graft_idx.vts", bid, batch, Seq("obs_date"),
-            Seq(), "event_id")
+          daily.foldBatch(bid, batch)
         })
       Quality.volumeTrendFrom(
-        MatView.read(s, "graft_idx.vts", Seq("obs_date"), Seq())
-          .select(col("obs_date"), col("cnt").as("n")))
+        daily.read(s).select(col("obs_date"), col("cnt").as("n")))
     }),
     // PARTITION COMPLETENESS: gap detection on a date-partitioned fact
     // as a metadata operation (catalog listing vs the continuous day

@@ -22,9 +22,10 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.build(o, "graft_idx.mvo", Seq("o_custkey"), Seq("price"),
+      val v = MatView.sum("graft_idx.mvo", Seq("o_custkey"), Seq("price"),
         "o_orderkey")
-      MatView.read(s, "graft_idx.mvo", Seq("o_custkey"), Seq("price"))
+      v.build(o)
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("o_custkey"))
@@ -39,16 +40,13 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.build(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvol", Seq("o_custkey"), Seq("price"), "o_orderkey")
-      MatView.delta("graft_idx.mvol",
-        o.filter(col("o_orderkey") % 5 === 0),
-        Seq("o_custkey"), Seq("price"), "o_orderkey")
-      MatView.deleteRows("graft_idx.mvol",
-        o.filter(col("o_orderkey") % 7 === 3),
-        Seq("o_custkey"), Seq("price"))
-      MatView.compact(s, "graft_idx.mvol", Seq("o_custkey"), Seq("price"))
-      MatView.read(s, "graft_idx.mvol", Seq("o_custkey"), Seq("price"))
+      val v = MatView.sum("graft_idx.mvol", Seq("o_custkey"), Seq("price"),
+        "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
+      v.delta(o.filter(col("o_orderkey") % 5 === 0))
+      v.delete(o.filter(col("o_orderkey") % 7 === 3))
+      v.compact(s)
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("o_custkey"))
@@ -66,17 +64,13 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.buildMinMax(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvmm", Seq("o_custkey"), Seq("price"), "o_orderkey")
-      MatView.deltaMinMax("graft_idx.mvmm",
-        o.filter(col("o_orderkey") % 5 === 0),
-        Seq("o_custkey"), Seq("price"), "o_orderkey")
-      MatView.deleteRowsMinMax("graft_idx.mvmm",
-        o.filter(col("o_orderkey") % 7 === 3),
-        o.filter(col("o_orderkey") % 7 =!= 3),
-        Seq("o_custkey"), Seq("price"))
-      MatView.readMinMax(s, "graft_idx.mvmm",
-        Seq("o_custkey"), Seq("price"))
+      val v = MatView.minMax("graft_idx.mvmm", Seq("o_custkey"),
+        Seq("price"), "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
+      v.delta(o.filter(col("o_orderkey") % 5 === 0))
+      v.delete(o.filter(col("o_orderkey") % 7 === 3),
+        o.filter(col("o_orderkey") % 7 =!= 3))
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("min_price").cast("double").as("min_price"),
           col("max_price").cast("double").as("max_price"))
@@ -94,17 +88,13 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.buildTopK(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvtk", Seq("o_orderpriority"), "price", "o_orderkey", 3)
-      MatView.deltaTopK("graft_idx.mvtk",
-        o.filter(col("o_orderkey") % 5 === 0),
-        Seq("o_orderpriority"), "price", "o_orderkey", 3)
-      MatView.deleteRowsTopK("graft_idx.mvtk",
-        o.filter(col("o_orderkey") % 7 === 3),
-        o.filter(col("o_orderkey") % 7 =!= 3),
-        Seq("o_orderpriority"), "price", "o_orderkey", 3)
-      MatView.readTopK(s, "graft_idx.mvtk",
-        Seq("o_orderpriority"), "price", "o_orderkey", 3)
+      val v = MatView.topK("graft_idx.mvtk", Seq("o_orderpriority"),
+        "price", "o_orderkey", 3)
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
+      v.delta(o.filter(col("o_orderkey") % 5 === 0))
+      v.delete(o.filter(col("o_orderkey") % 7 === 3),
+        o.filter(col("o_orderkey") % 7 =!= 3))
+      v.read(s)
         .select(col("o_orderpriority"), col("o_orderkey"),
           col("price").cast("double").as("price"), col("rk"))
         .orderBy(col("o_orderpriority"), col("rk"))
@@ -123,18 +113,13 @@ object ViewsEntry {
         .withColumnRenamed("o_custkey", "c_custkey")
       val dim = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"))
-      MatView.buildJoin(o.filter(col("o_orderkey") % 5 =!= 0), dim,
-        "graft_idx.mvj", Seq("c_custkey"), Seq("c_nationkey"),
-        Seq("price"), "o_orderkey")
-      MatView.deltaJoin("graft_idx.mvj",
-        o.filter(col("o_orderkey") % 5 === 0), dim,
-        Seq("c_custkey"), Seq("c_nationkey"), Seq("price"), "o_orderkey")
-      MatView.deleteJoinRows("graft_idx.mvj",
-        o.filter(col("o_orderkey") % 7 === 3), dim,
-        Seq("c_custkey"), Seq("c_nationkey"), Seq("price"))
-      MatView.compact(s, "graft_idx.mvj",
-        Seq("c_nationkey"), Seq("price"))
-      MatView.read(s, "graft_idx.mvj", Seq("c_nationkey"), Seq("price"))
+      val v = MatView.join("graft_idx.mvj", dim, Seq("c_custkey"),
+        Seq("c_nationkey"), Seq("price"), "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
+      v.delta(o.filter(col("o_orderkey") % 5 === 0))
+      v.delete(o.filter(col("o_orderkey") % 7 === 3))
+      v.compact(s)
+      v.read(s)
         .select(col("c_nationkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("c_nationkey"))
@@ -150,16 +135,12 @@ object ViewsEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
-      MatView.buildDistinct(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvd", Seq("o_orderpriority"), "o_custkey", "o_orderkey")
-      MatView.deltaDistinct("graft_idx.mvd",
-        o.filter(col("o_orderkey") % 5 === 0),
-        Seq("o_orderpriority"), "o_custkey", "o_orderkey")
-      MatView.deleteRowsDistinct("graft_idx.mvd",
-        o.filter(col("o_orderkey") % 7 === 3),
-        Seq("o_orderpriority"), "o_custkey")
-      MatView.readDistinct(s, "graft_idx.mvd",
-        Seq("o_orderpriority"), "o_custkey")
+      val v = MatView.distinct("graft_idx.mvd", Seq("o_orderpriority"),
+        "o_custkey", "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
+      v.delta(o.filter(col("o_orderkey") % 5 === 0))
+      v.delete(o.filter(col("o_orderkey") % 7 === 3))
+      v.read(s)
         .select(col("o_orderpriority"), col("ndv"), col("cnt"))
         .orderBy(col("o_orderpriority"))
     }),
@@ -175,16 +156,15 @@ object ViewsEntry {
         .withColumnRenamed("o_custkey", "c_custkey")
       val dim = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"))
-      MatView.buildJoin(o.filter(col("o_orderkey") % 5 =!= 0), dim,
-        "graft_idx.mvjcdc", Seq("c_custkey"), Seq("c_nationkey"),
-        Seq("price"), "o_orderkey")
+      val v = MatView.join("graft_idx.mvjcdc", dim, Seq("c_custkey"),
+        Seq("c_nationkey"), Seq("price"), "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
       val changes = o.filter(col("o_orderkey") % 5 === 0)
         .withColumn("op", lit("I"))
         .unionByName(o.filter(col("o_orderkey") % 5 =!= 0 &&
           col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))
-      MatView.applyCdcJoin("graft_idx.mvjcdc", 0L, changes, dim,
-        Seq("c_custkey"), Seq("c_nationkey"), Seq("price"))
-      MatView.read(s, "graft_idx.mvjcdc", Seq("c_nationkey"), Seq("price"))
+      v.applyCdc(0L, changes)
+      v.read(s)
         .select(col("c_nationkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("c_nationkey"))
@@ -196,14 +176,14 @@ object ViewsEntry {
         .toFile.getAbsolutePath
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
+      val v = MatView.distinct("graft_idx.mvds", Seq("o_orderpriority"),
+        "o_custkey", "o_orderkey")
       Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
           o.filter(col("o_orderkey") % 2 === 0)))(
         Streams.drain(_, "stream_mv_distinct") { (batch, bid) =>
-          MatView.foldBatchDistinct("graft_idx.mvds", bid, batch,
-            Seq("o_orderpriority"), "o_custkey", "o_orderkey")
+          v.foldBatch(bid, batch)
         })
-      MatView.readDistinct(s, "graft_idx.mvds",
-        Seq("o_orderpriority"), "o_custkey")
+      v.read(s)
         .select(col("o_orderpriority"), col("ndv"), col("cnt"))
         .orderBy(col("o_orderpriority"))
     }),
@@ -216,13 +196,14 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
+      val v = MatView.minMax("graft_idx.mvms", Seq("o_custkey"),
+        Seq("price"), "o_orderkey")
       Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
           o.filter(col("o_orderkey") % 2 === 0)))(
         Streams.drain(_, "stream_mv_minmax") { (batch, bid) =>
-          MatView.foldBatchMinMax("graft_idx.mvms", bid, batch,
-            Seq("o_custkey"), Seq("price"), "o_orderkey")
+          v.foldBatch(bid, batch)
         })
-      MatView.readMinMax(s, "graft_idx.mvms", Seq("o_custkey"), Seq("price"))
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("min_price").cast("double").as("min_price"),
           col("max_price").cast("double").as("max_price"))
@@ -238,15 +219,15 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.build(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvcdc", Seq("o_custkey"), Seq("price"), "o_orderkey")
+      val v = MatView.sum("graft_idx.mvcdc", Seq("o_custkey"), Seq("price"),
+        "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
       val changes = o.filter(col("o_orderkey") % 5 === 0)
         .withColumn("op", lit("I"))
         .unionByName(o.filter(col("o_orderkey") % 5 =!= 0 &&
           col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))
-      MatView.applyCdc("graft_idx.mvcdc", 0L, changes,
-        Seq("o_custkey"), Seq("price"))
-      MatView.read(s, "graft_idx.mvcdc", Seq("o_custkey"), Seq("price"))
+      v.applyCdc(0L, changes)
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("o_custkey"))
@@ -260,8 +241,9 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-      MatView.build(o.filter(col("o_orderkey") % 5 =!= 0),
-        "graft_idx.mvscdc", Seq("o_custkey"), Seq("price"), "o_orderkey")
+      val v = MatView.sum("graft_idx.mvscdc", Seq("o_custkey"),
+        Seq("price"), "o_orderkey")
+      v.build(o.filter(col("o_orderkey") % 5 =!= 0))
       Streams.replay(s, Seq(
           o.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 2 === 1)
             .withColumn("op", lit("I")),
@@ -270,10 +252,9 @@ object ViewsEntry {
             .unionByName(o.filter(col("o_orderkey") % 5 =!= 0 &&
               col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))))(
         Streams.drain(_, "stream_mv_cdc") { (batch, bid) =>
-          MatView.applyCdc("graft_idx.mvscdc", bid, batch, Seq("o_custkey"),
-            Seq("price"))
+          v.applyCdc(bid, batch)
         })
-      MatView.read(s, "graft_idx.mvscdc", Seq("o_custkey"), Seq("price"))
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("o_custkey"))
@@ -289,13 +270,14 @@ object ViewsEntry {
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_idx LOCATION '$wh'")
       val o = Tables.orders(s, d)
         .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
+      val v = MatView.sum("graft_idx.mvs", Seq("o_custkey"), Seq("price"),
+        "o_orderkey")
       Streams.replay(s, Seq(o.filter(col("o_orderkey") % 2 === 1),
           o.filter(col("o_orderkey") % 2 === 0)))(
         Streams.drain(_, "stream_mv_ingest") { (batch, bid) =>
-          MatView.foldBatch("graft_idx.mvs", bid, batch, Seq("o_custkey"),
-            Seq("price"), "o_orderkey")
+          v.foldBatch(bid, batch)
         })
-      MatView.read(s, "graft_idx.mvs", Seq("o_custkey"), Seq("price"))
+      v.read(s)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy(col("o_custkey"))

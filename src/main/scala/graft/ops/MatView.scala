@@ -1,667 +1,380 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{sum => sumOf, _}
 
-/** Incrementally-maintained MATERIALIZED AGGREGATE (IVM) — the additive
-  * `_stats` discipline ([[Search]]'s n_docs/sum_dl row) generalized into
-  * a user-facing view: a standing `GROUP BY keys` aggregate maintained
-  * under inserts AND deletes without ever re-reading the base table.
+/** Incrementally-maintained MATERIALIZED VIEWS (IVM): standing `GROUP BY
+  * keys` answers kept current under inserts AND deletes without
+  * re-reading the base table — the additive `_stats` discipline of
+  * [[Search]]'s n_docs/sum_dl row, generalized into user-facing views.
   *
-  * Storage is ADDITIVE PARTIAL ROWS: each build/delta/delete appends one
-  * generation of (keys…, cnt, sum_<c>…) rows — a delta appends its own
-  * partial aggregate (delta-sized, map-side combined), a delete appends
-  * the victims' NEGATED partials — and [[read]] folds generations by
-  * summing per key, dropping cnt = 0 groups (a fully-deleted group
-  * vanishes, exactly as a recompute would). Counts are longs and sums
-  * must be DECIMAL/integral columns (associative, partition-order
-  * independent — the money-math discipline), so the fold is EXACT: read
-  * after any build/delta/delete sequence is bit-identical to a
-  * from-scratch `GROUP BY` over the surviving base rows (spec-gated).
+  * Each view is a [[View]] value: its table root and group keys, the
+  * storage suffix of its kind, the kind's PARTIAL for a batch (one
+  * generation of rows), how a delete is recorded, and the read FOLD over
+  * the stored generations. Five factories make the five kinds:
   *
-  * At 100 TB: refresh cost is delta-sized (the base table is NEVER
-  * re-read; the partial aggregate of a batch shuffles |batch| rows at
-  * most, map-side combined to |touched keys|); read cost is
-  * view-sized (Σ generations, folded by one key shuffle); [[compact]]
-  * folds generations to one row per key through the crash-recoverable
-  * [[Swap]] so read cost stays ~|keys| between maintenance windows.
-  * Insert idempotence is the [[IngestGuard]] bloom contract on a
-  * caller-named unique row-id column; deletes trust the caller to
-  * deliver each victim ROW exactly once (the view stores no per-row
-  * identity — at scale the base table's own delete pipeline, e.g. a
-  * [[Tombstones]] victims frame, is the driver).
+  *  - [[sum]] (`_mv`): (keys…, cnt, sum_<c>…) partials; sums must be
+  *    DECIMAL/integral so the fold is exact and order-independent.
+  *  - [[join]] (`_mv`): [[sum]] over the batch enriched through ONE
+  *    broadcast hash join with an immutable dim — Δ(R⋈S) collapses to
+  *    ΔR⋈S when S never changes, so maintenance stays |delta|-sized.
+  *    Unmatched fact rows drop out of the view but their ids still enter
+  *    the guard, so a late dim row never resurrects them.
+  *  - [[distinct]] (`_dv`): EXACT COUNT DISTINCT as a refcounted support
+  *    set (keys…, value, rc) — refcounts add up under deletes where a
+  *    stored ndv cannot (the sketch point on that frontier is
+  *    `a10_kmv_distinct`).
+  *  - [[minMax]] (`_mm`) and [[topK]] (`_tk`): insert-associative but NOT
+  *    delete-additive (evicting the min or rank 1 needs the runner-up,
+  *    which only the base rows know). Their rows carry a generation stamp
+  *    (gen, reco); `reco` marks a full recompute of its groups, and a
+  *    group's rows below its latest reco generation are superseded at
+  *    read. A top-k partial is the generation's own top-k per key: any
+  *    row of a union's top-k is in its own generation's top-k, so the
+  *    partials are a superset of the answer and a delta appends at most
+  *    k·|touched keys| rows.
   *
-  * SCOPE of the `_mv` family: additive measures only — count, sum, and
-  * anything derivable from them at read time (avg = sum/cnt). min/max
-  * are NOT additive under deletes (removing the current min needs the
-  * runner-up, which only the base rows know), so they live in the
-  * SEPARATE `_mm` structure below ([[buildMinMax]]/[[deltaMinMax]]/
-  * [[deleteRowsMinMax]]/[[readMinMax]]): insert maintenance stays
-  * delta-sized (min/max ARE insert-associative, so delta partials
-  * append exactly like sums), but delete maintenance RECOMPUTES the
-  * affected groups from the surviving base rows — the honest cost model
-  * (affected-group base scan, key-pruned) instead of the additive
-  * family's silent-wrong-answer trap. Two further members round out the
-  * family on the same discipline: the JOIN VIEW ([[buildJoin]] — additive
-  * partials fed through a broadcast fact⋈dim join, stored and read as
-  * plain `_mv`) and EXACT COUNT DISTINCT ([[buildDistinct]] — the `_dv`
-  * refcounted support set, additive under deletes where naive ndv
-  * storage is not). All share the guard/ledger/swap discipline. */
+  * Deletes come in two forms. ADDITIVE kinds ([[Additive]]: sum, join,
+  * distinct) append the victims' partial with its measure columns
+  * negated, and a group whose count folds to 0 vanishes exactly as a
+  * recompute would; they also fold Debezium-shaped CDC batches. RECOMPUTE
+  * kinds ([[Recompute]]: min/max, top-k) rebuild the affected groups from
+  * the SURVIVING base rows (a broadcast semi join on the victims' keys, so
+  * a key-partitioned base prunes to the touched partitions) as one reco
+  * generation, plus an empty-group marker for groups left with no rows.
+  *
+  * Every lifecycle operation is written once, over the value:
+  * [[View.build]], [[View.delta]], the deletes, [[View.foldBatch]],
+  * [[Additive.applyCdc]], [[View.read]] and [[View.compact]]. They keep
+  * one set of rules:
+  *
+  *  - insert idempotence is the [[IngestGuard]] bloom sidecar
+  *    `{root}_guard` on a caller-named unique row id. The view stores no
+  *    per-row identity, so a bloom suspect cannot be confirmed and is
+  *    refused conservatively; deletes trust the caller to deliver each
+  *    victim row exactly once;
+  *  - streaming folds are idempotent per BATCH ID through the
+  *    `{root}_batches` [[Ledger]]: a redelivered bid is skipped whole.
+  *    A crash between the append and the ledger row is the single-writer
+  *    rebuild scenario every multi-table append shares;
+  *  - every write path first rolls an interrupted compaction swap forward
+  *    ([[Swap]]) and never bootstraps over a catalog that holds part of a
+  *    view (its ledger or guard without the view table) — the
+  *    [[StandingIndex]] rule;
+  *  - a build replaces the view, its guard and its ledger, so a new
+  *    stream's bids start fresh;
+  *  - compaction folds the generations to one row per key (per pair for
+  *    distinct) through the staged swap, so read cost stays ~|keys|
+  *    between maintenance windows. The guard is left as-is: the view
+  *    cannot reconstruct its id set, so deleted ids stay refused until a
+  *    rebuild.
+  *
+  * At 100 TB: refresh cost is delta-sized (a batch's partial shuffles
+  * |batch| rows at most, map-side combined to |touched keys|), read cost
+  * is view-sized (Σ generations, folded by one key shuffle; distinct adds
+  * a second, pair-sized one), and only a recompute delete reads the base
+  * — key-pruned to the affected groups. */
 object MatView {
 
-  private def partial(df: DataFrame, keys: Seq[String],
-      sums: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("cnt"),
-        sums.map(c => sum(col(c)).as(s"sum_$c")): _*)
+  /** A view kind over `{root}{suffix}`; see [[MatView]]. */
+  sealed abstract class View {
+    /** The table root: the view, guard and ledger tables hang off it. */
+    def root: String
+    /** The group keys. */
+    def keys: Seq[String]
+    /** The base table's unique row id (the guard's key). */
+    protected def idCol: String
+    /** The kind's storage suffix. */
+    protected def suffix: String
 
-  /** Materialize the view over `df`. `idCol` names the base table's
-    * unique row id (the delta-disjointness guard); `sums` columns must
-    * be DECIMAL or integral (exact additive fold). */
-  def build(df: DataFrame, table: String, keys: Seq[String],
-      sums: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_mv")
-    partial(df, keys, sums)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_mv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = true)
-  }
+    /** The physical view table. */
+    def table: String = root + suffix
 
-  /** Incremental insert maintenance: append the DELTA's partial
-    * aggregate — one delta-sized pass, the base is never re-read.
-    * Delta rows must be new ([[IngestGuard]] — a replayed row would
-    * silently double its group's cnt/sums). */
-  def delta(table: String, df: DataFrame, keys: Seq[String],
-      sums: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    if (df.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mv")
-    require(spark.catalog.tableExists(s"${table}_mv"),
-      s"MatView.delta needs a standing view: ${table}_mv not found — " +
-        "run build first")
-    refuseSuspects(spark, table, df, idCol, "MatView.delta")
-    partial(df, keys, sums)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-  }
+    /** A batch's rows at generation `gen` (read only by the stamped
+      * kinds; `reco` marks a full recompute of their groups). */
+    protected def partial(batch: DataFrame, gen: => Long,
+        reco: Boolean): DataFrame
 
-  /** Incremental delete maintenance: append the victims' NEGATED
-    * partials (the BM25 negative-stats-row scheme per group). `victims`
-    * are the full base rows being deleted, delivered exactly once. */
-  def deleteRows(table: String, victims: DataFrame, keys: Seq[String],
-      sums: Seq[String]): Unit = {
-    val spark = victims.sparkSession
-    if (victims.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mv")
-    require(spark.catalog.tableExists(s"${table}_mv"),
-      s"MatView.deleteRows needs a standing view: ${table}_mv not found")
-    partial(victims, keys, sums)
-      .select(keys.map(col) ++ ((-col("cnt")).as("cnt") +:
-        sums.map(c => (-col(s"sum_$c")).as(s"sum_$c"))): _*)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-  }
+    /** The folded answer over the stored generations. */
+    def read(spark: SparkSession): DataFrame
 
-  /** The folded view: sum the additive generations per key, drop
-    * fully-deleted groups. Bit-identical to a from-scratch GROUP BY
-    * over the surviving base rows. */
-  def read(spark: SparkSession, table: String, keys: Seq[String],
-      sums: Seq[String]): DataFrame =
-    spark.table(s"${table}_mv")
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        sums.map(c => sum(col(s"sum_$c")).as(s"sum_$c")): _*)
-      .filter(col("cnt") > 0)
+    /** The stored rows compaction swaps in. */
+    protected def compacted(spark: SparkSession): DataFrame
 
-  /** Streaming maintenance: fold ONE micro-batch under BATCH-ID
-    * idempotence — the standard exactly-once `foreachBatch` recipe (a
-    * batch-id ledger instead of row identity, which the view doesn't
-    * keep): batch `bid` appends its partials once; a redelivered bid is
-    * skipped entirely. SCOPE (the family-wide streaming contract): this
-    * closes the REDELIVERY window — a batch fully folded but redelivered
-    * because the crash hit between the fold and the stream's checkpoint
-    * commit. A crash INSIDE the two appends (partials written, ledger
-    * not) is the single-writer recovery scenario every multi-table
-    * append shares: rebuild the view (delta-cheapness makes that rare
-    * pain acceptable; a per-row ledger would change the structure's
-    * whole cost model). Batch 0 bootstraps an empty catalog. */
-  def foldBatch(table: String, bid: Long, df: DataFrame,
-      keys: Seq[String], sums: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    val ledger = s"${table}_batches"
-    if (!spark.catalog.tableExists(s"${table}_mv")) {
-      build(df, table, keys, sums, idCol)
-      writeLedger(spark, ledger, bid); return
-    }
-    if (ledgerHas(spark, ledger, bid)) return // redelivered: folded
-    if (df.isEmpty) { writeLedger(spark, ledger, bid); return }
-    partial(df, keys, sums)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-    writeLedger(spark, ledger, bid)
-  }
-
-  /** CDC apply — one change-feed micro-batch (Debezium shape: an `op`
-    * column, 'I' inserts / 'D' deletes carrying FULL row images) folded
-    * into the view as ONE appended generation: the inserts' partials
-    * plus the deletes' NEGATED partials, under the same batch-id ledger
-    * as [[foldBatch]] (a redelivered bid is a strict no-op — CDC feeds
-    * are exactly-once at the batch level, and both halves commit in one
-    * append so a batch can never half-apply ACROSS ops; the
-    * append-vs-ledger crash window is [[foldBatch]]'s documented
-    * single-writer scope). Delete images must be the rows as ingested —
-    * the CDC producer's before-image contract. */
-  def applyCdc(table: String, bid: Long, changes: DataFrame,
-      keys: Seq[String], sums: Seq[String]): Unit = {
-    val spark = changes.sparkSession
-    val ledger = s"${table}_batches"
-    require(spark.catalog.tableExists(s"${table}_mv"),
-      s"MatView.applyCdc needs a standing view: ${table}_mv not found — " +
-        "run build first")
-    if (ledgerHas(spark, ledger, bid)) return
-    val ins = partial(changes.filter(col("op") === "I"), keys, sums)
-    val del = partial(changes.filter(col("op") === "D"), keys, sums)
-      .select(keys.map(col) ++ ((-col("cnt")).as("cnt") +:
-        sums.map(c => (-col(s"sum_$c")).as(s"sum_$c"))): _*)
-    ins.unionByName(del)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-    writeLedger(spark, ledger, bid)
-  }
-
-  /** CDC apply for the JOIN VIEW: the change batch (op = I/D, full FACT
-    * row images) enriches through the broadcast immutable dim and folds
-    * as ONE [[applyCdc]] generation — inserts' joined partials plus
-    * deletes' negated joined partials, batch-id idempotent. The dim
-    * probe commutes with the I/D split (the dim is immutable, so both
-    * halves see the same match set), which is why this is literally
-    * the plain CDC fold over the enriched batch. */
-  def applyCdcJoin(table: String, bid: Long, changes: DataFrame,
-      dim: DataFrame, joinKeys: Seq[String], keys: Seq[String],
-      sums: Seq[String]): Unit =
-    applyCdc(table, bid, changes.join(broadcast(dim), joinKeys), keys, sums)
-
-  /** Streaming maintenance for the DISTINCT view — [[foldBatch]]'s
-    * batch-id ledger recipe over `_dv` support partials: batch `bid`
-    * appends its refcounts once, a redelivered bid is skipped entirely,
-    * batch 0 bootstraps an empty catalog. Same scope note as
-    * [[foldBatch]]: the ledger closes the redelivery-after-fold window;
-    * a crash between the append and the ledger write is the
-    * single-writer rebuild scenario. */
-  def foldBatchDistinct(table: String, bid: Long, df: DataFrame,
-      keys: Seq[String], valueCol: String, idCol: String): Unit = {
-    val spark = df.sparkSession
-    val ledger = s"${table}_batches"
-    if (!spark.catalog.tableExists(s"${table}_dv")) {
-      buildDistinct(df, table, keys, valueCol, idCol)
-      writeLedger(spark, ledger, bid); return
-    }
-    if (ledgerHas(spark, ledger, bid)) return
-    if (df.isEmpty) { writeLedger(spark, ledger, bid); return }
-    partialDV(df, keys, valueCol)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_dv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-    writeLedger(spark, ledger, bid)
-  }
-
-  /** Streaming maintenance for the MIN/MAX view — insert generations
-    * under the batch-id ledger (min/max ARE insert-associative, so the
-    * streaming insert path is exactly the additive family's shape;
-    * DELETES are not a streaming fold here — they need the surviving
-    * base for the affected-group recompute, so a takedown feed drives
-    * [[deleteRowsMinMax]] through its own `foreachBatch` with the base
-    * at hand, the [[graft.streaming.Streams.incrementalDeletion]]
-    * pattern). Batch 0 bootstraps. */
-  def foldBatchMinMax(table: String, bid: Long, df: DataFrame,
-      keys: Seq[String], cols: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    val ledger = s"${table}_batches"
-    if (!spark.catalog.tableExists(s"${table}_mm")) {
-      buildMinMax(df, table, keys, cols, idCol)
-      writeLedger(spark, ledger, bid); return
-    }
-    if (ledgerHas(spark, ledger, bid)) return
-    if (df.isEmpty) { writeLedger(spark, ledger, bid); return }
-    partialMM(df, keys, cols, nextGen(spark, s"${table}_mm"), reco = false)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mm")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-    writeLedger(spark, ledger, bid)
-  }
-
-  private def ledgerHas(spark: SparkSession, ledger: String,
-      bid: Long): Boolean =
-    spark.catalog.tableExists(ledger) &&
-      spark.table(ledger).filter(col("bid") === bid).take(1).nonEmpty
-
-  /** The view stores NO per-row identity, so a bloom hit cannot be
-    * exact-confirmed like the index families do — suspects are refused
-    * CONSERVATIVELY (fpp-rare false refusals; a real replay admitted
-    * here would silently double its group's partials, the worse error). */
-  private def refuseSuspects(spark: SparkSession, table: String,
-      df: DataFrame, idCol: String, what: String): Unit =
-    IngestGuard.suspectPredicate(spark, table, idCol).foreach { hit =>
-      val suspects = df.select(col(idCol)).distinct().filter(hit)
-      require(suspects.take(1).isEmpty,
-        s"$what refused: delta contains id(s) the guard has " +
-          "(possibly) already seen; the view stores no row identity to " +
-          "confirm, so bloom suspects are conservatively refused — " +
-          "dedupe the feed or rebuild the view")
+    /** Materialize the view over `batch`, replacing any earlier view,
+      * guard and ledger. */
+    def build(batch: DataFrame): Unit = {
+      val spark = batch.sparkSession
+      Seq(table, Ledger.table(root))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      commit(batch, partial(batch, 0L, reco = true), "overwrite")
     }
 
-  private[ops] def writeLedger(spark: SparkSession, ledger: String,
-      bid: Long): Unit = {
-    import spark.implicits._
-    Seq(bid).toDF("bid").coalesce(1)
-      .write.mode("append").format("parquet").saveAsTable(ledger)
+    /** Incremental insert maintenance: append the batch's partial, whose
+      * ids must be new — a replayed row would silently double its group,
+      * so a guard suspect is refused. An empty batch writes nothing. */
+    def delta(batch: DataFrame): Unit = {
+      val spark = batch.sparkSession
+      if (batch.isEmpty) return
+      need(spark, "delta")
+      IngestGuard.suspectPredicate(spark, root, idCol).foreach { hit =>
+        require(batch.select(col(idCol)).distinct().filter(hit)
+          .take(1).isEmpty,
+          s"$table delta refused: the batch contains id(s) the guard has " +
+            "(possibly) already seen; the view stores no row identity to " +
+            "confirm, so bloom suspects are conservatively refused — " +
+            "dedupe the feed or rebuild the view")
+      }
+      commit(batch, partial(batch, nextGen(spark), reco = false), "append")
+    }
+
+    /** Streaming maintenance: fold micro-batch `bid` once. A redelivered
+      * bid is skipped; on a fresh catalog the first batch builds the
+      * view. */
+    def foldBatch(bid: Long, batch: DataFrame): Unit = {
+      val spark = batch.sparkSession
+      if (!standing(spark)) build(batch)
+      else if (Ledger.has(spark, root, bid)) return
+      else if (!batch.isEmpty)
+        commit(batch, partial(batch, nextGen(spark), reco = false), "append")
+      Ledger.write(spark, root, bid)
+    }
+
+    /** Fold the generations physically through the crash-recoverable
+      * staged swap; the read answer does not move. */
+    def compact(spark: SparkSession): Unit = {
+      need(spark, "compact")
+      Swap.stageThenSwap(spark, table, compacted(spark))(
+        (df, staged) => save(df, staged, "overwrite"))
+    }
+
+    /** Append `rows` to the view. */
+    protected def append(rows: DataFrame): Unit = save(rows, table, "append")
+
+    /** Write a batch's rows, then its guard blob. */
+    private def commit(batch: DataFrame, rows: DataFrame,
+        mode: String): Unit = {
+      save(rows, table, mode)
+      IngestGuard.write(batch.sparkSession, batch, idCol, root,
+        overwrite = mode == "overwrite")
+    }
+
+    /** True when the view table stands, after rolling an interrupted
+      * compaction swap forward; false on a fresh catalog. A ledger or
+      * guard without the view table and no staged copy is a torn catalog:
+      * refuse rather than bootstrap a batch-only view over it. */
+    private def standing(spark: SparkSession): Boolean = {
+      Swap.recoverUnpartitioned(spark, table)
+      val stands = spark.catalog.tableExists(table)
+      val state = Seq(Ledger.table(root), IngestGuard.guardTable(root))
+        .filter(spark.catalog.tableExists)
+      require(stands || state.isEmpty,
+        s"$table refusing to bootstrap: missing beside " +
+          s"${state.mkString(", ")} and no staged copy was found to roll " +
+          "forward — a batch-only view would silently drop the standing " +
+          "groups. Rebuild the view (or drop the stale tables) first")
+      stands
+    }
+
+    /** Require a standing view for a maintenance operation. */
+    protected def need(spark: SparkSession, what: String): Unit =
+      require(standing(spark),
+        s"MatView.$what needs a standing view: $table not found — run " +
+          "build first")
+
+    /** Next generation stamp: max standing gen + 1, one column-pruned
+      * aggregate over the view (never the base); single-writer. */
+    protected def nextGen(spark: SparkSession): Long =
+      spark.table(table).agg(coalesce(max(col("gen")), lit(0L)))
+        .head().getLong(0) + 1
   }
 
-  /** Fold the generations physically to one row per key through the
-    * crash-recoverable staged swap — read cost back to ~|keys|. The
-    * guard sidecar is left as-is: unlike the index families the view
-    * cannot reconstruct its id set, so deleted ids stay guard-refused
-    * until the caller rebuilds (documented trade). */
-  def compact(spark: SparkSession, table: String, keys: Seq[String],
-      sums: Seq[String]): Unit = {
-    Swap.recoverUnpartitioned(spark, s"${table}_mv")
-    Swap.stageThenSwap(spark, s"${table}_mv",
-      read(spark, table, keys, sums)) { (df, staged) =>
-      df.write.mode("overwrite").format("parquet").saveAsTable(staged)
+  /** A kind whose rows add up: a generation is (cells…, counter,
+    * sum_<c>…), `enrich` runs on every batch before the partial, and
+    * `finish` turns the combined cells into the answer. */
+  final class Additive private[MatView] (val root: String,
+      protected val suffix: String, val keys: Seq[String],
+      protected val idCol: String, cells: Seq[String], counter: String,
+      sums: Seq[String], enrich: DataFrame => DataFrame,
+      finish: DataFrame => DataFrame) extends View {
+    private val measures = counter +: sums.map(c => s"sum_$c")
+
+    protected def partial(batch: DataFrame, gen: => Long,
+        reco: Boolean): DataFrame =
+      enrich(batch).groupBy(cells.map(col): _*)
+        .agg(count(lit(1)).as(counter),
+          sums.map(c => sumOf(col(c)).as(s"sum_$c")): _*)
+
+    private def negated(batch: DataFrame): DataFrame =
+      partial(batch, 0L, reco = false).select(
+        cells.map(col) ++ measures.map(m => (-col(m)).as(m)): _*)
+
+    /** Sum each cell's generations, dropping cells whose count folds
+      * to 0. */
+    private def combined(spark: SparkSession): DataFrame =
+      spark.table(table).groupBy(cells.map(col): _*)
+        .agg(sumOf(col(counter)).as(counter),
+          measures.tail.map(m => sumOf(col(m)).as(m)): _*)
+        .filter(col(counter) > 0)
+
+    def read(spark: SparkSession): DataFrame = finish(combined(spark))
+
+    protected def compacted(spark: SparkSession): DataFrame =
+      combined(spark)
+
+    /** Incremental delete maintenance: append the victims' (the full base
+      * rows, delivered once) negated partial. */
+    def delete(victims: DataFrame): Unit = {
+      if (victims.isEmpty) return
+      need(victims.sparkSession, "delete")
+      append(negated(victims))
+    }
+
+    /** CDC apply — one change-feed batch (an `op` column, 'I' inserts and
+      * 'D' deletes carrying FULL row images, the producer's before-image
+      * contract) folds as ONE generation, the inserts' partial plus the
+      * deletes' negated partial, so a batch never half-applies across
+      * ops. A redelivered bid is a no-op. */
+    def applyCdc(bid: Long, changes: DataFrame): Unit = {
+      val spark = changes.sparkSession
+      need(spark, "applyCdc")
+      if (Ledger.has(spark, root, bid)) return
+      append(partial(changes.filter(col("op") === "I"), 0L, reco = false)
+        .unionByName(negated(changes.filter(col("op") === "D"))))
+      Ledger.write(spark, root, bid)
     }
   }
 
-  // ---------------------------------------------- join view (`_mv` reuse)
+  /** A kind whose deletes recompute: `unstamped` is a batch's rows before
+    * the generation stamp, and `fold` folds the current generations (at
+    * or above each group's latest reco generation) into the answer. */
+  final class Recompute private[MatView] (val root: String,
+      protected val suffix: String, val keys: Seq[String],
+      protected val idCol: String, unstamped: DataFrame => DataFrame,
+      fold: DataFrame => DataFrame) extends View {
 
-  /** JOIN-VIEW IVM — the additive view pushed through a join: a standing
-    * `fact ⋈ dim GROUP BY keys` aggregate (keys/sums may come from either
-    * side) maintained under FACT inserts and deletes without re-reading
-    * either table. The classical delta rule Δ(R⋈S) = ΔR⋈S ∪ R⋈ΔS ∪
-    * ΔR⋈ΔS collapses to its first term when the dim is immutable for the
-    * view's lifetime — which is the 100 TB case worth owning: the fact
-    * is the boundless side (events, orders, postings), the dim is the
-    * broadcast-small slowly-changing side, and a dim change is a rebuild
-    * (or an `_mm`-style affected-group recompute — the R⋈ΔS term reads
-    * the fact, so pretending it's delta-sized would be the same
-    * silent-cost trap the min/max scaladoc names). Each maintenance op
-    * enriches its delta through ONE BROADCAST HASH JOIN (no fact
-    * shuffle; delta-sized probe) and then appends additive partials to
-    * the SAME `_mv` storage as the plain view — [[read]], [[compact]],
-    * and the batch ledger work unchanged. Fact rows with no dim match
-    * drop out of the view (inner join) but their ids still enter the
-    * guard, so a late-arriving dim row does NOT resurrect them — the
-    * immutable-dim contract, made explicit. */
-  def buildJoin(fact: DataFrame, dim: DataFrame, table: String,
-      joinKeys: Seq[String], keys: Seq[String], sums: Seq[String],
-      idCol: String): Unit = {
-    val spark = fact.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_mv")
-    partial(fact.join(broadcast(dim), joinKeys), keys, sums)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_mv")
-    IngestGuard.write(spark, fact, idCol, table, overwrite = true)
-  }
+    private def stamp(rows: DataFrame, gen: Long, reco: Boolean) =
+      rows.withColumn("gen", lit(gen)).withColumn("reco", lit(reco))
 
-  /** Incremental insert maintenance for the join view: the fact delta
-    * probes the broadcast dim, its partials append — |delta| rows
-    * joined, the standing fact never re-read. Guard contract as
-    * [[delta]], keyed on the FACT's row id. */
-  def deltaJoin(table: String, factDelta: DataFrame, dim: DataFrame,
-      joinKeys: Seq[String], keys: Seq[String], sums: Seq[String],
-      idCol: String): Unit = {
-    val spark = factDelta.sparkSession
-    if (factDelta.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mv")
-    require(spark.catalog.tableExists(s"${table}_mv"),
-      s"MatView.deltaJoin needs a standing view: ${table}_mv not found — " +
-        "run buildJoin first")
-    refuseSuspects(spark, table, factDelta, idCol, "MatView.deltaJoin")
-    partial(factDelta.join(broadcast(dim), joinKeys), keys, sums)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-    IngestGuard.write(spark, factDelta, idCol, table, overwrite = false)
-  }
+    protected def partial(batch: DataFrame, gen: => Long,
+        reco: Boolean): DataFrame = stamp(unstamped(batch), gen, reco)
 
-  /** Incremental delete maintenance for the join view: the fact victims
-    * probe the SAME immutable dim their inserts saw, and the negated
-    * partials append — exact inverse, so unmatched victims cancel to
-    * nothing just as their inserts contributed nothing. */
-  def deleteJoinRows(table: String, factVictims: DataFrame,
-      dim: DataFrame, joinKeys: Seq[String], keys: Seq[String],
-      sums: Seq[String]): Unit = {
-    val spark = factVictims.sparkSession
-    if (factVictims.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mv")
-    require(spark.catalog.tableExists(s"${table}_mv"),
-      s"MatView.deleteJoinRows needs a standing view: ${table}_mv not found")
-    partial(factVictims.join(broadcast(dim), joinKeys), keys, sums)
-      .select(keys.map(col) ++ ((-col("cnt")).as("cnt") +:
-        sums.map(c => (-col(s"sum_$c")).as(s"sum_$c"))): _*)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mv")
-  }
+    def read(spark: SparkSession): DataFrame = {
+      val rmax = max(when(col("reco"), col("gen")))
+        .over(Window.partitionBy(keys.map(col): _*))
+      fold(spark.table(table).withColumn("_rmax", rmax)
+        .filter(col("gen") >= coalesce(col("_rmax"), lit(Long.MinValue))))
+    }
 
-  // --------------------------------------- exact COUNT DISTINCT (`_dv`)
+    /** The answer in the stored layout, as one reco generation at 0. */
+    protected def compacted(spark: SparkSession): DataFrame = {
+      val layout = spark.table(table).columns.toSeq
+        .filterNot(Set("gen", "reco")).map(col)
+      stamp(read(spark).select(layout: _*), 0L, reco = true)
+    }
 
-  /** One generation of distinct-support partials: (keys…, value, rc)
-    * per touched (group, value) pair — rc is how many base rows carry
-    * that pair, and refcounts ARE additive under both inserts and
-    * deletes, which is what makes EXACT count-distinct incrementally
-    * maintainable when the naive form (store ndv per key) is not
-    * (removing a row can't tell you whether its value still has other
-    * supporters — but the refcount can). */
-  private def partialDV(df: DataFrame, keys: Seq[String],
-      valueCol: String): DataFrame =
-    df.groupBy((keys :+ valueCol).map(col): _*).agg(count(lit(1)).as("rc"))
-
-  /** Materialize an EXACT COUNT DISTINCT view: per `keys`, the number of
-    * distinct `valueCol` values among the base rows. Storage is the
-    * refcounted support set — O(distinct (key, value) pairs), NOT
-    * O(keys): the honest price of exactness under deletes (a sketch
-    * [KMV/HLL] is O(keys) but approximate and delete-blind; this is the
-    * other point on that frontier, and both are in the engine —
-    * `a10_kmv_distinct` is the sketch). Maintenance is delta-sized
-    * either way: a batch shuffles |batch| rows map-side-combined to
-    * |touched pairs|. */
-  def buildDistinct(df: DataFrame, table: String, keys: Seq[String],
-      valueCol: String, idCol: String): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_dv")
-    partialDV(df, keys, valueCol)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_dv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = true)
-  }
-
-  /** Incremental insert maintenance: append the delta's support
-    * partials. Guard contract as [[delta]]. */
-  def deltaDistinct(table: String, df: DataFrame, keys: Seq[String],
-      valueCol: String, idCol: String): Unit = {
-    val spark = df.sparkSession
-    if (df.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_dv")
-    require(spark.catalog.tableExists(s"${table}_dv"),
-      s"MatView.deltaDistinct needs a standing view: ${table}_dv not " +
-        "found — run buildDistinct first")
-    refuseSuspects(spark, table, df, idCol, "MatView.deltaDistinct")
-    partialDV(df, keys, valueCol)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_dv")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-  }
-
-  /** Incremental delete maintenance: append NEGATED refcounts. A value
-    * whose every supporter dies folds to rc = 0 and leaves the distinct
-    * set; one with survivors stays — the decision additive math alone
-    * could not make at the ndv level. */
-  def deleteRowsDistinct(table: String, victims: DataFrame,
-      keys: Seq[String], valueCol: String): Unit = {
-    val spark = victims.sparkSession
-    if (victims.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_dv")
-    require(spark.catalog.tableExists(s"${table}_dv"),
-      s"MatView.deleteRowsDistinct needs a standing view: ${table}_dv not found")
-    partialDV(victims, keys, valueCol)
-      .select((keys :+ valueCol).map(col) :+ (-col("rc")).as("rc"): _*)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_dv")
-  }
-
-  /** The folded view: (keys…, ndv, cnt) — fold refcounts per (key,
-    * value) pair, keep supported pairs, count them per key (cnt = the
-    * surviving row total, free from the same fold). Two exchanges,
-    * both view-sized and map-side combined; the second carries only
-    * one row per surviving PAIR (already the first fold's output), so
-    * it is the smaller of the two. Fully-deleted groups have no
-    * supported pair and vanish, exactly as a recompute would. */
-  def readDistinct(spark: SparkSession, table: String, keys: Seq[String],
-      valueCol: String): DataFrame =
-    spark.table(s"${table}_dv")
-      .groupBy((keys :+ valueCol).map(col): _*).agg(sum(col("rc")).as("rc"))
-      .filter(col("rc") > 0)
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("ndv"), sum(col("rc")).as("cnt"))
-
-  /** Fold the `_dv` generations to one row per surviving pair through
-    * the crash-recoverable staged swap. Guard stance as [[compact]]. */
-  def compactDistinct(spark: SparkSession, table: String,
-      keys: Seq[String], valueCol: String): Unit = {
-    Swap.recoverUnpartitioned(spark, s"${table}_dv")
-    Swap.stageThenSwap(spark, s"${table}_dv",
-      spark.table(s"${table}_dv")
-        .groupBy((keys :+ valueCol).map(col): _*)
-        .agg(sum(col("rc")).as("rc")).filter(col("rc") > 0)) {
-      (df, staged) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(staged)
+    /** Incremental delete maintenance: recompute the victims' groups from
+      * `survivors` (the base AFTER the delete) as one reco generation that
+      * supersedes their history. A group left with no rows gets a marker
+      * row (min/max's `cnt` reads 0, every other column null) that both
+      * hides it and supersedes its history, so a later delta folds
+      * against a clean slate. Unaffected groups are never touched. */
+    def delete(victims: DataFrame, survivors: DataFrame): Unit = {
+      val spark = victims.sparkSession
+      if (victims.isEmpty) return
+      need(spark, "delete")
+      val affected = victims.select(keys.map(col): _*).distinct()
+        .localCheckpoint()
+      val g = nextGen(spark)
+      val reco = partial(
+          survivors.join(broadcast(affected), keys, "left_semi"), g,
+          reco = true)
+        .localCheckpoint() // lineage cut: derived pre-append, written below
+      val empty = reco.schema.filterNot(f =>
+          (keys ++ Seq("gen", "reco")).contains(f.name))
+        .map(f => (if (f.name == "cnt") lit(0L) else lit(null).cast(f.dataType))
+          .as(f.name))
+      val gone = affected
+        .join(reco.select(keys.map(col): _*), keys, "left_anti")
+      append(reco.unionByName(
+        stamp(gone.select(keys.map(col) ++ empty: _*), g, reco = true)))
     }
   }
 
-  // ------------------------------------------------ min/max (`_mm`) view
+  /** A standing sum view: per `keys`, the row count `cnt` and `sum_<c>`
+    * for each of `sums` (DECIMAL or integral columns: an exact additive
+    * fold). `idCol` is the base table's unique row id (the guard). */
+  def sum(root: String, keys: Seq[String], sums: Seq[String],
+      idCol: String): Additive =
+    new Additive(root, "_mv", keys, idCol, keys, "cnt", sums, identity,
+      identity)
 
-  /** One generation of min/max partials: (keys…, cnt, min_<c>, max_<c>)
-    * per touched key, stamped (gen, reco). `reco = true` marks a FULL
-    * RECOMPUTE of its groups (build, delete repair, compact): at read
-    * time a group's rows BELOW its latest reco generation are superseded
-    * — the recompute row already reflects them (or their deletion). */
-  private def partialMM(df: DataFrame, keys: Seq[String],
-      cols: Seq[String], gen: Long, reco: Boolean): DataFrame = {
-    val aggs = count(lit(1)).as("cnt") +: cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .withColumn("gen", lit(gen)).withColumn("reco", lit(reco))
+  /** A standing `fact ⋈ dim GROUP BY keys` sum view (keys and sums from
+    * either side); every fact batch enriches through the broadcast `dim`,
+    * which must stay unchanged for the view's lifetime (a dim change is a
+    * rebuild). The guard is keyed on the FACT's row id. */
+  def join(root: String, dim: DataFrame, joinKeys: Seq[String],
+      keys: Seq[String], sums: Seq[String], idCol: String): Additive =
+    new Additive(root, "_mv", keys, idCol, keys, "cnt", sums,
+      _.join(broadcast(dim), joinKeys), identity)
+
+  /** A standing EXACT COUNT DISTINCT view: per `keys`, the number `ndv` of
+    * distinct `valueCol` values and the row count `cnt`. Storage is
+    * O(distinct (key, value) pairs) — the price of exactness under
+    * deletes. */
+  def distinct(root: String, keys: Seq[String], valueCol: String,
+      idCol: String): Additive =
+    new Additive(root, "_dv", keys, idCol, keys :+ valueCol, "rc", Nil,
+      identity, _.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("ndv"), sumOf(col("rc")).as("cnt")))
+
+  /** A standing MIN/MAX view: per `keys`, `cnt` and `min_<c>`/`max_<c>`
+    * for each of `cols` (any orderable type: min/max never round). The
+    * read is one per-key window plus one key shuffle. */
+  def minMax(root: String, keys: Seq[String], cols: Seq[String],
+      idCol: String): Recompute = {
+    def aggs(cnt: Column, lo: String => Column, hi: String => Column) =
+      cnt.as("cnt") +: cols.flatMap(c =>
+        Seq(lo(c).as(s"min_$c"), hi(c).as(s"max_$c")))
+    val part = aggs(count(lit(1)), c => min(col(c)), c => max(col(c)))
+    val fold = aggs(sumOf(col("cnt")), c => min(col(s"min_$c")),
+      c => max(col(s"max_$c")))
+    new Recompute(root, "_mm", keys, idCol,
+      _.groupBy(keys.map(col): _*).agg(part.head, part.tail: _*),
+      _.groupBy(keys.map(col): _*).agg(fold.head, fold.tail: _*)
+        .filter(col("cnt") > 0))
   }
 
-  /** Next generation stamp: max standing gen + 1 over the PHYSICAL view
-    * table. One column-pruned aggregate (view-sized, never the base) —
-    * maintenance ops are single-writer, same stance as the family. */
-  private def nextGen(spark: SparkSession, physical: String): Long =
-    spark.table(physical).agg(coalesce(max(col("gen")), lit(0L)))
-      .head.getLong(0) + 1
-
-  /** Materialize a MIN/MAX view over `df` (plus cnt — the group-vanish
-    * accounting). `cols` may be any orderable type (no decimal
-    * restriction: min/max never round). The whole base folds into one
-    * reco generation at gen 0. */
-  def buildMinMax(df: DataFrame, table: String, keys: Seq[String],
-      cols: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_mm")
-    partialMM(df, keys, cols, gen = 0L, reco = true)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_mm")
-    IngestGuard.write(spark, df, idCol, table, overwrite = true)
-  }
-
-  /** Incremental INSERT maintenance — min/max ARE insert-associative,
-    * so this is exactly [[delta]]'s shape: one delta-sized partial
-    * appended as a non-reco generation, base never re-read. */
-  def deltaMinMax(table: String, df: DataFrame, keys: Seq[String],
-      cols: Seq[String], idCol: String): Unit = {
-    val spark = df.sparkSession
-    if (df.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mm")
-    require(spark.catalog.tableExists(s"${table}_mm"),
-      s"MatView.deltaMinMax needs a standing view: ${table}_mm not " +
-        "found — run buildMinMax first")
-    refuseSuspects(spark, table, df, idCol, "MatView.deltaMinMax")
-    partialMM(df, keys, cols, nextGen(spark, s"${table}_mm"), reco = false)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mm")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-  }
-
-  /** Incremental DELETE maintenance — the part min/max cannot do
-    * additively (removing the current min needs the runner-up, which
-    * only the base rows know): RECOMPUTE the affected groups from the
-    * SURVIVING base rows and append them as a reco generation that
-    * supersedes those groups' history. `survivors` is the base table
-    * AFTER the delete (at scale: the table behind its [[Tombstones]]
-    * filter); only the victims' key set is scanned from it — the semi
-    * join broadcasts the affected keys, so a key-partitioned/bucketed
-    * base prunes to the touched partitions, NOT a full scan. Groups
-    * whose every row died get an explicit cnt = 0 reco row (min/max
-    * null): the marker both vanishes the group at read time AND
-    * supersedes its history, so a LATER delta to the same key folds
-    * against a clean slate. Unaffected groups are never touched. */
-  def deleteRowsMinMax(table: String, victims: DataFrame,
-      survivors: DataFrame, keys: Seq[String], cols: Seq[String]): Unit = {
-    val spark = victims.sparkSession
-    if (victims.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_mm")
-    require(spark.catalog.tableExists(s"${table}_mm"),
-      s"MatView.deleteRowsMinMax needs a standing view: ${table}_mm not found")
-    val affected = victims.select(keys.map(col): _*).distinct()
-      .localCheckpoint()
-    val g = nextGen(spark, s"${table}_mm")
-    val reco = survivors
-      .join(broadcast(affected), keys, "left_semi")
-    val recoRows = partialMM(reco, keys, cols, g, reco = true)
-      .localCheckpoint() // lineage cut: derived pre-append, written below
-    val gone = affected
-      .join(recoRows.select(keys.map(col): _*), keys, "left_anti")
-      .withColumn("cnt", lit(0L))
-    val goneTyped = cols.foldLeft(gone) { (d, c) =>
-      val dt = survivors.schema(c).dataType
-      d.withColumn(s"min_$c", lit(null).cast(dt))
-        .withColumn(s"max_$c", lit(null).cast(dt))
-    }.withColumn("gen", lit(g)).withColumn("reco", lit(true))
-    recoRows.unionByName(goneTyped)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_mm")
-  }
-
-  /** The folded min/max view: per key, rows at or above the latest reco
-    * generation (that recompute already reflects everything below it)
-    * fold by min-of-mins / max-of-maxes / sum-of-cnts; cnt = 0 groups
-    * vanish. A group seen only through deltas has no reco row — all its
-    * generations fold. One per-key window + one key shuffle, view-sized. */
-  def readMinMax(spark: SparkSession, table: String, keys: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-    val rmax = max(when(col("reco"), col("gen"))).over(w)
-    val aggs = sum(col("cnt")).as("cnt") +: cols.flatMap(c =>
-      Seq(min(col(s"min_$c")).as(s"min_$c"),
-        max(col(s"max_$c")).as(s"max_$c")))
-    spark.table(s"${table}_mm")
-      .withColumn("_rmax", rmax)
-      .filter(col("gen") >= coalesce(col("_rmax"), lit(Long.MinValue)))
-      .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .filter(col("cnt") > 0)
-  }
-
-  // ------------------------------------------------- top-k (`_tk`) view
-
-  /** One generation of TOP-K partials: per touched key, the generation's
-    * own top-k (id, ord) pairs by `ord` DESC (id ASC tie-break —
-    * deterministic under replays and retries). The structural fact that
-    * makes insert maintenance delta-sized: any row in the true top-k of
-    * a UNION of generations is necessarily in the top-k of its OWN
-    * generation — so per-generation top-k partials are a guaranteed
-    * superset of the folded answer, and a delta contributes at most
-    * k·|touched keys| rows regardless of delta size. */
-  private def partialTK(df: DataFrame, keys: Seq[String], ord: String,
-      idCol: String, k: Int, gen: Long, reco: Boolean): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
+  /** A standing TOP-K view: per `keys`, the `k` highest-`ord` rows (their
+    * `idCol` and `ord`, id ascending on ties — deterministic under
+    * replays), read with their rank `rk`. */
+  def topK(root: String, keys: Seq[String], ord: String, idCol: String,
+      k: Int): Recompute = {
+    val rank = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(ord).desc, col(idCol).asc)
-    df.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(keys.map(col) :+ col(idCol) :+ col(ord): _*)
-      .withColumn("gen", lit(gen)).withColumn("reco", lit(reco))
+    def top(df: DataFrame) =
+      df.withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
+    val row = keys.map(col) :+ col(idCol) :+ col(ord)
+    new Recompute(root, "_tk", keys, idCol, top(_).select(row: _*),
+      df => top(df.filter(col(idCol).isNotNull)).select(row :+ col("rk"): _*))
   }
 
-  /** Materialize a TOP-K view: per key, the k highest-`ord` rows (their
-    * id + ord), the leaderboard/dashboard primitive — [[buildMinMax]]
-    * generalized from k = 1 to k, with the same maintenance algebra:
-    * inserts are insert-associative (per-generation top-k partials,
-    * never more than k·|touched keys| rows appended), deletes RECOMPUTE
-    * the affected groups from the surviving base ([[deleteRowsTopK]] —
-    * evicting rank 1 must surface rank k+1, which only the base knows). */
-  def buildTopK(df: DataFrame, table: String, keys: Seq[String],
-      ord: String, idCol: String, k: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_tk")
-    partialTK(df, keys, ord, idCol, k, gen = 0L, reco = true)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_tk")
-    IngestGuard.write(spark, df, idCol, table, overwrite = true)
-  }
+  /** The batch-id ledger `{root}_batches` of the streaming folds (the
+    * views' and [[Scd.foldScd2Batch]]'s): one row per folded bid. */
+  private[ops] object Ledger {
+    def table(root: String): String = s"${root}_batches"
 
-  /** Incremental insert maintenance: append the delta's own top-k
-    * partial — ≤ k rows per touched key, base never re-read. */
-  def deltaTopK(table: String, df: DataFrame, keys: Seq[String],
-      ord: String, idCol: String, k: Int): Unit = {
-    val spark = df.sparkSession
-    if (df.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_tk")
-    require(spark.catalog.tableExists(s"${table}_tk"),
-      s"MatView.deltaTopK needs a standing view: ${table}_tk not found — " +
-        "run buildTopK first")
-    refuseSuspects(spark, table, df, idCol, "MatView.deltaTopK")
-    partialTK(df, keys, ord, idCol, k, nextGen(spark, s"${table}_tk"),
-      reco = false)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_tk")
-    IngestGuard.write(spark, df, idCol, table, overwrite = false)
-  }
+    def has(spark: SparkSession, root: String, bid: Long): Boolean =
+      spark.catalog.tableExists(table(root)) &&
+        spark.table(table(root)).filter(col("bid") === bid).take(1).nonEmpty
 
-  /** Incremental delete maintenance: recompute the affected groups'
-    * top-k from the surviving base (broadcast-semi-join key-pruned —
-    * the [[deleteRowsMinMax]] shape) as a superseding reco generation;
-    * groups left EMPTY get a null-id reco marker so their history is
-    * superseded too and a later delta folds against a clean slate. */
-  def deleteRowsTopK(table: String, victims: DataFrame,
-      survivors: DataFrame, keys: Seq[String], ord: String,
-      idCol: String, k: Int): Unit = {
-    val spark = victims.sparkSession
-    if (victims.isEmpty) return
-    Swap.recoverUnpartitioned(spark, s"${table}_tk")
-    require(spark.catalog.tableExists(s"${table}_tk"),
-      s"MatView.deleteRowsTopK needs a standing view: ${table}_tk not found")
-    val affected = victims.select(keys.map(col): _*).distinct()
-      .localCheckpoint()
-    val g = nextGen(spark, s"${table}_tk")
-    val reco = partialTK(
-      survivors.join(broadcast(affected), keys, "left_semi"),
-      keys, ord, idCol, k, g, reco = true).localCheckpoint()
-    val gone = affected
-      .join(reco.select(keys.map(col): _*), keys, "left_anti")
-      .withColumn(idCol, lit(null).cast(survivors.schema(idCol).dataType))
-      .withColumn(ord, lit(null).cast(survivors.schema(ord).dataType))
-      .withColumn("gen", lit(g)).withColumn("reco", lit(true))
-    reco.unionByName(gone)
-      .write.mode("append").format("parquet").saveAsTable(s"${table}_tk")
-  }
-
-  /** The folded top-k: per key, candidates at/above the latest reco
-    * generation re-rank and cut at k (the per-generation superset
-    * guarantee makes this exact); null-id markers vanish after having
-    * superseded their group's history. Output carries the rank. */
-  def readTopK(spark: SparkSession, table: String, keys: Seq[String],
-      ord: String, idCol: String, k: Int): DataFrame = {
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-    val rmax = max(when(col("reco"), col("gen"))).over(wk)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(ord).desc, col(idCol).asc)
-    spark.table(s"${table}_tk")
-      .withColumn("_rmax", rmax)
-      .filter(col("gen") >= coalesce(col("_rmax"), lit(Long.MinValue)))
-      .filter(col(idCol).isNotNull)
-      .withColumn("rk", row_number().over(wr)).filter(col("rk") <= k)
-      .select(keys.map(col) :+ col(idCol) :+ col(ord) :+ col("rk"): _*)
-  }
-
-  /** Fold the `_tk` generations to one reco generation (gen 0) through
-    * the crash-recoverable staged swap — ≤ k rows per key standing. */
-  def compactTopK(spark: SparkSession, table: String, keys: Seq[String],
-      ord: String, idCol: String, k: Int): Unit = {
-    Swap.recoverUnpartitioned(spark, s"${table}_tk")
-    Swap.stageThenSwap(spark, s"${table}_tk",
-      readTopK(spark, table, keys, ord, idCol, k).drop("rk")
-        .withColumn("gen", lit(0L)).withColumn("reco", lit(true))) {
-      (df, staged) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(staged)
+    def write(spark: SparkSession, root: String, bid: Long): Unit = {
+      import spark.implicits._
+      save(Seq(bid).toDF("bid").coalesce(1), table(root), "append")
     }
   }
 
-  /** Fold the `_mm` generations to one reco row per key (gen 0) through
-    * the crash-recoverable staged swap — read cost back to ~|keys| and
-    * the window fold trivializes. Guard sidecar stance as [[compact]]. */
-  def compactMinMax(spark: SparkSession, table: String, keys: Seq[String],
-      cols: Seq[String]): Unit = {
-    Swap.recoverUnpartitioned(spark, s"${table}_mm")
-    Swap.stageThenSwap(spark, s"${table}_mm",
-      readMinMax(spark, table, keys, cols)
-        .withColumn("gen", lit(0L)).withColumn("reco", lit(true))) {
-      (df, staged) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(staged)
-    }
-  }
+  private def save(df: DataFrame, table: String, mode: String): Unit =
+    df.write.mode(mode).format("parquet").saveAsTable(table)
 }

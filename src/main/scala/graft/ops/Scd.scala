@@ -200,8 +200,8 @@ object Scd {
   }
 
   /** Fold one observation micro-batch into a STANDING SCD2 dimension
-    * table (`{table}_scd2`) under BATCH-ID idempotence — [[MatView
-    * .foldBatch]]'s ledger recipe applied to dimension maintenance.
+    * table (`{table}_scd2`) under BATCH-ID idempotence — the views'
+    * ledger ([[MatView.View.foldBatch]]) applied to dimension maintenance.
     * Batch 0 bootstraps via [[scd2Build]]; later batches fold via
     * [[scd2Apply]] and swap the updated dimension in through the
     * crash-recoverable [[Swap]]. The apply output carries unaffected
@@ -218,9 +218,7 @@ object Scd {
       key: String, date: String, obsId: String, value: String): Unit = {
     val spark = obs.sparkSession
     val dimT = s"${table}_scd2"
-    val ledger = s"${table}_batches"
-    if (spark.catalog.tableExists(ledger) &&
-        spark.table(ledger).filter(col("bid") === bid).take(1).nonEmpty)
+    if (MatView.Ledger.has(spark, table, bid))
       return // redelivered batch: already folded
     Swap.recoverUnpartitioned(spark, dimT)
     if (!spark.catalog.tableExists(dimT)) {
@@ -233,6 +231,6 @@ object Scd {
           df.write.mode("overwrite").format("parquet").saveAsTable(staged)
       }
     }
-    MatView.writeLedger(spark, ledger, bid)
+    MatView.Ledger.write(spark, table, bid)
   }
 }

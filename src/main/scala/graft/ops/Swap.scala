@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The crash-recoverable staged swaps every compaction runs — the data
-  * tables of each [[StandingIndex]] and the materialized views of
-  * [[MatView]] and [[Scd]]. Spark cannot overwrite a table it is reading
+  * tables of each [[StandingIndex]], the table of every [[MatView]] view
+  * kind (sum and join `_mv`, distinct `_dv`, min/max `_mm`, top-k `_tk`)
+  * and the [[Scd]] dimension. Spark cannot overwrite a table it is reading
   * and no atomic table-replace DDL exists, so a compaction rewrite stages
   * `{live}_compacting`, renames the live generation to `{live}_retired`
   * and the staged copy in — every intermediate catalog state is one

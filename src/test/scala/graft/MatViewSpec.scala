@@ -32,22 +32,22 @@ class MatViewSpec extends SparkSpec {
     val o = Tables.orders(spark, sfDir)
       .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
     val keys = Seq("o_custkey"); val sums = Seq("price")
-    def read() = MatView.read(spark, t, keys, sums)
+    def read() = MatView.sum(t, keys, sums, "o_orderkey").read(spark)
       .select(col("o_custkey"), col("cnt"), col("sum_price"))
 
     val base = o.filter(col("o_orderkey") % 5 =!= 0)
-    MatView.build(base, t, keys, sums, "o_orderkey")
+    MatView.sum(t, keys, sums, "o_orderkey").build(base)
     assert(rows(read()) === rows(recompute(base)),
       "post-build read diverged from the GROUP BY recompute")
 
     val delta = o.filter(col("o_orderkey") % 5 === 0)
-    MatView.delta(t, delta, keys, sums, "o_orderkey")
+    MatView.sum(t, keys, sums, "o_orderkey").delta(delta)
     assert(rows(read()) === rows(recompute(o)),
       "post-delta read diverged (delta partials mis-folded)")
 
     // replay refused loudly — an admitted replay doubles its groups
     intercept[IllegalArgumentException] {
-      MatView.delta(t, delta.limit(1), keys, sums, "o_orderkey")
+      MatView.sum(t, keys, sums, "o_orderkey").delta(delta.limit(1))
     }
 
     // delete one customer's ENTIRE order set + a spread of others: the
@@ -56,7 +56,7 @@ class MatViewSpec extends SparkSpec {
       .collect()(0).getLong(0)
     val victims = o.filter(col("o_custkey") === victimCust ||
       col("o_orderkey") % 7 === 3)
-    MatView.deleteRows(t, victims, keys, sums)
+    MatView.sum(t, keys, sums, "o_orderkey").delete(victims)
     val surviving = o.filter(col("o_custkey") =!= victimCust &&
       col("o_orderkey") % 7 =!= 3)
     assert(rows(read()) === rows(recompute(surviving)),
@@ -66,7 +66,7 @@ class MatViewSpec extends SparkSpec {
 
     // compact: one physical row per key, result unmoved
     val want = rows(read())
-    MatView.compact(spark, t, keys, sums)
+    MatView.sum(t, keys, sums, "o_orderkey").compact(spark)
     assert(rows(read()) === want, "compaction moved the view")
     val perKey = spark.table(s"${t}_mv").groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n")).agg(max(col("n"))).collect()(0).getLong(0)
@@ -82,20 +82,20 @@ class MatViewSpec extends SparkSpec {
     val o = Tables.orders(spark, sfDir)
       .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
     val keys = Seq("o_custkey"); val sums = Seq("price")
-    def read() = MatView.read(spark, t, keys, sums)
+    def read() = MatView.sum(t, keys, sums, "o_orderkey").read(spark)
       .select(col("o_custkey"), col("cnt"), col("sum_price"))
 
     val b0 = o.filter(col("o_orderkey") % 2 === 1)
     val b1 = o.filter(col("o_orderkey") % 2 === 0)
-    MatView.foldBatch(t, 0L, b0, keys, sums, "o_orderkey")
-    MatView.foldBatch(t, 1L, b1, keys, sums, "o_orderkey")
+    MatView.sum(t, keys, sums, "o_orderkey").foldBatch(0L, b0)
+    MatView.sum(t, keys, sums, "o_orderkey").foldBatch(1L, b1)
     assert(rows(read()) === rows(recompute(o)),
       "drained folds diverged from the one-shot GROUP BY")
 
     // the crash-redelivery case: SAME bid again, content identical —
     // must be skipped entirely (no doubled groups, no new generation)
     val gens = spark.table(s"${t}_mv").count()
-    MatView.foldBatch(t, 1L, b1, keys, sums, "o_orderkey")
+    MatView.sum(t, keys, sums, "o_orderkey").foldBatch(1L, b1)
     assert(spark.table(s"${t}_mv").count() === gens,
       "redelivered batch id re-folded (ledger miss)")
     assert(rows(read()) === rows(recompute(o)),
@@ -104,17 +104,17 @@ class MatViewSpec extends SparkSpec {
     // CDC: a mixed I/D batch applies as one generation; a redelivered
     // bid is a strict no-op; read == base + inserts − deletes
     val t2 = "graft_mvs_test.cdc"
-    MatView.build(b0, t2, keys, sums, "o_orderkey")
+    MatView.sum(t2, keys, sums, "o_orderkey").build(b0)
     val changes = b1.withColumn("op", lit("I")).unionByName(
       b0.filter(col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))
-    MatView.applyCdc(t2, 0L, changes, keys, sums)
+    MatView.sum(t2, keys, sums, "o_orderkey").applyCdc(0L, changes)
     val surviving = o.filter(!(col("o_orderkey") % 2 === 1 &&
       col("o_orderkey") % 7 === 3))
-    def read2() = MatView.read(spark, t2, keys, sums)
+    def read2() = MatView.sum(t2, keys, sums, "o_orderkey").read(spark)
       .select(col("o_custkey"), col("cnt"), col("sum_price"))
     assert(rows(read2()) === rows(recompute(surviving)),
       "CDC apply diverged from base + inserts − deletes")
-    MatView.applyCdc(t2, 0L, changes, keys, sums)
+    MatView.sum(t2, keys, sums, "o_orderkey").applyCdc(0L, changes)
     assert(rows(read2()) === rows(recompute(surviving)),
       "redelivered CDC bid re-applied")
   }
@@ -132,7 +132,8 @@ class MatViewSpec extends SparkSpec {
     val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_nationkey"))
     val keys = Seq("c_nationkey"); val sums = Seq("price")
-    def read() = MatView.read(spark, t, keys, sums)
+    def read() = MatView.join(t, dim, Seq("c_custkey"), keys, sums,
+      "o_orderkey").read(spark)
       .select(col("c_nationkey").as("o_custkey"), // reuse the sorter
         col("cnt"), col("sum_price"))
     def recomputeJ(fact: org.apache.spark.sql.DataFrame) =
@@ -141,14 +142,14 @@ class MatViewSpec extends SparkSpec {
         .agg(count(lit(1)).as("cnt"), sum(col("price")).as("sum_price"))
 
     val base = o.filter(col("o_orderkey") % 5 =!= 0)
-    MatView.buildJoin(base, dim, t, Seq("c_custkey"), keys, sums,
-      "o_orderkey")
+    MatView.join(t, dim, Seq("c_custkey"), keys, sums,
+      "o_orderkey").build(base)
     assert(rows(read()) === rows(recomputeJ(base)),
       "post-buildJoin read diverged from the join recompute")
 
     val delta = o.filter(col("o_orderkey") % 5 === 0)
-    MatView.deltaJoin(t, delta, dim, Seq("c_custkey"), keys, sums,
-      "o_orderkey")
+    MatView.join(t, dim, Seq("c_custkey"), keys, sums,
+      "o_orderkey").delta(delta)
     assert(rows(read()) === rows(recomputeJ(o)),
       "post-deltaJoin read diverged")
 
@@ -158,18 +159,19 @@ class MatViewSpec extends SparkSpec {
     val orphan = o.limit(1)
       .withColumn("o_orderkey", lit(77000001L))
       .withColumn("c_custkey", lit(-1L)).localCheckpoint()
-    MatView.deltaJoin(t, orphan, dim, Seq("c_custkey"), keys, sums,
-      "o_orderkey")
+    MatView.join(t, dim, Seq("c_custkey"), keys, sums,
+      "o_orderkey").delta(orphan)
     assert(rows(read()) === rows(recomputeJ(o)),
       "an unmatched fact row changed the view")
     intercept[IllegalArgumentException] {
-      MatView.deltaJoin(t, orphan, dim, Seq("c_custkey"), keys, sums,
-        "o_orderkey")
+      MatView.join(t, dim, Seq("c_custkey"), keys, sums,
+        "o_orderkey").delta(orphan)
     }
 
     // delete through the same dim: exact inverse of the insert path
     val victims = o.filter(col("o_orderkey") % 7 === 3)
-    MatView.deleteJoinRows(t, victims, dim, Seq("c_custkey"), keys, sums)
+    MatView.join(t, dim, Seq("c_custkey"), keys, sums, "o_orderkey")
+      .delete(victims)
     assert(rows(read()) === rows(recomputeJ(
       o.filter(col("o_orderkey") % 7 =!= 3))),
       "post-deleteJoinRows read diverged")
@@ -192,7 +194,7 @@ class MatViewSpec extends SparkSpec {
     val t = "graft_mvd_test.mvd"
     val o = Tables.orders(spark, sfDir)
     val keys = Seq("o_orderpriority"); val v = "o_custkey"
-    def read() = MatView.readDistinct(spark, t, keys, v)
+    def read() = MatView.distinct(t, keys, v, "o_orderkey").read(spark)
       .select(col("o_orderpriority").as("o_custkey"), // reuse the sorter
         col("ndv"), col("cnt"))
     def recomputeD(base: org.apache.spark.sql.DataFrame) =
@@ -200,16 +202,16 @@ class MatViewSpec extends SparkSpec {
         .agg(countDistinct(col(v)).as("ndv"), count(lit(1)).as("cnt"))
 
     val base = o.filter(col("o_orderkey") % 5 =!= 0)
-    MatView.buildDistinct(base, t, keys, v, "o_orderkey")
+    MatView.distinct(t, keys, v, "o_orderkey").build(base)
     assert(rows(read()) === rows(recomputeD(base)),
       "post-buildDistinct read diverged from COUNT DISTINCT recompute")
 
     val delta = o.filter(col("o_orderkey") % 5 === 0)
-    MatView.deltaDistinct(t, delta, keys, v, "o_orderkey")
+    MatView.distinct(t, keys, v, "o_orderkey").delta(delta)
     assert(rows(read()) === rows(recomputeD(o)),
       "post-deltaDistinct read diverged")
     intercept[IllegalArgumentException] {
-      MatView.deltaDistinct(t, delta.limit(1), keys, v, "o_orderkey")
+      MatView.distinct(t, keys, v, "o_orderkey").delta(delta.limit(1))
     }
 
     // TEETH: delete ONE order of a multi-order (priority, customer) pair
@@ -225,14 +227,14 @@ class MatViewSpec extends SparkSpec {
       col(v) === ck).localCheckpoint()
     val first = pairRows.orderBy(col("o_orderkey")).limit(1)
       .localCheckpoint()
-    MatView.deleteRowsDistinct(t, first, keys, v)
+    MatView.distinct(t, keys, v, "o_orderkey").delete(first)
     val afterOne = o.join(first.select(col("o_orderkey")),
       Seq("o_orderkey"), "left_anti")
     assert(rows(read()) === rows(recomputeD(afterOne)),
       "deleting one supporter of a 2+-supporter pair moved ndv")
-    MatView.deleteRowsDistinct(t,
+    MatView.distinct(t, keys, v, "o_orderkey").delete(
       pairRows.join(first.select(col("o_orderkey")),
-        Seq("o_orderkey"), "left_anti"), keys, v)
+        Seq("o_orderkey"), "left_anti"))
     val afterAll = o.join(pairRows.select(col("o_orderkey")),
       Seq("o_orderkey"), "left_anti")
     assert(rows(read()) === rows(recomputeD(afterAll)),
@@ -240,8 +242,8 @@ class MatViewSpec extends SparkSpec {
 
     // empty a whole group: delete every row of one priority
     val gonePr = "1-URGENT"
-    MatView.deleteRowsDistinct(t,
-      afterAll.filter(col("o_orderpriority") === gonePr), keys, v)
+    MatView.distinct(t, keys, v, "o_orderkey").delete(
+      afterAll.filter(col("o_orderpriority") === gonePr))
     val surviving = afterAll.filter(col("o_orderpriority") =!= gonePr)
     assert(rows(read()) === rows(recomputeD(surviving)),
       "post-group-delete read diverged")
@@ -250,7 +252,7 @@ class MatViewSpec extends SparkSpec {
 
     // compact: one physical row per surviving pair, result unmoved
     val want = rows(read())
-    MatView.compactDistinct(spark, t, keys, v)
+    MatView.distinct(t, keys, v, "o_orderkey").compact(spark)
     assert(rows(read()) === want, "distinct compaction moved the view")
     val perPair = spark.table(s"${t}_dv")
       .groupBy(col("o_orderpriority"), col(v))
@@ -273,38 +275,38 @@ class MatViewSpec extends SparkSpec {
 
     // distinct: bootstrap + fold, redelivery leaves the pair rows alone
     val td = "graft_mvx_test.dv"
-    MatView.foldBatchDistinct(td, 0L, b0,
-      Seq("o_orderpriority"), "o_custkey", "o_orderkey")
-    MatView.foldBatchDistinct(td, 1L, b1,
-      Seq("o_orderpriority"), "o_custkey", "o_orderkey")
-    def readD() = MatView.readDistinct(spark, td,
-      Seq("o_orderpriority"), "o_custkey")
+    MatView.distinct(td,
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").foldBatch(0L, b0)
+    MatView.distinct(td,
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").foldBatch(1L, b1)
+    def readD() = MatView.distinct(td,
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").read(spark)
       .select(col("o_orderpriority").as("o_custkey"), col("ndv"), col("cnt"))
     val wantD = rows(o.groupBy(col("o_orderpriority").as("o_custkey"))
       .agg(countDistinct(col("o_custkey")).as("ndv"),
         count(lit(1)).as("cnt")))
     assert(rows(readD()) === wantD, "drained distinct stream diverged")
     val nD = spark.table(s"${td}_dv").count()
-    MatView.foldBatchDistinct(td, 1L, b1,
-      Seq("o_orderpriority"), "o_custkey", "o_orderkey")
+    MatView.distinct(td,
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").foldBatch(1L, b1)
     assert(spark.table(s"${td}_dv").count() === nD &&
       rows(readD()) === wantD, "redelivered distinct batch re-folded")
 
     // minmax: bootstrap + fold, redelivery adds no generation
     val tm = "graft_mvx_test.mm"
-    MatView.foldBatchMinMax(tm, 0L, b0,
-      Seq("o_custkey"), Seq("price"), "o_orderkey")
-    MatView.foldBatchMinMax(tm, 1L, b1,
-      Seq("o_custkey"), Seq("price"), "o_orderkey")
-    def readM() = MatView.readMinMax(spark, tm,
-      Seq("o_custkey"), Seq("price"))
+    MatView.minMax(tm,
+      Seq("o_custkey"), Seq("price"), "o_orderkey").foldBatch(0L, b0)
+    MatView.minMax(tm,
+      Seq("o_custkey"), Seq("price"), "o_orderkey").foldBatch(1L, b1)
+    def readM() = MatView.minMax(tm,
+      Seq("o_custkey"), Seq("price"), "o_orderkey").read(spark)
       .select(col("o_custkey"), col("cnt"),
         col("min_price"), col("max_price"))
     assert(rows(readM()) === rows(recomputeMM(o)),
       "drained minmax stream diverged")
     val nM = spark.table(s"${tm}_mm").count()
-    MatView.foldBatchMinMax(tm, 1L, b1,
-      Seq("o_custkey"), Seq("price"), "o_orderkey")
+    MatView.minMax(tm,
+      Seq("o_custkey"), Seq("price"), "o_orderkey").foldBatch(1L, b1)
     assert(spark.table(s"${tm}_mm").count() === nM &&
       rows(readM()) === rows(recomputeMM(o)),
       "redelivered minmax batch re-folded")
@@ -314,26 +316,28 @@ class MatViewSpec extends SparkSpec {
     val oj = o.withColumnRenamed("o_custkey", "c_custkey")
     val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_nationkey"))
-    MatView.buildJoin(oj.filter(col("o_orderkey") % 2 === 1), dim, tj,
-      Seq("c_custkey"), Seq("c_nationkey"), Seq("price"), "o_orderkey")
+    MatView.join(tj, dim, Seq("c_custkey"), Seq("c_nationkey"), Seq("price"),
+      "o_orderkey").build(oj.filter(col("o_orderkey") % 2 === 1))
     val changes = oj.filter(col("o_orderkey") % 2 === 0)
       .withColumn("op", lit("I"))
       .unionByName(oj.filter(col("o_orderkey") % 2 === 1 &&
         col("o_orderkey") % 7 === 3).withColumn("op", lit("D")))
-    MatView.applyCdcJoin(tj, 0L, changes, dim,
-      Seq("c_custkey"), Seq("c_nationkey"), Seq("price"))
+    MatView.join(tj, dim, Seq("c_custkey"), Seq("c_nationkey"), Seq("price"),
+      "o_orderkey").applyCdc(0L, changes)
     val surviving = oj.filter(!(col("o_orderkey") % 2 === 1 &&
       col("o_orderkey") % 7 === 3))
     val wantJ = rows(surviving.join(dim, Seq("c_custkey"))
       .groupBy(col("c_nationkey").as("o_custkey"))
       .agg(count(lit(1)).as("cnt"), sum(col("price")).as("sum_price")))
-    assert(rows(MatView.read(spark, tj, Seq("c_nationkey"), Seq("price"))
+    assert(rows(MatView.join(tj, dim, Seq("c_custkey"), Seq("c_nationkey"),
+      Seq("price"), "o_orderkey").read(spark)
       .select(col("c_nationkey").as("o_custkey"), col("cnt"),
         col("sum_price"))) === wantJ,
       "join-view CDC diverged from the survivors' join GROUP BY")
-    MatView.applyCdcJoin(tj, 0L, changes, dim,
-      Seq("c_custkey"), Seq("c_nationkey"), Seq("price"))
-    assert(rows(MatView.read(spark, tj, Seq("c_nationkey"), Seq("price"))
+    MatView.join(tj, dim, Seq("c_custkey"), Seq("c_nationkey"), Seq("price"),
+      "o_orderkey").applyCdc(0L, changes)
+    assert(rows(MatView.join(tj, dim, Seq("c_custkey"), Seq("c_nationkey"),
+      Seq("price"), "o_orderkey").read(spark)
       .select(col("c_nationkey").as("o_custkey"), col("cnt"),
         col("sum_price"))) === wantJ, "redelivered CDC bid re-applied")
   }
@@ -357,19 +361,19 @@ class MatViewSpec extends SparkSpec {
           col("price"), col("rk"))
     def rowsTK(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("o_orderpriority", "rk").collect().map(_.toSeq).toSeq
-    def read() = MatView.readTopK(spark, t, keys, "price", "o_orderkey", k)
+    def read() = MatView.topK(t, keys, "price", "o_orderkey", k).read(spark)
 
     val base = o.filter(col("o_orderkey") % 5 =!= 0)
-    MatView.buildTopK(base, t, keys, "price", "o_orderkey", k)
+    MatView.topK(t, keys, "price", "o_orderkey", k).build(base)
     assert(rowsTK(read()) === rowsTK(recomputeTK(base)),
       "post-build topk diverged from the window recompute")
 
     val delta = o.filter(col("o_orderkey") % 5 === 0)
-    MatView.deltaTopK(t, delta, keys, "price", "o_orderkey", k)
+    MatView.topK(t, keys, "price", "o_orderkey", k).delta(delta)
     assert(rowsTK(read()) === rowsTK(recomputeTK(o)),
       "post-delta topk diverged (generation supersets mis-folded)")
     intercept[IllegalArgumentException] {
-      MatView.deltaTopK(t, delta.limit(1), keys, "price", "o_orderkey", k)
+      MatView.topK(t, keys, "price", "o_orderkey", k).delta(delta.limit(1))
     }
 
     // TEETH: delete every key's CURRENT RANK-1 row — the fold must
@@ -378,8 +382,8 @@ class MatViewSpec extends SparkSpec {
       .filter(col("rk") === 1).drop("rk").localCheckpoint()
     val survivors = o.join(rank1.select(col("o_orderkey")),
       Seq("o_orderkey"), "left_anti")
-    MatView.deleteRowsTopK(t, rank1, survivors, keys, "price",
-      "o_orderkey", k)
+    MatView.topK(t, keys, "price",
+      "o_orderkey", k).delete(rank1, survivors)
     assert(rowsTK(read()) === rowsTK(recomputeTK(survivors)),
       "evicting rank 1 did not surface the runner-up ladder")
 
@@ -388,19 +392,19 @@ class MatViewSpec extends SparkSpec {
     val vic = survivors.filter(col("o_orderpriority") === gonePr)
       .localCheckpoint()
     val surv2 = survivors.filter(col("o_orderpriority") =!= gonePr)
-    MatView.deleteRowsTopK(t, vic, surv2, keys, "price", "o_orderkey", k)
+    MatView.topK(t, keys, "price", "o_orderkey", k).delete(vic, surv2)
     assert(read().filter(col("o_orderpriority") === gonePr).count() === 0,
       "a fully-deleted group survived the topk fold")
     val back = vic.limit(5)
       .withColumn("o_orderkey", col("o_orderkey") + 91000000L)
       .localCheckpoint()
-    MatView.deltaTopK(t, back, keys, "price", "o_orderkey", k)
+    MatView.topK(t, keys, "price", "o_orderkey", k).delta(back)
     assert(rowsTK(read()) === rowsTK(recomputeTK(surv2.unionByName(back))),
       "delta after a full-group delete folded against stale history")
 
     // compact: ≤ k standing physical rows per key, result unmoved
     val want = rowsTK(read())
-    MatView.compactTopK(spark, t, keys, "price", "o_orderkey", k)
+    MatView.topK(t, keys, "price", "o_orderkey", k).compact(spark)
     assert(rowsTK(read()) === want, "topk compaction moved the view")
     val perKey = spark.table(s"${t}_tk").groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n")).agg(max(col("n"))).collect()(0).getLong(0)
@@ -415,23 +419,23 @@ class MatViewSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mvp_test LOCATION '$wh'")
     val o = Tables.orders(spark, sfDir)
       .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
-    MatView.buildMinMax(o, "graft_mvp_test.mm",
-      Seq("o_custkey"), Seq("price"), "o_orderkey")
-    MatView.buildTopK(o, "graft_mvp_test.tk",
-      Seq("o_orderpriority"), "price", "o_orderkey", 3)
-    MatView.buildDistinct(o, "graft_mvp_test.dv",
-      Seq("o_orderpriority"), "o_custkey", "o_orderkey")
+    MatView.minMax("graft_mvp_test.mm",
+      Seq("o_custkey"), Seq("price"), "o_orderkey").build(o)
+    MatView.topK("graft_mvp_test.tk",
+      Seq("o_orderpriority"), "price", "o_orderkey", 3).build(o)
+    MatView.distinct("graft_mvp_test.dv",
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").build(o)
     def exchanges(df: org.apache.spark.sql.DataFrame) =
       "Exchange hashpartitioning".r
         .findAllIn(df.queryExecution.executedPlan.toString).length
-    assert(exchanges(MatView.readMinMax(spark, "graft_mvp_test.mm",
-      Seq("o_custkey"), Seq("price"))) === 1,
+    assert(exchanges(MatView.minMax("graft_mvp_test.mm",
+      Seq("o_custkey"), Seq("price"), "o_orderkey").read(spark)) === 1,
       "readMinMax: window and fold must share one key exchange")
-    assert(exchanges(MatView.readTopK(spark, "graft_mvp_test.tk",
-      Seq("o_orderpriority"), "price", "o_orderkey", 3)) === 1,
+    assert(exchanges(MatView.topK("graft_mvp_test.tk",
+      Seq("o_orderpriority"), "price", "o_orderkey", 3).read(spark)) === 1,
       "readTopK: rmax window and rank window must share one exchange")
-    assert(exchanges(MatView.readDistinct(spark, "graft_mvp_test.dv",
-      Seq("o_orderpriority"), "o_custkey")) === 2,
+    assert(exchanges(MatView.distinct("graft_mvp_test.dv",
+      Seq("o_orderpriority"), "o_custkey", "o_orderkey").read(spark)) === 2,
       "readDistinct: pair fold + key fold, nothing more")
   }
 
@@ -451,23 +455,23 @@ class MatViewSpec extends SparkSpec {
     val o = Tables.orders(spark, sfDir)
       .withColumn("price", col("o_totalprice").cast("decimal(18,2)"))
     val keys = Seq("o_custkey"); val cols = Seq("price")
-    def read() = MatView.readMinMax(spark, t, keys, cols)
+    def read() = MatView.minMax(t, keys, cols, "o_orderkey").read(spark)
       .select(col("o_custkey"), col("cnt"),
         col("min_price"), col("max_price"))
 
     val base = o.filter(col("o_orderkey") % 5 =!= 0)
-    MatView.buildMinMax(base, t, keys, cols, "o_orderkey")
+    MatView.minMax(t, keys, cols, "o_orderkey").build(base)
     assert(rows(read()) === rows(recomputeMM(base)),
       "post-build minmax read diverged from the GROUP BY recompute")
 
     val delta = o.filter(col("o_orderkey") % 5 === 0)
-    MatView.deltaMinMax(t, delta, keys, cols, "o_orderkey")
+    MatView.minMax(t, keys, cols, "o_orderkey").delta(delta)
     assert(rows(read()) === rows(recomputeMM(o)),
       "post-delta minmax read diverged (insert partials mis-folded)")
 
     // replay refused loudly — the same no-row-identity stance as delta
     intercept[IllegalArgumentException] {
-      MatView.deltaMinMax(t, delta.limit(1), keys, cols, "o_orderkey")
+      MatView.minMax(t, keys, cols, "o_orderkey").delta(delta.limit(1))
     }
 
     // TEETH for the recompute: delete every group's CURRENT MAX row —
@@ -480,7 +484,7 @@ class MatViewSpec extends SparkSpec {
     val victims = ranked.filter(col("rk") === 1).drop("rk")
       .localCheckpoint()
     val survivors = ranked.filter(col("rk") =!= 1).drop("rk")
-    MatView.deleteRowsMinMax(t, victims, survivors, keys, cols)
+    MatView.minMax(t, keys, cols, "o_orderkey").delete(victims, survivors)
     assert(rows(read()) === rows(recomputeMM(survivors)),
       "post-delete minmax read diverged — the runner-up max did not " +
         "surface (recompute generation mis-folded)")
@@ -498,19 +502,19 @@ class MatViewSpec extends SparkSpec {
     if (single.nonEmpty) {
       val back = o.filter(col("o_custkey") === single.head)
         .withColumn("o_orderkey", col("o_orderkey") + 90000000L)
-      MatView.deltaMinMax(t, back, keys, cols, "o_orderkey")
+      MatView.minMax(t, keys, cols, "o_orderkey").delta(back)
       val want = recomputeMM(survivors.unionByName(back))
       assert(rows(read()) === rows(want),
         "delta after a full-group delete folded against stale history")
       // restore the frame the remaining assertions expect
-      MatView.deleteRowsMinMax(t, back, survivors, keys, cols)
+      MatView.minMax(t, keys, cols, "o_orderkey").delete(back, survivors)
       assert(rows(read()) === rows(recomputeMM(survivors)),
         "second delete (undo) diverged")
     }
 
     // compact: one physical row per key, result unmoved
     val want = rows(read())
-    MatView.compactMinMax(spark, t, keys, cols)
+    MatView.minMax(t, keys, cols, "o_orderkey").compact(spark)
     assert(rows(read()) === want, "minmax compaction moved the view")
     val perKey = spark.table(s"${t}_mm").groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n")).agg(max(col("n"))).collect()(0).getLong(0)

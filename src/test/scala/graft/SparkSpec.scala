@@ -40,4 +40,34 @@ trait SparkSpec extends AnyFunSuite {
       case other                    => other.children.flatMap(scans)
     }
   }
+
+  /** Data files under a table's location (0 when it does not exist). */
+  protected def files(table: String): Long =
+    if (!spark.catalog.tableExists(table)) 0L
+    else {
+      val ident = org.apache.spark.sql.catalyst.TableIdentifier(
+        table.split('.').last, Some(table.split('.').head))
+      val loc = java.nio.file.Paths.get(new java.net.URI(spark.sessionState
+        .catalog.getTableMetadata(ident).location.toString))
+      val walk = java.nio.file.Files.walk(loc)
+      try walk.filter(p => p.toString.endsWith(".parquet")).count()
+      finally walk.close()
+    }
+
+  /** Stop a compaction swap of `live` after the live generation was
+    * renamed away: the staged copy complete, the retired one standing. */
+  protected def crashMidSwap(live: String,
+      partitionedBy: Option[String]): Unit =
+    partitionedBy match {
+      case Some(p) =>
+        spark.table(live).repartition(org.apache.spark.sql.functions.col(p))
+          .write.mode("overwrite").partitionBy(p).format("parquet")
+          .saveAsTable(s"${live}_compacting")
+        spark.sql(s"ALTER TABLE $live RENAME TO ${live}_retired")
+      case None =>
+        // renaming keeps the staged copy's layout (bucketing) exact
+        spark.sql(s"ALTER TABLE $live RENAME TO ${live}_compacting")
+        spark.sql(s"CREATE TABLE ${live}_retired AS SELECT * FROM " +
+          s"${live}_compacting")
+    }
 }
