@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSql
 
 import graft.functions.Norm
 
@@ -84,9 +86,17 @@ object Recommend {
     * sort_array'd — a deterministic ordered aggregation, not a
     * single-partition trick. The reduce to one row is inherent to the
     * endpoint (one message per call), and the row is bounded by the
-    * recommendation count, not the table size. */
+    * recommendation count, not the table size.
+    *
+    * Because the envelope orders by itself, a global sort on top of `recs`
+    * (the one `recommend` ends in) is dead work — its range-partition
+    * sampling and exchange alone are two Spark jobs — so the aggregate
+    * reads the sort's child. Any other top node (a `limit`) stays. */
   def responseMessage(recs: DataFrame): DataFrame =
-    recs.select(col("score"), col("id"), col("name"))
+    (recs.queryExecution.logical match {
+      case Sort(_, true, child, _) => GraftSql.ofRows(recs.sparkSession, child)
+      case _ => recs
+    }).select(col("score"), col("id"), col("name"))
       .agg(sort_array(collect_list(
         struct((-col("score")).as("ns"), col("id"), col("name")))).as("arr"))
       .select(transform(col("arr"), x => x("name")).as("names"))

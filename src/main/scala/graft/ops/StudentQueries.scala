@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Point lookups and the two "authoritative template" queries the
   * reference's NL front-end compiles to (src/llm_cypher.py:85-102):
@@ -61,7 +65,7 @@ object StudentQueries {
     *   OPTIONAL MATCH p = (a)-[r]-(b)
     *   RETURN a.*, b.*, type(r), properties(r), a.college = b.college AS ...
     * Pair details survive even when no edge exists (left outer), and the
-    * undirected `-[r]-` pattern must probe BOTH orientations of the directed
+    * undirected `-[r]-` pattern matches BOTH orientations of the directed
     * edge table (edges stored with src < dst, create_relationships.py:19).
     *
     * `properties(r)` parity (llm_cypher.py:91): every edge column beyond the
@@ -69,10 +73,24 @@ object StudentQueries {
     * projection — e.g. a SHARES_INTEREST edge's `common` array
     * (create_relationships.py:85) surfaces next to `rel_type`.
     *
-    * Physical shape: both name filters reduce to ≤1 row each, so the a×b
-    * pair is a 1-row broadcast cross; the edge probe is a broadcast join of
-    * the 1-row pair against `edges` — at scale this is a pushdown-filtered
-    * scan of the edge table on (src, dst).
+    * Physical shape: bind, then probe — Neo4j's two index seeks and one
+    * adjacency probe. This runs two small queries EAGERLY and returns a
+    * local relation:
+    *   1. one scan, `lower(name) IN (n1, n2)`, collects both sides (the
+    *      first row per lowered name, as the template's `limit(1)`);
+    *   2. the two ids, bound as literals, probe the edge table with
+    *      `(src = a AND dst = b) OR (src = b AND dst = a)` — a pushed-down
+    *      filter on a stored table, no join and one scan of `edges`;
+    *   3. the driver rebuilds the left-outer result: one row per matched
+    *      orientation, one null-edge row when nothing matched, no rows when
+    *      either name is missing.
+    * The template's projection runs over that relation in Spark, so its null
+    * rules for `same_*` and `common_interests` hold. The `ORDER BY type(r)`
+    * runs on the driver with Spark's string order (nulls first): a sort over
+    * a local relation would still plan Spark jobs (3 at local[4]).
+    * The pair is bound rather than joined because a broadcast hash join
+    * cannot build the preserved side of a left outer join: the edge table
+    * would be the built or sorted side, read in full.
     */
   def pairRelationship(
       students: DataFrame, edges: DataFrame,
@@ -84,31 +102,42 @@ object StudentQueries {
     val hasInterests = students.columns.contains("interests")
     val sideCols = Seq("id", "name", "college", "board", "stream") ++
       (if (hasInterests) Seq("interests") else Nil)
-    def side(name: String, p: String) =
-      students.filter(lower(col("name")) === lit(name.toLowerCase)).limit(1)
-        .select(sideCols.map(c => col(c).as(s"${p}_$c")): _*)
-    val a = side(name1, "a")
-    val b = side(name2, "b")
-    val pair = broadcast(a).crossJoin(broadcast(b))
-    // Undirected probe: union BOTH orientations of the directed edge table
-    // and join on plain (src, dst) equality — an OR-of-orientations join
-    // condition has no equi keys, so Catalyst would fall back to a
-    // nested-loop probe over the whole edge table; the doubled-orientation
-    // equi-join keeps (src, dst) pushdown/broadcast-hash-join viable at any
-    // edge count. Edges are stored src < dst, so the two orientations are
-    // disjoint and the union introduces no duplicate matches.
-    val bothOrientations = edges.unionByName(
-      edges.withColumnRenamed("src", "tmp")
-        .withColumnRenamed("dst", "src").withColumnRenamed("tmp", "dst")
-        .select(edges.columns.toIndexedSeq.map(col): _*))
+    val (key1, key2) = (name1.toLowerCase, name2.toLowerCase)
+    val found = students.filter(lower(col("name")).isin(key1, key2))
+      .select(lower(col("name")) +: sideCols.map(col): _*).collect()
+    def side(key: String) =
+      found.find(_.getString(0) == key).map(r => Row.fromSeq(r.toSeq.tail))
     val propCols = edges.columns.filterNot(Set("src", "dst", "rel_type")).toSeq
+    val edgeCols = "rel_type" +: propCols
+    val rows = (side(key1), side(key2)) match {
+      case (Some(a), Some(b)) =>
+        val (aId, bId) = (a.get(0), b.get(0))
+        val matched = edges
+          .filter((col("src") === lit(aId) && col("dst") === lit(bId)) ||
+                  (col("src") === lit(bId) && col("dst") === lit(aId)))
+          .select((Seq("src", "dst") ++ edgeCols).map(col): _*).collect()
+          // a self-pair's loop edge matches in both orientations
+          .flatMap(e => Seq((aId, bId), (bId, aId))
+            .filter { case (s, d) => e.get(0) == s && e.get(1) == d }
+            .map(_ => e.toSeq.drop(2)))
+        val relType = (e: Seq[Any]) =>
+          Option(e.head).map(v => UTF8String.fromString(v.toString))
+        val ordered = matched.sortBy(relType)(Ordering.Option(
+          Ordering.fromLessThan[UTF8String](_.binaryCompare(_) < 0)))
+        (if (ordered.isEmpty) Seq(Seq.fill(edgeCols.size)(null)) else ordered.toSeq)
+          .map(e => Row.fromSeq(a.toSeq ++ b.toSeq ++ e))
+      case _ => Nil
+    }
+    def prefixed(p: String) = sideCols.map(c =>
+      students.schema(c).copy(name = s"${p}_$c", nullable = true))
+    val schema = StructType(prefixed("a") ++ prefixed("b") ++
+      edgeCols.map(c => edges.schema(c).copy(nullable = true)))
     val interestCols =
       if (hasInterests)
         Seq(filter(col("a_interests"),
           x => array_contains(col("b_interests"), x)).as("common_interests"))
       else Nil
-    pair.join(bothOrientations,
-      col("src") === col("a_id") && col("dst") === col("b_id"), "left_outer")
+    students.sparkSession.createDataFrame(rows.asJava, schema)
       .select(
         Seq(col("a_id"), col("a_name"), col("b_id"), col("b_name"),
           col("rel_type")) ++
@@ -117,7 +146,6 @@ object StudentQueries {
           (col("a_board") === col("b_board")).cast("int").as("same_board"),
           (col("a_stream") === col("b_stream")).cast("int").as("same_stream")) ++
         interestCols: _*)
-      .orderBy(col("rel_type"))
       .limit(25) // the template's LIMIT 25 (llm_cypher.py:96)
   }
 }

@@ -1,9 +1,15 @@
 #!/usr/bin/env python3
-"""Summarize a Spark event log: one line per job with duration, stage/task
-counts, and the job group / call site — the per-phase breakdown the
-optimization rounds use to find where a lifecycle row's wall time goes.
+"""Summarize a Spark event log: one line per job with duration, the driver
+time before it, stage/task counts, and the job group / call site — the
+per-phase breakdown the optimization rounds use to find where a lifecycle
+row's wall time goes.
 
-Usage: evlog_jobs.py [--unlabelled] <eventlog> [minMs]
+Usage: evlog_jobs.py [--unlabelled | --streams] <eventlog> [minMs]
+
+The `gap` column is the ms from the previous job's end to this job's start:
+driver-side time (planning, AQE re-optimisation, result handling). The
+previous end is the latest end of any lower-numbered job, so a job that
+overlaps an earlier one (two driver threads) shows a negative gap.
 
 <eventlog> is a plain event log file, a zstd-compressed one (`*.zstd`,
 `*.zst`), or a rolled log directory (`eventlog_v2_*`, Spark 4's default),
@@ -24,6 +30,13 @@ Streams.scala` (a streaming micro-batch job outside a labelled drain). The
 description Spark gives every micro-batch job (`id = <uuid> runId = <uuid>
 batch = <n>`) names no step, so it counts as none. It exits 1 when there is
 any.
+
+`--streams` prints one line per streaming micro-batch instead, from each
+`QueryProgressEvent`: the query name, `batchId`, input rows and the
+`durationMs` split — `triggerExecution`, and within it `addBatch` (the sink's
+jobs), `latestOffset`, `getBatch`, `queryPlanning`, `walCommit` (the offset
+log) and `commitOffsets` (the commit log). Trigger time not in the named
+parts is shown as `other`.
 """
 import argparse
 import json
@@ -120,24 +133,63 @@ def unlabelled(jobs):
     return 1 if bare else 0
 
 
+STREAM_PARTS = ("addBatch", "latestOffset", "getBatch", "queryPlanning",
+                "walCommit", "commitOffsets")
+
+
+def streams(path):
+    """Prints one line per micro-batch progress event."""
+    batches = []
+    for line in lines(path):
+        if "QueryProgressEvent" not in line:
+            continue
+        try:
+            e = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if e.get("Event", "").endswith("QueryProgressEvent"):
+            batches.append(e["progress"])
+    print(f"{'batch':>5} {'rows':>6} {'trigger':>8} "
+          + " ".join(f"{p:>13}" for p in STREAM_PARTS)
+          + f" {'other':>6}  query  [timestamp]")
+    total = 0
+    for b in batches:
+        d = b.get("durationMs") or {}
+        trigger = d.get("triggerExecution", 0)
+        total += trigger
+        other = trigger - sum(d.get(p, 0) for p in STREAM_PARTS)
+        print(f"{b.get('batchId', '?'):>5} {b.get('numInputRows', 0):>6} "
+              f"{trigger:>8} "
+              + " ".join(f"{d.get(p, 0):>13}" for p in STREAM_PARTS)
+              + f" {other:>6}  {b.get('name') or b.get('id', '?')}"
+              f"  [{b.get('timestamp', '')}]")
+    print(f"-- {len(batches)} micro-batches, sum of trigger {total / 1000.0:.2f}s")
+
+
 def main(path, min_ms=0):
     jobs = read_jobs(path)
     total = 0
     rows = []
+    prev_end = None
     for jid, j in sorted(jobs.items()):
         if j["end"] is None:
             continue
         ms = j["end"] - j["start"]
+        gap = None if prev_end is None else j["start"] - prev_end
+        prev_end = j["end"] if prev_end is None else max(prev_end, j["end"])
         total += ms
         if ms >= min_ms:
-            rows.append((jid, ms, j))
-    print(f"{'job':>4} {'ms':>7} {'stg':>4} {'task':>5}  site / description")
-    for jid, ms, j in rows:
+            rows.append((jid, ms, gap, j))
+    print(f"{'job':>4} {'ms':>7} {'gap':>7} {'stg':>4} {'task':>5}  "
+          "site / description")
+    for jid, ms, gap, j in rows:
         label = j["site"]
         if j["desc"]:
             label += f"  [{' '.join(j['desc'].split())[:60]}]"
-        print(f"{jid:>4} {ms:>7} {j['stages']:>4} {j['tasks']:>5}  {label}")
-    unlabelled = sum(j["site"] in ("?", "") for _, _, j in rows)
+        gap_s = "" if gap is None else str(gap)
+        print(f"{jid:>4} {ms:>7} {gap_s:>7} {j['stages']:>4} {j['tasks']:>5}"
+              f"  {label}")
+    unlabelled = sum(j["site"] in ("?", "") for _, _, _, j in rows)
     print(f"-- {len(jobs)} jobs, sum of job wall {total/1000.0:.2f}s, "
           f"{unlabelled} without a call site "
           "(jobs can overlap; gaps between jobs are driver-side time)")
@@ -147,9 +199,14 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser(description="Summarize a Spark event log.")
     ap.add_argument("eventlog")
     ap.add_argument("min_ms", nargs="?", type=int, default=0)
-    ap.add_argument("--unlabelled", action="store_true",
-                    help="list unattributed jobs; exit 1 if any")
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--unlabelled", action="store_true",
+                      help="list unattributed jobs; exit 1 if any")
+    mode.add_argument("--streams", action="store_true",
+                      help="one line per streaming micro-batch's duration split")
     args = ap.parse_args()
-    if args.unlabelled:
+    if args.streams:
+        streams(args.eventlog)
+    elif args.unlabelled:
         sys.exit(unlabelled(read_jobs(args.eventlog)))
     main(args.eventlog, args.min_ms)
